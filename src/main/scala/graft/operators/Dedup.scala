@@ -219,7 +219,7 @@ object Dedup {
       // r17 (§1.2 per-task work): the normalize used interpreted HOFs
       // (transform + aggregate-l2norm) that project-collapse inlined into
       // EVERY one of the dim element_at outputs — the norm fold ran ~dim
-      // times per row with no CSE (HOFs are CodegenFallback; Prof6: the
+      // times per row with no CSE (HOFs are CodegenFallback; measured: the
       // flatten checkpoint alone cost ~1.0 s warm for 2k rows). Same
       // doubles from pure codegen expressions: nrm = sqrt(r1²+r2²+⋯) is
       // the identical ascending left-fold (0.0+x² ≡ x² in IEEE for squares,
@@ -227,7 +227,7 @@ object Dedup {
       // lambda verbatim. Codegen CSE then evaluates the norm once per row.
       // Two-step select, not one: inlining the ~130-node norm tree into all
       // `dim` outputs makes an ~8k-node projection whose analysis+codegen
-      // cost ~1.5 s warm (Prof6); with the norm as its own column,
+      // cost ~1.5 s warm (measured); with the norm as its own column,
       // CollapseProject keeps the two Projects separate (non-cheap expr
       // referenced dim times), the tree stays ~200 nodes, and the whole
       // flatten costs ~0.25 s. Values are bit-identical either way.

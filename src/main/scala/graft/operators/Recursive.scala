@@ -1,62 +1,53 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types._
 
-/** Recursive-CTE analog (the reference inherits PostgreSQL's
-  * `WITH RECURSIVE`, grammar cypher_gram.y:1335-1443 incl. SEARCH/CYCLE;
-  * Spark has no native recursion, so the UNION-distinct fixpoint loop is a
-  * driver-side iteration of DataFrame steps).
+/** Recursive-CTE analog: PostgreSQL's `WITH RECURSIVE` with `UNION`,
+  * `UNION ALL`, `SEARCH` and `CYCLE` (grammar cypher_gram.y:1335-1443).
+  * Spark has no native recursion, so all four run on one driver-side
+  * generation engine over DataFrame steps.
   *
-  * Semantics = `WITH RECURSIVE ... UNION` (distinct accumulation): each
-  * iteration applies `step` to the previous frontier, drops rows already
-  * accumulated, and stops at an empty frontier or `maxIter`. Each hop is one
-  * join + one anti join — at scale the frontier stays hash-partitioned on
-  * its join key and the accumulated set is the only growing state (same
-  * shape as the VLE expansion loop; deep recursions should use the GraphX
-  * Pregel bridge instead of ever-growing plans).
+  * The seed is generation 0. Generation i+1 is `step` applied to the rows
+  * of generation i that recurse, shaped by the variant's accumulation rule:
+  *  - derive: how a child row is built from the step's output (identity,
+  *    the SEARCH sequence key, or the CYCLE mark and path);
+  *  - dedup: `UNION` keeps only new rows (`distinct` plus a strict
+  *    `left_anti` against the accumulated rows, so rows with NULLs never
+  *    equal their duplicates, as under SQL equality); the others keep all;
+  *  - recurse: which rows feed the next generation (CYCLE: the unmarked
+  *    ones; the others: every row).
+  * Every generation lands in the result. Recursion ends at a generation
+  * with no recursing rows; one that still recurses after `maxIter`
+  * generations is an error, never a silent truncation.
   *
-  * Rows with NULLs in them never equal their duplicates under the anti-join
-  * (SQL equality), matching WITH RECURSIVE UNION's distinct-on-equality.
-  *
-  * r16 local-frontier mode (guide §1.2: the per-generation cost of a tiny
-  * deep recursion is pure scheduling — q35 walks a 25-row ring for 25
-  * generations and spent ~3 s on checkpoint+count jobs). When the seed's
-  * optimizer-estimated size is below `spark.graft.recursive.localBytes`
-  * (default 1 MiB; −1 disables) each generation's rows live on the driver
-  * as a LocalRelation: the step's output is collect()ed — ONE job per
-  * generation, with exact LocalRelation stats so the planner broadcasts
-  * the frontier — liveness is a local isEmpty (no count job), and the
-  * result is one LocalRelation at the end. A generation larger than
-  * `spark.graft.recursive.localRows` (default 65536) pushes the state back
-  * to the cluster and CONTINUES the identical distributed recurrence, so
-  * unexpectedly growing recursions degrade gracefully. Every semantic
-  * operation (the step itself, SEARCH/CYCLE column derivation, UNION's
-  * distinct + anti-join) stays a DataFrame operation in BOTH modes — the
-  * local mode changes only where the frontier rows are materialized, so
-  * the same physical operators compute the same values. Nothing is cached
-  * across invocations: every call recomputes from its inputs.
+  * Two physical modes run the same recurrence, and every semantic step
+  * (the step, derive, dedup and the recurse predicate) is a DataFrame
+  * operation in both:
+  *  - distributed: each generation is localCheckpoint-ed, which cuts the
+  *    lineage and gives fresh attribute ids (`step` usually re-joins the
+  *    same relation, which Spark would flag as an ambiguous self-join).
+  *    The checkpoint is lazy; one job per generation materializes it and
+  *    counts its rows and its recursing rows. The accumulated rows are
+  *    re-checkpointed every third generation so their plan stays shallow.
+  *  - local frontier: a tiny deep recursion is pure scheduling cost (q35
+  *    walks a 25-row ring for 25 generations). When the seed's optimizer
+  *    estimate is at most `spark.graft.recursive.localBytes` (−1
+  *    disables), rows live on the driver: each generation is one collect()
+  *    over LocalRelations, whose exact stats let the planner broadcast
+  *    them, and liveness needs no count job. A generation of more than
+  *    `spark.graft.recursive.localRows` rows hands its state to the
+  *    distributed loop, which continues the same recurrence, so an
+  *    unexpectedly growing recursion degrades gracefully.
+  * Nothing is cached across invocations.
   */
 object Recursive {
 
   import org.apache.spark.sql.functions._
 
-  private def localBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.recursive.localBytes").map(_.toLong)
-      // 64 KiB, not 1 MiB (r16 measured): a 15k-row seed (q31) is cheaper
-      // distributed — the local mode's per-generation acc re-broadcast for
-      // the anti-join grows with the accumulated set, while a truly tiny
-      // deep recursion (q35's 25-row ring) wins 2× locally
-      .getOrElse(64L << 10)
-
-  private def localRowCap(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.recursive.localRows").map(_.toInt)
-      .getOrElse(65536)
-
-  private def isSmall(df: DataFrame): Boolean = {
-    val limit = localBytes(df.sparkSession)
-    limit >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
-  }
+  /** The accumulation rule of one variant (see the header). */
+  private case class Rule(derive: DataFrame => DataFrame, dedup: Boolean,
+      recurse: Column = lit(true))
 
   /** Nullability-widened copy of a schema: a LocalRelation rebuilt from
     * collected rows must accept any row a later generation's step may
@@ -73,201 +64,96 @@ object Recursive {
     case other => other
   }
 
-  private def nullableSchema(df: DataFrame): StructType =
-    asNullable(df.schema).asInstanceOf[StructType]
-
-  private def localDf(spark: SparkSession, rows: Seq[Row],
-      schema: StructType): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-  }
-
-  /** Runs the local-mode generation loop with adaptive execution off: AQE
-    * re-plans and stage-materializes every per-generation micro-query (all
-    * under `localRows` driver rows by construction), which is pure fixed
-    * overhead at this size. Physical-only switch — results are unaffected.
-    * The conf is restored even if the step throws.
-    *
-    * r17 (ADVICE r16): the flip is session-global, so (a) a lock makes
-    * concurrent fixpoint calls on one session serialize instead of
-    * clobbering each other's restore (the loops are tiny by construction —
-    * they hold the lock for milliseconds per generation set), and (b) it
-    * remains DOCUMENTED that a concurrent unrelated query on the same
-    * session can observe AQE off for the duration of one local fixpoint;
-    * set `spark.graft.recursive.localBytes = -1` to keep AQE untouched.
+  /** Runs `rule` from `seeded` (the seed with the rule's columns added);
+    * the local/distributed choice is made on the caller's `seed`.
     */
-  private val aqeLock = new Object
-  private def withoutAqe[A](spark: SparkSession)(body: => A): A = aqeLock.synchronized {
-    val key = "spark.sql.adaptive.enabled"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  private def generations(seed: DataFrame, seeded: DataFrame,
+      step: DataFrame => DataFrame, rule: Rule, maxIter: Int): DataFrame = {
+    val names = seeded.columns.toSeq
+    def next(front: DataFrame, acc: => DataFrame): DataFrame = {
+      val out = rule.derive(step(front)).select(names.map(col): _*)
+      if (rule.dedup) out.distinct().join(acc, names, "left_anti") else out
     }
-  }
+    def converged(live: Boolean): Unit = require(!live,
+      s"recursive fixpoint did not converge within $maxIter iterations")
 
-  def fixpoint(seed: DataFrame, step: DataFrame => DataFrame,
-      maxIter: Int = 100): DataFrame = {
-    val cols = seed.columns.toSeq
-
-    // the distributed recurrence, resumable mid-run from the local mode
-    def distributed(acc0: DataFrame, frontier0: DataFrame, iter0: Int,
+    // acc holds generations 0..iter and front the recursing rows of the last
+    def distributed(acc0: DataFrame, front0: DataFrame, iter0: Int,
         live0: Boolean): DataFrame = {
-      var acc = acc0
-      var frontier = frontier0
-      var iter = iter0
-      var live = live0
-      while (iter < maxIter && live) {
-        val stepped = step(frontier).select(cols.map(col): _*)
-        // localCheckpoint each generation: truncates lineage so the plan
-        // does not grow with depth AND gives every generation fresh
-        // attribute ids (step() usually re-joins the same relation —
-        // without the cut Spark flags the self-join as ambiguous).
-        // Per-generation checkpoints are LAZY: the count() right after is
-        // the materializing action, so each generation runs ONE job, not a
-        // checkpoint job plus a count job.
-        frontier = stepped.distinct().join(acc, cols, "left_anti").localCheckpoint(false)
-        live = frontier.count() > 0
-        if (live) {
-          acc = acc.unionByName(frontier)
-          iter += 1
-          if (iter % 3 == 0) acc = acc.localCheckpoint(false) // materializes on next use
-        }
-      }
-      require(iter < maxIter || !live,
-        s"recursive fixpoint did not converge within $maxIter iterations")
-      acc
-    }
-
-    if (!isSmall(seed)) {
-      val acc = seed.distinct().localCheckpoint()
-      return distributed(acc, acc, 0, acc.count() > 0)
-    }
-    // local-frontier mode: the UNION-distinct semantics (distinct + strict
-    // anti-join) stay IN the per-generation plan, over LocalRelations
-    val spark = seed.sparkSession
-    val schema = nullableSchema(seed.select(cols.map(col): _*))
-    val cap = localRowCap(spark)
-    val outcome = withoutAqe(spark) {
-      val accRows = scala.collection.mutable.ArrayBuffer[Row](
-        seed.distinct().select(cols.map(col): _*).collect().toIndexedSeq: _*)
-      var front: Seq[Row] = accRows.toSeq
-      var iter = 0
-      var live = front.nonEmpty
-      var handoff: Option[(DataFrame, DataFrame, Int)] = None
-      while (handoff.isEmpty && iter < maxIter && live) {
-        val accDf = localDf(spark, accRows.toSeq, schema)
-        val rows = step(localDf(spark, front, schema))
-          .select(cols.map(col): _*).distinct()
-          .join(accDf, cols, "left_anti").collect().toIndexedSeq
-        if (rows.length > cap) { // resume on the cluster, same recurrence
-          var acc = accDf
-          val frontier = localDf(spark, rows, schema).localCheckpoint(false)
-          acc = acc.unionByName(frontier)
-          iter += 1
-          if (iter % 3 == 0) acc = acc.localCheckpoint(false)
-          handoff = Some((acc, frontier, iter))
-        } else {
-          live = rows.nonEmpty
-          if (live) {
-            accRows ++= rows
-            front = rows
-            iter += 1
-          }
-        }
-      }
-      if (handoff.isEmpty) require(iter < maxIter || !live,
-        s"recursive fixpoint did not converge within $maxIter iterations")
-      handoff.toLeft(accRows.toSeq)
-    }
-    outcome match {
-      case Right(rows) => localDf(spark, rows, schema)
-      case Left((acc, frontier, iter)) => distributed(acc, frontier, iter, live0 = true)
-    }
-  }
-
-  /** `WITH RECURSIVE … UNION ALL` accumulation WITHOUT dedup: every
-    * generation lands in the result as-is and recursion ends only when a
-    * step produces no rows (PG semantics — a cyclic step diverges there
-    * too, bounded here by maxIter). Same per-generation materialization
-    * discipline as [[fixpoint]].
-    */
-  def fixpointAll(seed: DataFrame, step: DataFrame => DataFrame,
-      maxIter: Int = 100): DataFrame = {
-    val cols = seed.columns.toSeq
-
-    def distributed(acc0: DataFrame, frontier0: DataFrame, iter0: Int,
-        live0: Boolean): DataFrame = {
-      var acc = acc0
-      var frontier = frontier0
-      var iter = iter0
-      var live = live0
-      while (iter < maxIter && live) {
-        frontier = step(frontier) // lazy checkpoint: count() materializes it
-          .select(cols.map(col): _*).localCheckpoint(false)
-        live = frontier.count() > 0
-        if (live) acc = acc.unionByName(frontier)
+      var (acc, front, iter, live) = (acc0, front0, iter0, live0)
+      while (live && iter < maxIter) {
+        val gen = next(front, acc).localCheckpoint(false)
+        val tally = gen.agg(count(lit(1)), count(when(rule.recurse, 1))).head()
+        if (tally.getLong(0) > 0) acc = acc.unionByName(gen)
+        front = gen.filter(rule.recurse)
+        live = tally.getLong(1) > 0
         iter += 1
         if (iter % 3 == 0) acc = acc.localCheckpoint(false) // materializes on next use
       }
-      require(iter < maxIter || !live,
-        s"recursive fixpoint (UNION ALL) did not converge within $maxIter iterations")
+      converged(live)
       acc
     }
 
-    if (!isSmall(seed)) {
-      val acc = seed.localCheckpoint()
+    val spark = seed.sparkSession
+    val localBytes = spark.conf.getOption("spark.graft.recursive.localBytes")
+      // 64 KiB, not 1 MiB (r16 measured): a 15k-row seed (q31) is cheaper
+      // distributed — the local mode's per-generation acc re-broadcast for
+      // the anti-join grows with the accumulated set, while a truly tiny
+      // deep recursion (q35's 25-row ring) wins 2× locally
+      .map(_.toLong).getOrElse(64L << 10)
+    if (localBytes < 0 || seed.queryExecution.optimizedPlan.stats.sizeInBytes > localBytes) {
+      val acc = seeded.localCheckpoint()
       return distributed(acc, acc, 0, acc.count() > 0)
     }
-    val spark = seed.sparkSession
-    val schema = nullableSchema(seed.select(cols.map(col): _*))
-    val cap = localRowCap(spark)
-    val outcome = withoutAqe(spark) {
-      val accRows = scala.collection.mutable.ArrayBuffer[Row](
-        seed.select(cols.map(col): _*).collect().toIndexedSeq: _*)
-      var front: Seq[Row] = accRows.toSeq
-      var iter = 0
-      var live = front.nonEmpty
-      var handoff: Option[(DataFrame, DataFrame, Int)] = None
-      while (handoff.isEmpty && iter < maxIter && live) {
-        val rows = step(localDf(spark, front, schema))
-          .select(cols.map(col): _*).collect().toIndexedSeq
-        if (rows.length > cap) { // resume on the cluster, same recurrence
-          var acc = localDf(spark, accRows.toSeq, schema)
-          val frontier = localDf(spark, rows, schema).localCheckpoint(false)
-          acc = acc.unionByName(frontier)
-          iter += 1
-          if (iter % 3 == 0) acc = acc.localCheckpoint(false)
-          handoff = Some((acc, frontier, iter))
-        } else {
-          live = rows.nonEmpty
-          if (live) accRows ++= rows
-          front = rows
-          iter += 1
-          // (no acc checkpoint cadence locally — acc is driver rows)
-        }
+    val cap = spark.conf.getOption("spark.graft.recursive.localRows")
+      .map(_.toInt).getOrElse(65536)
+    val schema = asNullable(seeded.schema).asInstanceOf[StructType]
+    def local(rows: Seq[Row]): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rows.asJava, schema)
+    }
+    val accRows = scala.collection.mutable.ArrayBuffer[Row](seeded.collect().toIndexedSeq: _*)
+    var front: Seq[Row] = accRows.toSeq
+    var iter = 0
+    while (front.nonEmpty && iter < maxIter) {
+      lazy val accDf = local(accRows.toSeq)
+      // the recurse predicate rides in the generation's own collect as a
+      // last column: the same job, no second plan
+      val flagged = next(local(front), accDf).select(col("*"), rule.recurse).collect()
+      val rows = flagged.map(r => Row.fromSeq(r.toSeq.init)).toIndexedSeq
+      front = rows.indices.filter(i => flagged(i).get(names.size) == true).map(rows)
+      iter += 1
+      if (rows.length > cap) { // resume on the cluster, same recurrence
+        val gen = local(rows).localCheckpoint(false)
+        return distributed(accDf.unionByName(gen), gen.filter(rule.recurse), iter, front.nonEmpty)
       }
-      if (handoff.isEmpty) require(iter < maxIter || !live,
-        s"recursive fixpoint (UNION ALL) did not converge within $maxIter iterations")
-      handoff.toLeft(accRows.toSeq)
+      accRows ++= rows
     }
-    outcome match {
-      case Right(rows) => localDf(spark, rows, schema)
-      case Left((acc, frontier, iter)) => distributed(acc, frontier, iter, live0 = true)
-    }
+    converged(front.nonEmpty)
+    local(accRows.toSeq)
   }
+
+  def fixpoint(seed: DataFrame, step: DataFrame => DataFrame,
+      maxIter: Int = 100): DataFrame =
+    generations(seed, seed.distinct(), step, Rule(identity, dedup = true), maxIter)
+
+  /** `WITH RECURSIVE … UNION ALL`: every generation lands in the result
+    * as-is and recursion ends only when a step produces no rows (PG
+    * semantics — a cyclic step diverges there too, bounded by maxIter).
+    */
+  def fixpointAll(seed: DataFrame, step: DataFrame => DataFrame,
+      maxIter: Int = 100): DataFrame =
+    generations(seed, seed, step, Rule(identity, dedup = false), maxIter)
 
   /** `SEARCH {BREADTH|DEPTH} FIRST BY keyCols SET seqCol`
     * (cypher_gram.y:1394-1417): PG's ordering-column sugar over a recursive
-    * CTE, re-expressed as a fixpoint combinator. BREADTH FIRST emits
-    * `seqCol = struct(depth, keyCols…)`; DEPTH FIRST emits
-    * `seqCol = array<struct(keyCols…)>` (the root-to-row path) — ordering
-    * by seqCol then reproduces PG's breadth-/depth-first presentation
-    * order. UNION ALL accumulation (PG requires it for SEARCH); `step`
-    * receives the frontier INCLUDING seqCol and must carry it through to
-    * each child row (a join naturally does), the combinator re-derives the
-    * child's own seq from it.
+    * CTE. BREADTH FIRST emits `seqCol = struct(depth, keyCols…)`; DEPTH
+    * FIRST emits `seqCol = array<struct(keyCols…)>` (the root-to-row path)
+    * — ordering by seqCol then reproduces PG's breadth-/depth-first
+    * presentation order. UNION ALL accumulation (PG requires it for
+    * SEARCH); `step` receives the frontier INCLUDING seqCol and must carry
+    * it through to each child row (a join naturally does), the combinator
+    * re-derives the child's own seq from it.
     */
   def fixpointSearch(seed: DataFrame, step: DataFrame => DataFrame,
       keyCols: Seq[String], breadthFirst: Boolean, seqCol: String = "seq",
@@ -276,70 +162,11 @@ object Recursive {
     val seeded = if (breadthFirst)
       seed.withColumn(seqCol, struct(lit(0L).as("depth"), keyStruct.as("key")))
     else seed.withColumn(seqCol, array(keyStruct))
-    val allCols = seeded.columns.toSeq
     def reseq(children: DataFrame): DataFrame =
       if (breadthFirst) children.withColumn(seqCol,
         struct((col(seqCol).getField("depth") + 1).as("depth"), keyStruct.as("key")))
       else children.withColumn(seqCol, concat(col(seqCol), array(keyStruct)))
-
-    def distributed(acc0: DataFrame, frontier0: DataFrame, iter0: Int,
-        live0: Boolean): DataFrame = {
-      var acc = acc0
-      var frontier = frontier0
-      var iter = iter0
-      var live = live0
-      while (iter < maxIter && live) {
-        frontier = reseq(step(frontier)) // lazy checkpoint: count() materializes it
-          .select(allCols.map(col): _*).localCheckpoint(false)
-        live = frontier.count() > 0
-        if (live) acc = acc.unionByName(frontier)
-        iter += 1
-        if (iter % 3 == 0) acc = acc.localCheckpoint(false) // materializes on next use
-      }
-      require(iter < maxIter || !live,
-        s"recursive fixpoint did not converge within $maxIter iterations")
-      acc
-    }
-
-    if (!isSmall(seed)) {
-      val acc = seeded.localCheckpoint()
-      return distributed(acc, acc, 0, acc.count() > 0)
-    }
-    val spark = seed.sparkSession
-    val schema = nullableSchema(seeded.select(allCols.map(col): _*))
-    val cap = localRowCap(spark)
-    val outcome = withoutAqe(spark) {
-      val accRows = scala.collection.mutable.ArrayBuffer[Row](
-        seeded.select(allCols.map(col): _*).collect().toIndexedSeq: _*)
-      var front: Seq[Row] = accRows.toSeq
-      var iter = 0
-      var live = front.nonEmpty
-      var handoff: Option[(DataFrame, DataFrame, Int)] = None
-      while (handoff.isEmpty && iter < maxIter && live) {
-        val rows = reseq(step(localDf(spark, front, schema)))
-          .select(allCols.map(col): _*).collect().toIndexedSeq
-        if (rows.length > cap) { // resume on the cluster, same recurrence
-          var acc = localDf(spark, accRows.toSeq, schema)
-          val frontier = localDf(spark, rows, schema).localCheckpoint(false)
-          acc = acc.unionByName(frontier)
-          iter += 1
-          if (iter % 3 == 0) acc = acc.localCheckpoint(false)
-          handoff = Some((acc, frontier, iter))
-        } else {
-          live = rows.nonEmpty
-          if (live) accRows ++= rows
-          front = rows
-          iter += 1
-        }
-      }
-      if (handoff.isEmpty) require(iter < maxIter || !live,
-        s"recursive fixpoint did not converge within $maxIter iterations")
-      handoff.toLeft(accRows.toSeq)
-    }
-    outcome match {
-      case Right(rows) => localDf(spark, rows, schema)
-      case Left((acc, frontier, iter)) => distributed(acc, frontier, iter, live0 = true)
-    }
+    generations(seed, seeded, step, Rule(reseq, dedup = false), maxIter)
   }
 
   /** `CYCLE keyCols SET markCol [TO v DEFAULT dv] USING pathCol`
@@ -347,7 +174,8 @@ object Recursive {
     * the root-to-row path of its key struct in `pathCol`; a child whose
     * key already appears in its parent's path gets `markCol = true` and is
     * NOT expanded further (PG semantics), which also guarantees
-    * termination on cyclic graphs. UNION ALL accumulation.
+    * termination on cyclic graphs. UNION ALL accumulation: a generation of
+    * only marked rows still lands in the result and ends the recursion.
     */
   def fixpointCycle(seed: DataFrame, step: DataFrame => DataFrame,
       keyCols: Seq[String], markCol: String = "is_cycle",
@@ -356,85 +184,10 @@ object Recursive {
     val seeded = seed
       .withColumn(markCol, lit(false))
       .withColumn(pathCol, array(keyStruct))
-    val allCols = seeded.columns.toSeq
     def mark(children: DataFrame): DataFrame = children
       .withColumn(markCol, array_contains(col(pathCol), keyStruct))
       .withColumn(pathCol, concat(col(pathCol), array(keyStruct)))
-
-    def distributed(acc0: DataFrame, frontier0: DataFrame, iter0: Int,
-        live0: Boolean): DataFrame = {
-      var acc = acc0
-      var frontier = frontier0
-      var iter = iter0
-      var live = live0
-      while (iter < maxIter && live) {
-        // ONE job per generation: the LAZY checkpoint materializes inside
-        // the counting agg below, and the filtered next frontier then reads
-        // the checkpoint's cached blocks
-        val stepped = mark(step(frontier))
-          .select(allCols.map(col): _*).localCheckpoint(false)
-        // one job, two counts: total rows (for accumulation) and UNMARKED
-        // rows (for liveness) — a generation of all-cycle rows still lands
-        // in acc but must end the loop, else a converged run that hits
-        // maxIter with marked leftovers trips the require below spuriously
-        val cnts = stepped.agg(
-          count(lit(1)).as("n"), count(when(!col(markCol), 1)).as("fresh")).head()
-        if (cnts.getLong(0) > 0) acc = acc.unionByName(stepped)
-        live = cnts.getLong(1) > 0
-        // marked rows surface in the result but never recurse
-        frontier = stepped.filter(!col(markCol))
-        iter += 1
-        if (iter % 3 == 0) acc = acc.localCheckpoint(false) // materializes on next use
-      }
-      require(iter < maxIter || !live,
-        s"recursive cycle fixpoint did not converge within $maxIter iterations")
-      acc
-    }
-
-    if (!isSmall(seed)) {
-      val acc = seeded.localCheckpoint()
-      return distributed(acc, acc, 0, acc.count() > 0)
-    }
-    val spark = seed.sparkSession
-    val schema = nullableSchema(seeded.select(allCols.map(col): _*))
-    val cap = localRowCap(spark)
-    val markIdx = allCols.indexOf(markCol)
-    val outcome = withoutAqe(spark) {
-      val accRows = scala.collection.mutable.ArrayBuffer[Row](
-        seeded.select(allCols.map(col): _*).collect().toIndexedSeq: _*)
-      var front: Seq[Row] = accRows.toSeq
-      var iter = 0
-      var live = front.nonEmpty
-      var handoff: Option[(DataFrame, DataFrame, Int, Boolean)] = None
-      while (handoff.isEmpty && iter < maxIter && live) {
-        val rows = mark(step(localDf(spark, front, schema)))
-          .select(allCols.map(col): _*).collect().toIndexedSeq
-        if (rows.length > cap) { // resume on the cluster, same recurrence
-          var acc = localDf(spark, accRows.toSeq, schema)
-          val stepped = localDf(spark, rows, schema).localCheckpoint(false)
-          acc = acc.unionByName(stepped)
-          live = rows.exists(_.get(markIdx) == false)
-          val frontier = stepped.filter(!col(markCol))
-          iter += 1
-          if (iter % 3 == 0) acc = acc.localCheckpoint(false)
-          handoff = Some((acc, frontier, iter, live))
-        } else {
-          if (rows.nonEmpty) accRows ++= rows
-          // same predicate as filter(!col(markCol)): keep only mark == false
-          // (a NULL mark — impossible here, array_contains of a non-null
-          // array — would be dropped by both)
-          front = rows.filter(_.get(markIdx) == false)
-          live = front.nonEmpty
-          iter += 1
-        }
-      }
-      if (handoff.isEmpty) require(iter < maxIter || !live,
-        s"recursive cycle fixpoint did not converge within $maxIter iterations")
-      handoff.toLeft(accRows.toSeq)
-    }
-    outcome match {
-      case Right(rows) => localDf(spark, rows, schema)
-      case Left((acc, frontier, iter, live)) => distributed(acc, frontier, iter, live)
-    }
+    generations(seed, seeded, step,
+      Rule(mark, dedup = false, recurse = !col(markCol)), maxIter)
   }
 }

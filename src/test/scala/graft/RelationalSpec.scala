@@ -125,7 +125,31 @@ class RelationalSpec extends AnyFunSuite {
         keyCols = Seq("node"))
         .select(col("node"), col("is_cycle"), size(col("path")))
         .collect().map(r => s"cyc:${r.getLong(0)}:${r.getBoolean(1)}:${r.getInt(2)}")
-      (fp ++ all ++ bfs ++ dfs ++ cyc).toSeq.sorted
+      // a maxIter one short of convergence fails in every mode: the chain
+      // has 15 productive generations, UNION ALL over the cycle edge never
+      // ends; both overflow a 1-row cap at generation 3 before failing
+      def outcome(run: => org.apache.spark.sql.DataFrame): String =
+        try { run; "converged" } catch {
+          case e: IllegalArgumentException if e.getMessage.contains("did not converge") =>
+            "did not converge"
+        }
+      val short = Seq(
+        "fp-short:" + outcome(graft.operators.Recursive.fixpoint(seed, f =>
+          f.join(edges, f("node") === edges("src"))
+            .select(f("origin"), edges("dst").as("node")), maxIter = 15)),
+        "all-short:" + outcome(graft.operators.Recursive.fixpointAll(nseed, f =>
+          f.join(edges, f("node") === edges("src"))
+            .select(edges("dst").as("node")), maxIter = 8)))
+      // 3-cycle with a chord: generation 3 = {1, 2}, both marked, is the
+      // last one and (at a 1-row cap) the one that overflows; maxIter = 3
+      // must converge
+      val ring = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 2L)).toDF("src", "dst")
+      val marked = graft.operators.Recursive.fixpointCycle(Seq(Tuple1(1L)).toDF("node"),
+        f => f.join(ring, f("node") === ring("src"))
+          .select(ring("dst").as("node"), f("is_cycle"), f("path")),
+        keyCols = Seq("node"), maxIter = 3)
+        .collect().map(r => s"ring:${r.getLong(0)}:${r.getBoolean(1)}:${r.getSeq(2).size}")
+      (fp ++ all ++ bfs ++ dfs ++ cyc ++ short ++ marked).toSeq.sorted
     }
     def withConf(kvs: (String, String)*)(body: => Seq[String]): Seq[String] = {
       val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -143,6 +167,9 @@ class RelationalSpec extends AnyFunSuite {
     assert(local == dist, "local-frontier mode diverged from distributed")
     assert(fallback == dist, "overflow fallback diverged from distributed")
     assert(local.nonEmpty)
+    assert(local.contains("fp-short:did not converge") &&
+      local.contains("all-short:did not converge"))
+    assert(local.count(_.startsWith("ring:")) == 5)
   }
 
   test("TABLESAMPLE BERNOULLI p<100: REPEATABLE determinism + binomial envelope") {
