@@ -39,6 +39,10 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
+    // passes in which the query threw: still timed (the stdout line keeps
+    // its shape), but named on stderr and marked in BENCH_LAST.json, so a
+    // query that fails early never passes for a fast one
+    val failures = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     for (pass <- 1 to passes; name <- names) {
       if (name == names.head) {
         // reset the operator session caches at each pass boundary so a
@@ -53,7 +57,10 @@ object Bench {
       }
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+        failures(name) += 1
+        System.err.println(s"[bench] FAILED $name (pass $pass): $e")
+      }
       val elapsed = (System.nanoTime() - t0) / 1e9
       // cache teardown OUTSIDE the timed interval (ADVICE r11, same fix as
       // ScaleBench): clearCache() isn't part of the query's cost
@@ -83,7 +90,8 @@ object Bench {
     val qs = sorted.map { case (k, _) =>
       val xs = samples(k)
       "\"" + k + "\":{\"median\":" + f(median(xs)) +
-        ",\"min\":" + f(xs.min) + ",\"max\":" + f(xs.max) + "}"
+        ",\"min\":" + f(xs.min) + ",\"max\":" + f(xs.max) +
+        (if (failures(k) > 0) ",\"failed\":" + failures(k) else "") + "}"
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val doc = s"""{"metric":"total_median","value":${f(total)},"unit":"sec","passes":$passes,"queries":$qs,"sf":"$sfDir"}"""

@@ -1,0 +1,76 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+
+/** The one small-input policy: every choice between holding a relation in
+  * one place (the driver, or a single executor task) and keeping it
+  * distributed is made here, from the observed size of the input, as
+  * Pregelix picks an iteration's physical plan. Three parts:
+  *  - one key, `spark.graft.local.maxRows` (default 65536): the most rows
+  *    any local path may hold. `0` sends every site down its distributed
+  *    path, which is how the differential specs compare the two.
+  *  - [[fits]], an estimate gate that runs no job: the optimizer's
+  *    `sizeInBytes` against the site's byte bound, a constant below.
+  *  - [[capped]] and [[holds]], which check the ACTUAL row count, so an
+  *    estimate that undercounts never puts more than `maxRows` rows on the
+  *    driver; above the cap the site takes its distributed path.
+  * Sites: write snapshots and write-id numbering (GraphSession), the
+  * recursive local frontier (Recursive), the single-task graph algorithms
+  * (Algorithms: estimate only, they never collect), near-dup clustering
+  * (Pipeline: actual pair count only, its estimate is join-inflated by
+  * orders of magnitude) and the ANN serves (Similarity: corpus row count).
+  */
+private[graft] object Local {
+
+  /** Write snapshots (r17): under 1 MiB a LocalRelation keeps a statement's
+    * existence probes, broadcast builds and per-row CREATE numbering
+    * driver-foldable instead of a multi-task job each (w4 1.59×, w1 1.42×).
+    */
+  val WriteBytes: Long = 1L << 20
+
+  /** Recursive seeds, 64 KiB not 1 MiB (r16 measured): a 15k-row seed (q31)
+    * is cheaper distributed, as the local mode re-broadcasts the growing
+    * accumulated set for each generation's anti-join, while a tiny deep
+    * recursion (q35's 25-row ring) wins 2× locally.
+    */
+  val RecursiveBytes: Long = 64L << 10
+
+  /** Single-task graph algorithms: 256 MiB of (src, dst) pairs ≈ 8–16 M
+    * edges, trivially held by one task; 100 TB inputs estimate in the TBs.
+    */
+  val GraphBytes: Long = 256L << 20
+
+  private def maxRows(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.local.maxRows").map(_.toLong).getOrElse(65536L)
+
+  def fits(bytes: Long, dfs: DataFrame*): Boolean =
+    maxRows(dfs.head.sparkSession) > 0 &&
+      dfs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum <= bytes
+
+  def holds(spark: SparkSession, n: Long): Boolean = {
+    val cap = maxRows(spark)
+    cap > 0 && n <= cap
+  }
+
+  /** The rows of `df`, or None past the cap. A plain collect whose length
+    * is checked: `limit(n + 1)` scans partitions in rounds (one job each)
+    * and `df.rdd` turns a driver-only LocalTableScan into a job, each a
+    * cost per write statement.
+    */
+  def capped(df: DataFrame): Option[Array[Row]] =
+    if (maxRows(df.sparkSession) <= 0) None
+    else Some(df.collect()).filter(rows => holds(df.sparkSession, rows.length))
+
+  def collect(df: DataFrame, bytes: Long): Option[Array[Row]] =
+    if (fits(bytes, df)) capped(df) else None
+
+  /** A write statement's frozen snapshot: a LocalRelation when small, else
+    * an eager localCheckpoint — value- and order-identical either way.
+    */
+  def freeze(df: DataFrame): DataFrame = collect(df, WriteBytes) match {
+    case Some(rows) =>
+      import scala.jdk.CollectionConverters._
+      df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
+    case None => df.localCheckpoint()
+  }
+}

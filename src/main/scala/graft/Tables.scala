@@ -111,41 +111,30 @@ object Tables {
     * explode) runs single-threaded no matter how many cores exist. Adds a
     * round-robin exchange ONLY when the planned scan has fewer partitions
     * than half the default parallelism AND the optimizer-estimated input
-    * is under `spark.graft.scan.fanoutBytes` (default 1 GiB; −1 disables)
-    * — at scale the scan already has ≥ cores splits and no exchange is
-    * added. Callers must use it only where downstream results are
-    * order-independent (exact integer/decimal aggregation, distinct,
-    * per-row maps): a round-robin exchange reorders rows.
+    * is under `FanoutBytes` (1 GiB) — at scale the scan already has ≥ cores
+    * splits and no exchange is added. Callers must use it only where
+    * downstream results are order-independent (exact integer/decimal
+    * aggregation, distinct, per-row maps): a round-robin exchange reorders
+    * rows.
     */
-  def fanout(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val limit = spark.conf.getOption("spark.graft.scan.fanoutBytes")
-      .map(_.toLong).getOrElse(1L << 30)
-    if (limit < 0) return df
-    val par = spark.sparkContext.defaultParallelism
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit &&
-        df.rdd.getNumPartitions * 2 <= par)
-      df.repartition(par)
-    else df
-  }
+  def fanout(df: DataFrame): DataFrame =
+    if (fansOut(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism) else df
 
   /** Keyed twin of [[fanout]] (r17, guide §2.3 "project before the
     * exchange"): hash-repartition a NARROW projection on the grouping key
     * so the expensive per-row/aggregation work above the single-task scan
     * runs on all cores, while the downstream groupBy on the same key reuses
     * this exchange (no second shuffle — hashpartitioning(key) satisfies the
-    * aggregation's distribution). Same guards as fanout; only safe where
+    * aggregation's distribution). Same guard as fanout; only safe where
     * the aggregate is order-independent (exact integer/decimal sums).
     */
-  def fanoutByKey(df: DataFrame, key: String): DataFrame = {
-    val spark = df.sparkSession
-    val limit = spark.conf.getOption("spark.graft.scan.fanoutBytes")
-      .map(_.toLong).getOrElse(1L << 30)
-    if (limit < 0) return df
-    val par = spark.sparkContext.defaultParallelism
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit &&
-        df.rdd.getNumPartitions * 2 <= par)
-      df.repartition(par, col(key))
+  def fanoutByKey(df: DataFrame, key: String): DataFrame =
+    if (fansOut(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
     else df
-  }
+
+  private val FanoutBytes = 1L << 30
+
+  private def fansOut(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= FanoutBytes &&
+      df.rdd.getNumPartitions * 2 <= df.sparkSession.sparkContext.defaultParallelism
 }

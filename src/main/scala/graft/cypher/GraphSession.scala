@@ -1,5 +1,6 @@
 package graft.cypher
 
+import graft.Local
 import graft.graph.PropertyGraph
 import graft.gvalue._
 import Ast._
@@ -24,75 +25,34 @@ private[graft] object RowNumber {
   def attach(df: DataFrame, name: String): (DataFrame, Long) = {
     val spark = df.sparkSession
     val schema = df.schema.add(name, LongType, nullable = false)
+    // Local numbering of driver-held rows: executeCollect returns rows in
+    // partition order, the exact order zipWithIndex numbers, and the
+    // LocalRelation result keeps every downstream read/probe of the
+    // created rows driver-foldable.
+    def numbered(rows: Array[Row]): (DataFrame, Long) = {
+      import scala.jdk.CollectionConverters._
+      val out = rows.iterator.zipWithIndex.map { case (row, i) =>
+        Row.fromSeq(row.toSeq :+ (i + 1L))
+      }.toIndexedSeq
+      (spark.createDataFrame(out.asJava, schema), rows.length.toLong)
+    }
     // r17 (guide §1.2 — a tiny write's per-statement cost is pure job
-    // scheduling): below the WriteLocal bound the freeze + count +
-    // zipWithIndex trio (3 jobs, each over defaultParallelism-sliced
-    // partitions) collapses to ONE collect; numbering is identical
-    // (executeCollect returns rows in partition order — the exact order
-    // zipWithIndex numbers), and the LocalRelation result keeps every
-    // downstream read/probe of the created rows driver-foldable.
-    if (WriteLocal.isSmall(df)) {
-      val rows = df.collect()
-      val numbered = rows.iterator.zipWithIndex.map { case (row, i) =>
-        Row.fromSeq(row.toSeq :+ (i + 1L))
-      }.toIndexedSeq
-      import scala.jdk.CollectionConverters._
-      return (spark.createDataFrame(numbered.asJava, schema), rows.length.toLong)
+    // scheduling): a small input's freeze + count + zipWithIndex trio (3
+    // jobs, each over defaultParallelism-sliced partitions) collapses to
+    // ONE collect
+    Local.collect(df, Local.WriteBytes) match {
+      case Some(rows) => numbered(rows)
+      case None =>
+        val frozen = df.localCheckpoint()
+        val n = frozen.count() // cheap: counts the materialized blocks
+        // stats can be join-inflated while the ACTUAL row count is tiny (a
+        // MERGE's anti-join input) — the count above knows
+        if (Local.holds(spark, n)) numbered(frozen.collect())
+        else (spark.createDataFrame(frozen.rdd.zipWithIndex().map { case (row, i) =>
+          Row.fromSeq(row.toSeq :+ (i + 1L))
+        }, schema), n)
     }
-    val frozen = df.localCheckpoint()
-    val n = frozen.count() // cheap: counts the materialized blocks
-    // stats can be join-inflated while the ACTUAL row count is tiny (a
-    // MERGE's anti-join input) — the count above knows; below the row
-    // bound, number the checkpointed rows driver-side (same partition
-    // order) so the created rows stay LocalRelation-foldable downstream.
-    if (n <= WriteLocal.rowBound(spark)) {
-      val numbered = frozen.collect().iterator.zipWithIndex.map { case (row, i) =>
-        Row.fromSeq(row.toSeq :+ (i + 1L))
-      }.toIndexedSeq
-      import scala.jdk.CollectionConverters._
-      return (spark.createDataFrame(numbered.asJava, schema), n)
-    }
-    val rdd = frozen.rdd.zipWithIndex().map { case (row, i) =>
-      Row.fromSeq(row.toSeq :+ (i + 1L))
-    }
-    (spark.createDataFrame(rdd, schema), n)
   }
-}
-
-/** Size-adaptive freeze for the write path (r17; the Algorithms.scala /
-  * Recursive local-mode discipline applied to mutation statements): a
-  * statement-scoped snapshot whose optimizer-ESTIMATED size is under
-  * `spark.graft.write.localBytes` (default 1 MiB; −1 disables) collects to
-  * a LocalRelation instead of localCheckpointing — the snapshot semantics
-  * are identical (driver-held rows are as frozen as checkpoint blocks, in
-  * the same partition order), but downstream existence probes, broadcast
-  * builds and per-row CREATE numbering stop paying a multi-task job each.
-  * Above the bound (or with stats inflated by joins) the distributed
-  * checkpoint path is unchanged — the 100 TB write shape.
-  */
-private[graft] object WriteLocal {
-  def bound(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.write.localBytes").map(_.toLong)
-      .getOrElse(1L << 20)
-  /** Row bound for the post-count local conversion in RowNumber.attach —
-    * disabled together with localBytes = −1.
-    */
-  def rowBound(spark: SparkSession): Long =
-    if (bound(spark) < 0) -1L
-    else spark.conf.getOption("spark.graft.write.localRows").map(_.toLong)
-      .getOrElse(65536L)
-  def isSmall(df: DataFrame): Boolean = {
-    val b = bound(df.sparkSession)
-    b >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= b
-  }
-  /** Freeze a statement snapshot: LocalRelation when small, else an eager
-    * localCheckpoint — value- and order-identical either way.
-    */
-  def freeze(df: DataFrame): DataFrame =
-    if (isSmall(df)) {
-      import scala.jdk.CollectionConverters._
-      df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
-    } else df.localCheckpoint()
 }
 
 /** Mutable graph + Cypher write-clause execution — the engine's equivalent of
@@ -1015,7 +975,7 @@ final class GraphSession(val spark: SparkSession) {
       // lazy plan over them, and a RETURN after DELETE must show the
       // deleted entities (delete.out `DETACH DELETE n RETURN n`), not a
       // re-evaluation against the post-delete graph
-      val frozen = if (ctx.df == null) ctx else ctx.copy(df = WriteLocal.freeze(ctx.df))
+      val frozen = if (ctx.df == null) ctx else ctx.copy(df = Local.freeze(ctx.df))
       executeDelete(frozen, exprs, detach); frozen
     case other => throw new UnsupportedOperationException(s"write clause: $other")
   }
@@ -1331,7 +1291,7 @@ final class GraphSession(val spark: SparkSession) {
       // r17: freeze ONCE, probe the frozen relation — the emptiness probe
       // and createPerRow's own freeze each re-executed the anti-join plan
       // (two full AQE executions per MERGE, ~6 jobs each on tiny graphs)
-      val distinctMissing = WriteLocal.freeze(
+      val distinctMissing = Local.freeze(
         missing.dropDuplicates(boundVars.map(v => s"${v}__id")))
       if (!distinctMissing.isEmpty)
         createPerRow(Ctx(distinctMissing, ctx.vars, projected = false),
@@ -1452,7 +1412,7 @@ final class GraphSession(val spark: SparkSession) {
     // freeze the binding before mutating: ctx.df is lazy over the label
     // tables, and a MATCH whose predicate reads the very property being
     // SET must not re-evaluate against the post-update graph
-    val ctx = if (ctx0.df == null) ctx0 else ctx0.copy(df = WriteLocal.freeze(ctx0.df))
+    val ctx = if (ctx0.df == null) ctx0 else ctx0.copy(df = Local.freeze(ctx0.df))
     // constant CONTAINER values store in the same typed-or-dynamic form
     // the CREATE path uses (homogeneous scalar list → typed array; mixed/
     // nested/map → dynamic struct), so reads and filters stay consistent
@@ -1519,7 +1479,7 @@ final class GraphSession(val spark: SparkSession) {
   private var snapCounter = 0
 
   private def executeRemove(ctx0: Ctx, items: List[(String, String)]): Ctx = {
-    val ctx = if (ctx0.df == null) ctx0 else ctx0.copy(df = WriteLocal.freeze(ctx0.df))
+    val ctx = if (ctx0.df == null) ctx0 else ctx0.copy(df = Local.freeze(ctx0.df))
     items.foreach { case (v, k) =>
       require(ctx.df != null && ctx.vars.get(v).exists(_.isEntity), s"REMOVE target $v not matched")
       if (ctx.vars(v).derived) throw new IllegalArgumentException(
@@ -1545,7 +1505,7 @@ final class GraphSession(val spark: SparkSession) {
         val ids = ctx.df.select(col(s"${v}__id").as("id")).distinct()
         graph.deleteEdges(ids)
       case Var(v) if ctx.vars.get(v).exists(_.isEntity) =>
-        val ids = WriteLocal.freeze(ctx.df.select(col(s"${v}__id").as("id")).distinct())
+        val ids = Local.freeze(ctx.df.select(col(s"${v}__id").as("id")).distinct())
         graph.deleteVertices(ids, detach)
         // remember what this query deleted: a later CREATE reusing a
         // variable bound to one of these ids must error
@@ -2468,7 +2428,7 @@ final class MutableGraph(spark: SparkSession) {
     // action" point to unpersist at — checkpointing materializes once, cuts
     // the lineage (deterministic re-scans), and the blocks are released by
     // the context cleaner when the session drops the table version
-    val updates = WriteLocal.freeze(updates0)
+    val updates = Local.freeze(updates0)
     noteTouched(updates.select(col("__set_id").as("id")))
     def apply(kind: String, tables: Map[String, DataFrame]): Map[String, DataFrame] =
       tables.map { case (l, df) =>
@@ -2514,7 +2474,7 @@ final class MutableGraph(spark: SparkSession) {
     */
   /** DELETE edges by id across every edge label table. */
   def deleteEdges(ids0: DataFrame): Unit = {
-    val ids = WriteLocal.freeze(ids0)
+    val ids = Local.freeze(ids0)
     noteTouched(ids)
     edgeLabels = edgeLabels.map { case (l, e) =>
       l -> e.join(ids, e("id") === ids("id"), "left_anti")
@@ -2522,7 +2482,7 @@ final class MutableGraph(spark: SparkSession) {
   }
 
   def deleteVertices(ids0: DataFrame, detach: Boolean): Unit = {
-    val ids = WriteLocal.freeze(ids0) // eager + lineage-cut (see updateProperty)
+    val ids = Local.freeze(ids0) // eager + lineage-cut (see updateProperty)
     if (!detach) {
       val incident = edgeLabels.values.map(e =>
         e.join(ids, e("start_id") === ids("id") || e("end_id") === ids("id"), "left_semi")

@@ -1,8 +1,9 @@
 package graft.graph
 
+import graft.Local
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** GraphX bridge for whole-graph analytics (connected components, PageRank,
@@ -13,25 +14,6 @@ import org.apache.spark.sql.functions._
   * back to label tables by packed graphid when properties are needed.
   */
 object Algorithms {
-
-  /** Size-adaptive execution: below this optimizer-estimated size (bytes,
-    * from `optimizedPlan.stats` — pure estimation, no job) the iterative
-    * loop runs inside ONE executor task over local arrays instead of N
-    * shuffle rounds. 256 MiB of (src,dst) pairs ≈ 8–16 M edges — trivially
-    * held by one task — while 100 TB inputs estimate in the TBs and take
-    * the distributed loop (one shuffle keyed on dst per iteration). Same
-    * recurrence, same results either way; override with
-    * `spark.graft.graph.localBytes` (−1 disables the local path).
-    */
-  private def localBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.graph.localBytes").map(_.toLong)
-      .getOrElse(256L << 20)
-
-  private def isSmall(dfs: DataFrame*): Boolean = {
-    val limit = localBytes(dfs.head.sparkSession)
-    limit >= 0 &&
-      dfs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum <= limit
-  }
 
   def toGraphX(pg: PropertyGraph): Graph[Int, Int] = {
     val vertexRdd: RDD[(VertexId, Int)] = pg.vertexLabels.toSeq.sortBy(_._1).map {
@@ -49,8 +31,8 @@ object Algorithms {
   }
 
   /** Connected components (undirected min-id propagation): (id, component).
-    * Size-adaptive (r16, same rule as pageRank/sssp): below the local-bytes
-    * estimate the union-find runs in ONE executor task — GraphX CC spent
+    * Size-adaptive (r16, same rule as pageRank/sssp): when the estimate
+    * fits, the union-find runs in ONE executor task — GraphX CC spent
     * ~15 RDD jobs of pure scheduling on a graph that fits in one array.
     * Semantics identical to GraphX: component id = lowest vertex id in the
     * component, vertices = vertex set ∪ edge endpoints.
@@ -60,7 +42,7 @@ object Algorithms {
     import spark.implicits._
     val e = pg.allEdges.select(col("start_id").as("src"), col("end_id").as("dst"))
     val v = pg.allVertices.select(col("id"))
-    if (isSmall(e, v)) return ccLocal(pg, e, v)
+    if (Local.fits(Local.GraphBytes, e, v)) return ccLocal(pg, e, v)
     toGraphX(pg).connectedComponents().vertices
       .toDF("id", "component")
   }
@@ -68,39 +50,41 @@ object Algorithms {
   private def ccLocal(pg: PropertyGraph, e: DataFrame, v: DataFrame): DataFrame = {
     val spark = pg.spark
     import spark.implicits._
-    val tagged = e.select(lit(true).as("_1"), col("src").as("_2"), col("dst").as("_3"))
-      .unionByName(v.select(lit(false).as("_1"), col("id").as("_2"), lit(0L).as("_3")))
-      .as[(Boolean, Long, Long)]
-      // repartition(1), not coalesce(1): keep the scans parallel, exchange
-      // only the narrow tagged pairs; union-find min-id roots are exact and
-      // order-independent, so fetch order cannot change the result
-      .repartition(1)
-    tagged.mapPartitions { it =>
-      // union-find with min-id representatives — the same fixpoint GraphX's
-      // label propagation converges to, in one pass
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
+    // a vertex is its own pair, so isolated vertices get a component too;
+    // repartition(1), not coalesce(1): keep the scans parallel, exchange
+    // only the narrow pairs; union-find min-id roots are exact and
+    // order-independent, so fetch order cannot change the result
+    e.unionByName(v.select(col("id").as("src"), col("id").as("dst")))
+      .as[(Long, Long)].repartition(1)
+      .mapPartitions(components).toDF("id", "component")
+  }
+
+  /** Union-find with min-id roots over undirected (a, b) pairs: (id,
+    * component) for every id seen, component = the least id of its
+    * connected component — the fixpoint GraphX's label propagation
+    * converges to, in one pass. The one union-find of the engine: x1's
+    * single-task CC and d6's near-dup clusters.
+    */
+  private[graft] def components(pairs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x // path compression
+      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    def add(x: Long): Unit = if (!parent.containsKey(x)) parent.put(x, x)
+    pairs.foreach { case (a, b) =>
+      add(a); add(b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) { // keep the SMALLER id as root → root = component min
+        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
       }
-      def add(x: Long): Unit = if (!parent.containsKey(x)) parent.put(x, x)
-      def union(a: Long, b: Long): Unit = {
-        add(a); add(b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { // keep the SMALLER id as root → root = component min
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      it.foreach { case (isEdge, a, b) =>
-        if (isEdge) union(a, b) else add(a)
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      parent.forEach((id, _) => out += ((id, find(id))))
-      out.iterator
-    }.toDF("id", "component")
+    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    parent.forEach((id, _) => out += ((id, find(id))))
+    out.iterator
   }
 
   /** Static PageRank with `iters` iterations: (id, rank).
@@ -117,7 +101,7 @@ object Algorithms {
   def pageRank(pg: PropertyGraph, iters: Int, resetProb: Double = 0.15): DataFrame = {
     val e = pg.allEdges.select(col("start_id").as("src"), col("end_id").as("dst"))
     val v = pg.allVertices.select(col("id"))
-    if (isSmall(e, v)) return pageRankLocal(pg, e, v, iters, resetProb)
+    if (Local.fits(Local.GraphBytes, e, v)) return pageRankLocal(pg, e, v, iters, resetProb)
     // out-degree-weighted edges, built once: (src, dst, w = 1/outdeg(src))
     val w = e.join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
       .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
@@ -220,9 +204,9 @@ object Algorithms {
     val spark = pg.spark
     import spark.implicits._
     val e0 = pg.allEdges.select(col("start_id").as("src"), col("end_id").as("dst"))
-    if (isSmall(e0)) return ssspLocal(pg, e0, src, maxHops)
-    // deep traversals: hand the whole iteration to Pregel (doc above)
-    if (maxHops > pregelHops(spark)) return ssspPregel(pg, src, maxHops)
+    if (Local.fits(Local.GraphBytes, e0)) return ssspLocal(pg, e0, src, maxHops)
+    // deep traversals: hand the whole iteration to Pregel (doc below)
+    if (maxHops > PregelHops) return ssspPregel(pg, src, maxHops)
     val edges = e0.localCheckpoint()
     var dist = Seq((src, 0)).toDF("id", "d").localCheckpoint()
     var frontier = dist
@@ -256,9 +240,8 @@ object Algorithms {
     * state is one Int, each superstep is a single aggregateMessages-style
     * shuffle on the SAME pre-partitioned graph, no Catalyst involvement.
     * Same recurrence, same (id, d) result as `sssp`, proven equivalent in
-    * AnalyticsSpec. Selected by `sssp` when maxHops exceeds
-    * `spark.graft.graph.pregelHops` (default 16) on the distributed path;
-    * call directly to force it.
+    * AnalyticsSpec. Selected by `sssp` when maxHops exceeds `PregelHops`
+    * (16) on the distributed path; call directly to force it.
     */
   def ssspPregel(pg: PropertyGraph, src: Long, maxHops: Int): DataFrame = {
     val spark = pg.spark
@@ -275,9 +258,7 @@ object Algorithms {
       .map { case (id, d) => (id.toLong, d) }.toDF("id", "d")
   }
 
-  private def pregelHops(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.graph.pregelHops").map(_.toInt)
-      .getOrElse(16)
+  private val PregelHops = 16
 
   /** Small-graph BFS: adjacency built in one task, level-synchronous scan
     * over local arrays — replaces ~5 jobs per level with one narrow job.
@@ -310,7 +291,9 @@ object Algorithms {
       }
       // open-addressing map: id → dense slot (ids are never MinValue)
       val EMPTY = Long.MinValue
-      val cap = java.lang.Integer.highestOneBit(math.max(16, n * 2)) * 2
+      // up to 2n + 1 ids: the smallest power of two ≥ twice that keeps the
+      // load ≤ 50% for every n
+      val cap = java.lang.Integer.highestOneBit(math.max(16, 4 * n + 2) - 1) * 2
       val keys = new Array[Long](cap); java.util.Arrays.fill(keys, EMPTY)
       val slots = new Array[Int](cap)
       val mask = cap - 1
@@ -381,7 +364,7 @@ object Algorithms {
     val spark = pg.spark
     import spark.implicits._
     val e = pg.allEdges.select(col("start_id").as("src"), col("end_id").as("dst"))
-    if (isSmall(e, pg.allVertices.select(col("id")))) {
+    if (Local.fits(Local.GraphBytes, e, pg.allVertices.select(col("id")))) {
       val vl = pg.vertexLabels.toSeq.sortBy(_._1).map { case (label, df) =>
         val lid = pg.labelIdOf(label)
         df.select(col("id"), lit(lid.toLong).as("lid"))

@@ -1,8 +1,11 @@
 package graft.operators
 
+import graft.Local
 import graft.Tables.T
+import graft.graph.Algorithms
 import graft.functions.TextFns._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.graphx.Graph
 import org.apache.spark.sql.functions._
 
 /** Corpus-level training-data pipeline operators — the steps BETWEEN the
@@ -36,17 +39,11 @@ object Pipeline {
       .cast("long") % 1000
 
   /** Near-dup component labels over the LSH-verified pair set:
-    * (id, lbl) with lbl = min doc_id of the component. Min-label
-    * propagation over the CANDIDATE node set only (docs appearing in some
-    * near-dup pair — a tiny fraction of the corpus), so each iteration is
-    * one join + one aggregate on a relation ∝ dup pairs, not ∝ corpus.
-    * Deep chain-shaped components would want the GraphX pointer-doubling
-    * CC (x1) instead; real near-dup graphs are small dense cliques where
-    * min-label converges in a couple of hops. Shared by d6 (cluster
-    * report) and d10 (corpus materialization).
-    */
-  /** Session cache for the cluster-label fixpoint — d6 AND d10 consume it
-    * (same amortization as Dedup.pairsCache; the fixpoint runs once).
+    * (id, lbl) with lbl = min doc_id of the component, over the CANDIDATE
+    * node set only (docs appearing in some near-dup pair — a tiny fraction
+    * of the corpus). Shared by d6 (cluster report) and d10 (corpus
+    * materialization) through this session cache (same amortization as
+    * Dedup.pairsCache; the labels are built once).
     */
   private val labelsCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, Long), DataFrame]()
@@ -66,67 +63,17 @@ object Pipeline {
   }
 
   private def dupClusterLabelsBuild(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
     val pairs = Dedup.lshVerifiedPairs(s, dir)
-      .select(col("da"), col("db")).localCheckpoint()
-    // r16 size-adaptive local path (the Algorithms.ccLocal discipline): the
-    // pair set is ∝ duplicates, not corpus — usually tiny — and the
-    // distributed min-label loop paid ~3 jobs per iteration of pure
-    // scheduling. Union-find with min-id roots computes the SAME fixpoint
-    // (lbl = min id in the connected component) exactly; above the cap
-    // (spark.graft.dedup.localClusterPairs, default 1M pairs; −1 disables)
-    // the distributed loop below is unchanged.
-    val localCap = s.conf.getOption("spark.graft.dedup.localClusterPairs")
-      .map(_.toLong).getOrElse(1L << 20)
-    if (localCap >= 0 && pairs.count() <= localCap) {
-      import s.implicits._
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      def add(x: Long): Unit = if (!parent.containsKey(x)) parent.put(x, x)
-      pairs.collect().foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        add(a); add(b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { // smaller id as root → root = component min
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      parent.forEach((id, _) => out += ((id, find(id))))
-      return out.toSeq.toDF("id", "lbl")
-    }
-    val edges = pairs.unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
-      .toDF("src", "dst").localCheckpoint()
-    var lbl = edges.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint()
-    var changed = true
-    var iter = 0
-    while (changed && iter < 50) {
-      val nb = edges
-        .join(lbl.select(col("id").as("src"), col("lbl").as("nlbl")), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("nlbl")).as("nmin"))
-      // localCheckpoint materializes the generation; the convergence probe
-      // reads its cached blocks (one cheap extra action, no recompute)
-      val upd = lbl.join(nb, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"),
-          (col("nmin") < col("lbl")).as("chg"))
-        .localCheckpoint()
-      changed = !upd.filter(col("chg")).isEmpty
-      lbl = upd.select(col("id"), col("lbl"))
-      iter += 1
-    }
-    // a component with diameter > the cap would return NON-minimal labels
-    // silently (wrong clusters, wrong d10 survivors) — fail loudly instead;
-    // chains that deep belong on the GraphX pointer-doubling CC (x1)
-    require(!changed,
-      s"dup-cluster label propagation did not converge within $iter iterations")
-    lbl
+      .select(col("da"), col("db")).as[(Long, Long)].localCheckpoint()
+    // the pair set is ∝ duplicates, not corpus — usually tiny (25 pairs at
+    // sf0.01, 256 at sf0.1), so the gate is its ACTUAL count: the estimate
+    // is join-inflated (3.9e17 B for those 25 rows). Union-find on the
+    // driver within the row cap; above it, x1's GraphX CC. Both give lbl =
+    // the least id of the component, whatever its diameter.
+    if (Local.holds(s, pairs.count()))
+      Algorithms.components(pairs.collect().iterator).toSeq.toDF("id", "lbl")
+    else Graph.fromEdgeTuples(pairs.rdd, 0).connectedComponents().vertices.toDF("id", "lbl")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

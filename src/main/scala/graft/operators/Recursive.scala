@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Local
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -31,14 +32,13 @@ import org.apache.spark.sql.types._
   *    counts its rows and its recursing rows. The accumulated rows are
   *    re-checkpointed every third generation so their plan stays shallow.
   *  - local frontier: a tiny deep recursion is pure scheduling cost (q35
-  *    walks a 25-row ring for 25 generations). When the seed's optimizer
-  *    estimate is at most `spark.graft.recursive.localBytes` (−1
-  *    disables), rows live on the driver: each generation is one collect()
-  *    over LocalRelations, whose exact stats let the planner broadcast
-  *    them, and liveness needs no count job. A generation of more than
-  *    `spark.graft.recursive.localRows` rows hands its state to the
-  *    distributed loop, which continues the same recurrence, so an
-  *    unexpectedly growing recursion degrades gracefully.
+  *    walks a 25-row ring for 25 generations). When [[graft.Local]] admits
+  *    the seed (estimate within `Local.RecursiveBytes`, rows within the row
+  *    cap), rows live on the driver: each generation is one collect() over
+  *    LocalRelations, whose exact stats let the planner broadcast them, and
+  *    liveness needs no count job. A generation over the row cap hands its
+  *    state to the distributed loop, which continues the same recurrence,
+  *    so an unexpectedly growing recursion degrades gracefully.
   * Nothing is cached across invocations.
   */
 object Recursive {
@@ -95,24 +95,17 @@ object Recursive {
     }
 
     val spark = seed.sparkSession
-    val localBytes = spark.conf.getOption("spark.graft.recursive.localBytes")
-      // 64 KiB, not 1 MiB (r16 measured): a 15k-row seed (q31) is cheaper
-      // distributed — the local mode's per-generation acc re-broadcast for
-      // the anti-join grows with the accumulated set, while a truly tiny
-      // deep recursion (q35's 25-row ring) wins 2× locally
-      .map(_.toLong).getOrElse(64L << 10)
-    if (localBytes < 0 || seed.queryExecution.optimizedPlan.stats.sizeInBytes > localBytes) {
+    val seedRows = if (Local.fits(Local.RecursiveBytes, seed)) Local.capped(seeded) else None
+    if (seedRows.isEmpty) {
       val acc = seeded.localCheckpoint()
       return distributed(acc, acc, 0, acc.count() > 0)
     }
-    val cap = spark.conf.getOption("spark.graft.recursive.localRows")
-      .map(_.toInt).getOrElse(65536)
     val schema = asNullable(seeded.schema).asInstanceOf[StructType]
     def local(rows: Seq[Row]): DataFrame = {
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.asJava, schema)
     }
-    val accRows = scala.collection.mutable.ArrayBuffer[Row](seeded.collect().toIndexedSeq: _*)
+    val accRows = scala.collection.mutable.ArrayBuffer[Row](seedRows.get.toIndexedSeq: _*)
     var front: Seq[Row] = accRows.toSeq
     var iter = 0
     while (front.nonEmpty && iter < maxIter) {
@@ -123,7 +116,7 @@ object Recursive {
       val rows = flagged.map(r => Row.fromSeq(r.toSeq.init)).toIndexedSeq
       front = rows.indices.filter(i => flagged(i).get(names.size) == true).map(rows)
       iter += 1
-      if (rows.length > cap) { // resume on the cluster, same recurrence
+      if (!Local.holds(spark, rows.length)) { // resume on the cluster, same recurrence
         val gen = local(rows).localCheckpoint(false)
         return distributed(accDf.unionByName(gen), gen.filter(rule.recurse), iter, front.nonEmpty)
       }

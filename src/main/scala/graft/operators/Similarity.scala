@@ -116,7 +116,7 @@ object Similarity {
     // HALF_UP round to 6, (cos desc, cid) tie-break), so the hash-checked
     // oracle rows see the same doubles. Above the cap: the distributed
     // scan below, unchanged.
-    if (graft.Tables.rowCount(s, dir, "embeddings") <= localServeMax(s))
+    if (serveLocal(s, dir))
       return bruteTopKLocal(s, dir)
     val emb = T(s, dir, "embeddings")
     // Flat-column pair scoring (r16, the d5 trick — guide §1.2 per-task
@@ -244,7 +244,7 @@ object Similarity {
       // sign-bit fold), identical candidate rule and rerank ordering.
       // Above the cap: the distributed path below, unchanged — that is the
       // 100 TB shape.
-      if (graft.Tables.rowCount(s, dir, "embeddings") <= localServeMax(s))
+      if (serveLocal(s, dir))
         lshServeLocal(s, dir, planesPerTable, tables)
       else lshAnnDistributed(s, dir, planesPerTable, tables)
     }),
@@ -331,26 +331,23 @@ object Similarity {
         .orderBy(col("qid"), col("rank"))
   }
 
-  /** Driver-state cap for the local ANN serve paths (s3/s4/s8): at the cap
-    * the local structures are n×dim doubles (65536×64 ≈ 33 MB) plus small
-    * per-vector metadata — bounded like the k-means samples. Above it the
-    * corpus never touches the driver and every serve is distributed.
+  /** Driver-state gate for the local ANN serve paths (s1/s3/s4/s8): a
+    * corpus of at most [[graft.Local]]'s row cap of vectors. At the default
+    * cap the local structures are n×dim doubles (65536×64 ≈ 33 MB) plus
+    * small per-vector metadata (s8: n×PqM code tuples) — bounded like the
+    * k-means samples. Above it the corpus never touches the driver and
+    * every serve is distributed.
     */
-  /** Conf-backed so deployments (and the equivalence spec) can move or
-    * disable the local/distributed switch: `spark.graft.ann.localServeMax`
-    * (vectors; 0 forces every serve distributed). Default 65536.
-    */
-  private def localServeMax(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.ann.localServeMax").map(_.toLong)
-      .getOrElse(65536L)
+  private def serveLocal(s: SparkSession, dir: String): Boolean =
+    graft.Local.holds(s, graft.Tables.rowCount(s, dir, "embeddings"))
 
   /** Local LSH serve (r16): identical bucket-key math to
     * [[lshAnnDistributed]] — same xxhash64(plane, pos) hyperplane
     * components (Spark's XXH64 with the xxhash64 seed 42), same sign-bit
     * fold, same candidate rule (any shared (table, bucket), qid ≠ cid),
     * same exact cosine rerank rounded half-up to 6 with the same
-    * (cos desc, cid) tie-break — evaluated driver-side because at
-    * ≤`localServeMax` vectors the arithmetic is milliseconds and every
+    * (cos desc, cid) tie-break — evaluated driver-side because within
+    * the local-serve cap the arithmetic is milliseconds and every
     * one of the distributed plan's stages is pure overhead.
     */
   private def lshServeLocal(s: SparkSession, dir: String,
@@ -436,7 +433,7 @@ object Similarity {
     * centroids (the caller passes them), same nearest-list assignment with
     * the (dist, cluster) tie-break, same nprobe nearest-lists probe, same
     * exact cosine rerank rounded half-up to 6 with the (cos desc, cid)
-    * tie-break — evaluated driver-side below `localServeMax`.
+    * tie-break — evaluated driver-side below the local-serve cap.
     */
   private def ivfServeLocal(s: SparkSession, dir: String,
       cents: Array[Array[Double]], nprobe: Int): DataFrame = {
@@ -564,20 +561,12 @@ object Similarity {
     s"$root/pqr_m${PqM}_k${PqK}_${java.lang.Long.toHexString(fp)}"
   }
 
-  /** Driver-state cap for the local PQ serve path: at the cap the local
-    * structures are n×dim normalized doubles (65536×64 ≈ 33 MB) plus
-    * n×PqM code tuples — bounded like the k-means samples. Above it the
-    * corpus never touches the driver and pqSearch serves distributed.
-    */
-  // r16: conf-backed via localServeMax (spark.graft.ann.localServeMax),
-  // unified with the s3/s4 local serves; 65536 stays the default cap.
-
   /** Local IVFADC serve (r16): identical probe/ADC/rerank semantics to
     * the distributed pipeline in [[pqSearch]] — same coarse probes
     * (nearest nprobe lists, ties by list id), same shortlist order
     * (adc asc, vid asc), same exact cosine rerank rounded half-up to 6 —
-    * just evaluated driver-side from the collected sidecar, because at
-    * ≤`localServeMax` vectors the arithmetic is milliseconds and
+    * just evaluated driver-side from the collected sidecar, because within
+    * the local-serve cap the arithmetic is milliseconds and
     * every one of the distributed plan's ~15 stages is pure overhead.
     */
   private def pqServeLocal(s: SparkSession, dir: String,
@@ -818,7 +807,7 @@ object Similarity {
     // 2 k-vector corpus). Above the cap the distributed IVFADC pipeline
     // below is the only path — same routing discipline as the compiler's
     // local-BFS and q35 fixpoint switches.
-    if (nCorpus <= localServeMax(s))
+    if (serveLocal(s, dir))
       return pqServeLocal(s, dir, cents, books, codes, sub, nprobe,
         pqShortlist(nCorpus))
     // query tables: per probed coarse list, the query RESIDUAL's distance
@@ -907,7 +896,7 @@ object Similarity {
     // same assignment/probe/rerank semantics, driver-side — the
     // distributed pipeline's ~12 stages are pure scheduling overhead at
     // this size. Above the cap: the distributed path, unchanged.
-    if (n <= localServeMax(s)) {
+    if (serveLocal(s, dir)) {
       val centroids = graft.functions.Ivf.kmeansSampled(
         T(s, dir, "embeddings"), "vec_id", "embedding", k, iters = 6,
         nHint = Some(n))

@@ -36,7 +36,7 @@ class AnalyticsSpec extends AnyFunSuite {
     val pg = graft.operators.GraphQueries.tpchGraph(spark, sf)
     val src = (1L << 48) | 1L
     // force the distributed DataFrame loop (disable the local fast path)
-    spark.conf.set("spark.graft.graph.localBytes", "-1")
+    spark.conf.set("spark.graft.local.maxRows", "0")
     try {
       val loop = Algorithms.sssp(pg, src, maxHops = 8).collect()
         .map(r => (r.getLong(0), r.getInt(1))).toMap
@@ -47,7 +47,24 @@ class AnalyticsSpec extends AnyFunSuite {
       val deep = Algorithms.sssp(pg, src, maxHops = 100).collect()
         .map(r => (r.getLong(0), r.getInt(1))).toMap
       assert(deep == loop) // graph diameter < 8: extra hops change nothing
-    } finally spark.conf.unset("spark.graft.graph.localBytes")
+    } finally spark.conf.unset("spark.graft.local.maxRows")
+    // the local BFS at its id table's fullest: 2^16 − 1 disjoint edges
+    // give 2^17 − 2 ids, which a table sized from 2n alone held at ~100%
+    // load
+    import org.apache.spark.sql.functions.col
+    val n = (1L << 16) - 1
+    val disjoint = new graft.graph.PropertyGraph(spark,
+      Map("V" -> spark.range(2 * n).toDF("id")),
+      Map("E" -> spark.range(n).select((col("id") * 2).as("start_id"),
+        (col("id") * 2 + 1).as("end_id"))),
+      Map("V" -> 1, "E" -> 2))
+    for (s <- Seq(0L, 2 * n - 2)) {
+      val local = Algorithms.sssp(disjoint, s, maxHops = 8).collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toMap
+      val pregel = Algorithms.ssspPregel(disjoint, s, maxHops = 8).collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toMap
+      assert(local == pregel && local == Map(s -> 0, (s + 1) -> 1), s"source $s: $local")
+    }
   }
 
   test("top pagerank vertices are all nations or regions") {

@@ -48,16 +48,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(recall >= 0.65, s"IVF recall $recall (brute=${brute.size}, ivf=${ivf.size})")
   }
 
-  test("dup-cluster local union-find matches the distributed label loop") {
+  test("dup-cluster local union-find matches GraphX connected components") {
     def rows(): Set[(Long, Long, Long)] = {
       Pipeline.clearSessionCache()
       Pipeline.queries("d6_dup_clusters")(spark, sf).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
-    val key = "spark.graft.dedup.localClusterPairs"
+    val key = "spark.graft.local.maxRows"
     val local = rows()
-    spark.conf.set(key, "-1") // force the distributed min-label loop
-    try assert(rows() == local, "local union-find diverged from label loop")
+    spark.conf.set(key, "0") // force the distributed GraphX CC
+    try assert(rows() == local, "local union-find diverged from GraphX CC")
     finally { spark.conf.unset(key); Pipeline.clearSessionCache() }
     assert(local.nonEmpty)
   }
@@ -90,7 +90,7 @@ class PipelineSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getAs[Number](1).longValue(),
           r.getLong(2), r.getDouble(3))).toSeq
     }
-    val key = "spark.graft.ann.localServeMax"
+    val key = "spark.graft.local.maxRows"
     val localS1 = rows("s1_cosine_topk")
     val localS3 = rows("s3_ann_lsh")
     val localS4 = rows("s4_ivf_ann")

@@ -160,10 +160,10 @@ class RelationalSpec extends AnyFunSuite {
       }
     }
     val local = results() // tiny LocalRelation seeds take the local path
-    val dist = withConf("spark.graft.recursive.localBytes" -> "-1")(results())
+    val dist = withConf("spark.graft.local.maxRows" -> "0")(results())
     // cap of 1 row: every multi-row generation overflows, forcing the
     // mid-run push-back to the distributed recurrence
-    val fallback = withConf("spark.graft.recursive.localRows" -> "1")(results())
+    val fallback = withConf("spark.graft.local.maxRows" -> "1")(results())
     assert(local == dist, "local-frontier mode diverged from distributed")
     assert(fallback == dist, "overflow fallback diverged from distributed")
     assert(local.nonEmpty)

@@ -1382,8 +1382,21 @@ class WriteSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(2)).distinct.length == 2)
   }
 
-  // r17: the write path's size-adaptive freeze (WriteLocal — LocalRelation
-  // below the bound, localCheckpoint above) must be value-invisible. Run
+  test("write-id numbering is capped by actual rows, not the estimate") {
+    // 100 000 longs estimate at 800 kB, under the 1 MiB write bound, but
+    // hold more rows than the 65536-row cap: the numbering must take the
+    // distributed path and still number 1..n in input order
+    val (numbered, n) = graft.cypher.RowNumber.attach(spark.range(100000).toDF("x"), "n")
+    assert(n == 100000)
+    val plan = numbered.queryExecution.optimizedPlan
+    assert(!plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      s"numbering collected past the row cap:\n$plan")
+    val rows = numbered.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(rows.sortBy(_._2).toSeq == (0L until 100000L).map(x => (x, x + 1)))
+  }
+
+  // r17: the write path's size-adaptive freeze (LocalRelation below the
+  // bound, localCheckpoint above) must be value-invisible. Run
   // the four driver-oracled write rows under both modes and compare the
   // one-row digests (counts + sums + md5 of the sorted final state) —
   // any ordering/typing drift in the local path would flip the md5.
@@ -1393,11 +1406,11 @@ class WriteSpec extends AnyFunSuite {
       n -> graft.operators.WritePath.queries(n)(spark, "")
         .collect().toSeq.map(_.toString)
     }.toMap
-    val local = digests() // default: WriteLocal bound active
-    spark.conf.set("spark.graft.write.localBytes", "-1")
+    val local = digests() // default: the local write bound active
+    spark.conf.set("spark.graft.local.maxRows", "0")
     try {
       val dist = digests()
       names.foreach { n => assert(local(n) == dist(n), s"$n digests diverge") }
-    } finally spark.conf.unset("spark.graft.write.localBytes")
+    } finally spark.conf.unset("spark.graft.local.maxRows")
   }
 }
