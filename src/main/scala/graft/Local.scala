@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The one small-input policy: every choice between holding a relation in
   * one place (the driver, or a single executor task) and keeping it
@@ -14,11 +15,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *  - [[capped]] and [[holds]], which check the ACTUAL row count, so an
   *    estimate that undercounts never puts more than `maxRows` rows on the
   *    driver; above the cap the site takes its distributed path.
-  * Sites: write snapshots and write-id numbering (GraphSession), the
-  * recursive local frontier (Recursive), the single-task graph algorithms
-  * (Algorithms: estimate only, they never collect), near-dup clustering
-  * (Pipeline: actual pair count only, its estimate is join-inflated by
-  * orders of magnitude) and the ANN serves (Similarity: corpus row count).
+  * Sites: write snapshots, write-id numbering and a publish's touched ids
+  * (GraphSession), the recursive local frontier (Recursive), the
+  * single-task graph algorithms (Algorithms: estimate only, they never
+  * collect), near-dup clustering (Pipeline: actual pair count only, its
+  * estimate is join-inflated by orders of magnitude) and the ANN serves
+  * (Similarity: corpus row count).
   */
 private[graft] object Local {
 
@@ -67,10 +69,20 @@ private[graft] object Local {
   /** A write statement's frozen snapshot: a LocalRelation when small, else
     * an eager localCheckpoint — value- and order-identical either way.
     */
-  def freeze(df: DataFrame): DataFrame = collect(df, WriteBytes) match {
-    case Some(rows) =>
-      import scala.jdk.CollectionConverters._
-      df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
-    case None => df.localCheckpoint()
+  def freeze(df: DataFrame): DataFrame = freezeHeld(df)._1
+
+  /** [[freeze]], plus the rows themselves when the snapshot is held on the
+    * driver, so a caller can read them without another job.
+    */
+  def freezeHeld(df: DataFrame): (DataFrame, Option[Array[Row]]) =
+    collect(df, WriteBytes) match {
+      case Some(rows) => (relation(df.sparkSession, rows, df.schema), Some(rows))
+      case None => (df.localCheckpoint(), None)
+    }
+
+  /** Driver rows as a LocalRelation. */
+  def relation(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
   }
 }

@@ -30,28 +30,35 @@ object Tables {
         size() > DfCacheCap
     })
 
-  private def tableFingerprint(spark: SparkSession, path: String): Long = {
+  /** None when the table cannot be listed: no key can then vouch for a
+    * memo entry's freshness, so the caller reads uncached. */
+  private def tableFingerprint(spark: SparkSession, path: String): Option[Long] = {
     val local = new java.io.File(path)
     // r17 (ADVICE r16): a non-local path (hdfs://, s3a://) used to walk a
     // nonexistent java.io.File and fold to a CONSTANT — the staleness
     // discipline silently vanished off local disk. Resolve through
     // Hadoop's FileSystem for anything java.io cannot see.
     if (!local.exists()) return hadoopFingerprint(spark, path)
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq.sortBy(_.getName)).getOrElse(Nil)
-          .flatMap(walk)
-      else Seq(f)
-    walk(local).foldLeft(17L) { (h, f) =>
+    // None when a directory cannot be listed (listFiles() is null on an
+    // IO or permission failure), as for a failed Hadoop listing
+    def walk(f: java.io.File): Option[Seq[java.io.File]] =
+      if (!f.isDirectory) Some(Seq(f))
+      else Option(f.listFiles()).flatMap(_.toSeq.sortBy(_.getName)
+        .foldLeft(Option(Seq.empty[java.io.File])) { (acc, c) =>
+          for (a <- acc; w <- walk(c)) yield a ++ w })
+    walk(local).map(_.foldLeft(17L) { (h, f) =>
       val mtime =
         try java.nio.file.Files.getLastModifiedTime(f.toPath)
           .to(java.util.concurrent.TimeUnit.NANOSECONDS)
         catch { case _: java.io.IOException => f.lastModified() }
-      31L * (31L * (31L * h + f.getName.hashCode) + f.length()) + mtime
-    }
+      31L * (31L * (31L * h + f.getPath.hashCode) + f.length()) + mtime
+    })
   }
 
-  private def hadoopFingerprint(spark: SparkSession, path: String): Long = {
+  // Both walks key files by full path: partition directories hold files
+  // of one basename (`a=1/part-00000-….parquet`, `a=2/part-00000-….parquet`),
+  // and a renamed directory keeps its files' names, sizes and mtimes.
+  private def hadoopFingerprint(spark: SparkSession, path: String): Option[Long] = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
@@ -59,12 +66,12 @@ object Tables {
       val it = fs.listFiles(hp, /*recursive=*/ true)
       while (it.hasNext) {
         val st = it.next()
-        files += ((st.getPath.getName, st.getLen, st.getModificationTime))
+        files += ((st.getPath.toString, st.getLen, st.getModificationTime))
       }
-    } catch { case _: java.io.IOException => return 17L }
-    files.sortBy(_._1).foldLeft(17L) { case (h, (n, len, mtime)) =>
+    } catch { case _: java.io.IOException => return None }
+    Some(files.sortBy(_._1).foldLeft(17L) { case (h, (n, len, mtime)) =>
       31L * (31L * (31L * h + n.hashCode) + len) + mtime
-    }
+    })
   }
 
   def T(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -73,7 +80,7 @@ object Tables {
       val it = dfCache.keySet().iterator()
       while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
     }
-    dfCache.computeIfAbsent((spark, path, tableFingerprint(spark, path)), _ => {
+    def load(): DataFrame = {
       // events.ts is parquet TIMESTAMP(NANOS). Spark 4.1 reads it natively as
       // TIMESTAMP_NTZ truncated to micros (the legacy nanosAsLong conf no
       // longer applies); normalize to tz-aware TimestampType so temporal ops
@@ -88,7 +95,11 @@ object Tables {
           acc.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         case (acc, _) => acc
       }
-    })
+    }
+    tableFingerprint(spark, path) match {
+      case Some(fp) => dfCache.computeIfAbsent((spark, path, fp), _ => load())
+      case None => load()
+    }
   }
 
   /** Per-(dir, table) scalar metadata memo. A table's row count and an

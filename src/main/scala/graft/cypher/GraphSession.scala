@@ -5,7 +5,9 @@ import graft.graph.PropertyGraph
 import graft.gvalue._
 import Ast._
 import Compiler.{Ctx, VarInfo}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
@@ -30,11 +32,10 @@ private[graft] object RowNumber {
     // LocalRelation result keeps every downstream read/probe of the
     // created rows driver-foldable.
     def numbered(rows: Array[Row]): (DataFrame, Long) = {
-      import scala.jdk.CollectionConverters._
       val out = rows.iterator.zipWithIndex.map { case (row, i) =>
         Row.fromSeq(row.toSeq :+ (i + 1L))
       }.toIndexedSeq
-      (spark.createDataFrame(out.asJava, schema), rows.length.toLong)
+      (Local.relation(spark, out, schema), rows.length.toLong)
     }
     // r17 (guide §1.2 — a tiny write's per-statement cost is pure job
     // scheduling): a small input's freeze + count + zipWithIndex trio (3
@@ -2079,30 +2080,6 @@ final class MutableGraph(spark: SparkSession) {
         shiftleft(lit(lid.toLong), 48).bitwiseOR(col(keyCol).cast("long")).as("id") +:
           batch.columns.filterNot(_ == "id").sorted.map(col): _*)
       appendRows("v", label, df.localCheckpoint())
-      ingestFlatten("v", label, batchId)
-    }
-
-  /** Sustained-ingest hygiene (r13): every micro-batch wraps the label in
-    * another union (and, for upserts, an anti-join), so by batch N the
-    * in-memory table is an N-deep plan — planning plus each publish's
-    * semi-join re-walks it, measured ~4 s → ~30 s per batch by batch 110
-    * of the StreamingSpec long run. Flattening the lineage every 16
-    * batches bounds plan depth at 16 for ONE materialization per 16
-    * batches; the leaves are already cached blocks, so the checkpoint
-    * copies the label once, not the history.
-    */
-  private def ingestFlatten(kind: String, label: String, batchId: Long): Unit =
-    if (batchId % 16 == 15) {
-      // coalesce first: the union history also inflated the PARTITION
-      // count (each 4-row batch contributes its own partitions), which
-      // would make every later scan schedule hundreds of near-empty tasks
-      val parts = spark.sparkContext.defaultParallelism
-      if (kind == "v")
-        vertexLabels.get(label).foreach(df =>
-          vertexLabels += (label -> df.coalesce(parts).localCheckpoint()))
-      else
-        edgeLabels.get(label).foreach(df =>
-          edgeLabels += (label -> df.coalesce(parts).localCheckpoint()))
     }
 
   /** Upsert twin of [[ingestVertexBatch]] (r12 streaming CDC): a batch
@@ -2128,7 +2105,6 @@ final class MutableGraph(spark: SparkSession) {
           val kept = o.join(df.select(col("id")), Seq("id"), "left_anti")
           vertexLabels += (label -> aligned("v", label, Some(kept), df))
       }
-      ingestFlatten("v", label, batchId)
     }
 
   /** Commit one streaming micro-batch of edges as ONE store version —
@@ -2150,7 +2126,6 @@ final class MutableGraph(spark: SparkSession) {
           shiftleft(lit(dstLid.toLong), 48).bitwiseOR(col(dstKeyCol).cast("long")).as("end_id")
         ) ++ props: _*)
       appendRows("e", label, df.localCheckpoint())
-      ingestFlatten("e", label, batchId)
     }
 
   /** Append rows to a label table (all CREATE paths): records the new ids
@@ -2428,13 +2403,13 @@ final class MutableGraph(spark: SparkSession) {
     // action" point to unpersist at — checkpointing materializes once, cuts
     // the lineage (deterministic re-scans), and the blocks are released by
     // the context cleaner when the session drops the table version
-    val updates = Local.freeze(updates0)
+    val frozen = Local.freezeHeld(updates0)
+    val updates = frozen._1
     noteTouched(updates.select(col("__set_id").as("id")))
+    val hit = labelsIn(frozen, "__set_id")
     def apply(kind: String, tables: Map[String, DataFrame]): Map[String, DataFrame] =
       tables.map { case (l, df) =>
-        val hasAny = updates.filter(PropertyGraph.labelOfCol(col("__set_id")) === lit(labelIds(l)))
-          .limit(1).count() > 0
-        if (!hasAny) l -> df
+        if (!hits(hit, l)) l -> df
         else {
           val joined = df.join(updates, df("id") === updates("__set_id"), "left_outer")
           val updated =
@@ -2468,51 +2443,76 @@ final class MutableGraph(spark: SparkSession) {
     edgeLabels = apply("e", edgeLabels)
   }
 
+  /** Label ids of the entity ids in `idCol` of a frozen write snapshot:
+    * read off the driver rows when it is held there, else one job.
+    */
+  private def labelsIn(frozen: (DataFrame, Option[Array[Row]]), idCol: String): Set[Long] =
+    frozen match {
+      case (_, Some(rows)) =>
+        rows.iterator.map(r => r.get(r.fieldIndex(idCol)))
+          .collect { case n: java.lang.Number => n.longValue >>> 48 }.toSet
+      case (df, None) =>
+        df.select(PropertyGraph.labelOfCol(col(idCol).cast(LongType)).as("l"))
+          .where(col("l").isNotNull)
+          .distinct().collect().map(_.getLong(0)).toSet
+    }
+  /** Whether a write whose ids carry label ids `hit` can change label `l`:
+    * a label it cannot change keeps its DataFrame reference, and publish
+    * carries it by pointer.
+    */
+  private def hits(hit: Set[Long], l: String): Boolean =
+    labelIds.get(l).forall(i => hit(i.toLong))
+
+  /** DELETE edges by id across every edge label table. */
+  def deleteEdges(ids0: DataFrame): Unit = {
+    val frozen = Local.freezeHeld(ids0)
+    val ids = frozen._1
+    noteTouched(ids)
+    val hit = labelsIn(frozen, "id")
+    edgeLabels = edgeLabels.map { case (l, e) =>
+      if (!hits(hit, l)) l -> e
+      else l -> e.join(ids, e("id") === ids("id"), "left_anti")
+    }
+  }
+
   /** DELETE vertices by id; DETACH cascades to incident edges on every edge
     * label (get_all_edge_labels_per_graph semantics); plain DELETE errors if
     * any incident edge remains.
     */
-  /** DELETE edges by id across every edge label table. */
-  def deleteEdges(ids0: DataFrame): Unit = {
-    val ids = Local.freeze(ids0)
-    noteTouched(ids)
-    edgeLabels = edgeLabels.map { case (l, e) =>
-      l -> e.join(ids, e("id") === ids("id"), "left_anti")
-    }
-  }
-
   def deleteVertices(ids0: DataFrame, detach: Boolean): Unit = {
-    val ids = Local.freeze(ids0) // eager + lineage-cut (see updateProperty)
+    val frozen = Local.freezeHeld(ids0) // eager + lineage-cut (see updateProperty)
+    val ids = frozen._1
+    def incident(e: DataFrame): DataFrame =
+      e.join(ids, e("start_id") === ids("id") || e("end_id") === ids("id"), "left_semi")
     if (!detach) {
-      val incident = edgeLabels.values.map(e =>
-        e.join(ids, e("start_id") === ids("id") || e("end_id") === ids("id"), "left_semi")
-          .limit(1).count()).sum
-      if (incident > 0)
+      val n = edgeLabels.values.map(e => incident(e).limit(1).count()).sum
+      if (n > 0)
         throw new IllegalStateException(
           "cannot delete vertex with incident edges — use DETACH DELETE")
-    } else {
-      edgeLabels = edgeLabels.map { case (l, e) =>
-        // the cascade is keyed on ENDPOINTS — enumerate the edge ids it
-        // removes (one semi-join per label, the same scan shape as the
-        // anti-join below) so the statement stays id-local: a point
-        // DETACH DELETE publishes tombstones through the dv path instead
-        // of rewriting every edge label (r12; was noteFullRewrite)
-        noteTouched(e.join(ids,
-          e("start_id") === ids("id") || e("end_id") === ids("id"), "left_semi")
-          .select(col("id")))
-        l -> e.join(ids, e("start_id") === ids("id") || e("end_id") === ids("id"), "left_anti")
-      }
+    } else if (edgeLabels.nonEmpty) {
+      // the cascade is keyed on ENDPOINTS: enumerate the edge ids it removes
+      // (one semi-join per label, frozen in one job) and delete those by id,
+      // so the statement stays id-local — a point DETACH DELETE publishes
+      // tombstones through the dv path (r12), and an edge label with no
+      // incident edge keeps its reference
+      deleteEdges(edgeLabels.values.map(e => incident(e).select(col("id")))
+        .reduce(_ unionByName _))
     }
     noteTouched(ids)
+    val hit = labelsIn(frozen, "id")
     vertexLabels = vertexLabels.map { case (l, v) =>
-      l -> v.join(ids, v("id") === ids("id"), "left_anti")
+      if (!hits(hit, l)) l -> v
+      else l -> v.join(ids, v("id") === ids("id"), "left_anti")
     }
   }
 
   // ------------------------------------------------------ durable store
   // (GraphStore layout doc) — when attached, every successful mutating
-  // statement publishes the next parquet version; reads stay on the
-  // in-memory fast path (the localCheckpointed tables), never re-reading.
+  // statement publishes the next parquet version; reads use the in-memory
+  // label tables, never re-reading the store. Invariant, kept at commit
+  // (commitIfChanged): a committed label is either a materialized leaf or a
+  // join-free append of at most 16 leaves, so a statement's plans and its
+  // publish join a small delta against a flat table, whatever the history.
 
   private[cypher] var storeRoot: Option[String] = None
   /** The store version this session's in-memory state derives from —
@@ -2594,11 +2594,21 @@ final class MutableGraph(spark: SparkSession) {
           .toList.sorted
       }
     }
-    // union of the statement's touched-id frames (lazy: only built when a
-    // changed label is actually CoW-eligible)
-    lazy val txTouchedAll: Option[DataFrame] =
-      if (txTouched.isEmpty) None
-      else Some(txTouched.reduce(_ unionByName _).localCheckpoint())
+    // the statement's touched ids, collected once onto the driver while
+    // they fit Local's cap (a driver-held frame costs no job); None past
+    // the cap, where the checkpointed union below serves instead. Both are
+    // lazy: only built when a changed label is id-local eligible.
+    lazy val heldTouched: Option[Array[Long]] =
+      txTouched.foldLeft(Option(Set.empty[Long])) { (acc, f) =>
+        for (ids <- acc; rows <- Local.collect(f, Local.WriteBytes)
+             if Local.holds(spark, ids.size + rows.length))
+        yield ids ++ rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0))
+      }.map(_.toArray.sorted)
+    lazy val txTouchedAll: DataFrame =
+      txTouched.reduce(_ unionByName _).localCheckpoint()
+    val idSchema = StructType(Seq(StructField("id", LongType)))
+    def idFrame(ids: Array[Long]): DataFrame =
+      Local.relation(spark, ids.toSeq.map(Row(_)), idSchema)
     val sb = new StringBuilder
     sb ++= s"seq $seqLast\n"
     labelIds.foreach { case (n, i) => sb ++= s"label ${enc(n)} $i\n" }
@@ -2665,13 +2675,15 @@ final class MutableGraph(spark: SparkSession) {
       referenced += e.ver
       sb ++= s"dvp $kind $encl ${enc(e.rel)} ${e.count}\n"
     }
-    // read manifest files with their applicable deletion vectors applied —
-    // the same filter load uses, needed by every publish-side read of prev
-    // files (CoW discovery + rewrite) or suppressed row-versions would be
-    // resurrected into rewritten files
-    def readEntsWithDv(ents: List[FileEnt], dvs: List[DvEnt],
+    // read the ids of manifest files with their applicable deletion vectors
+    // applied — the same filter load uses, needed by every publish-side
+    // read of prev files (CoW discovery + rewrite, dv positions) or
+    // suppressed row-versions would be resurrected into rewritten files.
+    // Every such read needs only `id`: the id-only schema skips the
+    // schema-inference job a mergeSchema read runs over the file footers.
+    def readIdsWithDv(ents: List[FileEnt], dvs: List[DvEnt],
         dvps: List[DvpEnt]): DataFrame = {
-      val raw = spark.read.option("mergeSchema", "true")
+      val raw = spark.read.schema(idSchema)
         .parquet(ents.map(e => s"$root/${e.rel}"): _*)
       if (dvs.isEmpty && dvps.isEmpty) raw
       else {
@@ -2695,9 +2707,14 @@ final class MutableGraph(spark: SparkSession) {
     // at 12 columns per label; strings over 64 chars carry no claim (a
     // truncated max would be an unsound upper bound).
     def statsOf(outDir: String, rels: List[String]): List[FileEnt] =
+      statsOfRows(spark.read.parquet(outDir),
+        element_at(split(col("_metadata.file_path"), "/"), -1), rels)
+    // the stats of `rels` from `df`'s rows grouped by `file`, a basename:
+    // a file written from driver rows takes them from those rows, with no
+    // re-read of the file
+    def statsOfRows(df: DataFrame, file: Column, rels: List[String]): List[FileEnt] =
       if (rels.isEmpty) Nil
       else {
-        val df = spark.read.parquet(outDir)
         val eligible = df.schema.fields.filter(f =>
           !Set("id", "start_id", "end_id")(f.name) && (f.dataType match {
             case LongType | IntegerType | DoubleType | StringType => true
@@ -2710,9 +2727,7 @@ final class MutableGraph(spark: SparkSession) {
         val aggs = Seq(min(col("id")).as("mn"), max(col("id")).as("mx")) ++
           eligible.zipWithIndex.flatMap { case (f, i) =>
             Seq(min(col(f.name)).as(s"pmn$i"), max(col(f.name)).as(s"pmx$i")) }
-        val rows = df
-          .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1).as("__fname"))
-          .agg(aggs.head, aggs.tail: _*)
+        val rows = df.groupBy(file.as("__fname")).agg(aggs.head, aggs.tail: _*)
           .collect()
         // temporal edges persist as plain longs (micros since epoch /
         // epoch days) — exact, total-ordered, and collector-representation
@@ -2779,7 +2794,7 @@ final class MutableGraph(spark: SparkSession) {
     def idLocalPrevEnts(kind: String, l: String, df: DataFrame): Option[List[FileEnt]] = {
       val encl = enc(l)
       if (txFullRewrite.contains(s"$kind:$l")) return None
-      if (txTouchedAll.isEmpty) return None
+      if (txTouched.isEmpty) return None
       if (df.schema.fields.exists(_.dataType == NullType)) return None
       if (prevNull.contains((kind, encl))) return None // legacy nulltype files
       val ents = prevFileLines.get((kind, encl)).map(entsOfLines).getOrElse {
@@ -2791,9 +2806,19 @@ final class MutableGraph(spark: SparkSession) {
       }
       if (ents.isEmpty) None else Some(ents) // brand-new label: full write IS minimal
     }
-    def touchedOf(l: String): DataFrame = txTouchedAll.get
-      .filter(PropertyGraph.labelOfCol(col("id")) === lit(labelIds(l)))
-      .select(col("id")).distinct()
+    def heldOf(ids: Array[Long], l: String): Array[Long] =
+      ids.filter(i => (i >>> 48) == labelIds(l).toLong)
+    def touchedOf(l: String): DataFrame = heldTouched match {
+      case Some(ids) => idFrame(heldOf(ids, l))
+      case None => txTouchedAll
+        .filter(PropertyGraph.labelOfCol(col("id")) === lit(labelIds(l)))
+        .select(col("id")).distinct()
+    }
+    // the label's touched ids, sorted; past `max` only the excess counts
+    def touchedIdsOf(l: String, max: Int): Array[Long] = heldTouched match {
+      case Some(ids) => heldOf(ids, l)
+      case None => touchedOf(l).limit(max + 1).collect().map(_.getLong(0)).sorted
+    }
     // Merge-on-read point writes (Delta deletion-vector analog): instead
     // of rewriting the files holding the touched ids, write ONLY the new
     // row-versions (one small file) plus a tombstone id list, and carry
@@ -2815,10 +2840,8 @@ final class MutableGraph(spark: SparkSession) {
       val prevDvps = dvpEntsOf(kind, encl)
       // compaction bound counts dv lines too — open-time cost is files+dvs
       if (prevEnts.size + prevDvs.size + prevDvps.size >= 64) return false
-      val touched = touchedOf(l)
       val maxIds = MutableGraph.DvMaxStatementIds
-      val touchedIds: Array[Long] =
-        touched.limit(maxIds + 1).collect().map(_.getLong(0)).sorted
+      val touchedIds = touchedIdsOf(l, maxIds)
       if (touchedIds.isEmpty || touchedIds.length > maxIds) return false
       // a tombstone is only needed for ids an OLDER file may hold, proven
       // by per-file [min,max] id stats alone (backfilled at dir-pointer
@@ -2834,16 +2857,21 @@ final class MutableGraph(spark: SparkSession) {
       val tombstones = touchedIds.filter(mayHoldId)
       if (prevDvs.map(_.count).sum + prevDvps.map(_.count).sum +
         tombstones.length > MutableGraph.DvMaxTombstones) return false
-      val newRows = df.join(touched, Seq("id"), "left_semi")
-      val hasNew = !newRows.isEmpty
-      if (!hasNew && tombstones.isEmpty) return false
-      if (hasNew) {
-        val outDir = s"$dir/$kind/$encl"
-        newRows.coalesce(1).write.parquet(outDir)
-        val newRels = listParquet(outDir)
-          .map(p => s"v$next/$kind/$encl/${Paths.get(p).getFileName}")
-        statsOf(outDir, newRels).foreach(emitEnt(kind, encl, _))
-      }
+      // the new row-versions (at most maxIds rows), collected once and
+      // written as one file from those driver rows; its stats come from
+      // one aggregate over the same rows, with no re-read of the file
+      val rows = df.filter(col("id").isin(touchedIds.map(Long.box): _*)).collect()
+      val newEnts: List[FileEnt] =
+        if (rows.isEmpty) Nil
+        else {
+          val held = Local.relation(spark, rows.toSeq, df.schema)
+          val outDir = s"$dir/$kind/$encl"
+          held.coalesce(1).write.parquet(outDir)
+          val names = listParquet(outDir).map(p => Paths.get(p).getFileName.toString)
+          statsOfRows(held, lit(names.head), names.map(n => s"v$next/$kind/$encl/$n"))
+        }
+      if (newEnts.isEmpty && tombstones.isEmpty) return false
+      newEnts.foreach(emitEnt(kind, encl, _))
       prevEnts.foreach(emitEnt(kind, encl, _))
       prevDvs.foreach(emitDv(kind, encl, _))
       prevDvps.foreach(emitDvp(kind, encl, _))
@@ -2869,7 +2897,7 @@ final class MutableGraph(spark: SparkSession) {
         // re-recording of every already-suppressed copy
         val posRows: Array[(String, Long)] =
           if (affected.isEmpty) Array.empty
-          else readEntsWithDv(affected, prevDvs, prevDvps)
+          else readIdsWithDv(affected, prevDvs, prevDvps)
             .filter(col("id").isin(tombstones.map(Long.box): _*))
             .select(
               element_at(split(col("_metadata.file_path"), "/"), -1).as("__b"),
@@ -2903,8 +2931,7 @@ final class MutableGraph(spark: SparkSession) {
       // Bound shared with the dv path (VERDICT r15 #7): one knob, no
       // silent divergence if the merge-on-read bound is retuned.
       val maxIds = MutableGraph.DvMaxStatementIds
-      val touchedIds: Array[Long] = // bounded collect: stats-based pruning
-        touched.limit(maxIds + 1).collect().map(_.getLong(0)).sorted
+      val touchedIds = touchedIdsOf(l, maxIds) // for stats-based pruning
       if (touchedIds.isEmpty) {
         prevEnts.foreach(emitEnt(kind, encl, _))
         prevDvs.foreach(emitDv(kind, encl, _))
@@ -2931,7 +2958,7 @@ final class MutableGraph(spark: SparkSession) {
       // duplicate it against the carried file holding the real one
       val touchedNames: Set[String] =
         if (candEnts.isEmpty) Set.empty
-        else readEntsWithDv(candEnts, prevDvs, prevDvps)
+        else readIdsWithDv(candEnts, prevDvs, prevDvps)
           .select(col("id"), element_at(split(col("_metadata.file_path"), "/"), -1)
             .as("__fname"))
           .join(touched, Seq("id"), "left_semi")
@@ -2943,7 +2970,7 @@ final class MutableGraph(spark: SparkSession) {
       if (touchedEnts.size * 2 > prevEnts.size && prevEnts.size > 1) return false
       val idsToRewrite =
         if (touchedEnts.isEmpty) touched // pure insert
-        else readEntsWithDv(touchedEnts, prevDvs, prevDvps) // dv-suppressed ids stay out
+        else readIdsWithDv(touchedEnts, prevDvs, prevDvps) // dv-suppressed ids stay out
           .select(col("id")).union(touched).distinct()
       val rows = df.join(idsToRewrite, Seq("id"), "left_semi")
       if (carriedEnts.isEmpty && rows.isEmpty)
@@ -3095,9 +3122,9 @@ final class MutableGraph(spark: SparkSession) {
     // refresh (full rewrite marked, nothing recorded, or > 4096 ids)
     def boundedTouched(label: String): Option[DataFrame] = {
       if (txFullRewrite.contains(s"v:$label")) return None
-      if (txTouchedAll.isEmpty || !labelIds.contains(label)) return None
-      val t = touchedOf(label).localCheckpoint()
-      if (t.limit(4097).count() > 4096) None else Some(t)
+      if (txTouched.isEmpty || !labelIds.contains(label)) return None
+      val ids = touchedIdsOf(label, 4096)
+      if (ids.length > 4096) None else Some(idFrame(ids))
     }
     def persistEntries(tag: String, key: (String, String),
         prevRels: Map[(String, String), List[String]],
@@ -3266,13 +3293,60 @@ final class MutableGraph(spark: SparkSession) {
     * version publish IS the commit). Label tables are immutable maps, so
     * reference inequality is an exact dirty check.
     */
-  private[cypher] def commitIfChanged(prev: MutableGraph.TxState): Unit =
+  private[cypher] def commitIfChanged(prev: MutableGraph.TxState): Unit = {
+    vertexLabels = flattened(vertexLabels, prev.vertexLabels)
+    edgeLabels = flattened(edgeLabels, prev.edgeLabels)
     if (storeRoot.isDefined &&
       ((vertexLabels ne prev.vertexLabels) || (edgeLabels ne prev.edgeLabels) ||
         labelIds.toSeq != prev.labelIds || nextEntry.toMap != prev.nextEntry ||
         uniqueConstraints.toSet != prev.uniques ||
         wholePropsUnique.toSet != prev.wholeUniques))
       publish(prev.vertexLabels, prev.edgeLabels)
+  }
+
+  /** Re-materialize each label the statement changed whose plan holds a
+    * join or more than [[MutableGraph.MaxLeaves]] leaves: every write
+    * wraps its label in one more join (SET, DELETE, upsert) or union
+    * (CREATE, ingest), and an unflattened table makes each later plan and
+    * publish re-walk the whole write history — jobs per statement grew
+    * with the statement count. Pregelix keeps its state materialized and
+    * joins each step's delta against it; this is that rule. Append-only
+    * changes stay lazy until the 17th leaf, so a point CREATE pays no job
+    * here. Coalesced first: an append history also inflates the partition
+    * count, which would schedule many near-empty tasks on every later scan.
+    * The checkpoint keeps the estimate of [[sizeAfterWrite]], not Spark's,
+    * which would carry over a join's estimate, the product of its sides:
+    * after a few SETs that sent every small-input site of the label down
+    * its distributed path.
+    */
+  private def flattened(now: Map[String, DataFrame],
+      prev: Map[String, DataFrame]): Map[String, DataFrame] =
+    if (now eq prev) now
+    else now.map {
+      case (l, df) if prev.get(l).exists(_ eq df) => l -> df
+      case (l, df) =>
+        val plan = df.queryExecution.analyzed
+        val leaves = plan.collectLeaves()
+        if (leaves.size <= MutableGraph.MaxLeaves &&
+            !plan.exists(_.isInstanceOf[Join]))
+          l -> df
+        else l -> org.apache.spark.sql.graft.Bridge.withSizeInBytes(
+          df.coalesce(spark.sparkContext.defaultParallelism).localCheckpoint(),
+          sizeAfterWrite(plan))
+    }
+
+  /** Size estimate of a label after a write: an append (union) adds its
+    * sides, and a SET, DELETE or upsert (a left outer, anti or semi join
+    * against the statement's delta) keeps at most its left side's rows, so
+    * the delta adds nothing. A point write's estimate thus stays that of
+    * the table it rewrote, however many statements came before it.
+    */
+  private def sizeAfterWrite(plan: LogicalPlan): BigInt = plan match {
+    case j: Join if j.joinType == LeftOuter || j.joinType == LeftAnti ||
+        j.joinType == LeftSemi => sizeAfterWrite(j.left)
+    case p if p.children.isEmpty => p.stats.sizeInBytes
+    case p => p.children.map(sizeAfterWrite).sum
+  }
 }
 
 object MutableGraph {
@@ -3290,6 +3364,9 @@ object MutableGraph {
       pos.valuesIterator.map(_.length.toLong).sum
   }
   private[cypher] val NoDvs = DvSets(Nil, Map.empty)
+
+  /** Most leaves a committed label's plan may hold (see `flattened`). */
+  private[cypher] val MaxLeaves = 16
 
   /** Parse a positional dv file: one `<fileBasename> <rowIndex>` per line. */
   private[cypher] def readDvpFile(path: String): Map[String, Array[Long]] =

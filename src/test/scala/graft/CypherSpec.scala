@@ -582,6 +582,18 @@ class CypherSpec extends AnyFunSuite {
     assert(vle.getSeq[org.apache.spark.sql.Row](1).length == 2)
   }
 
+  test("ORDER BY a path, then an expression over a projected alias") {
+    // the path key appends a hidden pre-projection sort column before the
+    // second key's post-projection probe runs; the probe must see the
+    // projection alone, and the hidden column must not reach the output
+    val byPath = run("MATCH p = (a:Person)-[:KNOWS]->(b:Person) RETURN p, b.name AS n ORDER BY p")
+      .collect().map(r => (r.getStruct(0).toString, r.getString(1))).toSeq
+    val q = run("MATCH p = (a:Person)-[:KNOWS]->(b:Person) RETURN p, b.name AS n " +
+      "ORDER BY p, toUpper(n), n + '!' DESC")
+    assert(q.columns.toSeq == Seq("p", "n"))
+    assert(q.collect().map(r => (r.getStruct(0).toString, r.getString(1))).toSeq == byPath)
+  }
+
   test("SQL temporal forms: typed literals, EXTRACT FROM, OVERLAPS rows, interval scaling, PG formats") {
     val r = run("MATCH (p:Person {name: 'Ann'}) RETURN " +
       "TIMESTAMP '12/17/1997 07:37:16.00' AS ts, " +

@@ -201,4 +201,66 @@ class RelationalSpec extends AnyFunSuite {
     assert(r.getString(2) == "POINT(2.5 -2.0)")
     assert(r.getInt(3) == 2)
   }
+
+  test("Tables.T memo: a renamed partition directory is a new table, not a stale hit") {
+    import java.nio.file.Files
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // a `file:` URI is listed through Hadoop's FileSystem; one write task
+    // puts a part file of the same basename into each partition directory
+    val dir = Files.createTempDirectory("graft_tables_fp")
+    Seq((1, 10L), (2, 20L)).toDF("a", "x").repartition(1)
+      .write.partitionBy("a").parquet(dir.resolve("t.parquet").toString)
+    def names(p: String) = Files.list(dir.resolve(s"t.parquet/$p")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).filter(_.startsWith("part-")).toSeq
+    assert(names("a=1") == names("a=2"))
+    val uri = s"file:$dir"
+    def partitions(): Seq[Int] =
+      Tables.T(spark, uri, "t").select("a").collect().map(_.getInt(0)).toSeq.sorted
+    assert(partitions() == Seq(1, 2))
+    // the move keeps every file's name, size and mtime
+    Files.move(dir.resolve("t.parquet/a=2"), dir.resolve("t.parquet/a=3"))
+    assert(partitions() == Seq(1, 3))
+    graft.cypher.GraphStore.deleteTree(dir)
+  }
+
+  test("Tables.T memo: a failed listing reads uncached, never a stale entry") {
+    import java.nio.file.Files
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_tables_ioe")
+    val out = dir.resolve("t.parquet").toString
+    def rows(): Long = Tables.T(spark, s"file:$dir", "t").count()
+    // `file:` through a file system whose recursive listing (the one the
+    // fingerprint uses) fails under `dir` while `failingUnder` names it
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[FailingListFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try {
+      Seq(1L, 2L).toDF("x").write.parquet(out)
+      assert(rows() == 2L)
+      FailingListFs.failingUnder = Some(dir.toString)
+      assert(rows() == 2L) // the listing fails, the read itself works
+      Seq(1L, 2L, 3L).toDF("x").write.mode("overwrite").parquet(out)
+      assert(rows() == 3L, "a failed listing served a memo entry of the old files")
+    } finally {
+      FailingListFs.failingUnder = None
+      conf.unset("fs.file.impl")
+      conf.unset("fs.file.impl.disable.cache")
+      graft.cypher.GraphStore.deleteTree(dir)
+    }
+  }
+}
+
+/** Hadoop's local file system, except that a recursive listing under
+  * `failingUnder` fails. */
+final class FailingListFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def listFiles(f: org.apache.hadoop.fs.Path, recursive: Boolean) =
+    if (FailingListFs.failingUnder.exists(f.toUri.getPath.startsWith))
+      throw new java.io.IOException(s"listing $f failed")
+    else super.listFiles(f, recursive)
+}
+
+object FailingListFs {
+  @volatile var failingUnder: Option[String] = None
 }

@@ -1413,4 +1413,151 @@ class WriteSpec extends AnyFunSuite {
       names.foreach { n => assert(local(n) == dist(n), s"$n digests diverge") }
     } finally spark.conf.unset("spark.graft.local.maxRows")
   }
+
+  // A point write must not leave its label a join over the previous
+  // version: each statement used to wrap the table in one more join or
+  // union, so jobs per statement grew with the statement count.
+  test("GraphStore: point writes keep every label flat; reads cost no more jobs after 30 writes") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val root = Files.createTempDirectory("graft_store_flat").toString
+    val s = new GraphSession(spark)
+    s.createGraph("flat", root)
+    s.run("UNWIND range(1, 20) AS i CREATE (:P {k: i, v: i})")
+    s.run("MATCH (a:P), (b:P) WHERE b.k = a.k + 1 CREATE (a)-[:E {w: a.k}]->(b)")
+    def assertFlat(step: String): Unit = {
+      val g = s.graph.snapshot
+      (g.vertexLabels ++ g.edgeLabels.map { case (l, df) => s"e:$l" -> df }).foreach {
+        case (l, df) =>
+          val plan = df.queryExecution.analyzed
+          assert(!plan.exists(_.isInstanceOf[Join]), s"$step: label $l holds a join:\n$plan")
+          assert(plan.collectLeaves().size <= 16, s"$step: label $l holds ${plan.collectLeaves().size} leaves")
+          // a few dozen rows: an estimate past the write bound (1 MiB) would
+          // send every small-input site of the label down its distributed path
+          val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+          assert(est < (1 << 20), s"$step: label $l estimates $est bytes")
+      }
+    }
+    var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        synchronized { jobs += 1 }
+    }
+    // jobs of a point MATCH and of a label count, each run alone
+    def readJobs(): Seq[Int] = Seq(
+      "MATCH (p:P) WHERE p.k = 3 RETURN p.v AS v", "MATCH (p:P) RETURN count(*) AS n").map { q =>
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      val before = listener.synchronized(jobs)
+      assert(s.run(q).collect().length == 1)
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      listener.synchronized(jobs) - before
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      var next = 21
+      var afterOne = Seq.empty[Int]
+      (1 to 30).foreach { i =>
+        i % 3 match {
+          case 1 =>
+            s.run(s"MATCH (a:P {k: 1}) CREATE (:P {k: $next, v: 0})-[:E {w: 0}]->(a)")
+            next += 1
+          case 2 => s.run(s"MATCH (p:P {k: 3}) SET p.v = $i")
+          case 0 => s.run(s"MATCH (p:P {k: ${next - 1}}) DETACH DELETE p")
+        }
+        assertFlat(s"statement $i")
+        if (i == 1) afterOne = readJobs()
+      }
+      val afterThirty = readJobs()
+      assert(afterThirty == afterOne,
+        s"point MATCH and count jobs: $afterOne after 1 write, $afterThirty after 30")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val r = new GraphSession(spark)
+    r.openGraph("flat", root)
+    assert(r.run("MATCH (p:P) RETURN count(*) AS n").collect().head.getLong(0) == 20L)
+    assert(r.run("MATCH (p:P {k: 3}) RETURN p.v AS v").collect().head.getLong(0) == 29L)
+    assert(r.run("MATCH ()-[e:E]->() RETURN count(*) AS n").collect().head.getLong(0) == 19L)
+    graft.cypher.GraphStore.deleteTree(java.nio.file.Paths.get(root))
+  }
+
+  // A point SET re-materializes its label at commit; the checkpoint's size
+  // estimate must stay that of the table, not grow by each statement's
+  // delta, or a long-lived session would in time push the label past the
+  // write bound (1 MiB) and every small-input site onto its distributed path.
+  test("point SETs on one row keep the label's size estimate fixed") {
+    val s = new GraphSession(spark)
+    s.createGraph("estimate")
+    s.run("UNWIND range(1, 50) AS i CREATE (:P {k: i, v: i})")
+    def estimate(): BigInt =
+      s.graph.snapshot.vertexLabels("P").queryExecution.optimizedPlan.stats.sizeInBytes
+    s.run("MATCH (p:P {k: 7}) SET p.v = 0")
+    val first = estimate()
+    (1 to 200).foreach { i =>
+      s.run(s"MATCH (p:P {k: 7}) SET p.v = $i")
+      assert(estimate() == first, s"SET $i: estimate ${estimate()}, after the first SET $first")
+    }
+    assert(s.run("MATCH (p:P {k: 7}) RETURN p.v AS v").collect().head.getLong(0) == 200L)
+  }
+
+  // The merge-on-read publish from driver-held rows (default) and from
+  // distributed frames (`local.maxRows=0`) must commit the same graph and
+  // the same manifest statistics, strings compared in code-point order
+  // included: stats from an aggregate over the held rows against stats
+  // re-read from the written file.
+  test("GraphStore: driver-held publish == distributed publish (rows and manifest stats)") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    def script(): (Map[String, Seq[String]], Seq[Seq[String]]) = {
+      val root = Files.createTempDirectory("graft_store_held").toString
+      val s = new GraphSession(spark)
+      s.createGraph("held", root)
+      val manifests = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+      def step(f: => Unit): Unit = {
+        f
+        val v = graft.cypher.GraphStore.latestVersion(root).get
+        // file lines without the part-file name: kind, label, version dir, stats
+        manifests += scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines()
+          .filter(_.startsWith("file ")).map { l =>
+            val p = l.split(" ")
+            val rel = graft.cypher.GraphStore.dec(p(3))
+            (Seq(p(1), p(2), rel.takeWhile(_ != '/')) ++ p.drop(4)).mkString(" ")
+          }.toSeq
+      }
+      // the labels start as ingested batches, whose full writes lay files
+      // out alike in both modes; their keys sit above the ids CREATE numbers
+      step(s.ingestVertexBatch("P", "pk", (1 to 12).map(i => (1000L + i, i.toLong, s"a$i", i * 0.5))
+        .toDF("pk", "k", "t", "x"), "load", 0L))
+      step(s.ingestEdgeBatch("E", "ek", "P", "src", "P", "dst",
+        (1 to 11).map(i => (1000L + i, 1000L + i, 1001L + i, i.toLong)).toDF("ek", "src", "dst", "w"),
+        "load", 1L))
+      step(s.ingestVertexBatch("C", "ck", Seq((1L, "c1", 1.0), (2L, "c2", 2.0))
+        .toDF("ck", "name", "bal"), "cdc", 0L))
+      step(s.run("MATCH (a:P {k: 1}) CREATE (:P {k: 13, t: '\uffff'})-[:E {w: 1}]->(a)"))
+      step(s.run("MATCH (a:P {k: 2}) CREATE (:P {k: 14, t: '\ud83d\ude00'})-[:E {w: 2}]->(a)"))
+      step(s.run("MATCH (p:P {k: 3}) SET p.t = '\ud83d\ude01'"))
+      step(s.run("MATCH (p:P {k: 4}) SET p.x = 99.5"))
+      step(s.run("MERGE (p:P {k: 15})"))
+      step(s.run("MATCH (p:P {k: 2}) DETACH DELETE p"))
+      step(s.run("MATCH (p:P {k: 15}) DETACH DELETE p"))
+      step(s.ingestVertexUpsertBatch("C", "ck", Seq((2L, "c2b", 20.0), (3L, "c3", 3.0))
+        .toDF("ck", "name", "bal"), "cdc", 1L))
+      step(s.run("MATCH (p:P {k: 5}) SET p.t = 'a5b'"))
+      val r = new GraphSession(spark)
+      r.openGraph("held", root)
+      val g = r.graph.snapshot
+      val rows = (g.vertexLabels ++ g.edgeLabels.map { case (l, df) => s"e:$l" -> df }).map {
+        case (l, df) => l -> df.collect().map(_.toString).toSeq.sorted
+      }
+      graft.cypher.GraphStore.deleteTree(Paths.get(root))
+      (rows, manifests.toSeq)
+    }
+    val (heldRows, heldStats) = script()
+    spark.conf.set("spark.graft.local.maxRows", "0")
+    val (distRows, distStats) = try script() finally spark.conf.unset("spark.graft.local.maxRows")
+    assert(heldRows == distRows)
+    assert(heldStats.length == distStats.length)
+    heldStats.zip(distStats).zipWithIndex.foreach { case ((h, d), i) =>
+      assert(h == d, s"statement ${i + 1}: manifest file lines differ")
+    }
+    assert(heldStats.last.exists(_.contains(" s ")), heldStats.last.mkString("; "))
+  }
 }
