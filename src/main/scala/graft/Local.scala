@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** The one small-input policy: every choice between holding a relation in
@@ -19,14 +20,18 @@ import org.apache.spark.sql.types.StructType
   * (GraphSession), the recursive local frontier (Recursive), the
   * single-task graph algorithms (Algorithms: estimate only, they never
   * collect), near-dup clustering (Pipeline: actual pair count only, its
-  * estimate is join-inflated by orders of magnitude) and the ANN serves
-  * (Similarity: corpus row count).
+  * estimate is join-inflated by orders of magnitude), the ANN serves
+  * (Similarity: corpus row count) and the optimizer fold of joins, unions
+  * and aggregates over driver-held rows ([[LocalFold]]: actual rows of
+  * every input and of the output), installed on a session by [[install]].
   */
 private[graft] object Local {
 
-  /** Write snapshots (r17): under 1 MiB a LocalRelation keeps a statement's
-    * existence probes, broadcast builds and per-row CREATE numbering
-    * driver-foldable instead of a multi-task job each (w4 1.59×, w1 1.42×).
+  /** Write snapshots (r17): under 1 MiB a statement's snapshot is a
+    * LocalRelation, so its per-row CREATE numbering is one driver collect
+    * instead of a multi-task job (w4 1.59×, w1 1.42×). Its existence
+    * probes became driver-only with [[LocalFold]]: before it, a
+    * LocalRelation under a join still ran one broadcast job per build side.
     */
   val WriteBytes: Long = 1L << 20
 
@@ -42,8 +47,20 @@ private[graft] object Local {
     */
   val GraphBytes: Long = 256L << 20
 
-  private def maxRows(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.local.maxRows").map(_.toLong).getOrElse(65536L)
+  private val MaxRowsKey = "spark.graft.local.maxRows"
+  private val DefaultMaxRows = "65536"
+
+  /** The cap as the optimizer reads it, from the active session's conf. */
+  def maxRows(conf: SQLConf): Long = conf.getConfString(MaxRowsKey, DefaultMaxRows).toLong
+
+  private def maxRows(spark: SparkSession): Long = spark.conf.get(MaxRowsKey, DefaultMaxRows).toLong
+
+  /** Puts [[LocalFold]] into the session's optimizer, once. */
+  def install(spark: SparkSession): Unit = {
+    val ex = spark.experimental
+    if (!ex.extraOptimizations.contains(LocalFold))
+      ex.extraOptimizations = ex.extraOptimizations :+ LocalFold
+  }
 
   def fits(bytes: Long, dfs: DataFrame*): Boolean =
     maxRows(dfs.head.sparkSession) > 0 &&
@@ -83,6 +100,7 @@ private[graft] object Local {
   /** Driver rows as a LocalRelation. */
   def relation(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
     import scala.jdk.CollectionConverters._
+    install(spark)
     spark.createDataFrame(rows.asJava, schema)
   }
 }

@@ -7,7 +7,7 @@ import Ast._
 import Compiler.{Ctx, VarInfo}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
@@ -67,6 +67,7 @@ private[graft] object RowNumber {
   * streaming — writes here are the OLTP-ish tail of the surface.
   */
 final class GraphSession(val spark: SparkSession) {
+  Local.install(spark)
 
   private val graphs = mutable.LinkedHashMap.empty[String, MutableGraph]
   private var current: Option[String] = None
@@ -3314,10 +3315,12 @@ final class MutableGraph(spark: SparkSession) {
     * changes stay lazy until the 17th leaf, so a point CREATE pays no job
     * here. Coalesced first: an append history also inflates the partition
     * count, which would schedule many near-empty tasks on every later scan.
-    * The checkpoint keeps the estimate of [[sizeAfterWrite]], not Spark's,
-    * which would carry over a join's estimate, the product of its sides:
-    * after a few SETs that sent every small-input site of the label down
-    * its distributed path.
+    * A label whose plan the optimizer folds into driver-held rows
+    * ([[graft.LocalFold]]) is re-materialized as those rows, with no job.
+    * Otherwise the checkpoint keeps the estimate of [[sizeAfterWrite]], not
+    * Spark's, which would carry over a join's estimate, the product of its
+    * sides: after a few SETs that sent every small-input site of the label
+    * down its distributed path.
     */
   private def flattened(now: Map[String, DataFrame],
       prev: Map[String, DataFrame]): Map[String, DataFrame] =
@@ -3330,6 +3333,8 @@ final class MutableGraph(spark: SparkSession) {
         if (leaves.size <= MutableGraph.MaxLeaves &&
             !plan.exists(_.isInstanceOf[Join]))
           l -> df
+        else if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+          l -> Local.relation(spark, df.collect().toSeq, df.schema)
         else l -> org.apache.spark.sql.graft.Bridge.withSizeInBytes(
           df.coalesce(spark.sparkContext.defaultParallelism).localCheckpoint(),
           sizeAfterWrite(plan))

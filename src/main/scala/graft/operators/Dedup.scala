@@ -151,6 +151,13 @@ object Dedup {
     limit >= 0 && input.queryExecution.optimizedPlan.stats.sizeInBytes > limit
   }
 
+  /** d5's forced broadcast of the flattened vectors, bounded by their
+    * actual size (rows × dim × 8 bytes), not by the estimate: above it the
+    * join is left unhinted and the planner picks its strategy, so a large
+    * corpus is never pinned into one broadcast near Spark's hard limits.
+    */
+  private val CosineBroadcastBytes: Long = 256L << 20
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // exact dedup: md5-of-normalized-text groups
     "d1_exact_dedup" -> ((s, dir) => {
@@ -254,8 +261,10 @@ object Dedup {
       val par = s.sparkContext.defaultParallelism
       val eStream =
         if (e.rdd.getNumPartitions * 2 <= par) e.repartition(par) else e
+      val vectorBytes = graft.Tables.rowCount(s, dir, "embeddings") * dim * 8
+      val eBuild = if (vectorBytes <= CosineBroadcastBytes) broadcast(e) else e
       val dot = (1 to dim).map(i => col(s"a.x$i") * col(s"b.x$i")).reduce(_ + _)
-      eStream.as("a").join(broadcast(e).as("b"), col("a.vec_id") < col("b.vec_id"))
+      eStream.as("a").join(eBuild.as("b"), col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"), dot.as("c"))
         .localCheckpoint()
         .filter(col("c") >= 0.45)

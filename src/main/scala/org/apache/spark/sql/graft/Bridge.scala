@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -13,6 +14,11 @@ import org.apache.spark.sql.execution.LogicalRDD
 object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** A grouping key as the physical aggregate normalizes it: -0.0 and 0.0
+    * are one value, and all NaNs are one value (`normalize` is private[sql]).
+    */
+  def normalizeFloats(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 
   /** A checkpointed frame that reports `sizeInBytes` as its size estimate
     * instead of the estimate of the plan it was checkpointed from (a join's

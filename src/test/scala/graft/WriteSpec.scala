@@ -1414,6 +1414,26 @@ class WriteSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.local.maxRows")
   }
 
+  // Every relation of w4's statements and of its digest read is driver-held
+  // (LocalRelation snapshots), so the fold runs their joins and aggregates on
+  // the driver: the UNWIND CREATE's numbering collect is the one job left.
+  // Without the fold it ran 17 (four broadcasts and two shuffles per MERGE).
+  test("w4_merge: four write statements and the digest read run at most 2 Spark jobs") {
+    var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        synchronized { jobs += 1 }
+    }
+    org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(graft.operators.WritePath.queries("w4_merge")(spark, "").collect().length == 1)
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val n = listener.synchronized(jobs)
+    assert(n <= 2, s"w4_merge ran $n Spark jobs")
+  }
+
   // A point write must not leave its label a join over the previous
   // version: each statement used to wrap the table in one more join or
   // union, so jobs per statement grew with the statement count.
