@@ -1,0 +1,681 @@
+package graft.cypher
+
+import graft.Local
+import graft.cypher.GraphStore._
+import graft.graph.PropertyGraph
+import graft.gvalue._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+/** The commit protocol of a durable [[MutableGraph]] over the store that
+  * [[GraphStore]] describes: publish a statement's changes as the next
+  * version, open a version, and scan a label's manifest files. A commit
+  * reads an immutable [[Commit.Snapshot]] of the graph and returns what the
+  * graph applies ([[Commit.Committed]]); it touches no graph field.
+  */
+private[cypher] object Commit {
+  type Key = (String, String)
+  /** Deleted row positions per part-file basename, each array sorted. */
+  type Positions = Map[String, Array[Long]]
+
+  /** IVFFlat-analog index: centroids trained at build, like IVFFlat's lists. */
+  final case class IvfIdx(label: String, prop: String, metric: String,
+      dims: Int, lists: Int, centroids: Array[Array[Double]])
+  /** PQ/ADC index: m subspace codebooks of k centroids each. */
+  final case class PqIdx(label: String, prop: String, metric: String,
+      dims: Int, m: Int, k: Int, codebooks: Array[Array[Array[Double]]])
+
+  /** A file-form label as a version records it, with its dv positions,
+    * for the in-memory table `src` whose content it is.
+    */
+  final case class Manifest(src: DataFrame, files: List[FileStats],
+      dvps: List[DvpFile], dvs: Positions)
+
+  /** What a graph holds of its store: the version its state derives from,
+    * the version holding each ANN index's matrix, each index's stored
+    * entry files with the label table they reflect (a probe may read them
+    * only while the label is that table), and the manifests of its
+    * file-form labels.
+    */
+  final case class Held(version: Long, ivfAt: Map[Key, Long], pqAt: Map[Key, Long],
+      ivfaAt: Map[Key, (List[String], DataFrame)],
+      pqcAt: Map[Key, (List[String], DataFrame)], manifest: Map[Key, Manifest]) {
+    /** Forget what is persisted of a rebuilt index. */
+    def ivfRebuilt(key: Key): Held = copy(ivfAt = ivfAt - key, ivfaAt = ivfaAt - key)
+    def pqRebuilt(key: Key): Held = copy(pqAt = pqAt - key, pqcAt = pqcAt - key)
+  }
+  val NotHeld: Held = Held(0L, Map.empty, Map.empty, Map.empty, Map.empty, Map.empty)
+
+  /** What a commit reads: the graph at the end of a statement and at its
+    * start (`prevV`/`prevE`), the ids the statement touched, the labels it
+    * must rewrite whole ("v:Label"), its ANN indexes with their in-memory
+    * entries, and what it holds of the store. `head` is the catalog's
+    * non-table part.
+    */
+  final case class Snapshot(root: String, held: Held, head: Catalog,
+      vertexLabels: Map[String, DataFrame], edgeLabels: Map[String, DataFrame],
+      prevV: Map[String, DataFrame], prevE: Map[String, DataFrame],
+      touched: List[DataFrame], fullRewrite: Set[String],
+      ivf: List[IvfIdx], pq: List[PqIdx],
+      ivfCache: Map[Key, (DataFrame, DataFrame)],
+      pqCache: Map[Key, (DataFrame, DataFrame)])
+
+  /** A graph as a version holds it (see [[open]]). */
+  final case class Opened(catalog: Catalog,
+      vertexLabels: Map[String, DataFrame], edgeLabels: Map[String, DataFrame],
+      ivf: List[IvfIdx], pq: List[PqIdx], held: Held)
+
+  /** How a changed label commits. */
+  sealed trait Plan
+  /** Rewrite the label whole. */
+  case object Full extends Plan
+  /** Nothing of the label was touched: carry its files and dvs. */
+  case object Carry extends Plan
+  /** Write the new row-versions and tombstone `tombstones`. */
+  final case class Dv(tombstones: Array[Long]) extends Plan
+  /** Rewrite only the files holding touched ids. */
+  case object Cow extends Plan
+
+  /** The id-local choice for a changed label with previous files and dvs
+    * `prev`, from the statement's sorted touched ids of it (past
+    * `DvMaxStatementIds` only the excess counts). Once the label's file +
+    * dvp lines reach 64 it is rewritten whole, which keeps open-time
+    * footer reads and gc's live-version set bounded (Delta's OPTIMIZE,
+    * triggered by write). A tombstone is needed only for an id an older
+    * file may hold, proven by the per-file id stats alone, never by the
+    * sequence position: streaming-ingested labels pack ids from user keys.
+    */
+  def idLocalPlan(prev: FileTable, touched: => Array[Long]): Plan = {
+    if (prev.files.size + prev.dvps.size >= 64) return Full
+    if (touched.isEmpty) return Carry
+    if (touched.length <= MutableGraph.DvMaxStatementIds) {
+      val tombstones = touched.filter(t => prev.files.exists(_.idStats.forall {
+        case (mn, mx) => mn <= t && t <= mx }))
+      if (prev.dvps.map(_.count).sum + tombstones.length <= MutableGraph.DvMaxTombstones)
+        return Dv(tombstones)
+    }
+    Cow
+  }
+
+  /** May file `f` hold one of the sorted `ids`, one in its [min, max] id
+    * range? A file without id stats may.
+    */
+  def mayHold(f: FileStats, ids: Array[Long]): Boolean = f.idStats.forall { case (mn, mx) =>
+    val i = java.util.Arrays.binarySearch(ids, mn)
+    val from = if (i >= 0) i else -i - 1
+    from < ids.length && ids(from) <= mx
+  }
+
+  def embeddings(tbl: DataFrame, prop: String, dims: Int): DataFrame =
+    tbl.select(col("id"), col(prop).cast(ArrayType(DoubleType)).as(prop))
+      .filter(col(prop).isNotNull && size(col(prop)) === dims)
+
+  /** Publish `s` as the next version, under the store's commit lock with
+    * base-version validation: a concurrent writer having published since
+    * the graph's snapshot raises PG's serialization failure, and an
+    * unreadable previous catalog fails the commit; either way `_LATEST`
+    * stays where it was.
+    */
+  def publish(spark: SparkSession, s: Snapshot): (Held, Int) =
+    withCommitLock(s.root) {
+      val cur = latestVersion(s.root).getOrElse(0L)
+      if (cur != s.held.version) throw new SerializationFailure
+      val prev = if (cur <= 0) Catalog.empty else Catalog.read(s.root, cur)
+      val next = cur + 1
+      Files.createDirectories(Paths.get(s.root, s"v$next"))
+      val w = new Writer(spark, s, prev, next)
+      val tables = w.tables("v", s.vertexLabels, s.prevV) ++
+        w.tables("e", s.edgeLabels, s.prevE)
+      val indexes =
+        s.ivf.map(ix => w.matrix("ivf", ix.label, ix.prop, ix.metric,
+          List(ix.dims, ix.lists), ix.centroids, s.held.ivfAt.get((ix.label, ix.prop)))) ++
+        s.pq.map(ix => w.matrix("pq", ix.label, ix.prop, ix.metric,
+          List(ix.dims, ix.m, ix.k), ix.codebooks.flatten, s.held.pqAt.get((ix.label, ix.prop))))
+      val entries = entryIndexes(s).flatMap(w.persistEntries)
+      val cat = s.head.copy(tables = tables, indexes = indexes, entries = entries.map(_._1))
+      Files.write(catalogPath(s.root, next), cat.render.getBytes(UTF_8))
+      swapLatest(s.root, next)
+      val held = heldAt(next, cat, entries, w.manifest(cat))
+      gc(s.root, keep = prev.referencedVersions ++ cat.referencedVersions ++ Set(cur, next))
+      (held, w.chainMerges)
+    }
+
+  private def heldAt(version: Long, cat: Catalog, entries: List[(Entries, DataFrame)],
+      manifest: Map[Key, Manifest]): Held = {
+    def at(tag: String) = cat.indexes.filter(_.tag == tag)
+      .map(d => (d.label, d.prop) -> d.ver).toMap
+    def stored(tag: String) = entries.collect {
+      case (e, tbl) if e.tag == tag => (e.label, e.prop) -> ((e.rels, tbl)) }.toMap
+    Held(version, at("ivf"), at("pq"), stored("ivfa"), stored("pqc"), manifest)
+  }
+
+  /** The labels of the latest version that are in file-manifest form. */
+  def manifestedLabels(root: String): Set[Key] =
+    latestVersion(root).filter(_ > 0).toList
+      .flatMap(v => Catalog.read(root, v).tables)
+      .collect { case t: FileTable => (t.kind, t.label) }.toSet
+
+  /** An index's stored entries (`ivfa` / `pqc`) as a commit maintains them. */
+  private final case class EntryIndex(tag: String, label: String, prop: String,
+      stored: Option[(List[String], DataFrame)], cached: DataFrame => Option[DataFrame],
+      derive: DataFrame => DataFrame, dedupKeys: Seq[String], valCol: String,
+      sortCols: Seq[String])
+
+  private def entryIndexes(s: Snapshot): List[EntryIndex] = {
+    def rows(label: String, prop: String, dims: Int, touched: DataFrame) =
+      embeddings(s.vertexLabels(label), prop, dims).join(touched, Seq("id"), "left_semi")
+    def cached(c: Option[(DataFrame, DataFrame)], cols: String*)(tbl: DataFrame) =
+      c.collect { case (src, a) if src eq tbl => a.select(cols.map(col): _*) }
+    s.ivf.map { ix =>
+      val key = (ix.label, ix.prop)
+      EntryIndex("ivfa", ix.label, ix.prop, s.held.ivfaAt.get(key),
+        cached(s.ivfCache.get(key), "id", "cluster"),
+        t => graft.functions.Ivf.assignments(rows(ix.label, ix.prop, ix.dims, t),
+          "id", ix.prop, ix.centroids),
+        Seq("id"), "cluster", Seq("cluster", "id"))
+    } ++ s.pq.map { ix =>
+      val key = (ix.label, ix.prop)
+      EntryIndex("pqc", ix.label, ix.prop, s.held.pqcAt.get(key),
+        cached(s.pqCache.get(key), "id", "sub", "code"),
+        t => graft.functions.Ivf.pqEncode(rows(ix.label, ix.prop, ix.dims, t),
+          "id", ix.prop, ix.codebooks),
+        Seq("id", "sub"), "code", Seq("id", "sub"))
+    }
+  }
+
+  private val idSchema = StructType(Seq(StructField("id", LongType)))
+  /** The part-file basename of a scanned row. */
+  private val fileBase = element_at(split(col("_metadata.file_path"), "/"), -1)
+
+
+  /** One commit's work: the statement's touched ids, held once on the
+    * driver while they fit `Local`'s cap (a driver-held frame costs no
+    * job) and checkpointed past it, and the tables and entries it writes
+    * into version dir `next`.
+    */
+  private final class Writer(spark: SparkSession, s: Snapshot, prev: Catalog, next: Long) {
+    private val root = s.root
+    private val dir = s"$root/v$next"
+    private val labelIds = s.head.labels.toMap
+    private val prevTables = prev.tables.map(t => (t.kind, t.label) -> t).toMap
+    var chainMerges = 0
+
+    private lazy val heldTouched: Option[Array[Long]] =
+      s.touched.foldLeft(Option(Set.empty[Long])) { (acc, f) =>
+        for (ids <- acc; rows <- Local.collect(f, Local.WriteBytes)
+             if Local.holds(spark, ids.size + rows.length))
+        yield ids ++ rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0))
+      }.map(_.toArray.sorted)
+    private lazy val touchedAll: DataFrame =
+      s.touched.reduce(_ unionByName _).localCheckpoint()
+    private def idFrame(ids: Array[Long]): DataFrame =
+      Local.relation(spark, ids.toSeq.map(Row(_)), idSchema)
+    /** Rel paths of the part files of label `l` in version dir `ver`, sorted. */
+    private def relsIn(ver: Long, kind: String, l: String): List[String] = {
+      val d = s"v$ver/$kind/${enc(l)}"
+      val dp = Paths.get(root, d)
+      if (!Files.isDirectory(dp)) Nil
+      else Files.list(dp).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("part-")).toList.sorted.map(n => s"$d/$n")
+    }
+    private def heldOf(ids: Array[Long], l: String): Array[Long] =
+      ids.filter(i => (i >>> 48) == labelIds(l).toLong)
+    private def touchedOf(l: String): DataFrame = heldTouched match {
+      case Some(ids) => idFrame(heldOf(ids, l))
+      case None => touchedAll
+        .filter(PropertyGraph.labelOfCol(col("id")) === lit(labelIds(l)))
+        .select(col("id")).distinct()
+    }
+    /** The label's touched ids, sorted; past `max` only the excess counts. */
+    private def touchedIdsOf(l: String, max: Int): Array[Long] = heldTouched match {
+      case Some(ids) => heldOf(ids, l)
+      case None => touchedOf(l).limit(max + 1).collect().map(_.getLong(0)).sorted
+    }
+
+    private val dvCache = mutable.Map.empty[Key, (List[DvpFile], Positions)]
+    /** The positions of a label's `dvps`: carried from the graph's
+      * manifest or this commit where they hold that list, read otherwise.
+      */
+    def dvsOf(key: Key, dvps: List[DvpFile]): Positions =
+      dvCache.get(key).orElse(s.held.manifest.get(key).map(m => (m.dvps, m.dvs))) match {
+        case Some((known, pos)) if known == dvps => pos
+        case _ =>
+          val pos = readDvps(root, dvps)
+          dvCache(key) = (dvps, pos)
+          pos
+      }
+
+    /** The ids of `files` with the label's dvs applied: every publish-side
+      * read of previous files needs them, or suppressed row-versions would
+      * be resurrected into rewritten files. The id-only schema skips the
+      * schema-inference job a mergeSchema read runs over the footers.
+      */
+    private def readIds(key: Key, files: List[FileStats], dvps: List[DvpFile]): DataFrame = {
+      val raw = spark.read.schema(idSchema).parquet(files.map(f => s"$root/${f.rel}"): _*)
+      if (dvps.isEmpty) raw else applyDvs(raw, dvsOf(key, dvps))
+    }
+
+    def tables(kind: String, m: Map[String, DataFrame],
+        prevM: Map[String, DataFrame]): List[Table] =
+      m.toList.map { case (l, df) =>
+        prevTables.get((kind, l)) match {
+          case Some(t) if prevM.get(l).exists(_ eq df) => t // unchanged: carry its lines
+          case prevT =>
+            lazy val ids = touchedIdsOf(l, MutableGraph.DvMaxStatementIds)
+            idLocalPrev(kind, l, df, prevT).flatMap { p =>
+              idLocalPlan(p, ids) match {
+                case Full => None
+                case Carry => Some(p)
+                case Dv(tombstones) =>
+                  writeDv(kind, l, df, p, ids, tombstones).orElse(writeCow(kind, l, df, p, ids))
+                case Cow => writeCow(kind, l, df, p, ids)
+              }
+            }.getOrElse(writeFull(kind, l, df))
+        }
+      }
+
+    /** The previous files of a changed label that may commit id-locally;
+      * None when it must be rewritten whole. A dir-form label is exploded
+      * to its files here, with stats from one footer-bounded job (every
+      * later catalog carries them): the dv decision is stats-driven.
+      */
+    private def idLocalPrev(kind: String, l: String, df: DataFrame,
+        prevT: Option[Table]): Option[FileTable] = {
+      if (s.fullRewrite(s"$kind:$l") || s.touched.isEmpty ||
+          df.schema.fields.exists(_.dataType == NullType)) return None
+      val p = prevT match {
+        case Some(t: FileTable) => t
+        case Some(DirTable(_, _, ver, Nil)) =>
+          FileTable(kind, l, statsOf(s"$root/v$ver/$kind/${enc(l)}", kind, l,
+            relsIn(ver, kind, l)), Nil)
+        case _ => return None // a new label, or NullType columns on disk
+      }
+      if (p.files.isEmpty) None else Some(p)
+    }
+
+    /** Merge-on-read point write (the Delta deletion-vector shape): write
+      * only the touched ids' new row-versions as one file from driver rows,
+      * carry every previous file, and record the (file basename, row
+      * position) of each live copy of a tombstoned id in one `dvp` file.
+      * Bytes per point SET/DELETE are the row plus a position line,
+      * whatever the file size. None when there is nothing to write.
+      */
+    private def writeDv(kind: String, l: String, df: DataFrame, p: FileTable,
+        ids: Array[Long], tombstones: Array[Long]): Option[FileTable] = {
+      val encl = enc(l)
+      val rows = df.filter(col("id").isin(ids.map(Long.box): _*)).collect()
+      val newFiles =
+        if (rows.isEmpty) Nil
+        else {
+          val held = Local.relation(spark, rows.toSeq, df.schema)
+          val outDir = s"$dir/$kind/$encl"
+          held.coalesce(1).write.parquet(outDir)
+          val rels = relsIn(next, kind, l)
+          statsOfRows(held, lit(rels.head.split('/').last), kind, l, rels) // one file
+        }
+      if (newFiles.isEmpty && tombstones.isEmpty) return None
+      // one column-pruned scan of just the files whose id range may hold a
+      // tombstone, existing dvs applied so only LIVE copies get entries;
+      // the id filter pushes down here, and reads filter on row_index only
+      val affected = p.files.filter(mayHold(_, tombstones))
+      val positions: Array[(String, Long)] =
+        if (tombstones.isEmpty || affected.isEmpty) Array.empty
+        else readIds((kind, l), affected, p.dvps)
+          .filter(col("id").isin(tombstones.map(Long.box): _*))
+          .select(fileBase, col("_metadata.row_index"))
+          .collect().map(r => (r.getString(0), r.getLong(1)))
+      val dvp =
+        if (positions.isEmpty) Nil
+        else {
+          val name = s"${kind}__$encl.txt"
+          Files.createDirectories(Paths.get(dir, "dv"))
+          Files.write(Paths.get(dir, "dv", name),
+            positions.map { case (b, i) => s"$b $i" }.sorted.mkString("\n").getBytes(UTF_8))
+          val d = DvpFile(s"v$next/dv/$name", positions.length.toLong)
+          val added = positions.groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2).sorted }
+          dvCache((kind, l)) = (p.dvps :+ d, mergePos(dvsOf((kind, l), p.dvps), added))
+          List(d)
+        }
+      Some(FileTable(kind, l, newFiles ++ p.files, p.dvps ++ dvp))
+    }
+
+    /** File-level copy-on-write: rewrite only the files holding touched ids
+      * and carry the rest. Carried dvs still suppress old copies in carried
+      * files; rewritten files get fresh part-file basenames, which no
+      * carried entry can hit. None when the full rewrite is the better
+      * write: most files touched, or the label emptied.
+      */
+    private def writeCow(kind: String, l: String, df: DataFrame, p: FileTable,
+        ids: Array[Long]): Option[FileTable] = {
+      val encl = enc(l)
+      val touched = touchedOf(l)
+      val oversized = ids.length > MutableGraph.DvMaxStatementIds
+      val (cand, skipped) = p.files.partition(f => oversized || mayHold(f, ids))
+      // dv-aware: a touched id whose only copy in a candidate file is
+      // suppressed must not mark the file touched, or the rewrite would
+      // resurrect it against the carried file holding the live copy
+      val touchedNames: Set[String] =
+        if (cand.isEmpty) Set.empty
+        else readIds((kind, l), cand, p.dvps)
+          .select(col("id"), fileBase.as("__fname"))
+          .join(touched, Seq("id"), "left_semi")
+          .select(col("__fname")).distinct().collect().map(_.getString(0)).toSet
+      val (rewritten, carriedCand) = cand.partition(f => touchedNames(f.base))
+      val carried = skipped ++ carriedCand
+      if (rewritten.size * 2 > p.files.size && p.files.size > 1) return None
+      val idsToRewrite =
+        if (rewritten.isEmpty) touched // pure insert
+        else readIds((kind, l), rewritten, p.dvps).select(col("id")).union(touched).distinct()
+      val rows = df.join(idsToRewrite, Seq("id"), "left_semi")
+      if (carried.isEmpty && rows.isEmpty) return None
+      val outDir = s"$dir/$kind/$encl"
+      rows.coalesce(math.max(1, rewritten.size)).write.parquet(outDir)
+      val written = statsOf(outDir, kind, l, relsIn(next, kind, l))
+      Some(FileTable(kind, l, carried ++ written, p.dvps))
+    }
+
+    /** Rewrite the label whole into a dir. Parquet cannot store NullType:
+      * such a column persists as all-null strings and is recorded for
+      * restore. The 16-file cap keeps an append-inflated table from
+      * exploding the next commit's manifest (coalesce is narrow).
+      */
+    private def writeFull(kind: String, l: String, df: DataFrame): Table = {
+      val nullCols = df.schema.fields.filter(_.dataType == NullType).map(_.name).toList
+      nullCols.foldLeft(df)((acc, c) => acc.withColumn(c, col(c).cast(StringType)))
+        .coalesce(16).write.mode("overwrite").parquet(s"$dir/$kind/${enc(l)}")
+      DirTable(kind, l, next, nullCols)
+    }
+
+    private def statsOf(outDir: String, kind: String, l: String,
+        rels: List[String]): List[FileStats] =
+      statsOfRows(spark.read.parquet(outDir), fileBase, kind, l, rels)
+
+    /** Per-file stats of `rels` from `df`'s rows grouped by `file`, a
+      * basename: the id range plus min/max of up to 12 typed property
+      * columns (data skipping, the GIN property-index analog). Strings over
+      * 64 chars carry no claim (a truncated max would be unsound), and so
+      * does a temporal value of an unexpected collected class.
+      */
+    private def statsOfRows(df: DataFrame, file: Column, kind: String, l: String,
+        rels: List[String]): List[FileStats] = {
+      if (rels.isEmpty) return Nil
+      val eligible = df.schema.fields.filter(f =>
+        !Set("id", "start_id", "end_id")(f.name) && (f.dataType match {
+          case LongType | IntegerType | DoubleType | StringType => true
+          case TimestampType | TimestampNTZType | DateType => true
+          case _ => false
+        })).take(12)
+      val aggs = Seq(min(col("id")).as("mn"), max(col("id")).as("mx")) ++
+        eligible.zipWithIndex.flatMap { case (f, i) =>
+          Seq(min(col(f.name)).as(s"pmn$i"), max(col(f.name)).as(s"pmx$i")) }
+      val rows = df.groupBy(file.as("__fname")).agg(aggs.head, aggs.tail: _*).collect()
+      // temporal edges persist as plain longs (micros since epoch / epoch
+      // days), independent of the collector's java8API representation
+      def usOf(v: Any): Option[Long] = v match {
+        case t: java.sql.Timestamp =>
+          Some(t.getTime * 1000L + (t.getNanos / 1000L) % 1000L)
+        case i: java.time.Instant =>
+          Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
+        case l: java.time.LocalDateTime =>
+          Some(l.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + l.getNano / 1000L)
+        case _ => None
+      }
+      def dayOf(v: Any): Option[Long] = v match {
+        case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
+        case d: java.time.LocalDate => Some(d.toEpochDay)
+        case _ => None
+      }
+      val byFile = rows.map { r =>
+        val ptail = eligible.zipWithIndex.flatMap { case (f, i) =>
+          val mn = r.get(r.fieldIndex(s"pmn$i")); val mx = r.get(r.fieldIndex(s"pmx$i"))
+          def claim(ty: String, lo: Option[Any], hi: Option[Any]): Seq[String] =
+            (lo, hi) match {
+              case (Some(a), Some(b)) => Seq(enc(f.name), ty, enc(a.toString), enc(b.toString))
+              case _ => Nil
+            }
+          if (mn == null) Seq(enc(f.name), "n", "_", "_") // all-null column
+          else f.dataType match {
+            case LongType | IntegerType => claim("l", Some(mn), Some(mx))
+            case DoubleType => claim("d", Some(mn), Some(mx))
+            case StringType =>
+              if (mn.toString.length > 64 || mx.toString.length > 64) Nil
+              else claim("s", Some(mn), Some(mx))
+            case DateType => claim("D", dayOf(mn), dayOf(mx))
+            case _ => claim("t", usOf(mn), usOf(mx))
+          }
+        }.toList
+        r.getString(0) -> ((r.getLong(1), r.getLong(2)), ptail)
+      }.toMap
+      rels.map { r =>
+        val st = byFile.get(r.substring(r.lastIndexOf('/') + 1))
+        FileStats(kind, enc(l), r, st.map(_._1), st.map(_._2).getOrElse(Nil))
+      }
+    }
+
+    /** An index's trained matrix: written once as text into the building
+      * version (Double.toString round-trips exactly), then carried by its
+      * catalog line.
+      */
+    def matrix(tag: String, label: String, prop: String, metric: String,
+        shape: List[Int], rows: => Array[Array[Double]], at: Option[Long]): IndexDef =
+      at match {
+        case Some(ver) => IndexDef(tag, label, prop, metric, shape, ver)
+        case None =>
+          val d = IndexDef(tag, label, prop, metric, shape, next)
+          Files.createDirectories(Paths.get(dir, tag))
+          Files.write(Paths.get(root, d.matrixRel),
+            rows.map(_.map(java.lang.Double.toString).mkString(" ")).mkString("\n")
+              .getBytes(UTF_8))
+          d
+      }
+
+    /** Touched ids of one label as a frame, or None when unusable for an
+      * incremental entry refresh (whole rewrite, nothing recorded, or more
+      * than 4096 ids).
+      */
+    private def boundedTouched(label: String): Option[DataFrame] = {
+      if (s.fullRewrite(s"v:$label")) return None
+      if (s.touched.isEmpty || !labelIds.contains(label)) return None
+      val ids = touchedIdsOf(label, 4096)
+      if (ids.length > 4096) None else Some(idFrame(ids))
+    }
+
+    /** Persist an index's entries (the reference stores the list pages
+      * themselves, ivfbuild.c; ivfscan.c reads them back) as parquet, one
+      * catalog line per file. An id-local write appends a delta file of the
+      * touched rows' new entries, carried files keep their lines, and at
+      * 16 lines the chain merges its files last-wins per entry key (cost
+      * proportional to the chain, never a label re-scan). IVF probes read
+      * the union raw (stale rows only add candidates the exact rerank
+      * drops); PQ codes dedup last-wins. A whole rewrite or an unbounded
+      * change drops the lines: the next probe re-derives, the next commit
+      * re-persists. Returns the lines and the table they reflect.
+      */
+    def persistEntries(e: EntryIndex): Option[(Entries, DataFrame)] = {
+      val tbl = s.vertexLabels.getOrElse(e.label, return None)
+      def kept(rels: List[String]) = Some((Entries(e.tag, e.label, e.prop, rels), tbl))
+      def write(a: DataFrame, carried: List[String]) = {
+        val rel = s"v$next/${e.tag}/${enc(e.label)}__${enc(e.prop)}"
+        // range-partitioned and sorted on the probe key, so row-group
+        // stats act as the list index: a cluster-pruned scan reads only
+        // the probed lists
+        a.repartitionByRange(e.sortCols.map(col): _*)
+          .sortWithinPartitions(e.sortCols.map(col): _*)
+          .write.parquet(s"$root/$rel")
+        kept(carried :+ rel)
+      }
+      e.stored match {
+        case Some((rels, src)) if src eq tbl => kept(rels) // unchanged: pointers
+        case _ => e.cached(tbl) match {
+          case Some(a) => write(a, Nil) // fresh in-memory entries, one file
+          case None =>
+            val prevRels = prev.entries.find(p =>
+              (p.tag, p.label, p.prop) == ((e.tag, e.label, e.prop))).map(_.rels)
+            (prevRels, boundedTouched(e.label)) match {
+              case (Some(rels), Some(touched)) =>
+                if (touched.isEmpty) kept(rels) // identity churn only
+                else if (rels.size >= 16) {
+                  chainMerges += 1
+                  val chain = rels.zipWithIndex.map { case (r, i) =>
+                    spark.read.parquet(s"$root/$r").withColumn("__seq", lit(i)) }
+                  val fresh = e.derive(touched).withColumn("__seq", lit(rels.size))
+                  write((chain :+ fresh).reduce(_ unionByName _)
+                    .groupBy(e.dedupKeys.map(col): _*)
+                    .agg(max_by(col(e.valCol), col("__seq")).as(e.valCol)), Nil)
+                } else write(e.derive(touched), rels) // delta: the touched rows
+              case _ => None
+            }
+        }
+      }
+    }
+
+    /** The manifests of `cat`'s file-form labels held in memory. */
+    def manifest(cat: Catalog): Map[Key, Manifest] =
+      cat.tables.flatMap {
+        case t: FileTable =>
+          val tbl = if (t.kind == "v") s.vertexLabels.get(t.label) else s.edgeLabels.get(t.label)
+          tbl.map(df => (t.kind, t.label) ->
+            Manifest(df, t.files, t.dvps, dvsOf((t.kind, t.label), t.dvps)))
+        case _ => None
+      }.toMap
+  }
+
+  def mergePos(a: Positions, b: Positions): Positions =
+    b.foldLeft(a) { case (acc, (k, v)) =>
+      acc.updated(k, (acc.getOrElse(k, Array.empty[Long]) ++ v).distinct.sorted)
+    }
+
+  /** The positions of `dvps`: each file holds `<fileBasename> <rowIndex>` lines. */
+  def readDvps(root: String, dvps: List[DvpFile]): Positions =
+    dvps.flatMap(d => Files.readAllLines(Paths.get(root, d.rel)).asScala.filter(_.nonEmpty))
+      .map { s =>
+        val i = s.lastIndexOf(' ')
+        (s.substring(0, i), s.substring(i + 1).toLong)
+      }
+      .groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2).distinct.sorted.toArray }
+
+  /** Apply deletion vectors to a raw manifest-file scan: ONE [[DvLive]]
+    * predicate over (`_metadata.file_path`, `_metadata.row_index`), a
+    * binary search per row over per-file sorted positions. `id` never
+    * appears in it, so pushed id filters and parquet row-group pruning on
+    * id survive on dv-bearing label reads.
+    */
+  def applyDvs(raw: DataFrame, dvs: Positions): DataFrame = {
+    if (dvs.isEmpty) return raw
+    import org.apache.spark.sql.graft.Bridge
+    val out = raw.filter(Bridge.column(DvLive(
+      Bridge.expression(col("_metadata.file_path")),
+      Bridge.expression(col("_metadata.row_index")),
+      new DvIndex(dvs))))
+    MutableGraph.lastDvRead = Some(out)
+    out
+  }
+
+  /** A label's live rows from manifest files: the union of the files
+    * (mergeSchema: a CoW SET that added a property wrote it only into the
+    * rewritten files, and carried files read it as null, which is the
+    * absent-property semantics) with the label's dvs applied.
+    */
+  def scanFiles(spark: SparkSession, root: String, files: List[FileStats],
+      dvs: Positions): DataFrame =
+    applyDvs(spark.read.option("mergeSchema", "true")
+      .parquet(files.map(f => s"$root/${f.rel}"): _*), dvs)
+
+  /** Open version `asOf` (default the latest). Tables are localCheckpoint'd
+    * eagerly, so a later gc can never invalidate a lazily-held file.
+    */
+  def open(spark: SparkSession, root: String, asOf: Option[Long]): Opened = {
+    val latest = latestVersion(root).getOrElse(
+      throw new IllegalArgumentException(s"no durable graph at $root (_LATEST missing)"))
+    val v = asOf.getOrElse(latest)
+    if (!Files.exists(catalogPath(root, v))) {
+      val have = Files.list(Paths.get(root)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.matches("v\\d+"))
+        .map(_.drop(1).toLong).toList.sorted
+      throw new IllegalArgumentException(
+        s"version $v not available at $root (retention keeps: ${have.mkString(", ")})")
+    }
+    val cat = Catalog.read(root, v)
+    val dvs = cat.tables.collect {
+      case t: FileTable => (t.kind, t.label) -> readDvps(root, t.dvps) }.toMap
+    def tablesOf(kind: String): Map[String, DataFrame] = {
+      val (dirs, files) = cat.tables.filter(_.kind == kind).partition(_.isInstanceOf[DirTable])
+      (dirs ++ files).map {
+        case t: DirTable =>
+          val raw = spark.read.parquet(s"$root/v${t.ver}/$kind/${enc(t.label)}")
+          t.label -> t.nullCols.foldLeft(raw)((acc, c) => acc.withColumn(c, lit(null)))
+            .localCheckpoint()
+        case t: FileTable =>
+          t.label -> scanFiles(spark, root, t.files, dvs((kind, t.label))).localCheckpoint()
+      }.toMap
+    }
+    val tables = Map("v" -> tablesOf("v"), "e" -> tablesOf("e"))
+    def matrixOf(d: IndexDef): Array[Array[Double]] =
+      Files.readAllLines(Paths.get(root, d.matrixRel)).asScala
+        .map(_.split(" ").map(java.lang.Double.parseDouble)).toArray
+    val ivf = cat.indexes.filter(_.tag == "ivf").map { d =>
+      IvfIdx(d.label, d.prop, d.metric, d.shape(0), d.shape(1), matrixOf(d)) }
+    val pq = cat.indexes.filter(_.tag == "pq").map { d =>
+      val List(dims, m, k) = d.shape
+      val rows = matrixOf(d)
+      require(rows.length == m * k, s"pq codebook file: ${rows.length} != $m*$k")
+      PqIdx(d.label, d.prop, d.metric, dims, m, k,
+        Array.tabulate(m)(s => Array.tabulate(k)(c => rows(s * k + c))))
+    }
+    // stored entries are valid exactly for the label tables this open made
+    val entries = cat.entries.flatMap(e => tables("v").get(e.label).map(e -> _))
+    Opened(cat, tables("v"), tables("e"), ivf, pq, heldAt(v, cat, entries,
+      cat.tables.collect { case t: FileTable => (t.kind, t.label) ->
+        Manifest(tables(t.kind)(t.label), t.files, t.dvps, dvs((t.kind, t.label))) }.toMap))
+  }
+
+  /** A scan of manifest `m`'s files whose stats may hold a row with
+    * property `propEsc` in [lo, hi] (equality passes one literal on both
+    * sides), as (files kept, files total, scan). None when the bounds carry
+    * no claim (a NaN or non-scalar bound: PG orders NaN above every
+    * number). The scan is None when nothing is pruned or the pruned read
+    * cannot be aligned to `tbl` (pruning is advisory), with kept == total
+    * in the latter case. The pruned scan is lazy parquet, not
+    * checkpointed: it touches only the probed files.
+    */
+  def prunedScan(spark: SparkSession, root: String, m: Manifest, tbl: DataFrame,
+      propEsc: String, lo: Option[GValue], hi: Option[GValue]): Option[(Int, Int, Option[DataFrame])] = {
+    def conv(g: GValue): Option[Any] = g match {
+      case GInt(v) => Some(v)
+      case GFloat(v) => if (v.isNaN) None else Some(v)
+      case GString(v) => Some(v)
+      case GTimestamp(us) => Some(TsBound(us))
+      case GDate(d) => Some(DateBound(d.toLong))
+      case _ => None
+    }
+    if (lo.isEmpty && hi.isEmpty) return None
+    val loV = lo.map(g => conv(g).getOrElse(return None))
+    val hiV = hi.map(g => conv(g).getOrElse(return None))
+    val kept = m.files.filter(_.mayOverlap(propEsc, loV, hiV))
+    val total = m.files.size
+    if (kept.size == total) return Some((total, total, None))
+    if (kept.isEmpty) return Some((0, total, Some(tbl.limit(0))))
+    // align to the in-memory schema: the subset may lack columns a CoW SET
+    // added only to other files (absent = null), and types a wider merge
+    // settled differently. `.schema` forces analysis inside the Try, so a
+    // bad cast cannot surface later as a query error
+    scala.util.Try {
+      val dved = scanFiles(spark, root, kept, m.dvs)
+      val aligned = tbl.schema.fields.foldLeft(dved)((acc, f) =>
+        if (acc.columns.contains(f.name))
+          acc.withColumn(f.name, col(f.name).cast(MutableGraph.relaxNullability(f.dataType)))
+        else acc.withColumn(f.name, lit(null).cast(MutableGraph.relaxNullability(f.dataType))))
+      val out = aligned.select(tbl.columns.map(col): _*)
+      out.schema
+      out
+    }.toOption match {
+      case ok @ Some(_) => Some((kept.size, total, ok))
+      case None => Some((total, total, None)) // the full table is read: no prune
+    }
+  }
+}

@@ -4,6 +4,7 @@ import graft.Local
 import graft.graph.PropertyGraph
 import graft.gvalue._
 import Ast._
+import Commit.{IvfIdx, PqIdx}
 import Compiler.{Ctx, VarInfo}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter, LeftSemi}
@@ -92,7 +93,10 @@ final class GraphSession(val spark: SparkSession) {
 
   def createGraph(name: String): Unit = {
     require(!graphs.contains(name), s"""graph "$name" already exists""")
-    graphs(name) = new MutableGraph(spark)
+    attach(name, new MutableGraph(spark))
+  }
+  private def attach(name: String, g: MutableGraph): Unit = {
+    graphs(name) = g
     current = Some(name)
     refreshAgGraph()
   }
@@ -109,11 +113,8 @@ final class GraphSession(val spark: SparkSession) {
   /** Reopen a durable graph (latest committed version) from its store —
     * the session-survival path the in-memory catalog lacks.
     */
-  def openGraph(name: String, storeRoot: String): Unit = {
-    graphs(name) = MutableGraph.load(spark, storeRoot)
-    current = Some(name)
-    refreshAgGraph()
-  }
+  def openGraph(name: String, storeRoot: String): Unit =
+    attach(name, MutableGraph.load(spark, storeRoot))
 
   /** Time-travel open (r12): read the graph AS OF a specific committed
     * version. Retention-bounded — gc keeps the two newest catalogs plus
@@ -122,11 +123,8 @@ final class GraphSession(val spark: SparkSession) {
     * read-only by construction: its first write fails OCC base-version
     * validation with PG's 40001 serialization failure.
     */
-  def openGraph(name: String, storeRoot: String, asOfVersion: Long): Unit = {
-    graphs(name) = MutableGraph.load(spark, storeRoot, Some(asOfVersion))
-    current = Some(name)
-    refreshAgGraph()
-  }
+  def openGraph(name: String, storeRoot: String, asOfVersion: Long): Unit =
+    attach(name, MutableGraph.load(spark, storeRoot, Some(asOfVersion)))
   def useGraph(name: String): Unit = {
     require(graphs.contains(name), s"""graph "$name" does not exist""")
     current = Some(name)
@@ -1628,15 +1626,11 @@ final class MutableGraph(spark: SparkSession) {
       else vertexLabels,
       edgeLabels, labelIds.toMap, ivfProbeFn, statsPrunedScan)
 
-  // -------------------------------- r13 manifest-stats data skipping
-  // (VERDICT r12 #3 — the GIN property-index analog, gtype_gin.c:62-554,
-  // re-expressed as Delta-style per-file typed min/max in the CoW
-  // manifest). For each file-manifest label: the in-memory DataFrame
-  // identity the manifest reflects, the parsed file stats, and the
-  // label's deletion vectors. Rebuilt at load and after every publish;
-  // an in-session change invalidates by identity until the next publish.
-  private var manifestInfo = Map.empty[(String, String),
-    (DataFrame, List[GraphStore.FileStats], MutableGraph.DvSets)]
+  // Manifest-stats data skipping (the GIN property-index analog,
+  // gtype_gin.c:62-554, as Delta-style per-file typed min/max): the
+  // manifest of each file-form label, rebuilt at load and after every
+  // publish; an in-session change invalidates it by table identity until
+  // the next publish.
   /** (files kept, files total) of the last pruned-scan attempt — lets
     * WriteSpec assert a property-filtered MATCH actually skipped files. */
   @volatile var lastPruneInfo: Option[(Int, Int)] = None
@@ -1652,68 +1646,22 @@ final class MutableGraph(spark: SparkSession) {
   @volatile var statsPruneEnabled: Boolean = true
 
   /** Scan of `label` restricted to the manifest files whose stats may
-    * hold a row with property `propEsc` inside [lo, hi] (equality = same
-    * literal both sides; half-open ranges leave one side None). None when
-    * stats cannot prune (no manifest, diverged content, non-scalar
-    * literal, or nothing skippable) — the caller uses the in-memory
-    * table. The pruned scan is LAZY parquet (not checkpointed): at
-    * 100 TB this is the difference between touching the probed files
-    * and materializing the label.
+    * hold a row with property `propEsc` inside [lo, hi]
+    * ([[Commit.prunedScan]]). None when stats cannot prune (no manifest,
+    * diverged content, non-scalar literal, or nothing skippable): the
+    * caller uses the in-memory table.
     */
   private def statsPrunedScan(kind: String, label: String, propEsc: String,
       lo: Option[GValue], hi: Option[GValue], tbl: DataFrame): Option[DataFrame] = {
     if (!statsPruneEnabled) return None
     val root = storeRoot.getOrElse(return None)
-    val (src, ents, dvs) = manifestInfo.getOrElse((kind, label), return None)
-    if (!(src eq tbl)) return None // scanned snapshot ≠ manifest content
-    // PG orders NaN above every number (and NaN = NaN is true) — IEEE
-    // range logic would mis-prune, so NaN bounds carry no hint
-    def conv(g: GValue): Option[Any] = g match {
-      case GInt(v) => Some(v)
-      case GFloat(v) => if (v.isNaN) None else Some(v)
-      case GString(v) => Some(v)
-      case GTimestamp(us) => Some(GraphStore.TsBound(us))
-      case GDate(d) => Some(GraphStore.DateBound(d.toLong))
-      case _ => None
-    }
-    if (lo.isEmpty && hi.isEmpty) return None
-    val loV = lo.map(g => conv(g).getOrElse(return None))
-    val hiV = hi.map(g => conv(g).getOrElse(return None))
-    val kept = ents.filter(_.mayOverlap(propEsc, loV, hiV))
-    lastPruneInfo = Some((kept.size, ents.size))
-    if (kept.size == ents.size) return None
-    if (kept.isEmpty) return Some(tbl.limit(0))
-    // pruning is advisory: any read/align problem (unmergeable schemas
-    // across files, an uncastable type) falls back to the full table
-    // instead of failing the query — `.schema` forces analysis HERE so a
-    // bad cast can't surface later as a query error (r14: a gvalue-encoded
-    // column's in-memory struct type carries NOT NULL fields that a cast
-    // from the parquet-read nullable struct cannot add)
-    scala.util.Try {
-      val raw = spark.read.option("mergeSchema", "true")
-        .parquet(kept.map(e => s"$root/${e.rel}"): _*)
-      def verByBase: Map[String, Long] = kept.map(e =>
-        e.rel.substring(e.rel.lastIndexOf('/') + 1) -> e.version).toMap
-      val dved = MutableGraph.applyDvs(raw, verByBase, dvs)
-      // align to the in-memory schema: the subset may lack columns a CoW
-      // SET added only to other files (absent = null), and types a wider
-      // merge settled differently. Cast targets are nullability-RELAXED:
-      // equality/order semantics don't depend on the NOT NULL marks.
-      val aligned = tbl.schema.fields.foldLeft(dved)((acc, f) =>
-        if (acc.columns.contains(f.name))
-          acc.withColumn(f.name, col(f.name).cast(relaxNullability(f.dataType)))
-        else acc.withColumn(f.name, lit(null).cast(relaxNullability(f.dataType))))
-      val out = aligned.select(tbl.columns.map(col): _*)
-      out.schema // force analysis inside the Try
-      out
-    }.toOption match {
-      case ok @ Some(_) => ok
-      case None =>
-        // fallback read the FULL table — correct the counter so
-        // WriteSpec/StoreBench "files read kept/total" can't claim a
-        // prune that never happened
-        lastPruneInfo = Some((ents.size, ents.size))
-        None
+    val m = held.manifest.get((kind, label))
+      .filter(_.src eq tbl) // scanned snapshot = manifest content
+      .getOrElse(return None)
+    Commit.prunedScan(spark, root, m, tbl, propEsc, lo, hi).flatMap {
+      case (kept, total, scan) =>
+        lastPruneInfo = Some((kept, total))
+        scan
     }
   }
 
@@ -1725,97 +1673,81 @@ final class MutableGraph(spark: SparkSession) {
   // label table, identity-cached, so the index never goes stale across
   // writes and needs no per-write hook. Probe-side cost at any corpus
   // size: |label| · probes/lists scan instead of a full scan.
-  private final case class IvfIdx(label: String, prop: String,
-      metric: String, dims: Int, lists: Int, centroids: Array[Array[Double]])
   private val ivfIndexes =
     mutable.LinkedHashMap.empty[(String, String), IvfIdx]
-  /** Store version whose `ivf/` dir holds each index's centroid file —
-    * an index present here is carried as a catalog pointer on publish
-    * (the r11 incremental-label discipline applied to indexes, r12). */
-  private var ivfPersistedAt = Map.empty[(String, String), Long]
   private var ivfAssignCache = Map.empty[(String, String), (DataFrame, DataFrame)]
-  /** r13 (VERDICT r12 #1): persisted row→list assignment RELATION — the
-    * index ENTRIES, the analog of the reference's stored list pages
-    * (ivfbuild.c writes the tuples into lists; ivfscan.c probes read them
-    * back, never re-deriving). Rel paths of the `ivfa/` parquet chain
-    * (base + per-publish delta files, Delta-shaped) + the label DataFrame
-    * identity whose content the stored entries reflect: a probe may read
-    * the stored relation only while the label is that exact snapshot.
-    */
-  private var ivfAssignPersistedAt = Map.empty[(String, String), (List[String], DataFrame)]
-  private var pqCodesPersistedAt = Map.empty[(String, String), (List[String], DataFrame)]
   /** Clusters probed per ANN query (reference GUC ivfflat.probes; default 1). */
   @volatile var ivfProbes: Int = 1
 
   // PQ/ADC index (r12): codebooks are the persisted structure (like IVF's
   // centroids); per-row codes derive lazily from the CURRENT label table
   // and are identity-cached, so the index never goes stale across writes.
-  private final case class PqIdx(label: String, prop: String,
-      metric: String, dims: Int, m: Int, k: Int,
-      codebooks: Array[Array[Array[Double]]])
   private val pqIndexes =
     mutable.LinkedHashMap.empty[(String, String), PqIdx]
-  private var pqPersistedAt = Map.empty[(String, String), Long]
   private var pqCodesCache = Map.empty[(String, String), (DataFrame, DataFrame)]
   /** ADC shortlist size reranked exactly by the query's ORDER BY. */
   @volatile var pqShortlist: Int = 192
 
-  private def ivfEmb(tbl: DataFrame, prop: String, dims: Int): DataFrame =
-    tbl.select(col("id"),
-      col(prop).cast(ArrayType(DoubleType)).as(prop))
-      .filter(col(prop).isNotNull && size(col(prop)) === dims)
-
   def createIvfIndex(label: String, prop0: String, dims: Int, lists: Int,
-      metric: String): Unit = {
-    val prop = Compiler.PropNames.esc(prop0)
-    val tbl = vertexLabels.getOrElse(label,
-      throw new IllegalArgumentException(s"unknown vertex label $label"))
-    require(tbl.columns.contains(prop),
-      s"label $label has no property $prop0")
-    require(dims >= 1 && dims <= 2000, "ivfflat supports 1..2000 dimensions") // ivfflat.h:33
-    require(lists >= 1 && lists <= 32768, "lists must be in 1..32768") // ivfflat.h:53
-    val emb = ivfEmb(tbl, prop, dims)
-    val cents = graft.functions.Ivf.kmeansSampled(emb, "id", prop,
-      k = lists, iters = 5)
-    ivfIndexes((label, prop)) = IvfIdx(label, prop, metric, dims, lists, cents)
-    ivfAssignCache -= ((label, prop))
-    ivfPersistedAt -= ((label, prop))
-    ivfAssignPersistedAt -= ((label, prop))
-    // index DDL is durable like the reference's on-disk IVFFlat build
-    // (ivfbuild.c writes index pages; VERDICT r11 #1): publish the catalog
-    // + centroid file now — label tables are reference-unchanged, so they
-    // all carry as version pointers and the commit writes only the index.
-    // r13: build the ENTRIES eagerly too (CREATE INDEX in the reference
-    // writes the list pages, not just the centroids) so the publish below
-    // persists the (id, cluster) relation and a reopened store probes it
-    if (storeRoot.isDefined) {
-      ivfAssignments(ivfIndexes((label, prop)))
-      publish(vertexLabels, edgeLabels)
+      metric: String): Unit =
+    buildIndex(label, prop0, dims, "ivfflat") { (prop, emb) =>
+      require(lists >= 1 && lists <= 32768, "lists must be in 1..32768") // ivfflat.h:53
+      val key = (label, prop)
+      ivfIndexes(key) = IvfIdx(label, prop, metric, dims, lists,
+        graft.functions.Ivf.kmeansSampled(emb, "id", prop, k = lists, iters = 5))
+      ivfAssignCache -= key
+      held = held.ivfRebuilt(key)
+      () => ivfAssignments(ivfIndexes(key))
     }
-  }
 
   def createPqIndex(label: String, prop0: String, dims: Int, m: Int,
-      k: Int, metric: String): Unit = {
+      k: Int, metric: String): Unit =
+    buildIndex(label, prop0, dims, "pq") { (prop, emb) =>
+      require(m >= 1 && m <= 64 && dims % m == 0,
+        s"m must divide dims ($dims % $m != 0) and be in 1..64")
+      require(k >= 2 && k <= 256, "k (centroids per subspace) must be in 2..256")
+      val key = (label, prop)
+      pqIndexes(key) = PqIdx(label, prop, metric, dims, m, k,
+        graft.functions.Ivf.pqCodebooksSampled(emb, "id", prop, dims, m, k))
+      pqCodesCache -= key
+      held = held.pqRebuilt(key)
+      () => pqCodes(pqIndexes(key))
+    }
+
+  /** Train an ANN index of `label`.`prop0` (`train` gets the escaped
+    * property and the label's embeddings, and returns its entry builder).
+    * Index DDL is durable like the reference's on-disk build: it publishes
+    * at once, and since CREATE INDEX writes the list pages, not just the
+    * trained structure (ivfbuild.c), the entries are built first so the
+    * publish persists them and a reopened store probes them.
+    */
+  private def buildIndex(label: String, prop0: String, dims: Int, am: String)(
+      train: (String, DataFrame) => (() => DataFrame)): Unit = {
     val prop = Compiler.PropNames.esc(prop0)
     val tbl = vertexLabels.getOrElse(label,
       throw new IllegalArgumentException(s"unknown vertex label $label"))
     require(tbl.columns.contains(prop), s"label $label has no property $prop0")
-    require(dims >= 1 && dims <= 2000, "pq supports 1..2000 dimensions")
-    require(m >= 1 && m <= 64 && dims % m == 0,
-      s"m must divide dims ($dims % $m != 0) and be in 1..64")
-    require(k >= 2 && k <= 256, "k (centroids per subspace) must be in 2..256")
-    val emb = ivfEmb(tbl, prop, dims)
-    val cbs = graft.functions.Ivf.pqCodebooksSampled(emb, "id", prop,
-      dims, m, k)
-    pqIndexes((label, prop)) = PqIdx(label, prop, metric, dims, m, k, cbs)
-    pqCodesCache -= ((label, prop))
-    pqPersistedAt -= ((label, prop))
-    pqCodesPersistedAt -= ((label, prop))
+    require(dims >= 1 && dims <= 2000, s"$am supports 1..2000 dimensions") // ivfflat.h:33
+    val entries = train(prop, Commit.embeddings(tbl, prop, dims))
     if (storeRoot.isDefined) {
-      pqCodes(pqIndexes((label, prop))) // r13: encode once, persist below
+      entries()
       publish(vertexLabels, edgeLabels)
     }
   }
+
+  /** The stored entry files of an index, each with its version, while
+    * they reflect `tbl` and all still exist: a 2+-versions-stale reader
+    * may race a concurrent writer's gc, and then derives instead of
+    * failing mid-query.
+    */
+  private def storedEntries(stored: Option[(List[String], DataFrame)],
+      tbl: DataFrame): Option[List[(DataFrame, Long)]] =
+    for {
+      root <- storeRoot
+      (rels, src) <- stored
+      if (src eq tbl) && rels.forall(r => java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$root/$r")))
+    } yield rels.map(r => (spark.read.parquet(s"$root/$r"), GraphStore.versionOf(r)))
 
   private def pqCodes(ix: PqIdx): DataFrame = {
     val tbl = vertexLabels(ix.label)
@@ -1831,26 +1763,19 @@ final class MutableGraph(spark: SparkSession) {
         // distance sum. Each file is tagged with its version at read (from
         // the rel path the catalog carries — never parsed out of the
         // absolute file path).
-        val stored = pqCodesPersistedAt.get(key).collect {
-          case (rels, src) if (src eq tbl) && storeRoot.isDefined &&
-              rels.forall(r => java.nio.file.Files.exists( // gc race: fall back
-                java.nio.file.Paths.get(s"${storeRoot.get}/$r"))) =>
-            val tagged = rels.map { r =>
-              val ver = r.takeWhile(_ != '/').drop(1).toLong
-              spark.read.parquet(s"${storeRoot.get}/$r")
-                .withColumn("__ver", lit(ver))
-            }
-            tagged.reduce(_ unionByName _)
-              .groupBy(col("id"), col("sub"))
-              .agg(max_by(col("code"), struct(col("__ver"), col("code"))).as("code"))
-              // deltas only ADD touched-row entries, so codes of deleted
-              // vertices survive the last-wins dedup until compaction and
-              // would eat ADC shortlist slots; an id-only semi-join
-              // against the live label keeps the shortlist's k real
-              .join(tbl.select(col("id")), Seq("id"), "left_semi")
+        val stored = storedEntries(held.pqcAt.get(key), tbl).map { files =>
+          files.map { case (f, ver) => f.withColumn("__ver", lit(ver)) }
+            .reduce(_ unionByName _)
+            .groupBy(col("id"), col("sub"))
+            .agg(max_by(col("code"), struct(col("__ver"), col("code"))).as("code"))
+            // deltas only ADD touched-row entries, so codes of deleted
+            // vertices survive the last-wins dedup until compaction and
+            // would eat ADC shortlist slots; an id-only semi-join
+            // against the live label keeps the shortlist's k real
+            .join(tbl.select(col("id")), Seq("id"), "left_semi")
         }
         val c = stored.getOrElse(graft.functions.Ivf.pqEncode(
-          ivfEmb(tbl, ix.prop, ix.dims), "id", ix.prop, ix.codebooks))
+          Commit.embeddings(tbl, ix.prop, ix.dims), "id", ix.prop, ix.codebooks))
           .localCheckpoint()
         pqCodesCache += (key -> (tbl, c))
         c
@@ -1863,7 +1788,7 @@ final class MutableGraph(spark: SparkSession) {
       case Some((src, a)) if src eq tbl => a
       case _ =>
         val a = graft.functions.Ivf.assignments(
-          ivfEmb(tbl, ix.prop, ix.dims), "id", ix.prop, ix.centroids)
+          Commit.embeddings(tbl, ix.prop, ix.dims), "id", ix.prop, ix.centroids)
           .localCheckpoint()
         ivfAssignCache += ((ix.label, ix.prop) -> (tbl, a))
         a
@@ -1904,20 +1829,13 @@ final class MutableGraph(spark: SparkSession) {
     val cached = ivfAssignCache.get(key).collect {
       case (src, a) if src eq tbl => a }
     cached.map(_.filter(col("cluster").isin(probed: _*)).select(col("id")))
-      .orElse(ivfAssignPersistedAt.get(key).collect {
-        case (rels, src) if (src eq tbl) && storeRoot.isDefined &&
-            // a 2+-versions-stale reader may race a concurrent writer's gc;
-            // fall back to the lazy derive instead of a mid-query error
-            rels.forall(r => java.nio.file.Files.exists(
-              java.nio.file.Paths.get(s"${storeRoot.get}/$r"))) =>
-          // union of base + delta entry files, read RAW: stale rows are a
-          // recall-safe superset (a moved id's new entry is in a delta;
-          // stale/deleted entries only add candidates that the exact
-          // rerank's label join drops)
-          rels.map(r => spark.read.parquet(s"${storeRoot.get}/$r"))
-            .reduce(_ unionByName _)
-            .filter(col("cluster").isin(probed: _*)).select(col("id")).distinct()
-      })
+      .orElse(storedEntries(held.ivfaAt.get(key), tbl).map(files =>
+        // union of base + delta entry files, read RAW: stale rows are a
+        // recall-safe superset (a moved id's new entry is in a delta;
+        // stale/deleted entries only add candidates that the exact
+        // rerank's label join drops)
+        files.map(_._1).reduce(_ unionByName _)
+          .filter(col("cluster").isin(probed: _*)).select(col("id")).distinct()))
       .getOrElse(ivfAssignments(ix)
         .filter(col("cluster").isin(probed: _*)).select(col("id")))
   }
@@ -2076,12 +1994,16 @@ final class MutableGraph(spark: SparkSession) {
   private[cypher] def ingestVertexBatch(label: String, keyCol: String,
       batch: DataFrame, appId: String, batchId: Long): Unit =
     ingestBatch(appId, batchId) {
-      val lid = labelId(label)
-      val df = batch.select(
-        shiftleft(lit(lid.toLong), 48).bitwiseOR(col(keyCol).cast("long")).as("id") +:
-          batch.columns.filterNot(_ == "id").sorted.map(col): _*)
-      appendRows("v", label, df.localCheckpoint())
+      appendRows("v", label, keyedBatch(label, keyCol, batch).localCheckpoint())
     }
+
+  /** A vertex batch with ids packed from `keyCol`, as GraphBuilder packs. */
+  private def keyedBatch(label: String, keyCol: String, batch: DataFrame): DataFrame =
+    batch.select(packedId(label, keyCol).as("id") +:
+      batch.columns.filterNot(_ == "id").sorted.map(col): _*)
+
+  private def packedId(label: String, keyCol: String): Column =
+    shiftleft(lit(labelId(label).toLong), 48).bitwiseOR(col(keyCol).cast("long"))
 
   /** Upsert twin of [[ingestVertexBatch]] (r12 streaming CDC): a batch
     * row whose key already exists REPLACES the stored row — the publish
@@ -2094,11 +2016,7 @@ final class MutableGraph(spark: SparkSession) {
   private[cypher] def ingestVertexUpsertBatch(label: String, keyCol: String,
       batch: DataFrame, appId: String, batchId: Long): Unit =
     ingestBatch(appId, batchId) {
-      val lid = labelId(label)
-      val df = batch.select(
-        shiftleft(lit(lid.toLong), 48).bitwiseOR(col(keyCol).cast("long")).as("id") +:
-          batch.columns.filterNot(_ == "id").sorted.map(col): _*)
-        .dropDuplicates("id").localCheckpoint()
+      val df = keyedBatch(label, keyCol, batch).dropDuplicates("id").localCheckpoint()
       vertexLabels.get(label) match {
         case None => appendRows("v", label, df)
         case Some(o) =>
@@ -2116,17 +2034,12 @@ final class MutableGraph(spark: SparkSession) {
       srcLabel: String, srcKeyCol: String, dstLabel: String, dstKeyCol: String,
       batch: DataFrame, appId: String, batchId: Long): Unit =
     ingestBatch(appId, batchId) {
-      val lid = labelId(label)
-      val srcLid = labelId(srcLabel); val dstLid = labelId(dstLabel)
+      val ids = Seq(packedId(label, keyCol).as("id"),
+        packedId(srcLabel, srcKeyCol).as("start_id"), packedId(dstLabel, dstKeyCol).as("end_id"))
       val props = batch.columns
         .filterNot(Set("id", "start_id", "end_id", keyCol, srcKeyCol, dstKeyCol))
         .sorted.map(col)
-      val df = batch.select(
-        Seq(shiftleft(lit(lid.toLong), 48).bitwiseOR(col(keyCol).cast("long")).as("id"),
-          shiftleft(lit(srcLid.toLong), 48).bitwiseOR(col(srcKeyCol).cast("long")).as("start_id"),
-          shiftleft(lit(dstLid.toLong), 48).bitwiseOR(col(dstKeyCol).cast("long")).as("end_id")
-        ) ++ props: _*)
-      appendRows("e", label, df.localCheckpoint())
+      appendRows("e", label, batch.select(ids ++ props: _*).localCheckpoint())
     }
 
   /** Append rows to a label table (all CREATE paths): records the new ids
@@ -2140,17 +2053,6 @@ final class MutableGraph(spark: SparkSession) {
       edgeLabels += (label -> aligned(kind, label, edgeLabels.get(label), df))
   }
 
-  /** The type with every nullability mark relaxed — two types equal under
-    * this differ only in NOT NULL claims and union/compare losslessly. */
-  private def relaxNullability(dt: DataType): DataType = dt match {
-    case StructType(fs) => StructType(fs.map(f =>
-      f.copy(dataType = relaxNullability(f.dataType), nullable = true)))
-    case ArrayType(et, _) => ArrayType(relaxNullability(et), containsNull = true)
-    case MapType(k, v, _) =>
-      MapType(relaxNullability(k), relaxNullability(v), valueContainsNull = true)
-    case other => other
-  }
-
   private def aligned(kind: String, label: String, old: Option[DataFrame],
       add: DataFrame): DataFrame = old match {
     case None => add
@@ -2162,7 +2064,8 @@ final class MutableGraph(spark: SparkSession) {
       // every wrapper-ingested batch (dropping index-entry chains, r14)
       val conflicts = o.schema.fields.flatMap { f =>
         add.schema.fields.find(_.name == f.name)
-          .filter(g => relaxNullability(g.dataType) != relaxNullability(f.dataType) &&
+          .filter(g => MutableGraph.relaxNullability(g.dataType) !=
+            MutableGraph.relaxNullability(f.dataType) &&
             f.dataType != NullType && g.dataType != NullType)
           .map(_ => f.name)
       }.toSeq
@@ -2516,776 +2419,45 @@ final class MutableGraph(spark: SparkSession) {
   // publish join a small delta against a flat table, whatever the history.
 
   private[cypher] var storeRoot: Option[String] = None
-  /** The store version this session's in-memory state derives from —
-    * set at load/create and advanced by each publish; the optimistic
-    * commit's validation base.
+  /** What this graph holds of its store, set at load and by each publish;
+    * its version is the optimistic commit's validation base.
     */
-  private[cypher] var storeVersion: Long = 0L
+  private var held = Commit.NotHeld
 
-  /** Publish the CURRENT catalog + label tables as the next version.
-    * Runs under the store's commit lock with base-version validation
-    * (GraphStore doc): a concurrent writer having published since this
-    * session's snapshot raises PG's serialization failure — the
-    * statement's tx-restore then rolls the in-memory writes back too.
-    *
-    * INCREMENTAL (r11): a label whose DataFrame reference is unchanged
-    * since the statement's snapshot carries a POINTER to the version dir
-    * that last wrote it (`vlabel <name> <ver>` catalog lines) instead of
-    * being rewritten — per-commit write volume is proportional to the
-    * labels the statement touched, not the graph (the Delta/Iceberg
-    * manifest-reuse shape). gc retains every version dir the two newest
-    * catalogs reference.
+  /** Publish the current catalog and label tables as the next version
+    * ([[Commit.publish]]; the layout and the per-label choice are in the
+    * [[GraphStore]] doc). A label whose DataFrame reference is unchanged
+    * since the statement's snapshot (`prevV`/`prevE`) is carried by its
+    * catalog lines instead of being rewritten.
     */
   private[cypher] def publish(
       prevV: Map[String, DataFrame] = Map.empty,
       prevE: Map[String, DataFrame] = Map.empty): Unit = storeRoot.foreach { root =>
-    import java.nio.charset.StandardCharsets.UTF_8
-    import java.nio.file.{Files, Paths}
-    import GraphStore.enc
-    GraphStore.withCommitLock(root) {
-    val cur = GraphStore.latestVersion(root).getOrElse(0L)
-    if (cur != storeVersion) throw new GraphStore.SerializationFailure
-    val next = cur + 1
-    val dir = s"$root/v$next"
-    Files.createDirectories(Paths.get(dir))
-    val prevLines: List[String] =
-      if (cur <= 0) Nil
-      else scala.util.Try(scala.io.Source.fromFile(
-        s"$root/v$cur/catalog.txt").getLines().toList).getOrElse(Nil)
-    // previous catalog: where each label lives + its nulltype markers
-    val prevLoc: Map[(String, String), Long] = prevLines.collect {
-      case s if s.startsWith("vlabel ") || s.startsWith("elabel ") =>
-        val p = s.split(" ")
-        ((s.take(1), p(1)), if (p.length > 2) p(2).toLong else cur)
-    }.toMap
-    val prevNull: Map[(String, String), List[String]] =
-      prevLines.filter(_.startsWith("nulltype "))
-        .groupBy { s => val p = s.split(" "); (p(1), p(2)) }
-    // r12 file-level manifests: `file <kind> <encLabel> <encRelPath>`, one
-    // line per parquet file; a label is EITHER dir-pointer (vlabel/elabel)
-    // or file-manifest form, never both
-    val prevFileLines: Map[(String, String), List[String]] =
-      prevLines.filter(_.startsWith("file "))
-        .groupBy { s => val p = s.split(" "); (p(1), p(2)) }
-    // r12 deletion vectors: `dv <kind> <encLabel> <encRelPath> <count>` —
-    // a tombstone id list written at version V suppresses those ids in
-    // every manifest file from a version < V (version-ordered, Delta-DV
-    // shape). The row-version a SET writes at V stays visible because its
-    // file IS at V; carrying dv lines through any partial rewrite is
-    // therefore always-correct, and a full label rewrite drops them.
-    val prevDvLines: Map[(String, String), List[String]] =
-      prevLines.filter(_.startsWith("dv "))
-        .groupBy { s => val p = s.split(" "); (p(1), p(2)) }
-    // r14 positional deletion vectors: `dvp <kind> <encLabel> <encRelPath>
-    // <count>` — the file holds `<fileBasename> <rowIndex>` lines naming
-    // the exact rows suppressed in the exact files. File-targeted, so no
-    // version logic at read, and rewritten files (fresh part-UUID
-    // basenames) can never be hit by a carried entry.
-    val prevDvpLines: Map[(String, String), List[String]] =
-      prevLines.filter(_.startsWith("dvp "))
-        .groupBy { s => val p = s.split(" "); (p(1), p(2)) }
-    def versionOfRel(rel: String): Long = rel.takeWhile(_ != '/').drop(1).toLong
-    def listParquet(d: String): List[String] = {
-      val dp = Paths.get(d)
-      if (!Files.isDirectory(dp)) Nil
-      else {
-        import scala.jdk.CollectionConverters._
-        Files.list(dp).iterator().asScala
-          .filter(_.getFileName.toString.startsWith("part-")).map(_.toString)
-          .toList.sorted
-      }
-    }
-    // the statement's touched ids, collected once onto the driver while
-    // they fit Local's cap (a driver-held frame costs no job); None past
-    // the cap, where the checkpointed union below serves instead. Both are
-    // lazy: only built when a changed label is id-local eligible.
-    lazy val heldTouched: Option[Array[Long]] =
-      txTouched.foldLeft(Option(Set.empty[Long])) { (acc, f) =>
-        for (ids <- acc; rows <- Local.collect(f, Local.WriteBytes)
-             if Local.holds(spark, ids.size + rows.length))
-        yield ids ++ rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0))
-      }.map(_.toArray.sorted)
-    lazy val txTouchedAll: DataFrame =
-      txTouched.reduce(_ unionByName _).localCheckpoint()
-    val idSchema = StructType(Seq(StructField("id", LongType)))
-    def idFrame(ids: Array[Long]): DataFrame =
-      Local.relation(spark, ids.toSeq.map(Row(_)), idSchema)
-    val sb = new StringBuilder
-    sb ++= s"seq $seqLast\n"
-    labelIds.foreach { case (n, i) => sb ++= s"label ${enc(n)} $i\n" }
-    nextEntry.foreach { case (n, v) => sb ++= s"next ${enc(n)} $v\n" }
-    uniqueConstraints.foreach { case (l, p) => sb ++= s"unique ${enc(l)} ${enc(p)}\n" }
-    wholePropsUnique.foreach(l => sb ++= s"wholeunique ${enc(l)}\n")
-    streamBatches.foreach { case (a, b) => sb ++= s"stream ${enc(a)} $b\n" }
-    val referenced = scala.collection.mutable.Set[Long](next)
-    // Attempt a file-level copy-on-write publish for a CHANGED label
-    // (VERDICT r11 #6): rewrite only the parquet files containing this
-    // statement's touched ids, carry the rest by manifest line. Returns
-    // false when ineligible — the caller falls back to the full rewrite.
-    // manifest entry: rel path + optional per-file id stats
-    // (`file <kind> <encLabel> <encRelPath> [minId maxId]`) — the stats
-    // are Delta-style data skipping for the CoW path itself: a
-    // point-write's touched-FILE discovery prunes to files whose id range
-    // can hold a touched id instead of scanning the whole label
-    // ptail: raw r13 property-stat tokens (GraphStore.FileStats shape),
-    // carried verbatim so a dv/CoW re-emit never drops another file's stats
-    final case class FileEnt(rel: String, stats: Option[(Long, Long)],
-        ptail: List[String] = Nil)
-    def emitEnt(kind: String, encl: String, e: FileEnt): Unit = {
-      referenced += versionOfRel(e.rel)
-      val tail = e.stats.map { case (mn, mx) => s" $mn $mx" }.getOrElse("")
-      val ptail = if (e.ptail.isEmpty) "" else e.ptail.mkString(" ", " ", "")
-      sb ++= s"file $kind $encl ${enc(e.rel)}$tail$ptail\n"
-    }
-    def entsOfLines(lines: List[String]): List[FileEnt] = lines.map { s =>
-      val p = s.split(" ")
-      FileEnt(GraphStore.dec(p(3)),
-        if (p.length > 5) Some((p(4).toLong, p(5).toLong)) else None,
-        p.drop(6).toList)
-    }
-    // deletion-vector entry: tombstone file + the version it was written
-    // at (derived from its rel path) + its id count (from the catalog
-    // line, so bound checks never read the file)
-    final case class DvEnt(rel: String, ver: Long, count: Long)
-    def dvEntsOf(kind: String, encl: String): List[DvEnt] =
-      prevDvLines.getOrElse((kind, encl), Nil).map { s =>
-        val p = s.split(" ")
-        val rel = GraphStore.dec(p(3))
-        DvEnt(rel, versionOfRel(rel), p(4).toLong)
-      }
-    def dvIdsOf(e: DvEnt): Array[Long] =
-      Files.readAllLines(Paths.get(s"$root/${e.rel}"))
-        .toArray(Array.empty[String]).map(_.toLong)
-    def emitDv(kind: String, encl: String, e: DvEnt): Unit = {
-      referenced += e.ver
-      sb ++= s"dv $kind $encl ${enc(e.rel)} ${e.count}\n"
-    }
-    // r14 positional dv entry: tombstone (basename, rowIndex) file + its
-    // version (gc retention) + line count (bound checks without a read)
-    final case class DvpEnt(rel: String, ver: Long, count: Long)
-    def dvpEntsOf(kind: String, encl: String): List[DvpEnt] =
-      prevDvpLines.getOrElse((kind, encl), Nil).map { s =>
-        val p = s.split(" ")
-        val rel = GraphStore.dec(p(3))
-        DvpEnt(rel, versionOfRel(rel), p(4).toLong)
-      }
-    def dvpPosOf(es: List[DvpEnt]): Map[String, Array[Long]] =
-      es.foldLeft(Map.empty[String, Array[Long]])((acc, e) =>
-        MutableGraph.mergePos(acc, MutableGraph.readDvpFile(s"$root/${e.rel}")))
-    def emitDvp(kind: String, encl: String, e: DvpEnt): Unit = {
-      referenced += e.ver
-      sb ++= s"dvp $kind $encl ${enc(e.rel)} ${e.count}\n"
-    }
-    // read the ids of manifest files with their applicable deletion vectors
-    // applied — the same filter load uses, needed by every publish-side
-    // read of prev files (CoW discovery + rewrite, dv positions) or
-    // suppressed row-versions would be resurrected into rewritten files.
-    // Every such read needs only `id`: the id-only schema skips the
-    // schema-inference job a mergeSchema read runs over the file footers.
-    def readIdsWithDv(ents: List[FileEnt], dvs: List[DvEnt],
-        dvps: List[DvpEnt]): DataFrame = {
-      val raw = spark.read.schema(idSchema)
-        .parquet(ents.map(e => s"$root/${e.rel}"): _*)
-      if (dvs.isEmpty && dvps.isEmpty) raw
-      else {
-        // version per file from the manifest's OWN rel paths, keyed by
-        // part-file basename (unique per Spark write job) — regexp over
-        // the absolute path took the FIRST /vN/ segment, so a store root
-        // that itself contains one (…/v2/store) mis-attributed every file
-        // and dvs silently suppressed same-version row-versions
-        def verByBase: Map[String, Long] = ents.map(e =>
-          e.rel.substring(e.rel.lastIndexOf('/') + 1) -> versionOfRel(e.rel)).toMap
-        MutableGraph.applyDvs(raw, verByBase, MutableGraph.DvSets(
-          dvs.map(d => (d.ver, dvIdsOf(d))), dvpPosOf(dvps)))
-      }
-    }
-    // stats for files just written into outDir: one footer-bounded job.
-    // r13 (VERDICT r12 #3): besides the id range, record per-file min/max
-    // for typed property columns — the data-skipping analog of the
-    // reference's GIN property index (gtype_gin.c answers key/value
-    // lookups from an index; here a property-equality MATCH prunes the
-    // file LIST from the manifest stats before any scan is built). Capped
-    // at 12 columns per label; strings over 64 chars carry no claim (a
-    // truncated max would be an unsound upper bound).
-    def statsOf(outDir: String, rels: List[String]): List[FileEnt] =
-      statsOfRows(spark.read.parquet(outDir),
-        element_at(split(col("_metadata.file_path"), "/"), -1), rels)
-    // the stats of `rels` from `df`'s rows grouped by `file`, a basename:
-    // a file written from driver rows takes them from those rows, with no
-    // re-read of the file
-    def statsOfRows(df: DataFrame, file: Column, rels: List[String]): List[FileEnt] =
-      if (rels.isEmpty) Nil
-      else {
-        val eligible = df.schema.fields.filter(f =>
-          !Set("id", "start_id", "end_id")(f.name) && (f.dataType match {
-            case LongType | IntegerType | DoubleType | StringType => true
-            // r15 (VERDICT r14 #4): temporal-typed properties — the
-            // reference's densest regress surface (temporal.sql) and the
-            // canonical 100 TB prune (date-range scans)
-            case TimestampType | TimestampNTZType | DateType => true
-            case _ => false
-          })).take(12)
-        val aggs = Seq(min(col("id")).as("mn"), max(col("id")).as("mx")) ++
-          eligible.zipWithIndex.flatMap { case (f, i) =>
-            Seq(min(col(f.name)).as(s"pmn$i"), max(col(f.name)).as(s"pmx$i")) }
-        val rows = df.groupBy(file.as("__fname")).agg(aggs.head, aggs.tail: _*)
-          .collect()
-        // temporal edges persist as plain longs (micros since epoch /
-        // epoch days) — exact, total-ordered, and collector-representation
-        // independent (java8API on/off changes the collected class)
-        // Option: an unexpected collector representation (future Spark
-        // change, another java8API/NTZ combination) drops the per-column
-        // CLAIM — readers keep the file — instead of a MatchError failing
-        // the whole commit (ADVICE r15).
-        def usOf(v: Any): Option[Long] = v match {
-          case t: java.sql.Timestamp =>
-            Some(t.getTime * 1000L + (t.getNanos / 1000L) % 1000L)
-          case i: java.time.Instant =>
-            Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-          case l: java.time.LocalDateTime =>
-            Some(l.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + l.getNano / 1000L)
-          case _ => None
-        }
-        def dayOf(v: Any): Option[Long] = v match {
-          case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
-          case d: java.time.LocalDate => Some(d.toEpochDay)
-          case _ => None
-        }
-        val m = rows.map { r =>
-          val ptail = eligible.zipWithIndex.flatMap { case (f, i) =>
-            val mn = r.get(r.fieldIndex(s"pmn$i")); val mx = r.get(r.fieldIndex(s"pmx$i"))
-            val ty = f.dataType match {
-              case LongType | IntegerType => "l"
-              case DoubleType => "d"
-              case StringType => "s"
-              case TimestampType | TimestampNTZType => "t"
-              case DateType => "D"
-            }
-            if (mn == null) Seq(enc(f.name), "n", "_", "_") // all-null column
-            else if (ty == "s" &&
-              (mn.toString.length > 64 || mx.toString.length > 64)) Nil
-            else if (ty == "t")
-              (usOf(mn), usOf(mx)) match {
-                case (Some(a), Some(b)) =>
-                  Seq(enc(f.name), ty, enc(a.toString), enc(b.toString))
-                case _ => Nil
-              }
-            else if (ty == "D")
-              (dayOf(mn), dayOf(mx)) match {
-                case (Some(a), Some(b)) =>
-                  Seq(enc(f.name), ty, enc(a.toString), enc(b.toString))
-                case _ => Nil
-              }
-            else Seq(enc(f.name), ty, enc(mn.toString), enc(mx.toString))
-          }.toList
-          r.getString(0) -> ((r.getLong(1), r.getLong(2)), ptail)
-        }.toMap
-        rels.map { r =>
-          val s = m.get(r.substring(r.lastIndexOf('/') + 1))
-          FileEnt(r, s.map(_._1), s.map(_._2).getOrElse(Nil))
-        }
-      }
-    // shared guards + previous on-disk form for the two incremental paths
-    // (file manifest, or a dir pointer exploded to file entries). Dir
-    // pointers predate per-file stats; backfill them HERE (one
-    // footer-bounded min/max job per label, once — every later catalog
-    // carries the stats), because the dv path's pure-insert/tombstone
-    // decision is stats-driven and a stats-less file would force a
-    // tombstone for every appended id.
-    def idLocalPrevEnts(kind: String, l: String, df: DataFrame): Option[List[FileEnt]] = {
-      val encl = enc(l)
-      if (txFullRewrite.contains(s"$kind:$l")) return None
-      if (txTouched.isEmpty) return None
-      if (df.schema.fields.exists(_.dataType == NullType)) return None
-      if (prevNull.contains((kind, encl))) return None // legacy nulltype files
-      val ents = prevFileLines.get((kind, encl)).map(entsOfLines).getOrElse {
-        prevLoc.get((kind, encl)).map { ver =>
-          val d = s"$root/v$ver/$kind/$encl"
-          statsOf(d, listParquet(d)
-            .map(p => s"v$ver/$kind/$encl/${Paths.get(p).getFileName}"))
-        }.getOrElse(Nil)
-      }
-      if (ents.isEmpty) None else Some(ents) // brand-new label: full write IS minimal
-    }
-    def heldOf(ids: Array[Long], l: String): Array[Long] =
-      ids.filter(i => (i >>> 48) == labelIds(l).toLong)
-    def touchedOf(l: String): DataFrame = heldTouched match {
-      case Some(ids) => idFrame(heldOf(ids, l))
-      case None => txTouchedAll
-        .filter(PropertyGraph.labelOfCol(col("id")) === lit(labelIds(l)))
-        .select(col("id")).distinct()
-    }
-    // the label's touched ids, sorted; past `max` only the excess counts
-    def touchedIdsOf(l: String, max: Int): Array[Long] = heldTouched match {
-      case Some(ids) => heldOf(ids, l)
-      case None => touchedOf(l).limit(max + 1).collect().map(_.getLong(0)).sorted
-    }
-    // Merge-on-read point writes (Delta deletion-vector analog): instead
-    // of rewriting the files holding the touched ids, write ONLY the new
-    // row-versions (one small file) plus a tombstone id list, and carry
-    // every previous file verbatim. Bytes per point SET/DELETE ≈ the row
-    // + 8 B/id — independent of file size, where CoW pays a whole-file
-    // rewrite (and at 100 TB a file is 128 MB-1 GB). Bounds: statements
-    // touching > 8192 ids of a label, or a label whose accumulated
-    // tombstones would exceed 65536, fall through to the CoW rewrite
-    // (r15: raised 8×/16× from 1024/4096 — dv membership at read is now a
-    // binary search, O(log t)/row, so read cost no longer scales with the
-    // tombstone budget; the remaining cost of a big budget is the ~24 B/
-    // position dvp text line and the write-side isin, both trivial)
-    // (which physically merges by construction — rewritten files are
-    // newer than every dv line, so carried dvs never suppress them).
-    def tryDv(kind: String, l: String, df: DataFrame): Boolean = {
-      val encl = enc(l)
-      val prevEnts = idLocalPrevEnts(kind, l, df).getOrElse(return false)
-      val prevDvs = dvEntsOf(kind, encl)
-      val prevDvps = dvpEntsOf(kind, encl)
-      // compaction bound counts dv lines too — open-time cost is files+dvs
-      if (prevEnts.size + prevDvs.size + prevDvps.size >= 64) return false
-      val maxIds = MutableGraph.DvMaxStatementIds
-      val touchedIds = touchedIdsOf(l, maxIds)
-      if (touchedIds.isEmpty || touchedIds.length > maxIds) return false
-      // a tombstone is only needed for ids an OLDER file may hold, proven
-      // by per-file [min,max] id stats alone (backfilled at dir-pointer
-      // explosion above, so manifest files always carry them). NOT by the
-      // catalog's sequence position: streaming-ingested labels pack ids
-      // from user keys without advancing the sequence, so a sequence
-      // proof would skip their tombstones and duplicate updated rows
-      // (WriteSpec "key-packed" regression).
-      def mayHoldId(t: Long): Boolean = prevEnts.exists(_.stats match {
-        case Some((mn, mx)) => mn <= t && t <= mx
-        case None => true
-      })
-      val tombstones = touchedIds.filter(mayHoldId)
-      if (prevDvs.map(_.count).sum + prevDvps.map(_.count).sum +
-        tombstones.length > MutableGraph.DvMaxTombstones) return false
-      // the new row-versions (at most maxIds rows), collected once and
-      // written as one file from those driver rows; its stats come from
-      // one aggregate over the same rows, with no re-read of the file
-      val rows = df.filter(col("id").isin(touchedIds.map(Long.box): _*)).collect()
-      val newEnts: List[FileEnt] =
-        if (rows.isEmpty) Nil
-        else {
-          val held = Local.relation(spark, rows.toSeq, df.schema)
-          val outDir = s"$dir/$kind/$encl"
-          held.coalesce(1).write.parquet(outDir)
-          val names = listParquet(outDir).map(p => Paths.get(p).getFileName.toString)
-          statsOfRows(held, lit(names.head), names.map(n => s"v$next/$kind/$encl/$n"))
-        }
-      if (newEnts.isEmpty && tombstones.isEmpty) return false
-      newEnts.foreach(emitEnt(kind, encl, _))
-      prevEnts.foreach(emitEnt(kind, encl, _))
-      prevDvs.foreach(emitDv(kind, encl, _))
-      prevDvps.foreach(emitDvp(kind, encl, _))
-      if (tombstones.nonEmpty) {
-        // r14 positional deletion vectors (VERDICT r13 #2, the Delta
-        // shape): record the (file basename, row position) of every copy
-        // of a tombstoned id with ONE column-pruned scan of just the
-        // files whose id range may hold one — files a CoW rewrite would
-        // have read whole AND rewritten. The id filter pushes down to
-        // parquet here on the write side; the stored entries are
-        // positions, so every future READ of this label filters on
-        // _metadata.row_index and never mentions `id` — row-group
-        // pruning on id stays live for dv-bearing labels.
-        val affected = prevEnts.filter(_.stats match {
-          case Some((mn, mx)) =>
-            val i = java.util.Arrays.binarySearch(tombstones, mn)
-            val from = if (i >= 0) i else -i - 1
-            from < tombstones.length && tombstones(from) <= mx
-          case None => true
-        })
-        // existing dvs applied first: only LIVE copies get new entries, so
-        // repeated point writes to one row add one entry each, not a
-        // re-recording of every already-suppressed copy
-        val posRows: Array[(String, Long)] =
-          if (affected.isEmpty) Array.empty
-          else readIdsWithDv(affected, prevDvs, prevDvps)
-            .filter(col("id").isin(tombstones.map(Long.box): _*))
-            .select(
-              element_at(split(col("_metadata.file_path"), "/"), -1).as("__b"),
-              col("_metadata.row_index").as("__p"))
-            .collect().map(r => (r.getString(0), r.getLong(1)))
-        if (posRows.nonEmpty) {
-          val dvDir = Paths.get(dir, "dv")
-          Files.createDirectories(dvDir)
-          val rel = s"v$next/dv/${kind}__$encl.txt"
-          Files.write(dvDir.resolve(s"${kind}__$encl.txt"),
-            posRows.map { case (b, p) => s"$b $p" }.sorted
-              .mkString("\n").getBytes(UTF_8))
-          emitDvp(kind, encl, DvpEnt(rel, next, posRows.length.toLong))
-        }
-      }
-      true
-    }
-    def tryCow(kind: String, l: String, df: DataFrame): Boolean = {
-      val encl = enc(l)
-      val prevEnts = idLocalPrevEnts(kind, l, df).getOrElse(return false)
-      val prevDvs = dvEntsOf(kind, encl)
-      val prevDvps = dvpEntsOf(kind, encl)
-      // compaction bound: once the manifest chain reaches 64 files the
-      // next change rewrites the label whole — keeps open-time footer
-      // reads and gc's live-version set bounded (Delta's OPTIMIZE analog,
-      // triggered by write rather than by a maintenance job)
-      if (prevEnts.size + prevDvs.size + prevDvps.size >= 64) return false
-      val touched = touchedOf(l)
-      // reference-changed but nothing of THIS label touched (e.g. a DELETE
-      // that matched other labels): carry the manifest verbatim.
-      // Bound shared with the dv path (VERDICT r15 #7): one knob, no
-      // silent divergence if the merge-on-read bound is retuned.
-      val maxIds = MutableGraph.DvMaxStatementIds
-      val touchedIds = touchedIdsOf(l, maxIds) // for stats-based pruning
-      if (touchedIds.isEmpty) {
-        prevEnts.foreach(emitEnt(kind, encl, _))
-        prevDvs.foreach(emitDv(kind, encl, _))
-        prevDvps.foreach(emitDvp(kind, encl, _))
-        return true
-      }
-      // data skipping: a file whose [minId, maxId] cannot hold a touched
-      // id is carried without being read. Files without stats (legacy dir
-      // pointers) and oversized touch sets stay candidates.
-      def mayHold(e: FileEnt): Boolean = e.stats match {
-        case Some((mn, mx)) if touchedIds.length <= maxIds =>
-          val i = java.util.Arrays.binarySearch(touchedIds, mn)
-          val from = if (i >= 0) i else -i - 1
-          from < touchedIds.length && touchedIds(from) <= mx
-        case _ => true
-      }
-      val (candEnts, skippedEnts) = prevEnts.partition(mayHold)
-      // map candidate rows to their files; match by part-file basename
-      // (unique per Spark write job) to dodge URI-escaping of label dirs
-      def base(rel: String) = rel.substring(rel.lastIndexOf('/') + 1)
-      // dv-aware (r12 deletion vectors): a touched id whose only copy in a
-      // candidate file is dv-suppressed must NOT mark it touched — the
-      // rewrite would resurrect the id's live copy into a newer file and
-      // duplicate it against the carried file holding the real one
-      val touchedNames: Set[String] =
-        if (candEnts.isEmpty) Set.empty
-        else readIdsWithDv(candEnts, prevDvs, prevDvps)
-          .select(col("id"), element_at(split(col("_metadata.file_path"), "/"), -1)
-            .as("__fname"))
-          .join(touched, Seq("id"), "left_semi")
-          .select(col("__fname")).distinct().collect().map(_.getString(0)).toSet
-      val (touchedEnts, carriedCand) = candEnts.partition(e => touchedNames(base(e.rel)))
-      val carriedEnts = skippedEnts ++ carriedCand
-      // rewriting most of the label through the CoW path would write the
-      // same bytes with extra joins — let the plain full write do it
-      if (touchedEnts.size * 2 > prevEnts.size && prevEnts.size > 1) return false
-      val idsToRewrite =
-        if (touchedEnts.isEmpty) touched // pure insert
-        else readIdsWithDv(touchedEnts, prevDvs, prevDvps) // dv-suppressed ids stay out
-          .select(col("id")).union(touched).distinct()
-      val rows = df.join(idsToRewrite, Seq("id"), "left_semi")
-      if (carriedEnts.isEmpty && rows.isEmpty)
-        return false // label emptied: full write keeps a schema-bearing dir
-      val outDir = s"$dir/$kind/$encl"
-      rows.coalesce(math.max(1, touchedEnts.size)).write.parquet(outDir)
-      val newRels = listParquet(outDir)
-        .map(p => s"v$next/$kind/$encl/${Paths.get(p).getFileName}")
-      (carriedEnts ++ statsOf(outDir, newRels)).foreach(emitEnt(kind, encl, _))
-      // carried dvs still suppress old copies in carried files; rewritten
-      // files are untouched: legacy dvs by version (next > every dv),
-      // positional dvs by construction (fresh part-UUID basenames can
-      // never match a carried entry — stale entries are no-ops)
-      prevDvs.foreach(emitDv(kind, encl, _))
-      prevDvps.foreach(emitDvp(kind, encl, _))
-      true
-    }
-    def writeTables(kind: String, m: Map[String, DataFrame],
-        prev: Map[String, DataFrame]): Unit =
-      m.foreach { case (l, df) =>
-        val unchanged = prev.get(l).exists(_ eq df)
-        val carried = if (unchanged) prevLoc.get((kind, enc(l))) else None
-        carried match {
-          case Some(ver) => // untouched since the snapshot: point, don't copy
-            referenced += ver
-            sb ++= s"${kind}label ${enc(l)} $ver\n"
-            prevNull.getOrElse((kind, enc(l)), Nil).foreach(x => sb ++= x + "\n")
-          case None if unchanged && prevFileLines.contains((kind, enc(l))) =>
-            // untouched file-manifest label: carry file + dv lines verbatim
-            prevFileLines((kind, enc(l))).foreach { line =>
-              referenced += versionOfRel(GraphStore.dec(line.split(" ")(3)))
-              sb ++= line + "\n"
-            }
-            dvEntsOf(kind, enc(l)).foreach(emitDv(kind, enc(l), _))
-            dvpEntsOf(kind, enc(l)).foreach(emitDvp(kind, enc(l), _))
-          case None if tryDv(kind, l, df) => () // dv + new-rows file emitted
-          case None if tryCow(kind, l, df) => () // manifest emitted by tryCow
-          case None =>
-            sb ++= s"${kind}label ${enc(l)} $next\n"
-            // parquet cannot store NullType — persist as an all-null string
-            // column and record it for lossless restore on load
-            val clean = df.schema.fields.foldLeft(df) {
-              case (acc, f) if f.dataType == NullType =>
-                sb ++= s"nulltype $kind ${enc(l)} ${enc(f.name)}\n"
-                acc.withColumn(f.name, col(f.name).cast(StringType))
-              case (acc, _) => acc
-            }
-            // file-count hygiene (r13): an in-memory label inflated by
-            // append history (every union adds the batch's partitions)
-            // must not explode the next dir-pointer backfill — a 50k-row
-            // label was writing 90+ tiny files after ~16 CDC batches,
-            // instantly re-blowing the 64-line manifest bound so EVERY
-            // batch full-rewrote (StoreBench: 400 KB/batch steady state).
-            // Cap a full write at 16 files: coalesce is narrow (no
-            // shuffle), leaves ~23 dv batches of manifest headroom, and
-            // is the local-scale stand-in for Delta OPTIMIZE's
-            // byte-targeted file sizing (at cluster scale the cap would
-            // be bytes/128 MB, not a constant).
-            clean.coalesce(16).write.mode("overwrite").parquet(s"$dir/$kind/${enc(l)}")
-        }
-      }
-    writeTables("v", vertexLabels, prevV)
-    writeTables("e", edgeLabels, prevE)
-    // IVFFlat-analog indexes persist like labels (r12): centroids written
-    // once into the building version's `ivf/` dir, carried by catalog
-    // pointer afterwards — `ivf <label> <prop> <metric> <dims> <lists> <ver>`
-    val prevIvfVers: Set[Long] = prevLines.collect {
-      case s if s.startsWith("ivf ") => s.split(" ")(6).toLong }.toSet
-    val ivfPersistedNow = scala.collection.mutable.Map.empty[(String, String), Long]
-    ivfIndexes.foreach { case (key, ix) =>
-      val head = s"ivf ${enc(ix.label)} ${enc(ix.prop)} ${ix.metric} ${ix.dims} ${ix.lists}"
-      ivfPersistedAt.get(key) match {
-        case Some(ver) =>
-          referenced += ver
-          sb ++= s"$head $ver\n"
-        case None =>
-          val ivfDir = Paths.get(dir, "ivf")
-          Files.createDirectories(ivfDir)
-          // one line per centroid; Double.toString round-trips exactly
-          val txt = ix.centroids
-            .map(_.map(java.lang.Double.toString).mkString(" ")).mkString("\n")
-          Files.write(ivfDir.resolve(s"${enc(ix.label)}__${enc(ix.prop)}.txt"),
-            txt.getBytes(UTF_8))
-          sb ++= s"$head $next\n"
-          ivfPersistedNow(key) = next
-      }
-    }
-    // PQ indexes persist identically (r12): codebooks written once into
-    // the building version's `pq/` dir, carried by pointer afterwards —
-    // `pq <label> <prop> <metric> <dims> <m> <k> <ver>`
-    val prevPqVers: Set[Long] = prevLines.collect {
-      case s if s.startsWith("pq ") => s.split(" ")(7).toLong }.toSet
-    val pqPersistedNow = scala.collection.mutable.Map.empty[(String, String), Long]
-    pqIndexes.foreach { case (key, ix) =>
-      val head = s"pq ${enc(ix.label)} ${enc(ix.prop)} ${ix.metric} " +
-        s"${ix.dims} ${ix.m} ${ix.k}"
-      pqPersistedAt.get(key) match {
-        case Some(ver) =>
-          referenced += ver
-          sb ++= s"$head $ver\n"
-        case None =>
-          val pqDir = Paths.get(dir, "pq")
-          Files.createDirectories(pqDir)
-          // m·k lines in (sub, code) order; Double.toString round-trips
-          val txt = ix.codebooks.flatMap(_.map(
-            _.map(java.lang.Double.toString).mkString(" "))).mkString("\n")
-          Files.write(pqDir.resolve(s"${enc(ix.label)}__${enc(ix.prop)}.txt"),
-            txt.getBytes(UTF_8))
-          sb ++= s"$head $next\n"
-          pqPersistedNow(key) = next
-      }
-    }
-    // r13 (VERDICT r12 #1): persist the index ENTRIES, not just the
-    // trained structure. The reference stores the list pages themselves
-    // (ivfbuild.c writes the tuples into lists; ivfscan.c probes read
-    // stored lists, never re-deriving) — the analog is the (id, cluster)
-    // assignment relation / (id, sub, code) PQ code relation as parquet,
-    // one `ivfa`/`pqc <encLabel> <encProp> <encRel>` catalog line per
-    // entry FILE. Maintenance is Delta-shaped: an id-local write appends
-    // a DELTA file holding only the touched rows' new entries (write
-    // volume ∝ batch, the ivfinsert analog — a full-relation rewrite per
-    // point write would be ∝ corpus at 100 TB), carried files are
-    // re-emitted verbatim, and the chain compacts to one file at 16
-    // lines (full recompute, amortized). Readers:
-    //   - IVF probes read the UNION raw — stale rows are recall-safe
-    //     supersets (a moved id's NEW entry is present; stale/deleted
-    //     entries add candidates the exact rerank's label join drops).
-    //   - PQ codes dedup last-wins per (id, sub) by file version — a
-    //     stale code row would DOUBLE-COUNT in the ADC distance sum.
-    // Unbounded or full-rewrite label changes drop the lines instead
-    // (next probe lazily re-derives, the following publish re-persists).
-    def entryRels(tag: String, p: Array[String]): List[String] =
-      // back-compat: a bare version number is the r13-early single-dir form
-      if (p(3).forall(_.isDigit)) List(s"v${p(3)}/$tag/${p(1)}__${p(2)}")
-      else List(GraphStore.dec(p(3)))
-    val prevIvfaRels: Map[(String, String), List[String]] =
-      prevLines.filter(_.startsWith("ivfa ")).map(_.split(" "))
-        .groupBy(p => (p(1), p(2)))
-        .map { case (k, ps) => k -> ps.flatMap(entryRels("ivfa", _)) }
-    val prevPqcRels: Map[(String, String), List[String]] =
-      prevLines.filter(_.startsWith("pqc ")).map(_.split(" "))
-        .groupBy(p => (p(1), p(2)))
-        .map { case (k, ps) => k -> ps.flatMap(entryRels("pqc", _)) }
-    val ivfaNow = scala.collection.mutable.Map.empty[(String, String),
-      (List[String], DataFrame)]
-    val pqcNow = scala.collection.mutable.Map.empty[(String, String),
-      (List[String], DataFrame)]
-    // touched ids of one label, bounded: None = unusable for incremental
-    // refresh (full rewrite marked, nothing recorded, or > 4096 ids)
-    def boundedTouched(label: String): Option[DataFrame] = {
-      if (txFullRewrite.contains(s"v:$label")) return None
-      if (txTouched.isEmpty || !labelIds.contains(label)) return None
-      val ids = touchedIdsOf(label, 4096)
-      if (ids.length > 4096) None else Some(idFrame(ids))
-    }
-    def persistEntries(tag: String, key: (String, String),
-        prevRels: Map[(String, String), List[String]],
-        now: scala.collection.mutable.Map[(String, String), (List[String], DataFrame)],
-        persisted: Option[(List[String], DataFrame)],
-        cachedFor: DataFrame => Option[DataFrame],
-        reassign: DataFrame => DataFrame,
-        dedupKeys: Seq[String], valCol: String, sortCols: Seq[String]): Unit = {
-      val (label, propE) = key
-      val encl = enc(label); val encp = enc(propE)
-      if (!vertexLabels.contains(label)) return
-      val tbl = vertexLabels(label)
-      def emit(rels: List[String]): Unit = {
-        rels.foreach { r =>
-          referenced += versionOfRel(r)
-          sb ++= s"$tag $encl $encp ${enc(r)}\n"
-        }
-        now(key) = (rels, tbl)
-      }
-      def write(a: DataFrame, carried: List[String]): Unit = {
-        val rel = s"v$next/$tag/${encl}__${encp}"
-        // range-partition + sort on the probe key so row-group stats act
-        // as the list index: a cluster-pruned scan reads only probed lists
-        a.repartitionByRange(sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-          .write.parquet(s"$root/$rel")
-        emit(carried :+ rel)
-      }
-      persisted match {
-        case Some((rels, src)) if src eq tbl => emit(rels) // unchanged: pointers
-        case _ => cachedFor(tbl) match {
-          case Some(a) => write(a, Nil) // fresh in-memory entries, one file
-          case None => (prevRels.get((encl, encp)), boundedTouched(label)) match {
-            case (Some(rels), Some(touched)) =>
-              if (touched.isEmpty) emit(rels) // identity churn only
-              else if (rels.size >= 16) {
-                // r14 (VERDICT r13 #4): compact by merging the chain FILES
-                // — base + deltas + this statement's delta, last-wins per
-                // entry key — cost ∝ chain bytes, NEVER a label re-scan or
-                // re-encode (the prior full recompute kept amortized write
-                // volume per point write ∝ corpus/16). Entries of deleted
-                // ids can survive a merge (deltas only add): probe reads
-                // drop them — IVF via the exact rerank's label join, PQ
-                // via the live-id semi-join in pqCodes — and any full
-                // label rewrite drops the chain wholesale.
-                entryChainMerges.incrementAndGet()
-                val chain = rels.zipWithIndex.map { case (r, i) =>
-                  spark.read.parquet(s"$root/$r").withColumn("__seq", lit(i)) }
-                val fresh = reassign(touched).withColumn("__seq", lit(rels.size))
-                val merged = (chain :+ fresh).reduce(_ unionByName _)
-                  .groupBy(dedupKeys.map(col): _*)
-                  .agg(max_by(col(valCol), col("__seq")).as(valCol))
-                write(merged, Nil)
-              } else write(reassign(touched), rels) // delta: ∝ touched rows
-            case _ => () // drop: lazily re-derived, re-persisted next publish
-          }
-        }
-      }
-    }
-    ivfIndexes.foreach { case (key, ix) =>
-      def assignOf(rows: DataFrame) = graft.functions.Ivf.assignments(
-        rows, "id", ix.prop, ix.centroids)
-      persistEntries("ivfa", key, prevIvfaRels, ivfaNow,
-        ivfAssignPersistedAt.get(key),
-        tbl => ivfAssignCache.get(key).collect {
-          case (src, a) if src eq tbl => a.select(col("id"), col("cluster")) },
-        touched => assignOf(ivfEmb(vertexLabels(key._1), ix.prop, ix.dims)
-          .join(touched, Seq("id"), "left_semi")),
-        Seq("id"), "cluster", Seq("cluster", "id"))
-    }
-    pqIndexes.foreach { case (key, ix) =>
-      def codesOf(rows: DataFrame) = graft.functions.Ivf.pqEncode(
-        rows, "id", ix.prop, ix.codebooks)
-      persistEntries("pqc", key, prevPqcRels, pqcNow,
-        pqCodesPersistedAt.get(key),
-        tbl => pqCodesCache.get(key).collect {
-          case (src, c) if src eq tbl => c.select(col("id"), col("sub"), col("code")) },
-        touched => codesOf(ivfEmb(vertexLabels(key._1), ix.prop, ix.dims)
-          .join(touched, Seq("id"), "left_semi")),
-        Seq("id", "sub"), "code", Seq("id", "sub"))
-    }
-    Files.write(Paths.get(dir, "catalog.txt"), sb.toString.getBytes(UTF_8))
-    GraphStore.swapLatest(root, next)
-    storeVersion = next
-    ivfPersistedAt ++= ivfPersistedNow // only after a successful swap
-    pqPersistedAt ++= pqPersistedNow
-    ivfAssignPersistedAt = ivfaNow.toMap
-    pqCodesPersistedAt = pqcNow.toMap
+    val (now, chainMerges) = Commit.publish(spark, Commit.Snapshot(root, held,
+      GraphStore.Catalog(seqLast, labelIds.toList, nextEntry.toList,
+        uniqueConstraints.toList, wholePropsUnique.toList, streamBatches.toList,
+        Nil, Nil, Nil),
+      vertexLabels, edgeLabels, prevV, prevE, txTouched.toList, txFullRewrite.toSet,
+      ivfIndexes.values.toList, pqIndexes.values.toList, ivfAssignCache, pqCodesCache))
+    held = now
+    entryChainMerges.addAndGet(chainMerges)
     txResetTracking() // touched-id frames are consumed by this publish
-    // r13: refresh the manifest-stats map to the catalog just written, so
-    // property-pruned scans stay valid across writes (bounded driver
-    // reads: ≤64 lines/label, ≤4096 dv ids)
-    val newLines = sb.toString.split("\n").toList
-    val newDvs: Map[(String, String), List[(Long, Array[Long])]] =
-      newLines.filter(_.startsWith("dv ")).map(_.split(" "))
-        .groupBy(p => (p(1), p(2))).map { case (k, ps) =>
-          k -> ps.map { p =>
-            val rel = GraphStore.dec(p(3))
-            (versionOfRel(rel), Files.readAllLines(Paths.get(s"$root/$rel"))
-              .toArray(Array.empty[String]).map(_.toLong))
-          }.toList
-        }
-    val newDvps: Map[(String, String), Map[String, Array[Long]]] =
-      newLines.filter(_.startsWith("dvp ")).map(_.split(" "))
-        .groupBy(p => (p(1), p(2))).map { case (k, ps) =>
-          k -> ps.foldLeft(Map.empty[String, Array[Long]])((acc, p) =>
-            MutableGraph.mergePos(acc,
-              MutableGraph.readDvpFile(s"$root/${GraphStore.dec(p(3))}")))
-        }
-    manifestInfo = newLines.filter(_.startsWith("file "))
-      .map(GraphStore.parseFileLine).groupBy(f => (f.kind, f.encLabel))
-      .flatMap { case ((kind, encl), fs) =>
-        val l = GraphStore.dec(encl)
-        val tblOpt = if (kind == "v") vertexLabels.get(l) else edgeLabels.get(l)
-        tblOpt.map(tbl =>
-          (kind, l) -> ((tbl, fs, MutableGraph.DvSets(
-            newDvs.getOrElse((kind, encl), Nil),
-            newDvps.getOrElse((kind, encl), Map.empty)))))
-      }
-    val prevFileVers = (prevFileLines.values.flatten ++
-      prevDvLines.values.flatten ++ prevDvpLines.values.flatten)
-      .map(line => versionOfRel(GraphStore.dec(line.split(" ")(3)))).toSet
-    // retain: the two newest catalogs plus every dir either one references
-    GraphStore.gc(root, keep = referenced.toSet ++ prevLoc.values.toSet ++
-      prevIvfVers ++ prevPqVers ++
-      (prevIvfaRels.values.flatten ++ prevPqcRels.values.flatten)
-        .map(versionOfRel).toSet ++
-      prevFileVers ++ Set(cur, next))
-    }
   }
 
-  /** Explicit compaction (the Delta/Iceberg OPTIMIZE analog, r12): rewrite
-    * every label currently in file-manifest form back to a single dir
-    * pointer at a new version — dropping its deletion vectors and manifest
-    * chain — and carry dir-pointer labels untouched. The follow-up gc then
-    * shrinks the store to the two newest catalogs' references. Returns
-    * false (and publishes nothing) when no label is manifest-form: an
-    * idempotent maintenance call, safe on a schedule. Incremental writes
-    * self-compact at the 64-line bound; this is the operator-initiated
-    * path for reclaiming read debt earlier (e.g. after a dv-heavy burst).
+  /** Explicit compaction (the Delta/Iceberg OPTIMIZE analog): rewrite every
+    * label in file-manifest form whole at a new version, dropping its
+    * deletion vectors and manifest chain, and carry the rest. Returns false
+    * (and publishes nothing) when no label is in manifest form, so it is
+    * safe on a schedule. Incremental writes self-compact at the 64-line
+    * bound; this reclaims read debt earlier (after a dv-heavy burst).
     */
   private[cypher] def compactStore(): Boolean = storeRoot.exists { root =>
-    val cur = GraphStore.latestVersion(root).getOrElse(0L)
-    val lines: List[String] =
-      if (cur <= 0) Nil
-      else scala.util.Try(scala.io.Source.fromFile(
-        s"$root/v$cur/catalog.txt").getLines().toList).getOrElse(Nil)
-    val manifested: Set[(String, String)] = lines.collect {
-      case s if s.startsWith("file ") || s.startsWith("dv ") ||
-          s.startsWith("dvp ") =>
-        val p = s.split(" "); (p(1), GraphStore.dec(p(2)))
-    }.toSet
-    if (manifested.isEmpty) false
-    else {
-      manifested.foreach { case (kind, l) => noteFullRewrite(kind, l) }
-      publish(
-        vertexLabels.filter { case (l, _) => !manifested(("v", l)) },
+    val manifested = Commit.manifestedLabels(root)
+    manifested.foreach { case (kind, l) => noteFullRewrite(kind, l) }
+    if (manifested.nonEmpty)
+      publish(vertexLabels.filter { case (l, _) => !manifested(("v", l)) },
         edgeLabels.filter { case (l, _) => !manifested(("e", l)) })
-      true
-    }
+    manifested.nonEmpty
   }
 
   /** Commit to the store iff this statement changed catalog or tables
@@ -3356,249 +2528,50 @@ final class MutableGraph(spark: SparkSession) {
 
 object MutableGraph {
 
-  /** A label's deletion-vector state (r14). `pos` is the positional form —
-    * file basename → sorted deleted row positions, the Delta/Iceberg DV
-    * shape, the only form new publishes write. `legacy` is the r12/r13
-    * id-list form (version-scoped tombstone ids), kept read-compatible so
-    * stores written by earlier rounds still open.
-    */
-  final case class DvSets(legacy: List[(Long, Array[Long])],
-      pos: Map[String, Array[Long]]) {
-    def isEmpty: Boolean = legacy.isEmpty && pos.isEmpty
-    def count: Long = legacy.map(_._2.length.toLong).sum +
-      pos.valuesIterator.map(_.length.toLong).sum
-  }
-  private[cypher] val NoDvs = DvSets(Nil, Map.empty)
-
   /** Most leaves a committed label's plan may hold (see `flattened`). */
   private[cypher] val MaxLeaves = 16
-
-  /** Parse a positional dv file: one `<fileBasename> <rowIndex>` per line. */
-  private[cypher] def readDvpFile(path: String): Map[String, Array[Long]] =
-    java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
-      .toArray(Array.empty[String]).filter(_.nonEmpty)
-      .map { s =>
-        val i = s.lastIndexOf(' ')
-        (s.substring(0, i), s.substring(i + 1).toLong)
-      }
-      .groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2).sorted }
-
-  private[cypher] def mergePos(a: Map[String, Array[Long]],
-      b: Map[String, Array[Long]]): Map[String, Array[Long]] =
-    b.foldLeft(a) { case (acc, (k, v)) =>
-      acc.updated(k, (acc.getOrElse(k, Array.empty[Long]) ++ v).distinct.sorted)
-    }
 
   /** Test hook: the most recent dv-filtered scan, pre-checkpoint — lets
     * WriteSpec assert the dv-read plan carries no `id IN (…)` chain. */
   @volatile private[graft] var lastDvRead: Option[DataFrame] = None
 
-  /** Merge-on-read fallback bounds (r15, raised 8×/16× from 1024/4096 —
-    * binary-search dv membership made read cost independent of the
-    * tombstone budget). Vars only so specs can exercise the fallback
-    * mechanisms at small scale; production code never writes them.
+  /** Merge-on-read bounds: a statement touching more ids of a label, or a
+    * label whose tombstones would exceed the budget, commits by CoW
+    * ([[Commit.idLocalPlan]]). Vars only so specs can exercise the
+    * fallbacks at small scale; production code never writes them.
     */
   @volatile private[graft] var DvMaxStatementIds: Int = 8192
   @volatile private[graft] var DvMaxTombstones: Int = 65536
 
-  /** Apply deletion vectors to a raw manifest-file scan (r14, VERDICT r13
-    * #2). The positional form compiles to ONE [[DvLive]] predicate over
-    * (`_metadata.file_path`, `_metadata.row_index`): `id` never appears in
-    * the predicate, so pushed id filters and parquet row-group pruning on
-    * id survive on dv-bearing label reads — the scan-path ceiling the
-    * per-dv `!(fileVer < V && id IN (…))` chain imposed. r15: membership
-    * is a binary search over per-file sorted position arrays held as a
-    * codegen reference object (was a per-row linear `array_contains` over
-    * a plan-literal map) — O(log t)/row, which is what lets the
-    * merge-on-read fallback bounds sit at 8192 ids / 65536 tombstones.
-    * Legacy id-form dvs keep the version-scoped chain (read-compat for
-    * r12/r13 catalogs only).
-    */
-  private[cypher] def applyDvs(raw: DataFrame, verByBase: => Map[String, Long],
-      dvs: DvSets): DataFrame = {
-    if (dvs.isEmpty) return raw
-    lazy val base = element_at(split(col("_metadata.file_path"), "/"), -1)
-    val withPos =
-      if (dvs.pos.isEmpty) raw
-      else {
-        import org.apache.spark.sql.graft.Bridge
-        raw.filter(Bridge.column(DvLive(
-          Bridge.expression(col("_metadata.file_path")),
-          Bridge.expression(col("_metadata.row_index")),
-          new DvIndex(dvs.pos))))
-      }
-    val out =
-      if (dvs.legacy.isEmpty) withPos
-      else {
-        val fileVer = element_at(typedLit(verByBase), base)
-        dvs.legacy.foldLeft(withPos) { case (acc, (ver, ids)) =>
-          acc.filter(!(fileVer < lit(ver) &&
-            col("id").isin(ids.map(Long.box): _*)))
-        }
-      }
-    lastDvRead = Some(out)
-    out
+  /** The type with every nullability mark relaxed — two types equal under
+    * this differ only in NOT NULL claims and union/compare losslessly. */
+  private[cypher] def relaxNullability(dt: DataType): DataType = dt match {
+    case StructType(fs) => StructType(fs.map(f =>
+      f.copy(dataType = relaxNullability(f.dataType), nullable = true)))
+    case ArrayType(et, _) => ArrayType(relaxNullability(et), containsNull = true)
+    case MapType(k, v, _) =>
+      MapType(relaxNullability(k), relaxNullability(v), valueContainsNull = true)
+    case other => other
   }
 
-  /** Reopen a durable graph from its store root (latest version). Tables
-    * localCheckpoint eagerly so subsequent version GC can never invalidate
-    * a lazily-held file reference.
-    */
+  /** Reopen a durable graph from its store root ([[Commit.open]]). */
   private[cypher] def load(spark: SparkSession, root: String,
       asOf: Option[Long] = None): MutableGraph = {
-    import GraphStore.dec
-    val latest = GraphStore.latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no durable graph at $root (_LATEST missing)"))
-    val v = asOf.getOrElse(latest)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$root/v$v/catalog.txt"))) {
-      import scala.jdk.CollectionConverters._
-      val have = java.nio.file.Files.list(java.nio.file.Paths.get(root))
-        .iterator().asScala.map(_.getFileName.toString)
-        .filter(_.matches("v\\d+")).map(_.drop(1).toLong).toList.sorted
-      throw new IllegalArgumentException(
-        s"version $v not available at $root (retention keeps: ${have.mkString(", ")})")
-    }
-    val dir = s"$root/v$v"
-    val lines = scala.io.Source.fromFile(s"$dir/catalog.txt").getLines().toList
+    val o = Commit.open(spark, root, asOf)
     val g = new MutableGraph(spark)
-    val nullCols = lines.collect { case s if s.startsWith("nulltype ") =>
-      val Array(_, kind, l, c) = s.split(" "); (kind, dec(l), dec(c)) }.toSet
-    // r13 manifest stats for file-form labels, collected by readTables and
-    // wired to the loaded label identities below
-    val pendingManifest = scala.collection.mutable.Map.empty[(String, String),
-      (List[GraphStore.FileStats], DvSets)]
-    def readTables(kind: String): Map[String, DataFrame] = {
-      val dirLabels = lines.collect { case s if s.startsWith(s"${kind}label ") =>
-        val parts = s.split(" ")
-        val l = dec(parts(1))
-        // incremental catalogs (r11) point unchanged labels at the version
-        // dir that last wrote them; legacy lines without the version column
-        // resolve to the catalog's own dir
-        val ver = if (parts.length > 2) parts(2).toLong else v
-        val raw = spark.read.parquet(s"$root/v$ver/$kind/${GraphStore.enc(l)}")
-        val restored = raw.schema.fields.foldLeft(raw) {
-          case (acc, f) if nullCols((kind, l, f.name)) =>
-            acc.withColumn(f.name, lit(null))
-          case (acc, _) => acc
-        }
-        l -> restored.localCheckpoint()
-      }.toMap
-      // r12 file-manifest labels: `file <kind> <encLabel> <encRelPath>` —
-      // the label is the union of the listed files across version dirs.
-      // mergeSchema: a CoW SET that added a property wrote the new column
-      // only into rewritten files; carried files read it as null, which IS
-      // the absent-property semantics (nulltype columns never take this
-      // path — guarded at publish)
-      // r12 deletion vectors (legacy id form, read-compat): `dv <kind>
-      // <encLabel> <encRel> <count>` — a tombstone id list written at
-      // version V suppresses those ids in files from versions < V only.
-      // r14 writes POSITIONAL dvs instead (`dvp` lines below): per-file
-      // (basename, rowIndex) bitmaps applied via _metadata.row_index, so
-      // id predicates and parquet row-group pruning on id stay intact on
-      // dv-bearing labels (VERDICT r13 #2).
-      val dvByLabel: Map[String, List[(Long, Array[Long])]] =
-        lines.filter(_.startsWith(s"dv $kind ")).map(_.split(" "))
-          .groupBy(p => p(2)).map { case (encl, ps) =>
-            encl -> ps.map { p =>
-              val rel = dec(p(3))
-              val ver = rel.takeWhile(_ != '/').drop(1).toLong
-              val ids = java.nio.file.Files.readAllLines(
-                java.nio.file.Paths.get(s"$root/$rel"))
-                .toArray(Array.empty[String]).map(_.toLong)
-              (ver, ids)
-            }.toList
-          }
-      val dvpByLabel: Map[String, Map[String, Array[Long]]] =
-        lines.filter(_.startsWith(s"dvp $kind ")).map(_.split(" "))
-          .groupBy(p => p(2)).map { case (encl, ps) =>
-            encl -> ps.foldLeft(Map.empty[String, Array[Long]])((acc, p) =>
-              mergePos(acc, readDvpFile(s"$root/${dec(p(3))}")))
-          }
-      val fileLabels = lines.filter(_.startsWith(s"file $kind "))
-        .map(_.split(" ")).groupBy(p => p(2)).map { case (encl, ps) =>
-          val dvs = DvSets(dvByLabel.getOrElse(encl, Nil),
-            dvpByLabel.getOrElse(encl, Map.empty))
-          pendingManifest((kind, dec(encl))) =
-            (ps.map(p => GraphStore.parseFileLine(p.mkString(" "))), dvs)
-          val rels = ps.map(p => dec(p(3)))
-          val paths = rels.map(r => s"$root/$r")
-          val raw = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-          // basename→version from the manifest rel paths (not a regexp
-          // over the absolute path, which breaks under a /vN/ store root)
-          def verByBase: Map[String, Long] = rels.map(r =>
-            r.substring(r.lastIndexOf('/') + 1) ->
-              r.takeWhile(_ != '/').drop(1).toLong).toMap
-          dec(encl) -> applyDvs(raw, verByBase, dvs).localCheckpoint()
-        }
-      dirLabels ++ fileLabels
-    }
-    // r13 stored index entries: wired to label identities AFTER readTables.
-    // One rel per catalog line (base + delta chain); bare-number lines are
-    // the r13-early single-dir form
-    val pendingIvfa = scala.collection.mutable.Map.empty[(String, String), List[String]]
-    val pendingPqc = scala.collection.mutable.Map.empty[(String, String), List[String]]
-    def entryRelOf(tag: String, p: Array[String]): String =
-      if (p(3).forall(_.isDigit)) s"v${p(3)}/$tag/${p(1)}__${p(2)}"
-      else dec(p(3))
-    lines.foreach { s =>
-      val parts = s.split(" ")
-      parts(0) match {
-        case "seq" => g.setvalLabelId(parts(1).toInt)
-        case "label" => g.labelIds(dec(parts(1))) = parts(2).toInt
-        case "next" => g.nextEntry(dec(parts(1))) = parts(2).toLong
-        case "unique" => g.uniqueConstraints += ((dec(parts(1)), dec(parts(2))))
-        case "wholeunique" => g.wholePropsUnique += dec(parts(1))
-        case "stream" => g.streamBatches(dec(parts(1))) = parts(2).toLong
-        case "ivf" => // r12: reload the persisted index — no k-means rerun
-          val (label, prop) = (dec(parts(1)), dec(parts(2)))
-          val ver = parts(6).toLong
-          val cents: Array[Array[Double]] = java.nio.file.Files.readAllLines(
-            java.nio.file.Paths.get(s"$root/v$ver/ivf/${parts(1)}__${parts(2)}.txt"))
-            .toArray(Array.empty[String])
-            .map(_.split(" ").map(java.lang.Double.parseDouble))
-          g.ivfIndexes((label, prop)) = g.IvfIdx(label, prop,
-            parts(3), parts(4).toInt, parts(5).toInt, cents)
-          g.ivfPersistedAt += ((label, prop) -> ver)
-        case "pq" => // r12: reload persisted PQ codebooks — no retrain
-          val (label, prop) = (dec(parts(1)), dec(parts(2)))
-          val (m, k, ver) = (parts(5).toInt, parts(6).toInt, parts(7).toLong)
-          val lines = java.nio.file.Files.readAllLines(
-            java.nio.file.Paths.get(s"$root/v$ver/pq/${parts(1)}__${parts(2)}.txt"))
-            .toArray(Array.empty[String])
-            .map(_.split(" ").map(java.lang.Double.parseDouble))
-          require(lines.length == m * k, s"pq codebook file: ${lines.length} != $m*$k")
-          val cbs = Array.tabulate(m)(s =>
-            Array.tabulate(k)(c => lines(s * k + c)))
-          g.pqIndexes((label, prop)) = g.PqIdx(label, prop,
-            parts(3), parts(4).toInt, m, k, cbs)
-          g.pqPersistedAt += ((label, prop) -> ver)
-        case "ivfa" => // r13: stored row→list assignments (index entries)
-          val k = (dec(parts(1)), dec(parts(2)))
-          pendingIvfa(k) = pendingIvfa.getOrElse(k, Nil) :+ entryRelOf("ivfa", parts)
-        case "pqc" => // r13: stored PQ code relation
-          val k = (dec(parts(1)), dec(parts(2)))
-          pendingPqc(k) = pendingPqc.getOrElse(k, Nil) :+ entryRelOf("pqc", parts)
-        case _ => ()
-      }
-    }
-    g.vertexLabels = readTables("v")
-    g.edgeLabels = readTables("e")
-    // the stored entries are valid exactly for the label snapshots this
-    // load produced — a probe reads them instead of re-deriving (r13)
-    pendingIvfa.foreach { case (key, rels) =>
-      g.vertexLabels.get(key._1).foreach(tbl =>
-        g.ivfAssignPersistedAt += (key -> (rels, tbl)))
-    }
-    pendingPqc.foreach { case (key, rels) =>
-      g.vertexLabels.get(key._1).foreach(tbl =>
-        g.pqCodesPersistedAt += (key -> (rels, tbl)))
-    }
-    g.manifestInfo = pendingManifest.toMap.flatMap { case ((kind, l), (fs, dvs)) =>
-      val tblOpt = if (kind == "v") g.vertexLabels.get(l) else g.edgeLabels.get(l)
-      tblOpt.map(tbl => (kind, l) -> ((tbl, fs, dvs)))
-    }
+    val c = o.catalog
+    g.setvalLabelId(c.seq)
+    g.labelIds ++= c.labels
+    g.nextEntry ++= c.next
+    g.uniqueConstraints ++= c.uniques
+    g.wholePropsUnique ++= c.wholeUniques
+    g.streamBatches ++= c.streams
+    g.vertexLabels = o.vertexLabels
+    g.edgeLabels = o.edgeLabels
+    o.ivf.foreach(ix => g.ivfIndexes((ix.label, ix.prop)) = ix)
+    o.pq.foreach(ix => g.pqIndexes((ix.label, ix.prop)) = ix)
+    g.held = o.held
     g.storeRoot = Some(root)
-    g.storeVersion = v
     g
   }
   /** Frozen catalog state for statement-level rollback. */

@@ -4,67 +4,78 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-/** Durable backing for MutableGraph label tables (round-10: VERDICT r8/r9
-  * "durable write path"). The reference persists every write through PG's
-  * heap + WAL (src/backend/executor/cypher_create.c:210-330); the Spark
-  * analog here is an immutable parquet VERSION directory per committed
-  * statement with an atomically-swapped `_LATEST` pointer:
+/** The durable store of a MutableGraph and the one codec of its
+  * `catalog.txt` (the Delta/Iceberg manifest shape; the reference persists
+  * every write through PG's heap + WAL, cypher_create.c:210-330). Every
+  * committed statement writes one immutable VERSION directory and then
+  * swaps the `_LATEST` pointer atomically:
   *
   *   root/
-  *     _LATEST          ← "3"   (pointer file, atomic rename swap)
-  *     _LOCK            ← commit lock (OS advisory lock, crash-released)
+  *     _LATEST          "3": the latest version (tmp-file write + rename)
+  *     _LOCK            commit lock (OS advisory lock, crash-released)
   *     v3/
-  *       catalog.txt    ← label ids, sequence position, constraints,
-  *                        per-label `vlabel <name> <ver>` location lines
-  *                        OR per-FILE `file <kind> <label> <relpath>`
-  *                        manifest lines (r12 copy-on-write)
-  *       v/<label>/     ← vertex label tables/files CHANGED by v3 (parquet)
-  *       e/<label>/     ← edge label tables changed by v3
-  *   Unchanged labels are pointers into the version dir that last wrote
-  *   them (r11 incremental publish) — per-commit write volume tracks the
-  *   statement's touched labels, not the graph. Within a CHANGED label,
-  *   id-local statements (CREATE/SET/REMOVE/DELETE) take one of two
-  *   incremental paths (r12):
-  *     1. deletion vectors (merge-on-read, the Delta DV shape): write
-  *        ONLY the new row-versions plus a tombstone id list — a
-  *        `dv <kind> <label> <relpath> <count>` line whose ids are
-  *        suppressed in files from versions OLDER than the dv's own, so
-  *        the same-version row a SET writes stays visible. A 1-row SET
-  *        costs the row + 8 B of tombstone; a pure DELETE writes no
-  *        parquet at all.
-  *     2. file-level CoW (when a dv would be unhealthy: >1024 touched
-  *        ids, tombstone budget past 4096): rewrite only the parquet
-  *        FILES containing the touched entity ids — dv-aware reads, so
-  *        suppressed copies are never resurrected — and carry the rest
-  *        by manifest line.
-  *   Changes that re-encode untouched rows (type-changing SET,
-  *   type-conflict unions, DETACH's endpoint-keyed edge cascade) fall
-  *   back to the full label rewrite, which also drops accumulated dvs
-  *   and manifest chains (compaction; forced once a label's
-  *   manifest+dv lines reach 64).
+  *       catalog.txt    the manifest below, one line per fact
+  *       v/<label>/     vertex label parquet written by v3
+  *       e/<label>/     edge label parquet written by v3
+  *       dv/<kind>__<label>.txt   positional deletion vector written by v3
+  *       ivf/, pq/      ANN centroids / PQ codebooks trained at v3 (text)
+  *       ivfa/, pqc/    ANN index entries written by v3 (parquet)
+  *
+  * Catalog lines, tokens separated by one space; label, property and
+  * stream names and rel paths (`v<N>/…`, relative to root) URL-encoded
+  * (`enc`); `<kind>` is `v` or `e`. Lines come in this order:
+  *
+  *   seq <n>                              label-id sequence position
+  *   label <label> <id>                   label ids
+  *   next <label> <n>                     per-label entry-id sequence
+  *   unique <label> <prop>                unique constraints
+  *   wholeunique <label>                  whole-properties uniqueness
+  *   stream <app> <batchId>               last committed micro-batch
+  *   then per label, vertex labels first, one of two table forms:
+  *     vlabel|elabel <label> <ver>        the whole table at v<ver>/<kind>/<label>
+  *     nulltype <kind> <label> <col>      ... whose <col> was NullType
+  *   or
+  *     file <kind> <label> <rel> [<minId> <maxId> [<col> <ty> <min> <max>]...]
+  *     dvp <kind> <label> <rel> <count>   <count> deleted (file, row) positions
+  *   ivf <label> <prop> <metric> <dims> <lists> <ver>
+  *   pq <label> <prop> <metric> <dims> <m> <k> <ver>
+  *   ivfa|pqc <label> <prop> <rel>        one entry file; base + delta chain
+  *
+  * `file` stats are per-file min/max for data skipping (the analog of the
+  * reference's GIN property index, gtype_gin.c:62-554): `ty` is l
+  * (integral), d (double), s (string, code-point order), t (timestamp,
+  * micros since epoch), D (date, epoch days), or n with `_ _` (the column
+  * is all-null in the file). A column without a token group carries no
+  * claim. A `dvp` file holds `<fileBasename> <rowIndex>` lines; fresh
+  * part-file basenames can never be hit by a carried entry.
+  *
+  * A label unchanged since the statement's snapshot is carried by its
+  * lines, so a commit writes only what the statement touched. A changed
+  * label takes one of (see `Commit.idLocalPlan`):
+  *   1. deletion vector (merge-on-read): write only the new row-versions
+  *      plus one `dvp` file, carry every previous file. Used while the
+  *      statement touches at most 8192 ids of the label and its
+  *      tombstones stay within 65536.
+  *   2. file-level copy-on-write: rewrite only the files holding touched
+  *      ids, carry the rest.
+  *   3. full rewrite to a `vlabel`/`elabel` dir: changes that re-encode
+  *      untouched rows (type-changing SET, type-conflict unions, DETACH's
+  *      endpoint-keyed cascade), a label whose file + dvp lines reach 64,
+  *      and COMPACT GRAPH. It drops the label's dvs and manifest chain.
+  *
+  * A catalog line of any other kind or shape fails the open loudly.
   *
   * Statement rollback needs no store cooperation: versions publish only
-  * AFTER a statement succeeds (GraphSession.runClauses commits post-tx),
-  * so a thrown statement leaves `_LATEST` untouched. The newest two versions
-  * plus every version dir either of their catalogs references are
-  * retained (incremental-publish storage bound).
+  * after a statement succeeds, so a thrown statement leaves `_LATEST`
+  * untouched. gc keeps the two newest versions plus every version dir
+  * either catalog references.
   *
-  * Multi-writer (round 11): commits run under an exclusive lock file with
-  * optimistic base-version validation — a session whose snapshot is stale
-  * (another writer published since it loaded) fails its statement with
-  * PG's serialization error (SQLSTATE 40001 message) instead of silently
-  * losing the other writer's update. This is Delta/Iceberg-style
-  * optimistic concurrency without conflict resolution: writers serialize,
-  * losers retry from a fresh open.
-  *
-  * Scale note: with r12's file-level CoW the per-commit write volume is
-  * bounded by the files the statement's touched ids live in, not the
-  * label — the add/remove-file manifest shape of Delta/Iceberg. What a
-  * production swap to those formats would still add: file statistics for
-  * data skipping, compaction of long manifest chains, and checkpointed
-  * manifests; the publish-after-commit + commit-lock contract and
-  * everything above it (compiler, session, tx snapshot) are already in
-  * their final shape.
+  * Multi-writer: commits run under an exclusive lock file with optimistic
+  * base-version validation. A session whose snapshot is stale (another
+  * writer published since it loaded) fails its statement with PG's
+  * serialization error (SQLSTATE 40001) instead of silently losing the
+  * other writer's update: writers serialize, losers retry from a fresh
+  * open.
   */
 object GraphStore {
 
@@ -97,11 +108,8 @@ object GraphStore {
     *
     * Acquisition gives up after `waitMs` — commits are sub-second, so a
     * longer wait means a wedged peer, and failing beats deadlocking.
-    * `staleMs` is retained for source compatibility; crash recovery no
-    * longer needs it.
     */
-  def withCommitLock[A](root: String, waitMs: Long = 10000L,
-      staleMs: Long = 30000L)(body: => A): A = {
+  def withCommitLock[A](root: String, waitMs: Long = 10000L)(body: => A): A = {
     val canonical = Paths.get(root).toAbsolutePath.normalize.toString
     val plock = procLocks.computeIfAbsent(canonical,
       _ => new java.util.concurrent.locks.ReentrantLock())
@@ -131,16 +139,16 @@ object GraphStore {
     } finally plock.unlock()
   }
 
-  /** `a <= b` in code-point lexicographic order — the order of Spark's
-    * UTF8String binary comparison used to compute the manifest string
-    * min/max, NOT Java's UTF-16 code-unit order (String.compareTo).
-    */
   /** Tagged temporal query bounds for [[FileStats.mayOverlap]] (r15):
     * micros since epoch / epoch days, matching the `t`/`D` stat encodings.
     */
   final case class TsBound(us: Long)
   final case class DateBound(days: Long)
 
+  /** `a <= b` in code-point lexicographic order — the order of Spark's
+    * UTF8String binary comparison used to compute the manifest string
+    * min/max, NOT Java's UTF-16 code-unit order (String.compareTo).
+    */
   def cpLe(a: String, b: String): Boolean = {
     val ai = a.codePoints().iterator(); val bi = b.codePoints().iterator()
     while (ai.hasNext && bi.hasNext) {
@@ -154,24 +162,29 @@ object GraphStore {
   def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
   def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
 
-  /** Parsed `file` manifest line (r12 id stats + r13 per-file typed
-    * property min/max — the data-skipping analog of the reference's GIN
-    * property index, gtype_gin.c:62-554, re-expressed as Delta-style
-    * manifest statistics). Line shape:
-    *
-    *   file <kind> <encLabel> <encRel> [minId maxId [<encCol> <ty> <encMin> <encMax>]...]
-    *
-    * `ty`: l = integral, d = double, s = string, t = timestamp (edges are
-    * micros since epoch, UTC wall for NTZ), D = date (edges are epoch
-    * days), n = column all-null in this file (provably no row matches an
-    * equality predicate on it).
-    * A column absent from the tail carries NO claim — readers must keep
-    * the file.
+  def catalogPath(root: String, v: Long): Path = Paths.get(root, s"v$v", "catalog.txt")
+
+  /** Version of a rel path: `v<N>/…` lives in version dir N. */
+  def versionOf(rel: String): Long =
+    if (rel.startsWith("v") && rel.contains('/')) rel.takeWhile(_ != '/').drop(1).toLong
+    else throw new IllegalArgumentException(s"not a version path: $rel")
+
+  /** One `file` line (see the format above). `ptail` keeps the property
+    * stat tokens encoded and in written order, so a carried line renders
+    * byte for byte; `pstats` is their decoded view.
     */
   final case class FileStats(kind: String, encLabel: String, rel: String,
-      idStats: Option[(Long, Long)],
-      pstats: Map[String, (String, String, String)]) {
-    def version: Long = rel.takeWhile(_ != '/').drop(1).toLong
+      idStats: Option[(Long, Long)], ptail: List[String]) {
+    lazy val pstats: Map[String, (String, String, String)] =
+      ptail.grouped(4).collect {
+        case List(n, ty, mn, mx) => dec(n) -> ((ty, dec(mn), dec(mx)))
+      }.toMap
+    def version: Long = versionOf(rel)
+    def base: String = rel.substring(rel.lastIndexOf('/') + 1)
+    def line: String =
+      (List("file", kind, encLabel, enc(rel)) ++
+        idStats.toList.flatMap { case (mn, mx) => List(mn.toString, mx.toString) } ++
+        ptail).mkString(" ")
     /** May a row with `lo <= colEsc <= hi` live in the file? Bounds are
       * treated as inclusive (sound for strict predicates: it only KEEPS
       * more files); equality passes the same value on both sides.
@@ -236,13 +249,167 @@ object GraphStore {
       }
   }
 
-  def parseFileLine(line: String): FileStats = {
-    val p = line.split(" ")
-    FileStats(p(1), p(2), dec(p(3)),
-      if (p.length > 5) Some((p(4).toLong, p(5).toLong)) else None,
-      p.drop(6).grouped(4).collect {
-        case Array(n, ty, mn, mx) => dec(n) -> ((ty, dec(mn), dec(mx)))
-      }.toMap)
+  object FileStats {
+    /** A file entry from decoded property stats. */
+    def apply(kind: String, encLabel: String, rel: String,
+        idStats: Option[(Long, Long)],
+        pstats: Map[String, (String, String, String)]): FileStats =
+      FileStats(kind, encLabel, rel, idStats, pstats.toList.flatMap {
+        case (n, (ty, mn, mx)) => List(enc(n), ty, enc(mn), enc(mx)) })
+  }
+
+  /** A positional deletion-vector file holding `count` positions. */
+  final case class DvpFile(rel: String, count: Long)
+
+  /** A label's table as the catalog records it. */
+  sealed trait Table { def kind: String; def label: String }
+  /** The whole table in `v<ver>/<kind>/<label>`; `nullCols` were NullType. */
+  final case class DirTable(kind: String, label: String, ver: Long,
+      nullCols: List[String]) extends Table
+  /** A file manifest and the deletion vectors over its files. */
+  final case class FileTable(kind: String, label: String, files: List[FileStats],
+      dvps: List[DvpFile]) extends Table
+
+  /** An ANN index's trained matrix, a text file at
+    * `v<ver>/<tag>/<label>__<prop>.txt`: `ivf` (shape dims, lists) or `pq`
+    * (shape dims, m, k).
+    */
+  final case class IndexDef(tag: String, label: String, prop: String,
+      metric: String, shape: List[Int], ver: Long) {
+    def matrixRel: String = s"v$ver/$tag/${enc(label)}__${enc(prop)}.txt"
+  }
+  /** An ANN index's stored entries (`ivfa` or `pqc`): base + delta files. */
+  final case class Entries(tag: String, label: String, prop: String,
+      rels: List[String])
+
+  /** One version's catalog: a pure value, parsed and rendered only here. */
+  final case class Catalog(seq: Int, labels: List[(String, Int)],
+      next: List[(String, Long)], uniques: List[(String, String)],
+      wholeUniques: List[String], streams: List[(String, Long)],
+      tables: List[Table], indexes: List[IndexDef], entries: List[Entries]) {
+
+    def lines: List[String] =
+      s"seq $seq" ::
+        labels.map { case (l, i) => s"label ${enc(l)} $i" } ++
+        next.map { case (l, n) => s"next ${enc(l)} $n" } ++
+        uniques.map { case (l, p) => s"unique ${enc(l)} ${enc(p)}" } ++
+        wholeUniques.map(l => s"wholeunique ${enc(l)}") ++
+        streams.map { case (a, b) => s"stream ${enc(a)} $b" } ++
+        tables.flatMap {
+          case DirTable(kind, l, ver, nulls) =>
+            s"${kind}label ${enc(l)} $ver" ::
+              nulls.map(c => s"nulltype $kind ${enc(l)} ${enc(c)}")
+          case FileTable(kind, l, files, dvps) =>
+            files.map(_.line) ++
+              dvps.map(d => s"dvp $kind ${enc(l)} ${enc(d.rel)} ${d.count}")
+        } ++
+        indexes.map(d => (List(d.tag, enc(d.label), enc(d.prop), d.metric) ++
+          d.shape.map(_.toString) :+ d.ver.toString).mkString(" ")) ++
+        entries.flatMap(e =>
+          e.rels.map(r => s"${e.tag} ${enc(e.label)} ${enc(e.prop)} ${enc(r)}"))
+
+    def render: String = lines.map(_ + "\n").mkString
+
+    def table(kind: String, label: String): Option[Table] =
+      tables.find(t => t.kind == kind && t.label == label)
+
+    /** Every version dir this catalog points into. */
+    def referencedVersions: Set[Long] =
+      (tables.flatMap {
+        case t: DirTable => List(t.ver)
+        case t: FileTable => t.files.map(_.version) ++ t.dvps.map(d => versionOf(d.rel))
+      } ++ indexes.map(_.ver) ++ entries.flatMap(_.rels.map(versionOf))).toSet
+  }
+
+  object Catalog {
+    val empty: Catalog = Catalog(2, Nil, Nil, Nil, Nil, Nil, Nil, Nil, Nil)
+
+    /** Parse catalog lines. A line of unknown kind or shape throws,
+      * naming the line.
+      */
+    def parse(lines: Seq[String]): Catalog = {
+      var c = empty
+      // tables in first-appearance order; a label's lines are contiguous
+      val tables = scala.collection.mutable.LinkedHashMap.empty[(String, String), Table]
+      def rel(s: String): String = { val r = dec(s); versionOf(r); r }
+      // false: a line of unknown kind; throws on a malformed one
+      def add(p: Array[String]): Boolean = {
+        def need(n: Int): Unit = require(p.length == n)
+        lazy val key = (p(1), dec(p(2)))
+        p(0) match {
+          case "seq" => need(2); c = c.copy(seq = p(1).toInt)
+          case "label" => need(3); c = c.copy(labels = c.labels :+ (dec(p(1)) -> p(2).toInt))
+          case "next" => need(3); c = c.copy(next = c.next :+ (dec(p(1)) -> p(2).toLong))
+          case "unique" => need(3); c = c.copy(uniques = c.uniques :+ (dec(p(1)) -> dec(p(2))))
+          case "wholeunique" => need(2); c = c.copy(wholeUniques = c.wholeUniques :+ dec(p(1)))
+          case "stream" => need(3); c = c.copy(streams = c.streams :+ (dec(p(1)) -> p(2).toLong))
+          case "vlabel" | "elabel" =>
+            need(3)
+            val k = (p(0).take(1), dec(p(1)))
+            require(!tables.contains(k))
+            tables(k) = DirTable(k._1, k._2, p(2).toLong, Nil)
+          case "nulltype" =>
+            need(4)
+            val t = tables(key).asInstanceOf[DirTable]
+            tables(key) = t.copy(nullCols = t.nullCols :+ dec(p(3)))
+          case "file" =>
+            require(p.length == 4 || (p.length >= 6 && (p.length - 6) % 4 == 0))
+            val f = FileStats(p(1), p(2), rel(p(3)),
+              if (p.length > 4) Some((p(4).toLong, p(5).toLong)) else None, p.drop(6).toList)
+            val t = tables.getOrElse(key, FileTable(key._1, key._2, Nil, Nil))
+              .asInstanceOf[FileTable]
+            require(t.dvps.isEmpty)
+            tables(key) = t.copy(files = t.files :+ f)
+          case "dvp" =>
+            need(5)
+            val t = tables(key).asInstanceOf[FileTable]
+            tables(key) = t.copy(dvps = t.dvps :+ DvpFile(rel(p(3)), p(4).toLong))
+          case tag @ ("ivf" | "pq") =>
+            need(if (tag == "ivf") 7 else 8)
+            c = c.copy(indexes = c.indexes :+ IndexDef(tag, dec(p(1)), dec(p(2)), p(3),
+              p.slice(4, p.length - 1).map(_.toInt).toList, p.last.toLong))
+          case tag @ ("ivfa" | "pqc") =>
+            need(4)
+            val e = Entries(tag, dec(p(1)), dec(p(2)), List(rel(p(3))))
+            c = c.copy(entries = c.entries.lastOption match {
+              case Some(l) if l.copy(rels = e.rels) == e =>
+                c.entries.init :+ l.copy(rels = l.rels ++ e.rels)
+              case _ => c.entries :+ e
+            })
+          case _ => return false
+        }
+        true
+      }
+      lines.foreach { line =>
+        val known =
+          try add(line.split(" ", -1))
+          catch {
+            case scala.util.control.NonFatal(e) =>
+              throw new IllegalArgumentException(s"malformed catalog line '$line'", e)
+          }
+        if (!known)
+          throw new IllegalArgumentException(s"catalog line of unknown kind '$line'")
+      }
+      c.copy(tables = tables.values.toList)
+    }
+
+    /** The catalog of version `v`; an unreadable or unparsable catalog
+      * throws with its path.
+      */
+    def read(root: String, v: Long): Catalog = {
+      val path = catalogPath(root, v)
+      val lines =
+        try Files.readAllLines(path, UTF_8).asScala.toList
+        catch {
+          case e: java.io.IOException =>
+            throw new IllegalStateException(s"cannot read store catalog $path: $e", e)
+        }
+      try parse(lines)
+      catch {
+        case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"$path: ${e.getMessage}", e)
+      }
+    }
   }
 
   def latestVersion(root: String): Option[Long] = {

@@ -495,14 +495,14 @@ object Similarity {
   private val PqC = 64   // coarse residual-quantizer lists (IVFADC, r15)
   private val PqNprobe = 16 // coarse lists probed per query
   // Persistence note (VERDICT r11 #1): the DDL-built IVFFlat index now
-  // persists into the GraphStore catalog (GraphSession ivf lines). The s8
+  // persists into the GraphStore catalog (`ivf` lines). The s8
   // PQ codebooks deliberately stay session-scoped: this operator reads a
   // raw parquet dir (no store catalog to publish into), and the build is
   // fully deterministic — ONE bounded stride-sample collect + fixed-iter
   // Lloyd — so a new session reconstructs bit-identical codebooks for the
   // cost the session cache already amortizes. If PQ ever gets a DDL
-  // surface over a durable graph, the ivf catalog mechanism
-  // (GraphSession.scala publish/load `ivf` lines) is the slot-in path.
+  // surface over a durable graph, the catalog's index lines (`pq` lines,
+  // Commit.publish/open) are the slot-in path.
   //
   // ADC candidates per query before exact rerank. r15 (VERDICT r14 #2):
   // scaled with corpus size instead of the fixed 192 — 40-bit codes get

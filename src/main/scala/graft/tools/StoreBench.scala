@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.cypher.GraphStore.{Catalog, DirTable, FileTable}
 import org.apache.spark.sql.SparkSession
 
 /** Scratch durable-store write-volume meter (not part of the library):
@@ -85,8 +86,8 @@ object StoreBench {
         val b2 = dirBytes(java.nio.file.Paths.get(s"$root/v$v"))
         total += b2
         if (b > 20) tail ::= b2
-        val cat = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines().toList
-        if (cat.exists(_.startsWith("vlabel U "))) compactions += 1
+        if (Catalog.read(root, v).table("v", "U").exists(_.isInstanceOf[DirTable]))
+          compactions += 1
       }
       println(f"STORE upsert x40 (4 keys/b)   ${(System.nanoTime() - tU) / 1e9}%8.3f s   " +
         f"steady ${tail.sum / tail.size}%d bytes/batch, $compactions%d self-compactions")
@@ -107,8 +108,9 @@ object StoreBench {
         s.run(s"UNWIND range(${c * per + 1}, ${(c + 1) * per}) AS i " +
           "CREATE (:K {k: i, t: 'payload-' + toString(i)})").count()
       val vB = graft.cypher.GraphStore.latestVersion(root).get
-      val nFiles = scala.io.Source.fromFile(s"$root/v$vB/catalog.txt")
-        .getLines().count(_.startsWith("file v K "))
+      val files = Catalog.read(root, vB).table("v", "K")
+        .collect { case t: FileTable => t.files }.getOrElse(Nil)
+      val nFiles = files.size
       println(f"STORE prune-label build       ${(System.nanoTime() - tB) / 1e9}%8.3f s   $nFiles files, ~$nP rows")
       val probe = per * 10 + 37 // lives in one mid-chain file
       def q = s"MATCH (p:K) WHERE p.k = $probe RETURN p.t AS t"
@@ -122,12 +124,9 @@ object StoreBench {
       val unpruned = (System.nanoTime() - t2) / 1e9
       s.graph.statsPruneEnabled = true
       // the no-metadata floor: read every file of the label, filter, count
-      val cat = scala.io.Source.fromFile(s"$root/v$vB/catalog.txt").getLines().toList
-      val rels = cat.filter(_.startsWith("file v K "))
-        .map(l => graft.cypher.GraphStore.dec(l.split(" ")(3)))
       val t3 = System.nanoTime()
       spark.read.option("mergeSchema", "true")
-        .parquet(rels.map(r => s"$root/$r"): _*)
+        .parquet(files.map(f => s"$root/${f.rel}"): _*)
         .filter(org.apache.spark.sql.functions.col("k") === probe).count()
       val raw = (System.nanoTime() - t3) / 1e9
       println(f"STORE pruned MATCH k=const    $pruned%8.3f s   files read $kept/$total")
@@ -151,8 +150,8 @@ object StoreBench {
         r2.run("MATCH (d:D) RETURN count(*) AS n, max(d.k) AS m").count()
         val dt = (System.nanoTime() - t0) / 1e9
         val v = graft.cypher.GraphStore.latestVersion(root).get
-        val dvp = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines()
-          .filter(_.startsWith("dvp v D ")).map(_.split(" ")(4).toLong).sum
+        val dvp = Catalog.read(root, v).table("v", "D")
+          .collect { case t: FileTable => t.dvps.map(_.count).sum }.getOrElse(0L)
         println(f"STORE dv read $tag%-15s $dt%8.3f s   $dvp positions (expect ~$expectDvp)")
       }
       readTime("0 tombstones", 0L)

@@ -697,8 +697,7 @@ class WriteSpec extends AnyFunSuite {
     val overlaps = new java.util.concurrent.atomic.AtomicInteger(0)
     val holderDone = new java.util.concurrent.CountDownLatch(1)
     val holder = new Thread(() => {
-      graft.cypher.GraphStore.withCommitLock(root, waitMs = 20000L,
-          staleMs = 50L) { // r11 heuristic would have declared this stale
+      graft.cypher.GraphStore.withCommitLock(root, waitMs = 20000L) { // r11 heuristic would have declared this stale
         inBody.incrementAndGet()
         Thread.sleep(400) // body far exceeds staleMs
         inBody.decrementAndGet()
@@ -708,14 +707,45 @@ class WriteSpec extends AnyFunSuite {
     holder.start()
     Thread.sleep(50) // let the holder in
     val waiter = new Thread(() => {
-      graft.cypher.GraphStore.withCommitLock(root, waitMs = 20000L,
-          staleMs = 50L) {
+      graft.cypher.GraphStore.withCommitLock(root, waitMs = 20000L) {
         if (inBody.get != 0) overlaps.incrementAndGet()
       }
     })
     waiter.start()
     holder.join(); waiter.join()
     assert(overlaps.get == 0, "waiter entered while the live holder was mid-body")
+    graft.cypher.GraphStore.deleteTree(Paths.get(root))
+  }
+
+  test("GraphStore: an unreadable latest catalog fails the commit and leaves _LATEST") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_store_lostcat").toString
+    val s = new GraphSession(spark)
+    s.createGraph("durlost", root)
+    s.run("UNWIND range(1, 5) AS i CREATE (:P {k: i})")
+    val v = graft.cypher.GraphStore.latestVersion(root).get
+    val cat = Paths.get(root, s"v$v", "catalog.txt")
+    Files.delete(cat)
+    // an empty store would have the commit rewrite every label whole
+    val e = intercept[IllegalStateException](s.run("CREATE (:P {k: 6})"))
+    assert(e.getMessage.contains(cat.toString), e.getMessage)
+    assert(graft.cypher.GraphStore.latestVersion(root).get == v)
+    graft.cypher.GraphStore.deleteTree(Paths.get(root))
+  }
+
+  test("GraphStore: a catalog line of unknown kind fails the open and names the line") {
+    import java.nio.file.{Files, Paths, StandardOpenOption}
+    val root = Files.createTempDirectory("graft_store_unknown").toString
+    val s = new GraphSession(spark)
+    s.createGraph("durunk", root)
+    s.run("CREATE (:P {k: 1})")
+    val v = graft.cypher.GraphStore.latestVersion(root).get
+    // the id-form tombstone line of earlier store versions
+    val line = s"dv v P v$v%2Fdv%2Fv__P.txt 1"
+    Files.write(Paths.get(root, s"v$v", "catalog.txt"), (line + "\n").getBytes("UTF-8"),
+      StandardOpenOption.APPEND)
+    val e = intercept[IllegalArgumentException](new GraphSession(spark).openGraph("durunk", root))
+    assert(e.getMessage.contains(line), e.getMessage)
     graft.cypher.GraphStore.deleteTree(Paths.get(root))
   }
 
