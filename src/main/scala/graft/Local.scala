@@ -17,7 +17,8 @@ import org.apache.spark.sql.types.StructType
   *    estimate that undercounts never puts more than `maxRows` rows on the
   *    driver; above the cap the site takes its distributed path.
   * Sites: write snapshots, write-id numbering and a publish's touched ids
-  * (GraphSession), the recursive local frontier (Recursive), the
+  * (GraphSession), a deletion-vector commit's tombstone positions (Commit:
+  * the footer row counts of the files read), the recursive local frontier (Recursive), the
   * single-task graph algorithms (Algorithms: estimate only, they never
   * collect), near-dup clustering (Pipeline: actual pair count only, its
   * estimate is join-inflated by orders of magnitude), the ANN serves

@@ -4,7 +4,14 @@ import graft.Local
 import graft.cypher.GraphStore._
 import graft.graph.PropertyGraph
 import graft.gvalue._
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets.UTF_8
@@ -303,7 +310,9 @@ private[cypher] object Commit {
       * carry every previous file, and record the (file basename, row
       * position) of each live copy of a tombstoned id in one `dvp` file.
       * Bytes per point SET/DELETE are the row plus a position line,
-      * whatever the file size. None when there is nothing to write.
+      * whatever the file size. The row-versions are written on the driver,
+      * and so are the positions while the files they are read from fit
+      * `Local`'s cap. None when there is nothing to write.
       */
     private def writeDv(kind: String, l: String, df: DataFrame, p: FileTable,
         ids: Array[Long], tombstones: Array[Long]): Option[FileTable] = {
@@ -312,23 +321,23 @@ private[cypher] object Commit {
       val newFiles =
         if (rows.isEmpty) Nil
         else {
-          val held = Local.relation(spark, rows.toSeq, df.schema)
-          val outDir = s"$dir/$kind/$encl"
-          held.coalesce(1).write.parquet(outDir)
-          val rels = relsIn(next, kind, l)
-          statsOfRows(held, lit(rels.head.split('/').last), kind, l, rels) // one file
+          val base = Bridge.writeParquet(spark, s"$dir/$kind/$encl", df.schema, rows.toSeq)
+          statsOfRows(Local.relation(spark, rows.toSeq, df.schema), lit(base), kind, l,
+            List(s"v$next/$kind/$encl/$base"))
         }
       if (newFiles.isEmpty && tombstones.isEmpty) return None
-      // one column-pruned scan of just the files whose id range may hold a
-      // tombstone, existing dvs applied so only LIVE copies get entries;
-      // the id filter pushes down here, and reads filter on row_index only
+      // only the files whose id range may hold a tombstone, existing dvs
+      // applied so only LIVE copies get entries
       val affected = p.files.filter(mayHold(_, tombstones))
       val positions: Array[(String, Long)] =
         if (tombstones.isEmpty || affected.isEmpty) Array.empty
-        else readIds((kind, l), affected, p.dvps)
-          .filter(col("id").isin(tombstones.map(Long.box): _*))
-          .select(fileBase, col("_metadata.row_index"))
-          .collect().map(r => (r.getString(0), r.getLong(1)))
+        else heldPositions((kind, l), affected, p.dvps, tombstones).getOrElse(
+          // one column-pruned scan; the id filter pushes down here, and
+          // reads filter on row_index only
+          readIds((kind, l), affected, p.dvps)
+            .filter(col("id").isin(tombstones.map(Long.box): _*))
+            .select(fileBase, col("_metadata.row_index"))
+            .collect().map(r => (r.getString(0), r.getLong(1))))
       val dvp =
         if (positions.isEmpty) Nil
         else {
@@ -342,6 +351,32 @@ private[cypher] object Commit {
           List(d)
         }
       Some(FileTable(kind, l, newFiles ++ p.files, p.dvps ++ dvp))
+    }
+
+    /** The live (file basename, row position) copies of the sorted
+      * `tombstones` in `files`, read on the driver from each file's `id`
+      * column alone: a row's position is its ordinal in the file, which is
+      * what `_metadata.row_index` reads. Positions in the label's dvs are
+      * not live. None when the files' footer row counts together pass
+      * `Local`'s cap.
+      */
+    private def heldPositions(key: Key, files: List[FileStats], dvps: List[DvpFile],
+        tombstones: Array[Long]): Option[Array[(String, Long)]] = {
+      val conf = Bridge.hadoopConf(spark)
+      val readers = mutable.ListBuffer.empty[ParquetFileReader]
+      try {
+        files.foreach(f => readers += ParquetFileReader.open(
+          HadoopInputFile.fromPath(new HPath(s"$root/${f.rel}"), conf)))
+        if (!Local.holds(spark, readers.map(_.getRecordCount).sum)) None
+        else {
+          val dvs = dvsOf(key, dvps)
+          Some(files.zip(readers).toArray.flatMap { case (f, r) =>
+            val dead = dvs.getOrElse(f.base, Array.empty[Long])
+            idPositions(r, tombstones)
+              .filter(i => java.util.Arrays.binarySearch(dead, i) < 0).map(f.base -> _)
+          })
+        }
+      } finally readers.foreach(_.close())
     }
 
     /** File-level copy-on-write: rewrite only the files holding touched ids
@@ -559,6 +594,35 @@ private[cypher] object Commit {
       }
       .groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2).distinct.sorted.toArray }
 
+  /** The positions (row ordinals) of the rows of the file `r` opened
+    * whose `id` is one of the sorted `ids`, reading the `id` column alone.
+    * The projection is the file's own `id` field: Spark writes a
+    * non-nullable column as `required`.
+    */
+  private def idPositions(r: ParquetFileReader, ids: Array[Long]): Array[Long] = {
+    val meta = r.getFooter.getFileMetaData
+    val schema = meta.getSchema
+    val proj = new MessageType(schema.getName, schema.getType(schema.getFieldIndex("id")))
+    r.setRequestedSchema(proj)
+    val column = proj.getColumns.get(0)
+    val out = Array.newBuilder[Long]
+    var pos = 0L
+    var pages = r.readNextRowGroup()
+    while (pages != null) {
+      val cr = new ColumnReadStoreImpl(pages, new GroupRecordConverter(proj).getRootConverter,
+        proj, meta.getCreatedBy).getColumnReader(column)
+      val end = pos + pages.getRowCount
+      while (pos < end) {
+        if (cr.getCurrentDefinitionLevel == column.getMaxDefinitionLevel &&
+            java.util.Arrays.binarySearch(ids, cr.getLong) >= 0) out += pos
+        cr.consume()
+        pos += 1
+      }
+      pages = r.readNextRowGroup()
+    }
+    out.result()
+  }
+
   /** Apply deletion vectors to a raw manifest-file scan: ONE [[DvLive]]
     * predicate over (`_metadata.file_path`, `_metadata.row_index`), a
     * binary search per row over per-file sorted positions. `id` never
@@ -567,7 +631,6 @@ private[cypher] object Commit {
     */
   def applyDvs(raw: DataFrame, dvs: Positions): DataFrame = {
     if (dvs.isEmpty) return raw
-    import org.apache.spark.sql.graft.Bridge
     val out = raw.filter(Bridge.column(DvLive(
       Bridge.expression(col("_metadata.file_path")),
       Bridge.expression(col("_metadata.row_index")),

@@ -285,7 +285,7 @@ final class GraphSession(val spark: SparkSession) {
             if (prop != null && "true".equalsIgnoreCase(Option(uniq).getOrElse("")))
               graph.addUniqueConstraint(label, prop)
         }
-        if (graph.storeRoot.isDefined) graph.publish() // constraint DDL commits too
+        graph.publishCatalog() // constraint DDL commits too
         return voidRow(fn.toLowerCase)
       case _ => ()
     }
@@ -2443,6 +2443,12 @@ final class MutableGraph(spark: SparkSession) {
     entryChainMerges.addAndGet(chainMerges)
     txResetTracking() // touched-id frames are consumed by this publish
   }
+
+  /** Publish a change to the catalog alone (constraint DDL): every label
+    * is its own snapshot, so each is carried by its lines, manifest and
+    * dvs included.
+    */
+  private[cypher] def publishCatalog(): Unit = publish(vertexLabels, edgeLabels)
 
   /** Explicit compaction (the Delta/Iceberg OPTIMIZE analog): rewrite every
     * label in file-manifest form whole at a new version, dropping its

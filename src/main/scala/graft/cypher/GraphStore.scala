@@ -55,7 +55,11 @@ import scala.jdk.CollectionConverters._
   *   1. deletion vector (merge-on-read): write only the new row-versions
   *      plus one `dvp` file, carry every previous file. Used while the
   *      statement touches at most 8192 ids of the label and its
-  *      tombstones stay within 65536.
+  *      tombstones stay within 65536. The row-versions are held on the
+  *      driver and written from it as one file, by Spark's own parquet
+  *      writer with no job; the tombstone positions are read on the
+  *      driver from the `id` column of the files that may hold them while
+  *      their rows fit `graft.Local`'s cap, and by a scan past it.
   *   2. file-level copy-on-write: rewrite only the files holding touched
   *      ids, carry the rest.
   *   3. full rewrite to a `vlabel`/`elabel` dir: changes that re-encode

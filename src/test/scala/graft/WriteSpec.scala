@@ -1553,24 +1553,66 @@ class WriteSpec extends AnyFunSuite {
   // the same manifest statistics, strings compared in code-point order
   // included: stats from an aggregate over the held rows against stats
   // re-read from the written file.
+  test("GraphStore: constraint DDL carries every label's lines, manifest and dvs") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_store_ddl").toString
+    val s = new GraphSession(spark)
+    s.createGraph("ddl", root)
+    s.run("CREATE (:L {p: 1, q: 'a'}), (:L {p: 2, q: 'b'})")
+    s.run("CREATE (:L {p: 3, q: 'c'})-[:R {w: 1}]->(:M {m: 1})")
+    s.run("MATCH (l:L {p: 1}) SET l.q = 'a2'")
+    def tableLines(): Seq[String] = {
+      val v = graft.cypher.GraphStore.latestVersion(root).get
+      scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines().toSeq
+        .filter(l => Seq("vlabel ", "elabel ", "nulltype ", "file ", "dvp ").exists(l.startsWith))
+    }
+    val before = tableLines()
+    assert(before.exists(_.startsWith("dvp v L ")), before.mkString("\n"))
+    val v0 = graft.cypher.GraphStore.latestVersion(root).get
+    s.run("SELECT create_property_index('ddl', 'L', 'p', true)")
+    assert(graft.cypher.GraphStore.latestVersion(root).get == v0 + 1)
+    assert(tableLines() == before)
+    val r = new GraphSession(spark)
+    r.openGraph("ddl", root)
+    val rows = r.run("MATCH (l:L) RETURN l.p AS p, l.q AS q ORDER BY p")
+      .collect().map(x => (x.getLong(0), x.getString(1))).toSeq
+    assert(rows == Seq((1L, "a2"), (2L, "b"), (3L, "c")), rows.toString)
+    intercept[Exception](r.run("CREATE (:L {p: 2})"))
+    graft.cypher.GraphStore.deleteTree(Paths.get(root))
+  }
+
   test("GraphStore: driver-held publish == distributed publish (rows and manifest stats)") {
     import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
     import spark.implicits._
-    def script(): (Map[String, Seq[String]], Seq[Seq[String]]) = {
+    import graft.cypher.GraphStore.dec
+    def script(): (Map[String, Seq[String]], Seq[Seq[String]], Seq[Seq[String]]) = {
       val root = Files.createTempDirectory("graft_store_held").toString
       val s = new GraphSession(spark)
       s.createGraph("held", root)
       val manifests = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+      val positions = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
       def step(f: => Unit): Unit = {
         f
         val v = graft.cypher.GraphStore.latestVersion(root).get
+        val cat = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines().toSeq
+        val fileLines = cat.filter(_.startsWith("file ")).map(_.split(" "))
         // file lines without the part-file name: kind, label, version dir, stats
-        manifests += scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines()
-          .filter(_.startsWith("file ")).map { l =>
-            val p = l.split(" ")
-            val rel = graft.cypher.GraphStore.dec(p(3))
-            (Seq(p(1), p(2), rel.takeWhile(_ != '/')) ++ p.drop(4)).mkString(" ")
-          }.toSeq
+        manifests += fileLines.map { p =>
+          val rel = dec(p(3))
+          (Seq(p(1), p(2), rel.takeWhile(_ != '/')) ++ p.drop(4)).mkString(" ")
+        }
+        // each dvp file's sorted positions, a part file named by its place
+        // among the catalog's file lines (the names differ between runs)
+        val place = fileLines.map(p => dec(p(3)).split('/').last).zipWithIndex.toMap
+        positions += cat.filter(_.startsWith("dvp ")).map(_.split(" ")).map { p =>
+          val rel = dec(p(3))
+          val pos = Files.readAllLines(Paths.get(root, rel)).asScala.filter(_.nonEmpty).map { e =>
+            val i = e.lastIndexOf(' ')
+            (place.get(e.substring(0, i)).fold("gone")(_.toString), e.substring(i + 1).toLong)
+          }.sorted
+          s"${p(1)} ${p(2)} ${rel.takeWhile(_ != '/')} ${pos.mkString(",")}"
+        }
       }
       // the labels start as ingested batches, whose full writes lay files
       // out alike in both modes; their keys sit above the ids CREATE numbers
@@ -1581,6 +1623,12 @@ class WriteSpec extends AnyFunSuite {
         "load", 1L))
       step(s.ingestVertexBatch("C", "ck", Seq((1L, "c1", 1.0), (2L, "c2", 2.0))
         .toDF("ck", "name", "bal"), "cdc", 0L))
+      // R's files span several row groups (100 rows each), so its
+      // tombstone positions are counted across row-group boundaries
+      spark.conf.set("parquet.block.row.count.limit", "100")
+      try step(s.ingestVertexBatch("R", "rk", (1 to 1200).map(i => (5000L + i, i.toLong))
+        .toDF("rk", "k"), "load", 2L))
+      finally spark.conf.unset("parquet.block.row.count.limit")
       step(s.run("MATCH (a:P {k: 1}) CREATE (:P {k: 13, t: '\uffff'})-[:E {w: 1}]->(a)"))
       step(s.run("MATCH (a:P {k: 2}) CREATE (:P {k: 14, t: '\ud83d\ude00'})-[:E {w: 2}]->(a)"))
       step(s.run("MATCH (p:P {k: 3}) SET p.t = '\ud83d\ude01'"))
@@ -1591,6 +1639,28 @@ class WriteSpec extends AnyFunSuite {
       step(s.ingestVertexUpsertBatch("C", "ck", Seq((2L, "c2b", 20.0), (3L, "c3", 3.0))
         .toDF("ck", "name", "bal"), "cdc", 1L))
       step(s.run("MATCH (p:P {k: 5}) SET p.t = 'a5b'"))
+      step(s.run("MATCH (r:R) WHERE r.k IN [1, 290, 299, 1150, 1199] SET r.k = -r.k"))
+      step(s.run("MATCH (r:R) WHERE r.k IN [-290, 600, 1190] DETACH DELETE r"))
+      // R's dvs reach past the first row group of the file they hit
+      val v = graft.cypher.GraphStore.latestVersion(root).get
+      val rFiles = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines()
+        .filter(_.startsWith("file v R ")).map(l => dec(l.split(" ")(3))).toList
+      val conf = org.apache.spark.sql.graft.Bridge.hadoopConf(spark)
+      val firstGroup = rFiles.map { rel =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(s"$root/$rel"), conf))
+        try rel.split('/').last -> r.getFooter.getBlocks.asScala.map(_.getRowCount).toList
+        finally r.close()
+      }.toMap
+      assert(firstGroup.values.exists(_.size >= 2), firstGroup)
+      val rDvs = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines()
+        .filter(_.startsWith("dvp v R ")).toList
+        .flatMap(l => Files.readAllLines(Paths.get(root, dec(l.split(" ")(3)))).asScala)
+        .filter(_.nonEmpty).map(_.split(" ")).groupBy(_(0))
+        .map { case (b, es) => b -> es.map(_(1).toLong) }
+      assert(rDvs.exists { case (b, pos) => firstGroup.get(b).exists(g => pos.exists(_ >= g.head)) },
+        rDvs)
       val r = new GraphSession(spark)
       r.openGraph("held", root)
       val g = r.graph.snapshot
@@ -1598,16 +1668,22 @@ class WriteSpec extends AnyFunSuite {
         case (l, df) => l -> df.collect().map(_.toString).toSeq.sorted
       }
       graft.cypher.GraphStore.deleteTree(Paths.get(root))
-      (rows, manifests.toSeq)
+      (rows, manifests.toSeq, positions.toSeq)
     }
-    val (heldRows, heldStats) = script()
+    val (heldRows, heldStats, heldPos) = script()
     spark.conf.set("spark.graft.local.maxRows", "0")
-    val (distRows, distStats) = try script() finally spark.conf.unset("spark.graft.local.maxRows")
+    val (distRows, distStats, distPos) =
+      try script() finally spark.conf.unset("spark.graft.local.maxRows")
     assert(heldRows == distRows)
+    assert(heldRows("R").size == 1197)
     assert(heldStats.length == distStats.length)
     heldStats.zip(distStats).zipWithIndex.foreach { case ((h, d), i) =>
       assert(h == d, s"statement ${i + 1}: manifest file lines differ")
     }
+    heldPos.zip(distPos).zipWithIndex.foreach { case ((h, d), i) =>
+      assert(h == d, s"statement ${i + 1}: dv positions differ")
+    }
+    assert(heldPos.last.exists(_.startsWith("v R ")), heldPos.last.mkString("; "))
     assert(heldStats.last.exists(_.contains(" s ")), heldStats.last.mkString("; "))
   }
 }
