@@ -18,13 +18,15 @@ import org.apache.spark.sql.types.StructType
   *    driver; above the cap the site takes its distributed path.
   * Sites: write snapshots, write-id numbering and a publish's touched ids
   * (GraphSession), a deletion-vector commit's tombstone positions (Commit:
-  * the footer row counts of the files read), the recursive local frontier (Recursive), the
-  * single-task graph algorithms (Algorithms: estimate only, they never
-  * collect), near-dup clustering (Pipeline: actual pair count only, its
-  * estimate is join-inflated by orders of magnitude), the ANN serves
-  * (Similarity: corpus row count) and the optimizer fold of joins, unions
-  * and aggregates over driver-held rows ([[LocalFold]]: actual rows of
-  * every input and of the output), installed on a session by [[install]].
+  * the tombstone count, as it holds one live position per tombstone,
+  * whatever the size of the files read), the recursive local frontier
+  * (Recursive), the single-task graph algorithms (Algorithms: estimate
+  * only, they never collect), near-dup clustering (Pipeline: actual pair
+  * count only, its estimate is join-inflated by orders of magnitude), the
+  * ANN serves (Similarity: corpus row count) and the optimizer fold of
+  * joins, unions and aggregates over driver-held rows ([[LocalFold]]:
+  * actual rows of every input and of the output), installed on a session
+  * by [[install]].
   */
 private[graft] object Local {
 

@@ -4,9 +4,13 @@ import graft.Local
 import graft.cypher.GraphStore._
 import graft.graph.PropertyGraph
 import graft.gvalue._
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
@@ -16,6 +20,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.util.stream.LongStream
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -311,8 +316,8 @@ private[cypher] object Commit {
       * position) of each live copy of a tombstoned id in one `dvp` file.
       * Bytes per point SET/DELETE are the row plus a position line,
       * whatever the file size. The row-versions are written on the driver,
-      * and so are the positions while the files they are read from fit
-      * `Local`'s cap. None when there is nothing to write.
+      * and so are the positions while the tombstones fit `Local`'s cap.
+      * None when there is nothing to write.
       */
     private def writeDv(kind: String, l: String, df: DataFrame, p: FileTable,
         ids: Array[Long], tombstones: Array[Long]): Option[FileTable] = {
@@ -331,13 +336,15 @@ private[cypher] object Commit {
       val affected = p.files.filter(mayHold(_, tombstones))
       val positions: Array[(String, Long)] =
         if (tombstones.isEmpty || affected.isEmpty) Array.empty
-        else heldPositions((kind, l), affected, p.dvps, tombstones).getOrElse(
+        else if (Local.holds(spark, tombstones.length))
+          heldPositions((kind, l), affected, p.dvps, tombstones)
+        else
           // one column-pruned scan; the id filter pushes down here, and
           // reads filter on row_index only
           readIds((kind, l), affected, p.dvps)
             .filter(col("id").isin(tombstones.map(Long.box): _*))
             .select(fileBase, col("_metadata.row_index"))
-            .collect().map(r => (r.getString(0), r.getLong(1))))
+            .collect().map(r => (r.getString(0), r.getLong(1)))
       val dvp =
         if (positions.isEmpty) Nil
         else {
@@ -355,28 +362,19 @@ private[cypher] object Commit {
 
     /** The live (file basename, row position) copies of the sorted
       * `tombstones` in `files`, read on the driver from each file's `id`
-      * column alone: a row's position is its ordinal in the file, which is
-      * what `_metadata.row_index` reads. Positions in the label's dvs are
-      * not live. None when the files' footer row counts together pass
-      * `Local`'s cap.
+      * column alone, one file at a time: a row's position is its ordinal
+      * in the file, which is what `_metadata.row_index` reads. Positions in
+      * the label's dvs are not live. Only live positions are kept, at most
+      * one per tombstone, whatever the files' sizes.
       */
     private def heldPositions(key: Key, files: List[FileStats], dvps: List[DvpFile],
-        tombstones: Array[Long]): Option[Array[(String, Long)]] = {
+        tombstones: Array[Long]): Array[(String, Long)] = {
       val conf = Bridge.hadoopConf(spark)
-      val readers = mutable.ListBuffer.empty[ParquetFileReader]
-      try {
-        files.foreach(f => readers += ParquetFileReader.open(
-          HadoopInputFile.fromPath(new HPath(s"$root/${f.rel}"), conf)))
-        if (!Local.holds(spark, readers.map(_.getRecordCount).sum)) None
-        else {
-          val dvs = dvsOf(key, dvps)
-          Some(files.zip(readers).toArray.flatMap { case (f, r) =>
-            val dead = dvs.getOrElse(f.base, Array.empty[Long])
-            idPositions(r, tombstones)
-              .filter(i => java.util.Arrays.binarySearch(dead, i) < 0).map(f.base -> _)
-          })
-        }
-      } finally readers.foreach(_.close())
+      val dvs = dvsOf(key, dvps)
+      files.toArray.flatMap { f =>
+        idPositions(new HPath(s"$root/${f.rel}"), conf, tombstones,
+          dvs.getOrElse(f.base, Array.empty[Long])).map(f.base -> _)
+      }
     }
 
     /** File-level copy-on-write: rewrite only the files holding touched ids
@@ -594,33 +592,45 @@ private[cypher] object Commit {
       }
       .groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2).distinct.sorted.toArray }
 
-  /** The positions (row ordinals) of the rows of the file `r` opened
-    * whose `id` is one of the sorted `ids`, reading the `id` column alone.
-    * The projection is the file's own `id` field: Spark writes a
-    * non-nullable column as `required`.
+  /** The positions (row ordinals) of the rows of the file at `path` whose
+    * `id` is one of the sorted `ids` and whose position is not in the
+    * sorted `dead`. Only the `id` column is read, and of it only the row
+    * groups and pages whose statistics and column index may hold one of
+    * `ids`, as the scan's pushed-down filter reads; a row's position is
+    * its group's first row index plus its index in the group. The
+    * projection is the file's own `id` field: Spark writes a non-nullable
+    * column as `required`.
     */
-  private def idPositions(r: ParquetFileReader, ids: Array[Long]): Array[Long] = {
-    val meta = r.getFooter.getFileMetaData
-    val schema = meta.getSchema
-    val proj = new MessageType(schema.getName, schema.getType(schema.getFieldIndex("id")))
-    r.setRequestedSchema(proj)
-    val column = proj.getColumns.get(0)
-    val out = Array.newBuilder[Long]
-    var pos = 0L
-    var pages = r.readNextRowGroup()
-    while (pages != null) {
-      val cr = new ColumnReadStoreImpl(pages, new GroupRecordConverter(proj).getRootConverter,
-        proj, meta.getCreatedBy).getColumnReader(column)
-      val end = pos + pages.getRowCount
-      while (pos < end) {
-        if (cr.getCurrentDefinitionLevel == column.getMaxDefinitionLevel &&
-            java.util.Arrays.binarySearch(ids, cr.getLong) >= 0) out += pos
-        cr.consume()
-        pos += 1
+  private def idPositions(path: HPath, conf: Configuration, ids: Array[Long],
+      dead: Array[Long]): Array[Long] = {
+    val hit = FilterApi.in[java.lang.Long, Operators.LongColumn](FilterApi.longColumn("id"),
+      ids.map(Long.box).toSet.asJava)
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).withRecordFilter(FilterCompat.get(hit)).build())
+    try {
+      val meta = r.getFooter.getFileMetaData
+      val schema = meta.getSchema
+      val proj = new MessageType(schema.getName, schema.getType(schema.getFieldIndex("id")))
+      r.setRequestedSchema(proj)
+      val column = proj.getColumns.get(0)
+      val out = Array.newBuilder[Long]
+      var pages = r.readNextFilteredRowGroup()
+      while (pages != null) {
+        val first: Long = pages.getRowIndexOffset.get
+        val rows = pages.getRowIndexes.orElse(LongStream.range(0, pages.getRowCount).iterator)
+        val cr = new ColumnReadStoreImpl(pages, new GroupRecordConverter(proj).getRootConverter,
+          proj, meta.getCreatedBy).getColumnReader(column)
+        while (rows.hasNext) {
+          val pos = first + rows.nextLong()
+          if (cr.getCurrentDefinitionLevel == column.getMaxDefinitionLevel &&
+              java.util.Arrays.binarySearch(ids, cr.getLong) >= 0 &&
+              java.util.Arrays.binarySearch(dead, pos) < 0) out += pos
+          cr.consume()
+        }
+        pages = r.readNextFilteredRowGroup()
       }
-      pages = r.readNextRowGroup()
-    }
-    out.result()
+      out.result()
+    } finally r.close()
   }
 
   /** Apply deletion vectors to a raw manifest-file scan: ONE [[DvLive]]

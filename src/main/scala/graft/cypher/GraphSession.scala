@@ -285,7 +285,10 @@ final class GraphSession(val spark: SparkSession) {
             if (prop != null && "true".equalsIgnoreCase(Option(uniq).getOrElse("")))
               graph.addUniqueConstraint(label, prop)
         }
-        graph.publishCatalog() // constraint DDL commits too
+        // constraint DDL commits too, a change to the catalog alone: every
+        // label is its own snapshot, so each is carried by its lines,
+        // manifest and dvs included
+        graph.publish(graph.vertexLabels, graph.edgeLabels)
         return voidRow(fn.toLowerCase)
       case _ => ()
     }
@@ -1566,8 +1569,8 @@ final class MutableGraph(spark: SparkSession) {
     nextEntry.remove(l)
   }
   private val nextEntry = mutable.Map.empty[String, Long]
-  private var vertexLabels = Map.empty[String, DataFrame]
-  private var edgeLabels = Map.empty[String, DataFrame]
+  private[cypher] var vertexLabels = Map.empty[String, DataFrame]
+  private[cypher] var edgeLabels = Map.empty[String, DataFrame]
 
   /** Statement-level transactionality: the reference runs each statement
     * in a PG transaction, so an ERROR mid-statement (e.g. CREATE through a
@@ -2443,12 +2446,6 @@ final class MutableGraph(spark: SparkSession) {
     entryChainMerges.addAndGet(chainMerges)
     txResetTracking() // touched-id frames are consumed by this publish
   }
-
-  /** Publish a change to the catalog alone (constraint DDL): every label
-    * is its own snapshot, so each is carried by its lines, manifest and
-    * dvs included.
-    */
-  private[cypher] def publishCatalog(): Unit = publish(vertexLabels, edgeLabels)
 
   /** Explicit compaction (the Delta/Iceberg OPTIMIZE analog): rewrite every
     * label in file-manifest form whole at a new version, dropping its

@@ -58,8 +58,8 @@ import scala.jdk.CollectionConverters._
   *      tombstones stay within 65536. The row-versions are held on the
   *      driver and written from it as one file, by Spark's own parquet
   *      writer with no job; the tombstone positions are read on the
-  *      driver from the `id` column of the files that may hold them while
-  *      their rows fit `graft.Local`'s cap, and by a scan past it.
+  *      driver from the `id` column of the files that may hold them, only
+  *      the row groups and pages whose statistics may hold one.
   *   2. file-level copy-on-write: rewrite only the files holding touched
   *      ids, carry the rest.
   *   3. full rewrite to a `vlabel`/`elabel` dir: changes that re-encode

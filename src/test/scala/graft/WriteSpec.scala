@@ -1548,11 +1548,6 @@ class WriteSpec extends AnyFunSuite {
     assert(s.run("MATCH (p:P {k: 7}) RETURN p.v AS v").collect().head.getLong(0) == 200L)
   }
 
-  // The merge-on-read publish from driver-held rows (default) and from
-  // distributed frames (`local.maxRows=0`) must commit the same graph and
-  // the same manifest statistics, strings compared in code-point order
-  // included: stats from an aggregate over the held rows against stats
-  // re-read from the written file.
   test("GraphStore: constraint DDL carries every label's lines, manifest and dvs") {
     import java.nio.file.{Files, Paths}
     val root = Files.createTempDirectory("graft_store_ddl").toString
@@ -1581,6 +1576,11 @@ class WriteSpec extends AnyFunSuite {
     graft.cypher.GraphStore.deleteTree(Paths.get(root))
   }
 
+  // The merge-on-read publish from driver-held rows (default) and from
+  // distributed frames (`local.maxRows=0`) must commit the same graph and
+  // the same manifest statistics, strings compared in code-point order
+  // included: stats from an aggregate over the held rows against stats
+  // re-read from the written file.
   test("GraphStore: driver-held publish == distributed publish (rows and manifest stats)") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
@@ -1623,12 +1623,19 @@ class WriteSpec extends AnyFunSuite {
         "load", 1L))
       step(s.ingestVertexBatch("C", "ck", Seq((1L, "c1", 1.0), (2L, "c2", 2.0))
         .toDF("ck", "name", "bal"), "cdc", 0L))
-      // R's files span several row groups (100 rows each), so its
-      // tombstone positions are counted across row-group boundaries
+      // R's files span several row groups (100 rows each) of several pages
+      // (10 rows each), so its tombstone positions are counted across
+      // row-group boundaries and past the pages a position read skips
       spark.conf.set("parquet.block.row.count.limit", "100")
+      spark.conf.set("parquet.page.row.count.limit", "10")
+      spark.conf.set("parquet.page.size.row.check.min", "10")
       try step(s.ingestVertexBatch("R", "rk", (1 to 1200).map(i => (5000L + i, i.toLong))
         .toDF("rk", "k"), "load", 2L))
-      finally spark.conf.unset("parquet.block.row.count.limit")
+      finally {
+        spark.conf.unset("parquet.block.row.count.limit")
+        spark.conf.unset("parquet.page.row.count.limit")
+        spark.conf.unset("parquet.page.size.row.check.min")
+      }
       step(s.run("MATCH (a:P {k: 1}) CREATE (:P {k: 13, t: '\uffff'})-[:E {w: 1}]->(a)"))
       step(s.run("MATCH (a:P {k: 2}) CREATE (:P {k: 14, t: '\ud83d\ude00'})-[:E {w: 2}]->(a)"))
       step(s.run("MATCH (p:P {k: 3}) SET p.t = '\ud83d\ude01'"))
@@ -1646,14 +1653,18 @@ class WriteSpec extends AnyFunSuite {
       val rFiles = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines()
         .filter(_.startsWith("file v R ")).map(l => dec(l.split(" ")(3))).toList
       val conf = org.apache.spark.sql.graft.Bridge.hadoopConf(spark)
-      val firstGroup = rFiles.map { rel =>
+      // per R file: (row count, id pages) of each row group
+      val groups = rFiles.map { rel =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
             new org.apache.hadoop.fs.Path(s"$root/$rel"), conf))
-        try rel.split('/').last -> r.getFooter.getBlocks.asScala.map(_.getRowCount).toList
+        try rel.split('/').last -> r.getFooter.getBlocks.asScala.map(g => g.getRowCount ->
+          r.readOffsetIndex(g.getColumns.asScala.find(_.getPath.toDotString == "id").get)
+            .getPageCount).toList
         finally r.close()
       }.toMap
-      assert(firstGroup.values.exists(_.size >= 2), firstGroup)
+      assert(groups.values.exists(gs => gs.size >= 2 && gs.exists(_._2 >= 2)), groups)
+      val firstGroup = groups.map { case (b, gs) => b -> gs.map(_._1) }
       val rDvs = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines()
         .filter(_.startsWith("dvp v R ")).toList
         .flatMap(l => Files.readAllLines(Paths.get(root, dec(l.split(" ")(3)))).asScala)
