@@ -526,8 +526,11 @@ private[cypher] object Commit {
       * proportional to the chain, never a label re-scan). IVF probes read
       * the union raw (stale rows only add candidates the exact rerank
       * drops); PQ codes dedup last-wins. A whole rewrite or an unbounded
-      * change drops the lines: the next probe re-derives, the next commit
-      * re-persists. Returns the lines and the table they reflect.
+      * change drops the lines. They return with the in-memory entries a
+      * probe derives: a commit of the table they reflect writes them as
+      * one file, and so does an id-local commit right after it, as the
+      * cached entries without the touched ids plus the touched rows' new
+      * entries. Returns the lines and the table they reflect.
       */
     def persistEntries(e: EntryIndex): Option[(Entries, DataFrame)] = {
       val tbl = s.vertexLabels.getOrElse(e.label, return None)
@@ -561,6 +564,12 @@ private[cypher] object Commit {
                     .groupBy(e.dedupKeys.map(col): _*)
                     .agg(max_by(col(e.valCol), col("__seq")).as(e.valCol)), Nil)
                 } else write(e.derive(touched), rels) // delta: the touched rows
+              case (None, Some(touched)) =>
+                // entries a probe cached against the statement's start
+                s.prevV.get(e.label).flatMap(e.cached).map { a =>
+                  if (touched.isEmpty) a
+                  else a.join(touched, Seq("id"), "left_anti").unionByName(e.derive(touched))
+                }.flatMap(write(_, Nil))
               case _ => None
             }
         }

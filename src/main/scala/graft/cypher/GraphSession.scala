@@ -1809,13 +1809,9 @@ final class MutableGraph(spark: SparkSession) {
       ix.prop == propEsc && ix.metric == metric && ix.dims == vec.length).toSeq
     if (hits.size != 1) return pqProbeFn(propEsc, metric, vec)
     val ix = hits.head
-    val probed = ix.centroids.zipWithIndex.map { case (c, i) =>
-      val score = metric match {
-        case "ip" => -c.zip(vec).map(t => t._1 * t._2).sum // max inner product
-        case _ => c.zip(vec).map(t => (t._1 - t._2) * (t._1 - t._2)).sum
-      }
-      (score, i)
-    }.sortBy(_._1).take(math.max(1, ivfProbes)).map(_._2).toSeq
+    val q = vec.toArray
+    val probed = graft.functions.Ivf.lowest(
+      ix.centroids.map(graft.functions.Ivf.score(metric, _, q)), math.max(1, ivfProbes))
     Some((labelIds(ix.label), ivfCandidateIds(ix, probed)))
   }
 
@@ -2111,24 +2107,6 @@ final class MutableGraph(spark: SparkSession) {
     (lid, base)
   }
 
-  /** Bulk vertex creation from a pre-assigned `id` column (constant props). */
-  private[cypher] def createVerticesFrom(label: String, ids: DataFrame,
-      props: Map[String, GValue]): Unit = {
-    // constant props: a unique constraint on one of them forbids >1 new row
-    // and any existing equal value
-    if (uniqueConstraints.exists(c => c._1 == label && props.contains(c._2))) {
-      checkUnique(label, props)
-      val n = ids.limit(2).count()
-      if (n > 1) throw new IllegalStateException(
-        s"unique constraint violation: bulk CREATE would duplicate a constrained $label property")
-    }
-    labelId(label)
-    val df = ids.select(col("id") +:
-      props.toSeq.sortBy(_._1).map { case (k, v) =>
-        gLit(v).as(Compiler.PropNames.esc(k)) }: _*)
-    appendRows("v", label, df)
-  }
-
   /** Append fully-formed vertex rows (id + ROW-VALUED property columns) —
     * the general path for CREATE/MERGE whose properties are expressions
     * over the input row, not constants.
@@ -2244,15 +2222,6 @@ final class MutableGraph(spark: SparkSession) {
     appendRows("e", label, df)
     id
   }
-
-  /** Bulk edge creation from a (start_id, end_id) DataFrame: ids allocated by
-    * deterministic row_number + driver offset — one shuffle, no id service.
-    */
-  def createEdgesFrom(label: String, pairs: DataFrame, props: Map[String, GValue]): Unit =
-    createEdgesRows(label, pairs.select(
-      Seq(col("start_id"), col("end_id")) ++
-        props.toSeq.sortBy(_._1).map { case (k, v) =>
-          gLit(v).as(Compiler.PropNames.esc(k)) }: _*))
 
   /** Append edges from (start_id, end_id, ROW-VALUED property columns) —
     * the general path for per-row CREATE/MERGE edge properties that are

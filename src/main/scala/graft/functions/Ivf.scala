@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) vector index — the Spark-native re-expression of the
@@ -16,9 +17,9 @@ import org.apache.spark.sql.functions._
   * streams.
   *
   * The exploded (id, pos, component) relation is built ONCE and
-  * localCheckpoint'd; every Lloyd iteration and the final index assignment
-  * reuse it — round-2 re-exploded per iteration, turning a 6-iteration
-  * build into ~20 full re-scans.
+  * localCheckpoint'd; the index assignment and the query probes reuse it.
+  * Lloyd's iterations run on the driver over one bounded sample
+  * ([[kmeansSampled]]).
   */
 object Ivf {
 
@@ -70,65 +71,35 @@ object Ivf {
       .select(col("__vid").as(idCol), col("cluster"))
   }
 
-  /** Deterministic Lloyd's k-means over a pre-flattened component relation:
-    * seeds are an id-stride sample (no RNG — reruns give identical
-    * centroids); each iteration collects only k×dim averages to the driver.
-    */
-  def kmeansFlat(flat: DataFrame, k: Int, iters: Int): Array[Array[Double]] = {
-    val ids = flat.select(col("__vid")).distinct()
-    val n = ids.count()
-    require(n >= k, s"need at least $k vectors")
-    val stride = math.max(n / k, 1)
-    var centroids: Array[Array[Double]] = flat
-      .filter(col("__vid") % stride === 0)
-      .groupBy(col("__vid")).agg(array_sort(collect_list(struct(col("pos"), col("v")))).as("pv"))
-      .orderBy(col("__vid")).limit(k)
-      .select(transform(col("pv"), _.getField("v")))
-      .collect().map(_.getSeq[Double](0).toArray)
-    for (_ <- 1 to iters) {
-      val assigned = assignmentsFlat(flat, centroids)
-      val means = flat.join(assigned, "__vid")
-        .groupBy(col("cluster"), col("pos"))
-        .agg(avg(col("v")).as("m"))
-        .collect()
-      val next = centroids.map(_.clone())
-      means.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
-      centroids = next // empty clusters keep their previous centroid
-    }
-    centroids
-  }
-
-  /** Compatibility wrapper: flatten then run [[kmeansFlat]]. */
-  def kmeans(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int): Array[Array[Double]] =
-    kmeansFlat(flatten(emb, idCol, vecCol), k, iters)
+  /** Index builds this JVM has run — lets PersistSpec assert that a
+    * reopened store USES its stored centroids instead of re-clustering. */
+  val kmeansBuilds = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Sampled k-means build — the reference's IVFFlat shape (ivfbuild.c
     * samples rows before clustering; lists=100 needs only ~50·k samples):
     * ONE deterministic id-stride sample collected to the driver, Lloyd's
     * run locally, and only the ASSIGNMENT pass stays distributed. At any
-    * corpus size the driver holds ≤ cap vectors; the distributed variant
-    * ([[kmeansFlat]]) spent 4 shuffle stages + a collect PER ITERATION on
-    * cluster-scheduling overhead.
+    * corpus size the driver holds ≤ cap vectors.
     */
-  /** Index builds this JVM has run — lets PersistSpec assert that a
-    * reopened store USES its stored centroids instead of re-clustering. */
-  val kmeansBuilds = new java.util.concurrent.atomic.AtomicLong(0)
-
   def kmeansSampled(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int, cap: Int = 4096, nHint: Option[Long] = None): Array[Array[Double]] = {
     kmeansBuilds.incrementAndGet()
     val n = nHint.getOrElse(emb.count()) // callers pass the session-cached count
     require(n >= k, s"need at least $k vectors")
-    val stride = math.max(n / cap, 1)
-    val sample: Array[Array[Double]] = emb
-      .filter(col(idCol) % stride === 0)
+    lloyd(strideSample(emb, idCol, vecCol, n, cap), k, iters)
+  }
+
+  /** Up to `cap` vectors of `emb` on the driver as doubles: the rows whose
+    * id is a multiple of n / cap, lowest ids first (no RNG — reruns sample
+    * the same rows); `n` is the row count of `emb`.
+    */
+  private[graft] def strideSample(emb: DataFrame, idCol: String, vecCol: String,
+      n: Long, cap: Int): Array[Array[Double]] =
+    emb.filter(col(idCol) % math.max(n / cap, 1) === 0)
       .orderBy(col(idCol))
       .limit(cap)
       .select(transform(col(vecCol), _.cast("double")))
       .collect().map(_.getSeq[Double](0).toArray)
-    lloyd(sample, k, iters)
-  }
 
   /** Deterministic driver-side Lloyd over an already-collected sample —
     * shared by kmeansSampled and the PQ codebook build (which samples ONCE
@@ -144,14 +115,7 @@ object Ivf {
       val sums = Array.fill(k)(new Array[Double](dim))
       val cnt = new Array[Long](k)
       for (v <- sample) {
-        var best = 0; var bd = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var d = 0.0; var i = 0
-          while (i < dim) { val x = v(i) - cent(c)(i); d += x * x; i += 1 }
-          if (d < bd) { bd = d; best = c }
-          c += 1
-        }
+        val best = nearest(v, cent)
         var i = 0
         while (i < dim) { sums(best)(i) += v(i); i += 1 }
         cnt(best) += 1
@@ -161,6 +125,58 @@ object Ivf {
     }
     cent
   }
+
+  // ------------------------------------------------------------------
+  // Driver kernels: every driver-side distance of the vector layer. Each
+  // sum is an ascending left fold, so a driver path sees the doubles of
+  // its Catalyst twin (`aggregate(zip_with(...))`, a left fold from 0.0).
+
+  /** Squared L2 distance between `v[off, off + c.length)` and `c`. */
+  def sqDist(v: Array[Double], c: Array[Double], off: Int = 0): Double = {
+    var d = 0.0; var j = 0
+    while (j < c.length) { val x = v(off + j) - c(j); d += x * x; j += 1 }
+    d
+  }
+
+  /** `c` · `v[off, off + c.length)`. The fold starts at −0.0, the additive
+    * identity, so a sum of −0.0 terms stays −0.0 as Scala's `sum` gives it.
+    */
+  def dot(c: Array[Double], v: Array[Double], off: Int = 0): Double = {
+    var d = -0.0; var j = 0
+    while (j < c.length) { d += c(j) * v(off + j); j += 1 }
+    d
+  }
+
+  /** A centroid's score against `v[off, off + c.length)`, lower is nearer:
+    * the negative inner product for metric "ip", else squared L2. */
+  def score(metric: String, c: Array[Double], v: Array[Double], off: Int = 0): Double =
+    if (metric == "ip") -dot(c, v, off) else sqDist(v, c, off)
+
+  /** Index of the centroid nearest `v`; a distance tie keeps the lower
+    * index (the `min_by(struct(dist, cluster))` order). */
+  def nearest(v: Array[Double], cents: Array[Array[Double]]): Int = {
+    var best = 0; var bd = Double.MaxValue; var c = 0
+    while (c < cents.length) {
+      val d = sqDist(v, cents(c))
+      if (d < bd) { bd = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Indexes of the `n` lowest `scores`, lowest first, ties by index. */
+  def lowest(scores: Array[Double], n: Int): Seq[Int] =
+    scores.zipWithIndex.sorted.take(n).map(_._2).toSeq
+
+  /** The `n` centroids nearest `v` (the probed lists), nearest first. */
+  def probes(v: Array[Double], cents: Array[Array[Double]], n: Int): Seq[Int] =
+    lowest(cents.map(sqDist(v, _)), n)
+
+  /** The ADC lookup table of `q`: `t(sub)(code)` is the score of the
+    * query's `sub` slice against codeword `code` of that subspace. */
+  def adcTable(q: Array[Double], books: Array[Array[Array[Double]]],
+      metric: String = "l2"): Array[Array[Double]] =
+    Array.tabulate(books.length)(si => books(si).map(c => score(metric, c, q, si * c.length)))
 
   // ------------------------------------------------------------------
   // Product quantization (PQ/ADC — Jégou et al. 2011) as a DDL-built,
@@ -180,14 +196,14 @@ object Ivf {
     kmeansBuilds.incrementAndGet()
     val n = nHint.getOrElse(emb.count())
     require(n >= k, s"need at least $k vectors")
-    val stride = math.max(n / cap, 1)
-    val sample: Array[Array[Double]] = emb
-      .filter(col(idCol) % stride === 0)
-      .orderBy(col(idCol))
-      .limit(cap)
-      .select(transform(col(vecCol), _.cast("double")))
-      .collect().map(_.getSeq[Double](0).toArray)
-    val dsub = dims / m
+    subspaceBooks(strideSample(emb, idCol, vecCol, n, cap), m, k, iters)
+  }
+
+  /** One Lloyd codebook of `k` codewords per each of `m` equal slices of
+    * the sample's vectors. */
+  private[graft] def subspaceBooks(sample: Array[Array[Double]], m: Int, k: Int,
+      iters: Int): Array[Array[Array[Double]]] = {
+    val dsub = sample.head.length / m
     Array.tabulate(m) { s =>
       lloyd(sample.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub)),
         k, iters)
@@ -236,17 +252,9 @@ object Ivf {
       metric: String, shortlist: Int): DataFrame = {
     val spark = codes.sparkSession
     import spark.implicits._
-    val dsub = codebooks(0)(0).length
-    val lut = codebooks.zipWithIndex.flatMap { case (cb, s) =>
-      val q = vec.slice(s * dsub, (s + 1) * dsub)
-      cb.zipWithIndex.map { case (cent, code) =>
-        val d = metric match {
-          case "ip" => -cent.zip(q).map(t => t._1 * t._2).sum
-          case _    => cent.zip(q).map(t => (t._1 - t._2) * (t._1 - t._2)).sum
-        }
-        (s, code, d)
-      }
-    }.toSeq.toDF("sub", "code", "qd")
+    val lut = adcTable(vec.toArray, codebooks, metric).zipWithIndex.toSeq.flatMap {
+      case (t, s) => t.toSeq.zipWithIndex.map { case (d, code) => (s, code, d) }
+    }.toDF("sub", "code", "qd")
     codes.join(broadcast(lut), Seq("sub", "code"))
       .groupBy(col(idCol)).agg(sum(col("qd")).as("adc"))
       .orderBy(col("adc"), col(idCol)).limit(shortlist)
@@ -263,7 +271,6 @@ object Ivf {
       queries: DataFrame, qIdCol: String, qVecCol: String,
       centroids: Array[Array[Double]], nprobe: Int, topK: Int,
       flatOpt: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val flat = flatOpt.getOrElse(flatten(emb, idCol, vecCol))
     val indexed = emb
       .join(assignmentsFlat(flat, centroids).select(col("__vid").as(idCol), col("cluster")), idCol)
@@ -274,12 +281,20 @@ object Ivf {
       .filter(col("__rn") <= nprobe)
       .select(col("__vid").as("qid"), col("cluster"))
       .join(queries.select(col(qIdCol).as("qid"), col(qVecCol).as("qv")), "qid")
-    val scored = probes.join(indexed, "cluster")
+    topByCosine(probes.join(indexed, "cluster")
       .filter(col("qid") =!= col("cid"))
-      .withColumn("cos", round(VectorFns.cosineSimilarity(col("qv"), col("cv")), 6))
+      .withColumn("cos", round(VectorFns.cosineSimilarity(col("qv"), col("cv")), 6)), topK)
+  }
+
+  /** The exact top-k tail of every distributed ANN pipeline: each query's
+    * scored `(qid, cid, cos)` candidates ranked by (cos desc, cid), the
+    * first `k` kept as `(qid, rank, cid, cos)` ordered by qid, rank, with
+    * `row_number`'s int rank.
+    */
+  def topByCosine(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
     scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("cid"), col("cos"))
       .orderBy(col("qid"), col("rank"))
   }

@@ -269,8 +269,6 @@ object NetworkFns {
     family(a) === family(b) && masklen(b) < masklen(a) &&
       a.getField("hi").bitwiseAND(maskHi(effLen(b))) === netHi(b) &&
       a.getField("lo").bitwiseAND(maskLo(effLen(b))) === netLo(b)
-  def containsOrEq(a: Column, b: Column): Column = containedInOrEq(b, a)
-  def containsNet(a: Column, b: Column): Column = containedIn(b, a)
   /** `a && b` — networks overlap (either contains the other). */
   def inetOverlap(a: Column, b: Column): Column =
     containedInOrEq(a, b) || containedInOrEq(b, a)

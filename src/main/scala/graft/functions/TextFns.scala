@@ -97,7 +97,7 @@ object TextFns {
       struct(lit(i).as("chunk"),
         shiftright(sig, i * 16).bitwiseAND(0xFFFF).as("value"))): _*)
 
-  /** Quality features (length / punctuation / stopword / word-length),
+  /** Quality features (length / stopword ratio),
     * the classic heuristic text-quality scoring surface.
     */
   val Stopwords: Seq[String] = Seq("the", "a", "an", "and", "or", "of", "to",
@@ -106,11 +106,6 @@ object TextFns {
   def stopwordRatio(text: Column): Column = {
     val w = tokens(text)
     size(filter(w, x => x.isin(Stopwords: _*))) / size(w).cast("double")
-  }
-
-  def meanWordLen(text: Column): Column = {
-    val w = tokens(text)
-    aggregate(w, lit(0L), (acc, x) => acc + length(x)) / size(w).cast("double")
   }
 
   /** Composite quality score in [0,1] — monotone in doc length (saturating),

@@ -140,7 +140,6 @@ object PropertyGraph {
 
   def packId(labelId: Int, entryId: Long): Long = (labelId.toLong << 48) | entryId
   def labelOf(id: Long): Int = (id >>> 48).toInt
-  def entryOf(id: Long): Long = id & EntryIdMask
 
   /** Column form of labelOf — `(id >> 48)`, prunable in scans. */
   def labelOfCol(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

@@ -35,11 +35,6 @@ sealed trait GValue {
     case GInterval(m, d, us) => s"P${m}M${d}DT${us / 1000000.0}S"
   }
 
-  def truthy: Option[Boolean] = this match {
-    case GBool(b) => Some(b)
-    case GNull    => None
-    case _        => None
-  }
 }
 
 case object GNull extends GValue

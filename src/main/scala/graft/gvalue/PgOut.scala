@@ -188,23 +188,6 @@ object PgOut {
     pgTime(microsOfDay) + os
   }
 
-  // ---- tsvector ---------------------------------------------------------
-
-  /** One tsvector lexeme with PG display semantics: positions sorted with
-    * weight letters (A/B/C shown, default D omitted). `pos` and `w`
-    * (0=D..3=A) are parallel.
-    */
-  def tsLexeme(lex: String, pos: Seq[Int], w: Seq[Int]): String = {
-    val quoted = "'" + lex.replace("'", "''") + "'"
-    if (pos.isEmpty) quoted
-    else {
-      val entries = pos.zip(w).sortBy(_._1).map { case (p, wt) =>
-        p.toString + (wt match { case 3 => "A"; case 2 => "B"; case 1 => "C"; case _ => "" })
-      }
-      quoted + ":" + entries.mkString(",")
-    }
-  }
-
   // ---- gvalue -----------------------------------------------------------
 
   /** gtype_out: the jsonb-style rendering used in containers and for

@@ -21,8 +21,6 @@ object Multimodal {
     val FrameBytes = 64
     def frames(payload: Array[Byte]): Iterator[Array[Byte]] =
       payload.grouped(FrameBytes)
-    def decodeFrame(frame: Array[Byte]): Array[Float] = // stub "pixels"
-      frame.map(b => (b & 0xFF) / 255.0f)
   }
 
   /** documents → (doc_id, payload BINARY, meta STRUCT) — the canonical

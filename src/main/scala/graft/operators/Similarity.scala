@@ -1,8 +1,10 @@
 package graft.operators
 
 import graft.Tables.T
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.{Ivf, VectorFns}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Similarity search over the `embeddings` table (ArrayType(FloatType),
   * 64-dim): brute-force cosine top-k as the exactness baseline, and a
@@ -10,57 +12,13 @@ import org.apache.spark.sql.functions._
   * analog — reference: /root/reference/src/backend/access/ivfflat.h, where
   * clustering prunes the candidate set; here hyperplane buckets do).
   *
-  * Vector math is `zip_with`/`aggregate` over array columns — codegen'd,
-  * no UDFs.
+  * Vector math is `zip_with`/`aggregate` over array columns (`VectorFns`)
+  * — codegen'd, no UDFs. Below the driver-state cap every ANN query (s1,
+  * s3, s4, s8) is served on the driver by one kernel: [[loadCorpus]] holds
+  * the corpus, [[rerankLocal]] ranks a query's candidates by exact cosine,
+  * and each serve supplies only its candidate rule.
   */
 object Similarity {
-
-  /** dot(a, b) with double accumulation. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
-
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(a, b, (x, y) => {
-      val d = x.cast("double") - y.cast("double")
-      d * d
-    }), lit(0.0), (acc, x) => acc + x))
-
-  /** Nothing LSH-side needs catalog persistence (contrast the IVF/PQ DDL
-    * indexes, r12): planes derive from xxhash64(plane, dim) — pure
-    * constants, identical in every session — so "the index" is free to
-    * reconstruct; only derived bucket keys cost anything, and those are
-    * recomputed from the current data like the IVF assignments.
-    */
-  /** Deterministic pseudo-random hyperplane component for (plane, dim):
-    * xxhash64 → uniform in [-1, 1). */
-  private def planeComponent(plane: Int, dim: Column): Column =
-    (xxhash64(lit(plane), dim).cast("double") / lit(Long.MaxValue.toDouble))
-
-  /** Multi-table sign-LSH keys: `tables` independent hash tables of
-    * `planesPerTable` hyperplane sign bits each. A query's candidates are the
-    * union of its buckets across tables — for cosine-similar pairs
-    * (P[same side] = 1 − θ/π per plane), miss probability is
-    * (1 − p^planes)^tables, tunable to ~0 while each table stays coarse
-    * enough to keep buckets populated. Same banding trick as MinHash-LSH.
-    */
-  def lshBucketKeys(vec: Column, planesPerTable: Int, tables: Int): Column =
-    array((0 until tables).map { t =>
-      val bits = (0 until planesPerTable).map { p =>
-        val plane = t * planesPerTable + p
-        val proj = aggregate(
-          zip_with(vec, sequence(lit(0), size(vec) - 1),
-            (x, i) => x.cast("double") * planeComponent(plane, i)),
-          lit(0.0), (acc, x) => acc + x)
-        when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-      }
-      struct(lit(t).as("table"),
-        bits.reduce((a, b) => a.bitwiseOR(b)).as("bucket"))
-    }: _*)
 
   private val TopK = 3
   private val NQuery = 20
@@ -116,8 +74,10 @@ object Similarity {
     // HALF_UP round to 6, (cos desc, cid) tie-break), so the hash-checked
     // oracle rows see the same doubles. Above the cap: the distributed
     // scan below, unchanged.
-    if (serveLocal(s, dir))
-      return bruteTopKLocal(s, dir)
+    if (serveLocal(s, dir)) {
+      val vecs = loadCorpus(s, dir)
+      return longRank(rerankLocal(s, vecs)(_ => vecs.keySet().iterator().asScala))
+    }
     val emb = T(s, dir, "embeddings")
     // Flat-column pair scoring (r16, the d5 trick — guide §1.2 per-task
     // work): `aggregate(zip_with(...))` evaluates interpreted per element,
@@ -136,50 +96,59 @@ object Similarity {
     val dotQC = (1 to dim).map(i => col(s"q$i") * col(s"c$i")).reduce(_ + _)
     val qn = sqrt((1 to dim).map(i => col(s"q$i") * col(s"q$i")).reduce(_ + _))
     val cn = sqrt((1 to dim).map(i => col(s"c$i") * col(s"c$i")).reduce(_ + _))
-    import org.apache.spark.sql.expressions.Window
-    val scored = q.join(cand, col("qid") =!= col("cid"))
-      .withColumn("cos", round(dotQC / (qn * cn), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("cid"), col("cos"))
-      .orderBy(col("qid"), col("rank"))
+    longRank(Ivf.topByCosine(q.join(cand, col("qid") =!= col("cid"))
+      .withColumn("cos", round(dotQC / (qn * cn), 6)), TopK))
   }
 
-  /** Driver-side exact brute force — see the header of [[bruteTopK]]. */
-  private def bruteTopKLocal(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
+  /** s1, s3 and s8 emit `rank` as long; s4 keeps `row_number`'s int. */
+  private def longRank(df: DataFrame): DataFrame =
+    df.withColumn("rank", col("rank").cast("long"))
+
+  private type Corpus = java.util.LinkedHashMap[Long, Array[Double]]
+
+  /** The corpus on the driver in scan order, vec_id → its vector as
+    * doubles; unit-normalized when `unit` (s8's ADC runs on unit vectors),
+    * x / sqrt(Σx²) as the Catalyst transform computes it.
+    */
+  private def loadCorpus(s: SparkSession, dir: String, unit: Boolean = false): Corpus = {
     val raw = T(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding")).collect()
-    val vecs = new java.util.LinkedHashMap[Long, Array[Double]](raw.length * 2)
+    val vecs = new Corpus(raw.length * 2)
     raw.foreach { r =>
-      val xs = r.getSeq[Number](1)
-      val v = new Array[Double](xs.length)
-      var i = 0
-      while (i < v.length) { v(i) = xs(i).doubleValue(); i += 1 }
-      vecs.put(r.getLong(0), v)
+      val v = r.getSeq[Number](1).map(_.doubleValue()).toArray
+      vecs.put(r.getLong(0), if (!unit) v else {
+        val nrm = math.sqrt(v.foldLeft(0.0)((acc, x) => acc + x * x))
+        v.map(_ / nrm)
+      })
     }
-    import scala.jdk.CollectionConverters._
+    vecs
+  }
+
+  /** The driver ANN kernel, the local twin of [[Ivf.topByCosine]]: for
+    * each query vector (vec_id < NQuery, ascending) the candidates
+    * `cands(qid)` supplies, the query itself left out, are
+    * ranked by exact cosine — ascending left-fold dot and norms, rounded
+    * half-up to 6 — with the (cos desc, cid) tie-break, and the first TopK
+    * kept as (qid, rank, cid, cos) rows with an int rank.
+    */
+  private def rerankLocal(s: SparkSession, vecs: Corpus)(
+      cands: Long => IterableOnce[Long]): DataFrame = {
+    import s.implicits._
     val qids = vecs.keySet().asScala.toArray.filter(_ < NQuery).sorted
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-    for (qid <- qids) {
+    qids.toSeq.flatMap { qid =>
       val qv = vecs.get(qid)
-      val top = vecs.keySet().asScala.toSeq.collect {
-        case cid if cid != qid =>
-          val cv = vecs.get(cid)
-          var d = 0.0; var na = 0.0; var nb = 0.0; var j = 0
-          while (j < qv.length) {
-            d += qv(j) * cv(j); na += qv(j) * qv(j); nb += cv(j) * cv(j); j += 1
-          }
-          val cos = BigDecimal(d / (math.sqrt(na) * math.sqrt(nb)))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          (cos, cid)
-      }.sortBy { case (cos, cid) => (-cos, cid) }.take(TopK)
-      top.zipWithIndex.foreach { case ((cos, cid), i) =>
-        out += ((qid, (i + 1).toLong, cid, cos))
-      }
-    }
-    out.toSeq.toDF("qid", "rank", "cid", "cos")
+      cands(qid).iterator.filter(_ != qid).map { cid =>
+        val cv = vecs.get(cid)
+        var d = 0.0; var na = 0.0; var nb = 0.0; var j = 0
+        while (j < qv.length) {
+          d += qv(j) * cv(j); na += qv(j) * qv(j); nb += cv(j) * cv(j); j += 1
+        }
+        val cos = BigDecimal(d / (math.sqrt(na) * math.sqrt(nb)))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        (cos, cid)
+      }.toSeq.sortBy { case (cos, cid) => (-cos, cid) }.take(TopK).zipWithIndex
+        .map { case ((cos, cid), i) => (qid, i + 1, cid, cos) }
+    }.toDF("qid", "rank", "cid", "cos")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -189,20 +158,7 @@ object Similarity {
     // pairwise L2 distance stats per label cluster (uses typed metadata).
     // GATE-ONLY: all-pairs per label by construction — the small-scale
     // exactness baseline; the 100 TB path is s5's sampled twin below.
-    "s2_l2_within_label" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val a = emb.select(col("vec_id").as("ida"), col("embedding").as("va"),
-        col("label").as("la"))
-      val b = emb.select(col("vec_id").as("idb"), col("embedding").as("vb"),
-        col("label").as("lb"))
-      a.join(b, col("la") === col("lb") && col("ida") < col("idb"))
-        .select(col("la").as("label"), l2Distance(col("va"), col("vb")).as("d"))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n_pairs"),
-          round(avg(col("d")), 4).as("avg_dist"),
-          round(min(col("d")), 4).as("min_dist"))
-        .orderBy(col("label"))
-    }),
+    "s2_l2_within_label" -> ((s, dir) => pairStats(T(s, dir, "embeddings"))),
 
     // SCALE TWIN of s2: vectors thin per label through a deterministic
     // md5 bucket (the d7 sampling trick on vec_id — membership is a pure
@@ -215,19 +171,7 @@ object Similarity {
       val bucket = conv(substring(
         md5(concat(lit("vsmp:"), col("vec_id").cast("string"))), 1, 15), 16, 10)
         .cast("long") % 1000
-      val sampled = emb.filter(bucket < SampleRate)
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val a = sampled.select(col("vec_id").as("ida"), col("embedding").as("va"),
-        col("label").as("la"))
-      val b = sampled.select(col("vec_id").as("idb"), col("embedding").as("vb"),
-        col("label").as("lb"))
-      a.join(b, col("la") === col("lb") && col("ida") < col("idb"))
-        .select(col("la").as("label"), l2Distance(col("va"), col("vb")).as("d"))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n_pairs"),
-          round(avg(col("d")), 4).as("avg_dist"),
-          round(min(col("d")), 4).as("min_dist"))
-        .orderBy(col("label"))
+      pairStats(emb.filter(bucket < SampleRate))
     }),
 
     // ANN via multi-table hyperplane LSH: candidate set = union of bucket
@@ -280,6 +224,22 @@ object Similarity {
     "s9_pq_recall_gate" -> ((s, dir) => recallGate(s, dir, "s8_pq_adc_ann", 0.8))
   )
 
+  /** Per-label count, mean and min (rounded to 4) of the L2 distances of
+    * every vector pair sharing a label. */
+  private def pairStats(emb: DataFrame): DataFrame = {
+    val a = emb.select(col("vec_id").as("ida"), col("embedding").as("va"),
+      col("label").as("la"))
+    val b = emb.select(col("vec_id").as("idb"), col("embedding").as("vb"),
+      col("label").as("lb"))
+    a.join(b, col("la") === col("lb") && col("ida") < col("idb"))
+      .select(col("la").as("label"), VectorFns.l2Distance(col("va"), col("vb")).as("d"))
+      .groupBy(col("label"))
+      .agg(count(lit(1)).as("n_pairs"),
+        round(avg(col("d")), 4).as("avg_dist"),
+        round(min(col("d")), 4).as("min_dist"))
+      .orderBy(col("label"))
+  }
+
   /** Relational LSH build + probe — the 100 TB path (explode components
     * once, broadcast-join the (plane, pos, component) hyperplane table,
     * sum projections per (vector, plane), fold sign bits into a bucket per
@@ -292,7 +252,7 @@ object Similarity {
       // read (cheaper than an eager materialization job at this size, and
       // at scale the scans prune to the referenced columns anyway)
       val emb = T(s, dir, "embeddings")
-      val flat = graft.functions.Ivf.flatten(emb, "vec_id", "embedding")
+      val flat = Ivf.flatten(emb, "vec_id", "embedding")
       val spark = s
       // 1024 covers any plausible embedding width (the inner join on pos
       // keeps only real components, so over-provisioning is free — 32k
@@ -301,7 +261,7 @@ object Similarity {
       val planes = broadcast(
         spark.range(0, tables.toLong * planesPerTable).toDF("plane")
           .crossJoin(spark.range(0, maxDim.toLong).toDF("pos"))
-          // int/int hash args replicate planeComponent(plane: Int, dim: Int)
+          // int/int hash args: the local serve's XXH64.hashInt chain
           .select(col("plane").cast("int").as("plane"), col("pos").cast("int").as("pos"),
             (xxhash64(col("plane").cast("int"), col("pos").cast("int")).cast("double") /
               lit(Long.MaxValue.toDouble)).as("comp")))
@@ -319,17 +279,16 @@ object Similarity {
       val pairs = q.join(cand, Seq("table", "bucket"))
         .filter(col("qid") =!= col("cid"))
         .select(col("qid"), col("cid")).distinct()
-      val scored = pairs
-        .join(emb.select(col("vec_id").as("qid"), col("embedding").as("qv")), "qid")
-        .join(emb.select(col("vec_id").as("cid"), col("embedding").as("cv")), "cid")
-        .withColumn("cos", round(cosine(col("qv"), col("cv")), 6))
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("qid"), col("rank").cast("long").as("rank"), col("cid"), col("cos"))
-        .orderBy(col("qid"), col("rank"))
+      rerankDistributed(pairs, emb)
   }
+
+  /** Exact rerank of candidate (qid, cid) pairs: both vectors joined in,
+    * cosine rounded to 6, the top TopK per query with a long rank. */
+  private def rerankDistributed(pairs: DataFrame, emb: DataFrame): DataFrame =
+    longRank(Ivf.topByCosine(pairs
+      .join(emb.select(col("vec_id").as("qid"), col("embedding").as("qv")), "qid")
+      .join(emb.select(col("vec_id").as("cid"), col("embedding").as("cv")), "cid")
+      .withColumn("cos", round(VectorFns.cosineSimilarity(col("qv"), col("cv")), 6)), TopK))
 
   /** Driver-state gate for the local ANN serve paths (s1/s3/s4/s8): a
     * corpus of at most [[graft.Local]]'s row cap of vectors. At the default
@@ -344,150 +303,59 @@ object Similarity {
   /** Local LSH serve (r16): identical bucket-key math to
     * [[lshAnnDistributed]] — same xxhash64(plane, pos) hyperplane
     * components (Spark's XXH64 with the xxhash64 seed 42), same sign-bit
-    * fold, same candidate rule (any shared (table, bucket), qid ≠ cid),
-    * same exact cosine rerank rounded half-up to 6 with the same
-    * (cos desc, cid) tie-break — evaluated driver-side because within
-    * the local-serve cap the arithmetic is milliseconds and every
-    * one of the distributed plan's stages is pure overhead.
+    * fold, same candidate rule (any shared (table, bucket)) — evaluated
+    * driver-side because within the local-serve cap the arithmetic is
+    * milliseconds and every one of the distributed plan's stages is pure
+    * overhead.
     */
   private def lshServeLocal(s: SparkSession, dir: String,
       planesPerTable: Int, tables: Int): DataFrame = {
-    import s.implicits._
-    val nPlanes = planesPerTable * tables
-    val raw = T(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding")).collect()
-    val vecs = new java.util.LinkedHashMap[Long, Array[Double]](raw.length * 2)
-    raw.foreach { r =>
-      val xs = r.getSeq[Number](1)
-      val v = new Array[Double](xs.length)
-      var i = 0
-      while (i < v.length) { v(i) = xs(i).doubleValue(); i += 1 }
-      vecs.put(r.getLong(0), v)
-    }
-    val dim = if (raw.isEmpty) 0 else vecs.values.iterator().next().length
+    val vecs = loadCorpus(s, dir)
+    val dim = if (vecs.isEmpty) 0 else vecs.values.iterator().next().length
     // comp(plane, pos) = xxhash64(int plane, int pos) / Long.MaxValue —
-    // exactly planeComponent's chain: seed 42, then one hashInt per arg
-    val comp = Array.tabulate(nPlanes, dim) { (plane, pos) =>
+    // the distributed plane table's chain: seed 42, then one hashInt per arg
+    val comp = Array.tabulate(planesPerTable * tables, dim) { (plane, pos) =>
       val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(pos,
         org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(plane, 42L))
       h.toDouble / Long.MaxValue.toDouble
     }
-    import scala.jdk.CollectionConverters._
     // (table, bucket) keys per vector — sign bits of the 4 plane projections
-    val keysOf = new java.util.LinkedHashMap[Long, Array[Long]]()
-    vecs.entrySet().asScala.foreach { e =>
-      val v = e.getValue
-      val buckets = Array.tabulate(tables) { t =>
-        var b = 0L; var p = 0
-        while (p < planesPerTable) {
-          val plane = t * planesPerTable + p
-          var proj = 0.0; var i = 0
-          while (i < v.length) { proj += v(i) * comp(plane)(i); i += 1 }
-          if (proj >= 0) b |= (1L << p)
-          p += 1
+    val keysOf = new java.util.HashMap[Long, Array[Long]]()
+    vecs.forEach { (id, v) =>
+      keysOf.put(id, Array.tabulate(tables) { t =>
+        (0 until planesPerTable).foldLeft(0L) { (b, p) =>
+          if (Ivf.dot(comp(t * planesPerTable + p), v) >= 0) b | (1L << p) else b
         }
-        b
-      }
-      keysOf.put(e.getKey, buckets)
+      })
     }
     // candidates: any shared (table, bucket); inverted index per table
-    val byBucket = Array.fill(tables)(new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]())
-    keysOf.entrySet().asScala.foreach { e =>
-      var t = 0
-      while (t < tables) {
-        byBucket(t).computeIfAbsent(e.getValue()(t),
-          _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += e.getKey
-        t += 1
-      }
+    val byBucket = Array.fill(tables)(
+      new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]())
+    keysOf.forEach { (id, keys) =>
+      (0 until tables).foreach(t => byBucket(t).computeIfAbsent(keys(t),
+        _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += id)
     }
-    val qids = vecs.keySet().asScala.toArray.filter(_ < NQuery).sorted
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-    for (qid <- qids) {
-      val qv = vecs.get(qid)
-      val cands = scala.collection.mutable.SortedSet.empty[Long]
-      var t = 0
-      while (t < tables) {
-        val mates = byBucket(t).get(keysOf.get(qid)(t))
-        if (mates != null) mates.foreach(c => if (c != qid) cands += c)
-        t += 1
-      }
-      val top = cands.toSeq.map { cid =>
-        val cv = vecs.get(cid)
-        var d = 0.0; var na = 0.0; var nb = 0.0; var j = 0
-        while (j < qv.length) {
-          d += qv(j) * cv(j); na += qv(j) * qv(j); nb += cv(j) * cv(j); j += 1
-        }
-        val cos = BigDecimal(d / (math.sqrt(na) * math.sqrt(nb)))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        (cos, cid)
-      }.sortBy { case (cos, cid) => (-cos, cid) }.take(TopK)
-      top.zipWithIndex.foreach { case ((cos, cid), i) =>
-        out += ((qid, (i + 1).toLong, cid, cos))
-      }
-    }
-    out.toSeq.toDF("qid", "rank", "cid", "cos")
+    longRank(rerankLocal(s, vecs) { qid =>
+      (0 until tables).flatMap(t =>
+        Option(byBucket(t).get(keysOf.get(qid)(t))).getOrElse(Nil)).distinct
+    })
   }
 
   /** Local IVF serve (r16): identical index + probe semantics to the
     * distributed [[ivfQuery]]/annSearch pipeline — same sampled-k-means
     * centroids (the caller passes them), same nearest-list assignment with
-    * the (dist, cluster) tie-break, same nprobe nearest-lists probe, same
-    * exact cosine rerank rounded half-up to 6 with the (cos desc, cid)
-    * tie-break — evaluated driver-side below the local-serve cap.
+    * the (dist, cluster) tie-break, same nprobe nearest-lists probe —
+    * evaluated driver-side below the local-serve cap.
     */
   private def ivfServeLocal(s: SparkSession, dir: String,
       cents: Array[Array[Double]], nprobe: Int): DataFrame = {
-    import s.implicits._
-    val raw = T(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding")).collect()
-    val vecs = new java.util.LinkedHashMap[Long, Array[Double]](raw.length * 2)
-    raw.foreach { r =>
-      val xs = r.getSeq[Number](1)
-      val v = new Array[Double](xs.length)
-      var i = 0
-      while (i < v.length) { v(i) = xs(i).doubleValue(); i += 1 }
-      vecs.put(r.getLong(0), v)
+    val vecs = loadCorpus(s, dir)
+    val listOf = new java.util.HashMap[Long, Int](vecs.size * 2)
+    vecs.forEach((id, v) => listOf.put(id, Ivf.nearest(v, cents)))
+    rerankLocal(s, vecs) { qid =>
+      val probed = Ivf.probes(vecs.get(qid), cents, nprobe).toSet
+      vecs.keySet().iterator().asScala.filter(cid => probed(listOf.get(cid)))
     }
-    import scala.jdk.CollectionConverters._
-    def distTo(v: Array[Double], c: Array[Double]): Double = {
-      var d = 0.0; var j = 0
-      while (j < v.length) { val x = v(j) - c(j); d += x * x; j += 1 }
-      d
-    }
-    // nearest-centroid assignment, (dist, cluster) tie-break = min_by struct
-    val listOf = new java.util.HashMap[Long, Int](raw.length * 2)
-    vecs.entrySet().asScala.foreach { e =>
-      val v = e.getValue
-      var best = 0; var bd = Double.MaxValue; var c = 0
-      while (c < cents.length) {
-        val d = distTo(v, cents(c))
-        if (d < bd) { bd = d; best = c } // strict <: dist tie keeps lower c
-        c += 1
-      }
-      listOf.put(e.getKey, best)
-    }
-    val qids = vecs.keySet().asScala.toArray.filter(_ < NQuery).sorted
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Double)]
-    for (qid <- qids) {
-      val qv = vecs.get(qid)
-      val probed = cents.indices.map(l => (distTo(qv, cents(l)), l))
-        .sorted.take(nprobe).map(_._2).toSet
-      val top = vecs.keySet().asScala.toSeq.collect {
-        case cid if cid != qid && probed(listOf.get(cid)) =>
-          val cv = vecs.get(cid)
-          var d = 0.0; var na = 0.0; var nb = 0.0; var j = 0
-          while (j < qv.length) {
-            d += qv(j) * cv(j); na += qv(j) * qv(j); nb += cv(j) * cv(j); j += 1
-          }
-          val cos = BigDecimal(d / (math.sqrt(na) * math.sqrt(nb)))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          (cos, cid)
-      }.sortBy { case (cos, cid) => (-cos, cid) }.take(TopK)
-      top.zipWithIndex.foreach { case ((cos, cid), i) =>
-        out += ((qid, i + 1, cid, cos))
-      }
-    }
-    out.toSeq.toDF("qid", "rank", "cid", "cos")
   }
 
   private val PqM = 8    // subspaces
@@ -561,35 +429,19 @@ object Similarity {
     s"$root/pqr_m${PqM}_k${PqK}_${java.lang.Long.toHexString(fp)}"
   }
 
-  /** Local IVFADC serve (r16): identical probe/ADC/rerank semantics to
-    * the distributed pipeline in [[pqSearch]] — same coarse probes
-    * (nearest nprobe lists, ties by list id), same shortlist order
-    * (adc asc, vid asc), same exact cosine rerank rounded half-up to 6 —
-    * just evaluated driver-side from the collected sidecar, because within
-    * the local-serve cap the arithmetic is milliseconds and
-    * every one of the distributed plan's ~15 stages is pure overhead.
+  /** Local IVFADC serve (r16): identical probe/ADC semantics to the
+    * distributed pipeline in [[pqSearch]] — same coarse probes (nearest
+    * nprobe lists, ties by list id), same shortlist order (adc asc, vid
+    * asc) — just evaluated driver-side from the collected sidecar, because
+    * within the local-serve cap the arithmetic is milliseconds and every
+    * one of the distributed plan's ~15 stages is pure overhead.
     */
   private def pqServeLocal(s: SparkSession, dir: String,
-      cents: Array[Array[Double]], books: Seq[Array[Array[Double]]],
-      codes: DataFrame, sub: Int, nprobe: Int, shortlistN: Int): DataFrame = {
-    import s.implicits._
-    val dim = sub * PqM
-    // normalized corpus, driver-side — the same double math as the
-    // Catalyst transform (x.toDouble / sqrt(Σ x.toDouble²))
-    val raw = T(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding")).collect()
-    val vecs = new java.util.HashMap[Long, Array[Double]](raw.length * 2)
-    raw.foreach { r =>
-      val xs = r.getSeq[Number](1)
-      val v = new Array[Double](xs.length)
-      var i = 0; var ss = 0.0
-      while (i < v.length) { v(i) = xs(i).doubleValue(); ss += v(i) * v(i); i += 1 }
-      val nrm = math.sqrt(ss)
-      i = 0; while (i < v.length) { v(i) /= nrm; i += 1 }
-      vecs.put(r.getLong(0), v)
-    }
-    val listOf = new java.util.HashMap[Long, Int](raw.length * 2)
-    val codeOf = new java.util.HashMap[Long, Array[Int]](raw.length * 2)
+      cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
+      codes: DataFrame, nprobe: Int, shortlistN: Int): DataFrame = {
+    val vecs = loadCorpus(s, dir, unit = true)
+    val listOf = new java.util.HashMap[Long, Int](vecs.size * 2)
+    val codeOf = new java.util.HashMap[Long, Array[Int]](vecs.size * 2)
     codes.collect().foreach { r =>
       val vid = r.getAs[Number]("__vid").longValue()
       listOf.put(vid, r.getAs[Number]("list").intValue())
@@ -597,55 +449,28 @@ object Similarity {
       if (a == null) { a = new Array[Int](PqM); codeOf.put(vid, a) }
       a(r.getAs[Number]("sub").intValue()) = r.getAs[Number]("code").intValue()
     }
-    import scala.jdk.CollectionConverters._
-    val qids = vecs.keySet().asScala.toArray.filter(_ < NQuery).sorted
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-    for (qid <- qids) {
-      val qv = vecs.get(qid)
-      val probed = cents.indices.map { l =>
-        var d = 0.0; var j = 0
-        while (j < dim) { val x = qv(j) - cents(l)(j); d += x * x; j += 1 }
-        (d, l)
-      }.sorted.take(nprobe).map(_._2)
-      val probedSet = probed.toSet
-      // per probed list: the query residual's [PqM][PqK] partial distances
-      val partials = probed.map { l =>
-        val res = Array.tabulate(dim)(j => qv(j) - cents(l)(j))
-        l -> Array.tabulate(PqM, PqK) { (si, ci) =>
-          val cent = books(si)(ci)
-          var d = 0.0; var j = 0
-          while (j < sub) { val x = res(si * sub + j) - cent(j); d += x * x; j += 1 }
-          d
-        }
-      }.toMap
+    longRank(rerankLocal(s, vecs) { qid =>
+      val tables = queryTables(vecs.get(qid), cents, books, nprobe).toMap
       val cand = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
-      val it = codeOf.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next(); val vid = e.getKey
-        if (vid != qid && probedSet(listOf.get(vid))) {
-          val t = partials(listOf.get(vid)); val cw = e.getValue
+      codeOf.forEach { (vid, cw) =>
+        if (vid != qid) tables.get(listOf.get(vid)).foreach { t =>
           var adc = 0.0; var si = 0
           while (si < PqM) { adc += t(si)(cw(si)); si += 1 }
           cand += ((adc, vid))
         }
       }
-      val top = cand.sortInPlace().take(shortlistN)
-        .map { case (_, cid) =>
-          val cv = vecs.get(cid)
-          var d = 0.0; var na = 0.0; var nb = 0.0; var j = 0
-          while (j < dim) {
-            d += qv(j) * cv(j); na += qv(j) * qv(j); nb += cv(j) * cv(j); j += 1
-          }
-          val cos = BigDecimal(d / (math.sqrt(na) * math.sqrt(nb)))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          (cos, cid)
-        }.sortBy { case (cos, cid) => (-cos, cid) }.take(TopK)
-      top.zipWithIndex.foreach { case ((cos, cid), i) =>
-        out += ((qid, (i + 1).toLong, cid, cos))
-      }
-    }
-    out.toSeq.toDF("qid", "rank", "cid", "cos")
+      cand.sortInPlace().take(shortlistN).map(_._2)
+    })
   }
+
+  /** A query's ADC tables: per probed coarse list (the `nprobe` centroids
+    * nearest `qv`), its residual's [PqM][PqK] distances to every codeword.
+    */
+  private def queryTables(qv: Array[Double], cents: Array[Array[Double]],
+      books: Array[Array[Array[Double]]], nprobe: Int): Seq[(Int, Array[Array[Double]])] =
+    Ivf.probes(qv, cents, nprobe).map { l =>
+      l -> Ivf.adcTable(Array.tabulate(qv.length)(j => qv(j) - cents(l)(j)), books)
+    }
 
   private def pqSearch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -664,7 +489,7 @@ object Similarity {
     // approximates L2 — on unit vectors the two orders coincide.
     // Lazy: the sidecar-hit serve paths never materialize it.
     lazy val emb = {
-      val nrm = l2norm(col("embedding"))
+      val nrm = VectorFns.norm(col("embedding"))
       T(s, dir, "embeddings").select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double") / nrm).as("embedding"))
         .localCheckpoint()
@@ -686,7 +511,7 @@ object Similarity {
     // k-means, the assignment pass, and the corpus encode entirely (zero
     // encode passes, like the GraphStore's stored pqc chain)
     val home = pqSidecarHome(dir)
-    val storedIdx: Option[(Array[Array[Double]], Seq[Array[Array[Double]]])] =
+    val storedIdx: Option[(Array[Array[Double]], Array[Array[Array[Double]]])] =
       if (Seq("codes", "codebooks", "centroids").forall(f =>
         new java.io.File(s"$home/$f.parquet").isDirectory))
         scala.util.Try {
@@ -696,10 +521,10 @@ object Similarity {
           val rows = s.read.parquet(s"$home/codebooks.parquet").collect()
           val bks = Array.fill(PqM, PqK)(new Array[Double](sub))
           rows.foreach(r => bks(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3))
-          (cents, bks.toSeq.map(_.toArray))
+          (cents, bks)
         }.toOption
       else None
-    val (cents: Array[Array[Double]], books: Seq[Array[Array[Double]]],
+    val (cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
         codes: DataFrame) = storedIdx match {
       case Some((cs, bks)) =>
         (cs, bks, s.read.parquet(s"$home/codes.parquet")
@@ -707,37 +532,18 @@ object Similarity {
       case None =>
         // this IS an encode pass over the corpus — count it like
         // Ivf.pqEncode so specs can assert a sidecar hit runs none
-        graft.functions.Ivf.encodeBuilds.incrementAndGet()
+        Ivf.encodeBuilds.incrementAndGet()
         // coarse quantizer: the bounded sampled k-means (driver holds
         // ≤4096 vectors at any corpus size)
-        val cs = graft.functions.Ivf.kmeansSampled(emb, "vec_id", "embedding",
+        val cs = Ivf.kmeansSampled(emb, "vec_id", "embedding",
           pqC, iters = 4, nHint = Some(nCorpus))
-        def nearest(v: Array[Double]): Int = {
-          var best = 0; var bd = Double.MaxValue; var l = 0
-          while (l < cs.length) {
-            var d = 0.0; var j = 0
-            while (j < dim) { val x = v(j) - cs(l)(j); d += x * x; j += 1 }
-            if (d < bd) { bd = d; best = l }
-            l += 1
-          }
-          best
-        }
         // residual codebooks from ONE stride sample (the kmeansSampled
         // discipline), coarse-assigned + residualized driver-side, sliced
         // into PqM sub-samples — 8 codebooks for one collect
-        val stride = math.max(nCorpus / 4096, 1)
-        val sample: Array[Array[Double]] = emb
-          .filter(col("vec_id") % stride === 0).orderBy(col("vec_id")).limit(4096)
-          .select(col("embedding")).collect().map(_.getSeq[Double](0).toArray)
-        val resSample = sample.map { v =>
-          val c = cs(nearest(v)); Array.tabulate(dim)(j => v(j) - c(j))
-        }
-        val bks: Seq[Array[Array[Double]]] = (0 until PqM).map { si =>
-          graft.functions.Ivf.lloyd(
-            resSample.map(v => java.util.Arrays.copyOfRange(v, si * sub, (si + 1) * sub)),
-            PqK, iters = 4)
-        }
-        val cb = bks.zipWithIndex.flatMap { case (cents, si) =>
+        val resSample = Ivf.strideSample(emb, "vec_id", "embedding", nCorpus, 4096)
+          .map { v => val c = cs(Ivf.nearest(v, cs)); Array.tabulate(dim)(j => v(j) - c(j)) }
+        val bks = Ivf.subspaceBooks(resSample, PqM, PqK, iters = 4)
+        val cb = bks.toSeq.zipWithIndex.flatMap { case (cents, si) =>
           cents.zipWithIndex.toSeq.flatMap { case (cent, ci) =>
             cent.zipWithIndex.toSeq.map { case (cv, j) => (si, ci, j, cv) } }
         }.toDF("sub", "cluster", "spos", "c")
@@ -748,9 +554,9 @@ object Similarity {
         // flatten → residualize → broadcast-codebook-join → two keyed
         // aggregations encode chain. The flat ⋈ assignment join is one
         // n×dim-row shuffle — index-BUILD cost, amortized by the sidecar.
-        val asg = graft.functions.Ivf.assignments(emb, "vec_id", "embedding", cs)
+        val asg = Ivf.assignments(emb, "vec_id", "embedding", cs)
           .select(col("vec_id").as("__vid"), col("cluster").as("list"))
-        val resFlat = graft.functions.Ivf.flatten(emb, "vec_id", "embedding")
+        val resFlat = Ivf.flatten(emb, "vec_id", "embedding")
           .join(asg, "__vid")
           .join(broadcast(centDf), Seq("list", "pos"))
           .select(col("__vid"), col("list"), col("pos"), (col("v") - col("cc")).as("v"))
@@ -789,7 +595,6 @@ object Similarity {
           // sibling sidecars of other fingerprints or formats (incl. the
           // r14 raw-vector `pq_…` dirs) so the index root doesn't grow
           // one dead dir per regeneration
-          import scala.jdk.CollectionConverters._
           val homeP = java.nio.file.Paths.get(home)
           java.nio.file.Files.list(homeP.getParent).iterator().asScala
             .filter { p =>
@@ -808,8 +613,7 @@ object Similarity {
     // below is the only path — same routing discipline as the compiler's
     // local-BFS and q35 fixpoint switches.
     if (serveLocal(s, dir))
-      return pqServeLocal(s, dir, cents, books, codes, sub, nprobe,
-        pqShortlist(nCorpus))
+      return pqServeLocal(s, dir, cents, books, codes, nprobe, pqShortlist(nCorpus))
     // query tables: per probed coarse list, the query RESIDUAL's distance
     // to every codeword — NQuery × nprobe × PqM × PqK broadcast rows.
     // Candidates restrict to the probed lists through the inner join on
@@ -817,27 +621,13 @@ object Similarity {
     // code relation, not a full scan.
     // the NQuery query vectors come to the driver (bounded, like the IVF
     // centroid build); everything corpus-sized stays distributed
-    val qRows = emb.filter(col("vec_id") < NQuery)
-      .select(col("vec_id"), col("embedding")).collect()
-    val qt = qRows.toSeq.flatMap { r =>
-      val qid = r.getLong(0)
-      val qv = r.getSeq[Double](1).toArray
-      val probed = cents.indices.map { l =>
-        var d = 0.0; var j = 0
-        while (j < dim) { val x = qv(j) - cents(l)(j); d += x * x; j += 1 }
-        (d, l)
-      }.sorted.take(nprobe).map(_._2)
-      probed.flatMap { l =>
-        val res = Array.tabulate(dim)(j => qv(j) - cents(l)(j))
-        (0 until PqM).flatMap { si =>
-          books(si).zipWithIndex.map { case (cent, ci) =>
-            var d = 0.0; var j = 0
-            while (j < sub) { val x = res(si * sub + j) - cent(j); d += x * x; j += 1 }
-            (qid, l, si, ci, d)
-          }
+    val qt = emb.filter(col("vec_id") < NQuery)
+      .select(col("vec_id"), col("embedding")).collect().toSeq.flatMap { r =>
+        val qid = r.getLong(0)
+        queryTables(r.getSeq[Double](1).toArray, cents, books, nprobe).flatMap { case (l, t) =>
+          for (si <- t.indices; ci <- t(si).indices) yield (qid, l, si, ci, t(si)(ci))
         }
-      }
-    }.toDF("qid", "list", "sub", "code", "partial")
+      }.toDF("qid", "list", "sub", "code", "partial")
     import org.apache.spark.sql.expressions.Window
     val adc = codes.join(broadcast(qt), Seq("list", "sub", "code"))
       .filter(col("qid") =!= col("__vid"))
@@ -850,15 +640,7 @@ object Similarity {
     val shortlist = adc.withColumn("arank", row_number().over(wAdc))
       .filter(col("arank") <= pqShortlist(nCorpus))
       .select(col("qid"), col("__vid").as("cid"))
-    val scored = shortlist
-      .join(emb.select(col("vec_id").as("qid"), col("embedding").as("qv")), "qid")
-      .join(emb.select(col("vec_id").as("cid"), col("embedding").as("cv")), "cid")
-      .withColumn("cos", round(cosine(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("cid"), col("cos"))
-      .orderBy(col("qid"), col("rank"))
+    rerankDistributed(shortlist, emb)
   }
 
   /** Recall of an ANN query's (qid, cid) set against brute-force truth,
@@ -897,7 +679,7 @@ object Similarity {
     // distributed pipeline's ~12 stages are pure scheduling overhead at
     // this size. Above the cap: the distributed path, unchanged.
     if (serveLocal(s, dir)) {
-      val centroids = graft.functions.Ivf.kmeansSampled(
+      val centroids = Ivf.kmeansSampled(
         T(s, dir, "embeddings"), "vec_id", "embedding", k, iters = 6,
         nHint = Some(n))
       ivfServeLocal(s, dir, centroids, nprobe)
@@ -905,10 +687,10 @@ object Similarity {
       val emb = T(s, dir, "embeddings").localCheckpoint()
       // sampled driver-side Lloyd build (the reference's ivfbuild.c shape);
       // the flatten feeds the DISTRIBUTED index assignment + query probes
-      val flat = graft.functions.Ivf.flatten(emb, "vec_id", "embedding")
-      val centroids = graft.functions.Ivf.kmeansSampled(
+      val flat = Ivf.flatten(emb, "vec_id", "embedding")
+      val centroids = Ivf.kmeansSampled(
         emb, "vec_id", "embedding", k, iters = 6, nHint = Some(n))
-      graft.functions.Ivf.annSearch(
+      Ivf.annSearch(
         emb, "vec_id", "embedding",
         emb.filter(col("vec_id") < NQuery), "vec_id", "embedding",
         centroids, nprobe, topK = TopK, flatOpt = Some(flat))

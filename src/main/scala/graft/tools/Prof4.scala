@@ -5,10 +5,12 @@ import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Scratch fixed-overhead profiler (not part of the library): for each named
-  * SparkEntry query, separates DataFrame construction + planning wall time
-  * from execution wall time, and attributes execution to job/stage/task
-  * counts plus summed executor task time — distinguishing scheduling
-  * overhead (many tiny jobs/tasks) from real compute.
+  * SparkEntry query, splits the wall time into laps — DataFrame
+  * construction (our compiler, with any jobs it runs), Catalyst analysis,
+  * optimization and physical planning, and execution — and attributes
+  * execution to job/stage/task counts plus summed executor task time,
+  * distinguishing scheduling overhead (many tiny jobs/tasks) from real
+  * compute.
   */
 object Prof4 {
   def main(args: Array[String]): Unit = {
@@ -42,19 +44,26 @@ object Prof4 {
       graft.operators.Similarity.clearSessionCache()
       graft.operators.Dedup.clearSessionCache()
       graft.operators.Pipeline.clearSessionCache()
-      val t0 = System.nanoTime()
+      var t = System.nanoTime()
+      def lap(): Double = { val now = System.nanoTime(); val s = (now - t) / 1e9; t = now; s }
       val df = graft.SparkEntry.queries(name)(spark, dir)
-      val plan = df.queryExecution.executedPlan // force analysis+planning
-      val t1 = System.nanoTime()
+      val construct = lap()
+      val qe = df.queryExecution
+      qe.analyzed
+      val analyze = lap()
+      qe.optimizedPlan
+      val optimize = lap()
+      qe.executedPlan
+      val physical = lap()
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
       val n = df.count()
-      val t2 = System.nanoTime()
+      val exec = lap()
       spark.catalog.clearCache()
       // listener bus is async; give it a beat before reading counters
       Thread.sleep(200)
-      println(f"PROF4 $name%-26s r$round plan=${(t1 - t0) / 1e9}%6.3f exec=${(t2 - t1) / 1e9}%6.3f " +
+      println(f"PROF4 $name%-26s r$round construct=$construct%6.3f analyze=$analyze%6.3f " +
+        f"optimize=$optimize%6.3f physical=$physical%6.3f exec=$exec%6.3f " +
         f"jobs=${jobs.get}%3d stages=${stages.get}%3d tasks=${tasks.get}%5d taskTime=${taskMs.get / 1000.0}%8.2f s rows=$n")
-      val _ = plan
     }
     spark.stop()
   }

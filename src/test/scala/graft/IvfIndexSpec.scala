@@ -285,8 +285,9 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$root/v$vBuild/pqc/Doc__embedding").count() == 80L)
     // id-local SET (k stays long): the dv publish appends a DELTA code
     // file for the ONE touched row (m=2 rows); readers dedup last-wins
-    // per (id, sub). (A type-changing SET would full-rewrite and
-    // correctly DROP the lines; the next publish re-persists.)
+    // per (id, sub). (A type-changing SET would full-rewrite and DROP the
+    // lines; they return once a probe has re-derived the entries, at that
+    // table's next commit — see "entries return after a whole rewrite".)
     s.run("MATCH (d:Doc {k: 7}) SET d.k = 777")
     val vAfter = graft.cypher.GraphStore.latestVersion(root).get
     val cat2 = scala.io.Source.fromFile(s"$root/v$vAfter/catalog.txt").getLines().toList
@@ -326,8 +327,9 @@ class IvfIndexSpec extends AnyFunSuite {
     val cm0 = s.graph.entryChainMerges.get()
     // 16 point writes: deltas stack to 16 chain lines, the 16th write
     // triggers compaction — a merge of the chain FILES, never a label
-    // re-derive (a type-changing SET would instead full-rewrite and
-    // drop the chain, by design)
+    // re-derive (a type-changing SET would instead full-rewrite and drop
+    // the chain, until a probe re-derives the entries and the next commit
+    // writes them as one file)
     (0 to 15).foreach(i => s.run(s"MATCH (d:Doc {k: $i}) SET d.t = 'x$i'"))
     assert(s.graph.entryChainMerges.get() > cm0, "chain never compacted")
     // every publish ran exactly ONE touched-rows assignment + encode —
@@ -367,6 +369,42 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(top == Seq(1L), top.toString)
     assert(graft.functions.Ivf.assignBuilds.get() == as1,
       "reopened probe re-derived assignments after a chain merge")
+    graft.cypher.GraphStore.deleteTree(Paths.get(root))
+  }
+
+  test("entries return after a whole rewrite: probe, CREATE, reopen reads stored lists") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_ivfa_rewrite").toString
+    val s = new graft.cypher.GraphSession(spark)
+    s.createGraph("ivfw", root)
+    (0 until 40).foreach { i =>
+      val (bx, by) = if (i % 2 == 0) (0.0, 0.0) else (100.0, 100.0)
+      s.run(s"CREATE (:Doc {k: $i, embedding: [${bx + (i / 2) * 0.5}, ${by + (i % 5) * 0.5}]})")
+    }
+    s.run("SELECT create_ivfflat_l2_ops_index('ivfw', 'Doc', 'embedding', 2, 2)")
+    def catalog(): List[String] = {
+      val v = graft.cypher.GraphStore.latestVersion(root).get
+      scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines().toList
+    }
+    // a type-changing SET rewrites the label whole and drops its entries
+    s.run("MATCH (d:Doc {k: 7}) SET d.note = 1")
+    s.run("MATCH (d:Doc {k: 8}) SET d.note = 'eight'")
+    assert(!catalog().exists(_.startsWith("ivfa Doc embedding ")), catalog().mkString("; "))
+    val probe = "MATCH (d:Doc) RETURN d.k AS k ORDER BY d.embedding <-> [0.1, 0.1] LIMIT 3"
+    s.run(probe).collect() // derives the entries into the session's cache
+    s.run("CREATE (:Doc {k: 999, embedding: [0.1, 0.1]})") // id-local
+    val ivfa = catalog().filter(_.startsWith("ivfa Doc embedding "))
+    assert(ivfa.size == 1, catalog().mkString("; "))
+    val rel = graft.cypher.GraphStore.dec(ivfa.head.split(" ")(3))
+    assert(spark.read.parquet(s"$root/$rel").count() == 41L)
+    val expected = s.run(probe).collect().map(_.getLong(0)).toSeq
+    assert(expected.head == 999L, expected.toString)
+    val as0 = graft.functions.Ivf.assignBuilds.get()
+    val r = new graft.cypher.GraphSession(spark)
+    r.openGraph("ivfw", root)
+    assert(r.run(probe).collect().map(_.getLong(0)).toSeq == expected)
+    assert(graft.functions.Ivf.assignBuilds.get() == as0,
+      "reopened probe re-derived assignments instead of reading stored entries")
     graft.cypher.GraphStore.deleteTree(Paths.get(root))
   }
 

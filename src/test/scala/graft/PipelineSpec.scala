@@ -81,29 +81,35 @@ class PipelineSpec extends AnyFunSuite {
     assert(operators.Dedup.queries("d5_cosine_neardup")(spark, sf).columns.nonEmpty)
   }
 
-  test("s3/s4 local ANN serves match the distributed pipelines row-for-row") {
+  test("s1/s3/s4/s8 local ANN serves match the distributed pipelines: schema and rows") {
     // default cap → local serve; cap 0 → every serve distributed. The
     // session cache keys don't see the conf, so clear between runs.
-    def rows(name: String): Seq[(Long, Long, Long, Double)] = {
-      Similarity.clearSessionCache()
-      Similarity.queries(name)(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getAs[Number](1).longValue(),
-          r.getLong(2), r.getDouble(3))).toSeq
-    }
+    val names = Seq("s1_cosine_topk", "s3_ann_lsh", "s4_ivf_ann", "s8_pq_adc_ann")
+    def run(): Map[String, (org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])] =
+      names.map { name =>
+        Similarity.clearSessionCache()
+        val df = Similarity.queries(name)(spark, sf)
+        name -> ((df.schema, df.collect().toSeq))
+      }.toMap
     val key = "spark.graft.local.maxRows"
-    val localS1 = rows("s1_cosine_topk")
-    val localS3 = rows("s3_ann_lsh")
-    val localS4 = rows("s4_ivf_ann")
+    val local = run()
     spark.conf.set(key, "0")
-    try {
-      assert(rows("s1_cosine_topk") == localS1, "s1 local serve diverged")
-      assert(rows("s3_ann_lsh") == localS3, "s3 local serve diverged")
-      assert(rows("s4_ivf_ann") == localS4, "s4 local serve diverged")
-    } finally {
+    val dist = try run() finally {
       spark.conf.unset(key)
       Similarity.clearSessionCache()
     }
-    assert(localS1.nonEmpty && localS3.nonEmpty && localS4.nonEmpty)
+    // names and types; a driver-built frame's columns are non-nullable
+    def shape(st: org.apache.spark.sql.types.StructType) = st.map(f => (f.name, f.dataType))
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    names.foreach { n =>
+      // s4's rank is row_number's int; the others cast it to long
+      val rankType = if (n == "s4_ivf_ann") IntegerType else LongType
+      assert(shape(local(n)._1) == Seq("qid" -> LongType, "rank" -> rankType,
+        "cid" -> LongType, "cos" -> org.apache.spark.sql.types.DoubleType), s"$n local schema")
+      assert(shape(dist(n)._1) == shape(local(n)._1), s"$n schemas diverged")
+      assert(dist(n)._2 == local(n)._2, s"$n local serve diverged")
+      assert(local(n)._2.nonEmpty, s"$n returned no rows")
+    }
   }
 
   test("quality score is bounded and text-length monotone-ish") {
