@@ -14,10 +14,12 @@ import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.util.stream.LongStream
@@ -65,14 +67,16 @@ private[cypher] object Commit {
 
   /** What a commit reads: the graph at the end of a statement and at its
     * start (`prevV`/`prevE`), the ids the statement touched, the labels it
-    * must rewrite whole ("v:Label"), its ANN indexes with their in-memory
-    * entries, and what it holds of the store. `head` is the catalog's
-    * non-table part.
+    * must rewrite whole ("v:Label"), the driver-held row-versions of held
+    * labels with the table they belong to (`pointRows`, in that table's
+    * column order), its ANN indexes with their in-memory entries, and what
+    * it holds of the store. `head` is the catalog's non-table part.
     */
   final case class Snapshot(root: String, held: Held, head: Catalog,
       vertexLabels: Map[String, DataFrame], edgeLabels: Map[String, DataFrame],
       prevV: Map[String, DataFrame], prevE: Map[String, DataFrame],
       touched: List[DataFrame], fullRewrite: Set[String],
+      pointRows: Map[Key, (DataFrame, Array[Row])],
       ivf: List[IvfIdx], pq: List[PqIdx],
       ivfCache: Map[Key, (DataFrame, DataFrame)],
       pqCache: Map[Key, (DataFrame, DataFrame)])
@@ -316,19 +320,22 @@ private[cypher] object Commit {
       * position) of each live copy of a tombstoned id in one `dvp` file.
       * Bytes per point SET/DELETE are the row plus a position line,
       * whatever the file size. The row-versions are written on the driver,
-      * and so are the positions while the tombstones fit `Local`'s cap.
-      * None when there is nothing to write.
+      * and so are the positions while the tombstones fit `Local`'s cap. A
+      * held label's row-versions are its held rows of the touched ids, with
+      * no scan of the label. None when there is nothing to write.
       */
     private def writeDv(kind: String, l: String, df: DataFrame, p: FileTable,
         ids: Array[Long], tombstones: Array[Long]): Option[FileTable] = {
       val encl = enc(l)
-      val rows = df.filter(col("id").isin(ids.map(Long.box): _*)).collect()
+      val idIx = df.schema.fieldIndex("id")
+      val rows = s.pointRows.get((kind, l)).collect { case (src, versions) if src eq df =>
+        versions.filter(r => java.util.Arrays.binarySearch(ids, r.getLong(idIx)) >= 0)
+      }.getOrElse(df.filter(col("id").isin(ids.map(Long.box): _*)).collect())
       val newFiles =
         if (rows.isEmpty) Nil
         else {
           val base = Bridge.writeParquet(spark, s"$dir/$kind/$encl", df.schema, rows.toSeq)
-          statsOfRows(Local.relation(spark, rows.toSeq, df.schema), lit(base), kind, l,
-            List(s"v$next/$kind/$encl/$base"))
+          List(statsOfHeld(rows, df.schema, kind, l, s"v$next/$kind/$encl/$base"))
         }
       if (newFiles.isEmpty && tombstones.isEmpty) return None
       // only the files whose id range may hold a tombstone, existing dvs
@@ -424,63 +431,22 @@ private[cypher] object Commit {
       DirTable(kind, l, next, nullCols)
     }
 
-    private def statsOf(outDir: String, kind: String, l: String,
-        rels: List[String]): List[FileStats] =
-      statsOfRows(spark.read.parquet(outDir), fileBase, kind, l, rels)
-
-    /** Per-file stats of `rels` from `df`'s rows grouped by `file`, a
-      * basename: the id range plus min/max of up to 12 typed property
-      * columns (data skipping, the GIN property-index analog). Strings over
-      * 64 chars carry no claim (a truncated max would be unsound), and so
-      * does a temporal value of an unexpected collected class.
+    /** Per-file stats of the part files `rels` in `outDir`, from one
+      * aggregate of their rows grouped by file basename: the id range plus
+      * the claims of [[statColumns]].
       */
-    private def statsOfRows(df: DataFrame, file: Column, kind: String, l: String,
+    private def statsOf(outDir: String, kind: String, l: String,
         rels: List[String]): List[FileStats] = {
       if (rels.isEmpty) return Nil
-      val eligible = df.schema.fields.filter(f =>
-        !Set("id", "start_id", "end_id")(f.name) && (f.dataType match {
-          case LongType | IntegerType | DoubleType | StringType => true
-          case TimestampType | TimestampNTZType | DateType => true
-          case _ => false
-        })).take(12)
+      val df = spark.read.parquet(outDir)
+      val eligible = statColumns(df.schema)
       val aggs = Seq(min(col("id")).as("mn"), max(col("id")).as("mx")) ++
         eligible.zipWithIndex.flatMap { case (f, i) =>
           Seq(min(col(f.name)).as(s"pmn$i"), max(col(f.name)).as(s"pmx$i")) }
-      val rows = df.groupBy(file.as("__fname")).agg(aggs.head, aggs.tail: _*).collect()
-      // temporal edges persist as plain longs (micros since epoch / epoch
-      // days), independent of the collector's java8API representation
-      def usOf(v: Any): Option[Long] = v match {
-        case t: java.sql.Timestamp =>
-          Some(t.getTime * 1000L + (t.getNanos / 1000L) % 1000L)
-        case i: java.time.Instant =>
-          Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-        case l: java.time.LocalDateTime =>
-          Some(l.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + l.getNano / 1000L)
-        case _ => None
-      }
-      def dayOf(v: Any): Option[Long] = v match {
-        case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
-        case d: java.time.LocalDate => Some(d.toEpochDay)
-        case _ => None
-      }
+      val rows = df.groupBy(fileBase.as("__fname")).agg(aggs.head, aggs.tail: _*).collect()
       val byFile = rows.map { r =>
         val ptail = eligible.zipWithIndex.flatMap { case (f, i) =>
-          val mn = r.get(r.fieldIndex(s"pmn$i")); val mx = r.get(r.fieldIndex(s"pmx$i"))
-          def claim(ty: String, lo: Option[Any], hi: Option[Any]): Seq[String] =
-            (lo, hi) match {
-              case (Some(a), Some(b)) => Seq(enc(f.name), ty, enc(a.toString), enc(b.toString))
-              case _ => Nil
-            }
-          if (mn == null) Seq(enc(f.name), "n", "_", "_") // all-null column
-          else f.dataType match {
-            case LongType | IntegerType => claim("l", Some(mn), Some(mx))
-            case DoubleType => claim("d", Some(mn), Some(mx))
-            case StringType =>
-              if (mn.toString.length > 64 || mx.toString.length > 64) Nil
-              else claim("s", Some(mn), Some(mx))
-            case DateType => claim("D", dayOf(mn), dayOf(mx))
-            case _ => claim("t", usOf(mn), usOf(mx))
-          }
+          claim(f, r.get(r.fieldIndex(s"pmn$i")), r.get(r.fieldIndex(s"pmx$i")))
         }.toList
         r.getString(0) -> ((r.getLong(1), r.getLong(2)), ptail)
       }.toMap
@@ -488,6 +454,90 @@ private[cypher] object Commit {
         val st = byFile.get(r.substring(r.lastIndexOf('/') + 1))
         FileStats(kind, enc(l), r, st.map(_._1), st.map(_._2).getOrElse(Nil))
       }
+    }
+
+    /** [[statsOf]] of file `rel` holding the driver rows `rows`, with no
+      * Dataset: each min and max in Spark's ordering of its type (strings
+      * in UTF-8 byte order, NaN above every double), the first of equal
+      * values kept, as Spark's `min` and `max` keep it.
+      */
+    private def statsOfHeld(rows: Array[Row], schema: StructType, kind: String, l: String,
+        rel: String): FileStats = {
+      val ids = rows.map(_.getLong(schema.fieldIndex("id")))
+      val ptail = statColumns(schema).flatMap { f =>
+        val i = schema.fieldIndex(f.name)
+        val vs = rows.iterator.map(_.get(i)).filter(_ != null).toSeq
+        // a temporal value of an unexpected class orders as none: no claim
+        val key: Any => Any = f.dataType match {
+          case DateType => v => dayOf(v).orNull
+          case TimestampType | TimestampNTZType => v => usOf(v).orNull
+          case _ => identity
+        }
+        val ord: Ordering[Any] = f.dataType match {
+          case DoubleType => (a, b) => SQLOrderingUtil.compareDoubles(
+            a.asInstanceOf[Double], b.asInstanceOf[Double])
+          case StringType => (a, b) =>
+            UTF8String.fromString(a.toString).compareTo(UTF8String.fromString(b.toString))
+          case _ => (a, b) => java.lang.Long.compare(
+            a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue)
+        }
+        if (vs.isEmpty) claim(f, null, null)
+        else if (vs.exists(v => key(v) == null)) Nil
+        else claim(f, vs.reduce((m, v) => if (ord.lt(key(v), key(m))) v else m),
+          vs.reduce((m, v) => if (ord.gt(key(v), key(m))) v else m))
+      }.toList
+      FileStats(kind, enc(l), rel, Some((ids.min, ids.max)), ptail)
+    }
+
+    /** The columns a file's stats claim min and max of: up to 12 typed
+      * property columns (data skipping, the GIN property-index analog).
+      */
+    private def statColumns(schema: StructType): Array[StructField] =
+      schema.fields.filter(f =>
+        !Set("id", "start_id", "end_id")(f.name) && (f.dataType match {
+          case LongType | IntegerType | DoubleType | StringType => true
+          case TimestampType | TimestampNTZType | DateType => true
+          case _ => false
+        })).take(12)
+
+    /** Column `f`'s claim from its min `mn` and max `mx`, both null when it
+      * is all null. Strings over 64 chars carry no claim (a truncated max
+      * would be unsound), and so does a temporal value of an unexpected
+      * collected class.
+      */
+    private def claim(f: StructField, mn: Any, mx: Any): Seq[String] = {
+      def of(ty: String, lo: Option[Any], hi: Option[Any]): Seq[String] =
+        (lo, hi) match {
+          case (Some(a), Some(b)) => Seq(enc(f.name), ty, enc(a.toString), enc(b.toString))
+          case _ => Nil
+        }
+      if (mn == null) Seq(enc(f.name), "n", "_", "_") // all-null column
+      else f.dataType match {
+        case LongType | IntegerType => of("l", Some(mn), Some(mx))
+        case DoubleType => of("d", Some(mn), Some(mx))
+        case StringType =>
+          if (mn.toString.length > 64 || mx.toString.length > 64) Nil
+          else of("s", Some(mn), Some(mx))
+        case DateType => of("D", dayOf(mn), dayOf(mx))
+        case _ => of("t", usOf(mn), usOf(mx))
+      }
+    }
+
+    // temporal edges persist as plain longs (micros since epoch / epoch
+    // days), independent of the collector's java8API representation
+    private def usOf(v: Any): Option[Long] = v match {
+      case t: java.sql.Timestamp =>
+        Some(t.getTime * 1000L + (t.getNanos / 1000L) % 1000L)
+      case i: java.time.Instant =>
+        Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
+      case l: java.time.LocalDateTime =>
+        Some(l.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + l.getNano / 1000L)
+      case _ => None
+    }
+    private def dayOf(v: Any): Option[Long] = v match {
+      case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
+      case d: java.time.LocalDate => Some(d.toEpochDay)
+      case _ => None
     }
 
     /** An index's trained matrix: written once as text into the building

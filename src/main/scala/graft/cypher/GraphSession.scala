@@ -1595,10 +1595,47 @@ final class MutableGraph(spark: SparkSession) {
     txFullRewrite += s"$kind:$label"
   private def txResetTracking(): Unit = { txTouched.clear(); txFullRewrite.clear() }
 
+  // ---- held point writes. A label that point writes changed is held as
+  // `base − dead ∪ rows` ([[MutableGraph.HeldLabel]]): a CREATE, SET, REMOVE or
+  // DELETE of driver-held ids changes only `dead` and `rows`, on the
+  // driver, and the label keeps one filter and one union over its last
+  // materialized table, so the commit neither copies the label nor scans
+  // it for the statement's row-versions (the store's files plus deletion
+  // vectors, in memory). A held form applies only while the label map
+  // holds the exact table it renders; any other rebinding (an old-path
+  // write, a re-base) starts over from the table bound then, and a
+  // rolled-back statement restores the forms of its start.
+  private var heldLabels = Map.empty[(String, String), MutableGraph.HeldLabel]
+
+  private def tableOf(kind: String, l: String): Option[DataFrame] =
+    (if (kind == "v") vertexLabels else edgeLabels).get(l)
+
+  /** The held form that renders `df`, label `l`'s table, or an empty one over it. */
+  private def heldOf(kind: String, l: String, df: DataFrame): MutableGraph.HeldLabel =
+    heldLabels.get((kind, l)).filter(_.df eq df)
+      .getOrElse(MutableGraph.HeldLabel(df, Array.empty, Array.empty, df.schema))
+
+  /** Record `h` as label `l`'s held form; returns its table. */
+  private def hold(kind: String, l: String, h: MutableGraph.HeldLabel): DataFrame = {
+    heldLabels += ((kind, l) -> h)
+    h.df
+  }
+
+  /** Whether a held form of `n` dead ids and row-versions stays held: the
+    * bound of a merge-on-read statement and of `Local`'s cap.
+    */
+  private def holdable(n: Int): Boolean =
+    n <= MutableGraph.DvMaxStatementIds && Local.holds(spark, n)
+
+  /** The rows of a plan the optimizer folds into driver-held rows ([[LocalFold]]). */
+  private def folded(df: DataFrame): Option[Array[Row]] =
+    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) Some(df.collect())
+    else None
+
   private[cypher] def txSnapshot(): MutableGraph.TxState = {
     txResetTracking() // statement boundary
     MutableGraph.TxState(labelIds.toSeq, nextEntry.toMap,
-      vertexLabels, edgeLabels, uniqueConstraints.toSet, wholePropsUnique.toSet)
+      vertexLabels, edgeLabels, uniqueConstraints.toSet, wholePropsUnique.toSet, heldLabels)
   }
 
 
@@ -1616,6 +1653,7 @@ final class MutableGraph(spark: SparkSession) {
     // post-unique-violation inserts land on id 13, not 12)
     vertexLabels = s.vertexLabels
     edgeLabels = s.edgeLabels
+    heldLabels = s.heldLabels
     uniqueConstraints.clear(); uniqueConstraints ++= s.uniques
     wholePropsUnique.clear(); wholePropsUnique ++= s.wholeUniques
   }
@@ -2042,35 +2080,53 @@ final class MutableGraph(spark: SparkSession) {
     }
 
   /** Append rows to a label table (all CREATE paths): records the new ids
-    * for file-level CoW and schema-aligns the union.
+    * for file-level CoW and schema-aligns the union. A frame held on the
+    * driver joins the label's held row-versions when the union folds there
+    * and re-encodes no old row.
     */
   private def appendRows(kind: String, label: String, df: DataFrame): Unit = {
     noteTouched(df)
-    if (kind == "v")
-      vertexLabels += (label -> aligned(kind, label, vertexLabels.get(label), df))
-    else
-      edgeLabels += (label -> aligned(kind, label, edgeLabels.get(label), df))
+    val old = tableOf(kind, label)
+    val next = old.filterNot(reencodes(_, df)).flatMap { o =>
+      val h = heldOf(kind, label, o)
+      val merged = aligned(kind, label, Some(h.rowsDf), df)
+      folded(merged).filter(rows => holdable(h.dead.length + rows.length))
+        .map(rows => hold(kind, label, h.copy(rows = rows, schema = merged.schema)))
+    }.getOrElse(aligned(kind, label, old, df))
+    if (kind == "v") vertexLabels += (label -> next) else edgeLabels += (label -> next)
   }
+
+  /** Columns of `o` that `add` holds with another type; nullability-only
+    * differences are NOT conflicts: a streaming batch round-trips through
+    * parquet, which relaxes containsNull/nullable — treating that as a type
+    * change forced a dynCoerce full rewrite on every wrapper-ingested batch
+    * (dropping index-entry chains, r14).
+    */
+  private def conflicts(o: DataFrame, add: DataFrame): Seq[String] =
+    o.schema.fields.flatMap { f =>
+      add.schema.fields.find(_.name == f.name)
+        .filter(g => MutableGraph.relaxNullability(g.dataType) !=
+          MutableGraph.relaxNullability(f.dataType) &&
+          f.dataType != NullType && g.dataType != NullType)
+        .map(_ => f.name)
+    }.toSeq
+
+  /** Whether appending `add` to `o` re-encodes o's rows: a conflicting
+    * column of o that is not already dynamic (dynCoerce of a GValue column
+    * is the identity).
+    */
+  private def reencodes(o: DataFrame, add: DataFrame): Boolean =
+    conflicts(o, add).exists(n => !graft.gvalue.GValueCol.isGValue(o.schema(n).dataType))
 
   private def aligned(kind: String, label: String, old: Option[DataFrame],
       add: DataFrame): DataFrame = old match {
     case None => add
     case Some(o) =>
       import graft.gvalue.GValueCol
-      // nullability-only differences are NOT conflicts: a streaming batch
-      // round-trips through parquet, which relaxes containsNull/nullable —
-      // treating that as a type change forced a dynCoerce full rewrite on
-      // every wrapper-ingested batch (dropping index-entry chains, r14)
-      val conflicts = o.schema.fields.flatMap { f =>
-        add.schema.fields.find(_.name == f.name)
-          .filter(g => MutableGraph.relaxNullability(g.dataType) !=
-            MutableGraph.relaxNullability(f.dataType) &&
-            f.dataType != NullType && g.dataType != NullType)
-          .map(_ => f.name)
-      }.toSeq
+      val conflicts = this.conflicts(o, add)
       // a type-conflict union re-encodes the OLD rows too (dynCoerce) —
       // not an id-local change, so file-level CoW must not carry old files
-      if (conflicts.nonEmpty) noteFullRewrite(kind, label)
+      if (reencodes(o, add)) noteFullRewrite(kind, label)
       def fix(df: DataFrame): DataFrame = conflicts.foldLeft(df) { (d, n) =>
         GValueCol.dynCoerce(col(n), d.schema(n).dataType) match {
           // keep SQL NULL (= property absent) rather than letting the
@@ -2271,7 +2327,9 @@ final class MutableGraph(spark: SparkSession) {
   }
 
   /** SET/REMOVE property k for ids in `updates(__set_id, __set_val)` across
-    * every label table containing those ids (copy-on-write).
+    * every label table containing those ids (copy-on-write). When the
+    * updates are held on the driver and keep the column's type, a label
+    * takes the held path ([[setHeld]]).
     */
   def updateProperty(k: String, updates0: DataFrame): Unit = {
     // eager localCheckpoint, not persist(): the updated label tables hold a
@@ -2286,38 +2344,96 @@ final class MutableGraph(spark: SparkSession) {
     def apply(kind: String, tables: Map[String, DataFrame]): Map[String, DataFrame] =
       tables.map { case (l, df) =>
         if (!hits(hit, l)) l -> df
-        else {
-          val joined = df.join(updates, df("id") === updates("__set_id"), "left_outer")
-          val updated =
-            if (df.columns.contains(k)) {
-              val oldDt = df.schema(k).dataType
-              val newDt = updates.schema("__set_val").dataType
-              val (oldC, newC) =
-                if (oldDt == newDt || oldDt == NullType || newDt == NullType)
-                  (col(k), col("__set_val"))
-                else {
-                  // whole-column re-encode touches UNCHANGED rows too —
-                  // disqualify this label from file-level CoW
-                  noteFullRewrite(kind, l)
-                  // type-changing SET (long → list/map/string …): both the
-                  // kept and the new values re-encode through the dynamic
-                  // codec — reference stores every property as gtype
-                  import graft.gvalue.GValueCol
-                  (GValueCol.dynCoerce(col(k), oldDt),
-                    GValueCol.dynCoerce(col("__set_val"), newDt)) match {
-                    case (Some(o2), Some(n2)) => (o2, n2)
-                    case _ => (col(k), col("__set_val")) // no dynamic form
-                  }
-                }
-              joined.withColumn(k,
-                when(col("__set_id").isNotNull, newC).otherwise(oldC))
-            } else joined.withColumn(k, col("__set_val"))
-          l -> updated.drop("__set_id", "__set_val")
-        }
+        else l -> frozen._2.filter(_ => keepsType(df, k, updates))
+          .flatMap(idsOf(_, "__set_id", l)).flatMap(setHeld(kind, l, df, k, updates, _))
+          .getOrElse(setColumn(kind, l, df, k, updates))
       }
     vertexLabels = apply("v", vertexLabels)
     edgeLabels = apply("e", edgeLabels)
   }
+
+  /** Whether SET of `updates` keeps column k's type in `df`. */
+  private def keepsType(df: DataFrame, k: String, updates: DataFrame): Boolean =
+    !df.columns.contains(k) || {
+      val (oldDt, newDt) = (df.schema(k).dataType, updates.schema("__set_val").dataType)
+      oldDt == newDt || oldDt == NullType || newDt == NullType
+    }
+
+  /** `df` with column k set from `updates` where its id has one. */
+  private def setColumn(kind: String, l: String, df: DataFrame, k: String,
+      updates: DataFrame): DataFrame = {
+    val joined = df.join(updates, df("id") === updates("__set_id"), "left_outer")
+    val updated =
+      if (df.columns.contains(k)) {
+        val (oldC, newC) =
+          if (keepsType(df, k, updates)) (col(k), col("__set_val"))
+          else {
+            // whole-column re-encode touches UNCHANGED rows too —
+            // disqualify this label from file-level CoW
+            noteFullRewrite(kind, l)
+            // type-changing SET (long → list/map/string …): both the
+            // kept and the new values re-encode through the dynamic
+            // codec — reference stores every property as gtype
+            import graft.gvalue.GValueCol
+            (GValueCol.dynCoerce(col(k), df.schema(k).dataType),
+              GValueCol.dynCoerce(col("__set_val"), updates.schema("__set_val").dataType)) match {
+              case (Some(o2), Some(n2)) => (o2, n2)
+              case _ => (col(k), col("__set_val")) // no dynamic form
+            }
+          }
+        joined.withColumn(k, when(col("__set_id").isNotNull, newC).otherwise(oldC))
+      } else joined.withColumn(k, col("__set_val"))
+    updated.drop("__set_id", "__set_val")
+  }
+
+  /** Held SET of label `l` at its sorted `ids`: their current versions are
+    * read from the held rows and, for those in base, by one collect of base
+    * filtered by them; the new versions replace them in the held rows and
+    * the ids join dead. None when the change would pass its bound or the
+    * update does not fold on the driver.
+    */
+  private def setHeld(kind: String, l: String, df: DataFrame, k: String,
+      updates: DataFrame, ids: Array[Long]): Option[DataFrame] = {
+    val h = heldOf(kind, l, df)
+    if (!holdable(h.size + 2 * ids.length)) return None
+    val inBase = ids.filter(i => !has(h.rowIds, i) && !has(h.dead, i))
+    val baseRows =
+      if (inBase.isEmpty) Array.empty[Row]
+      else h.base.filter(MutableGraph.idIn(inBase)).collect()
+    val current = Local.relation(spark, baseRows.toSeq, h.base.schema)
+      .unionByName(h.rowsDf.filter(MutableGraph.idIn(ids)),
+        allowMissingColumns = true)
+    val merged = h.rowsDf.filter(!MutableGraph.idIn(ids))
+      .unionByName(setColumn(kind, l, current, k, updates), allowMissingColumns = true)
+    folded(merged).map(rows =>
+      hold(kind, l, h.copy(dead = union(h.dead, ids), rows = rows, schema = merged.schema)))
+  }
+
+  /** Held DELETE of label `l` at its sorted `ids`: they join dead and leave
+    * the held rows, with no job. None past the bound.
+    */
+  private def deleteHeld(kind: String, l: String, df: DataFrame,
+      ids: Array[Long]): Option[DataFrame] = {
+    val h = heldOf(kind, l, df)
+    if (!holdable(h.size + ids.length)) return None
+    val kept = h.rowsDf.filter(!MutableGraph.idIn(ids))
+    folded(kept).map(rows => hold(kind, l, h.copy(dead = union(h.dead, ids), rows = rows)))
+  }
+
+  private def has(sorted: Array[Long], id: Long): Boolean =
+    java.util.Arrays.binarySearch(sorted, id) >= 0
+
+  private def union(a: Array[Long], b: Array[Long]): Array[Long] = (a ++ b).distinct.sorted
+
+  /** The sorted ids of label `l` in `idCol` of a frozen write snapshot's
+    * rows; None for a label without an id.
+    */
+  private def idsOf(rows: Array[Row], idCol: String, l: String): Option[Array[Long]] =
+    labelIds.get(l).map { lid =>
+      rows.iterator.map(r => r.get(r.fieldIndex(idCol)))
+        .collect { case n: java.lang.Number if (n.longValue >>> 48) == lid => n.longValue }
+        .toArray.distinct.sorted
+    }
 
   /** Label ids of the entity ids in `idCol` of a frozen write snapshot:
     * read off the driver rows when it is held there, else one job.
@@ -2347,7 +2463,8 @@ final class MutableGraph(spark: SparkSession) {
     val hit = labelsIn(frozen, "id")
     edgeLabels = edgeLabels.map { case (l, e) =>
       if (!hits(hit, l)) l -> e
-      else l -> e.join(ids, e("id") === ids("id"), "left_anti")
+      else l -> frozen._2.flatMap(idsOf(_, "id", l)).flatMap(deleteHeld("e", l, e, _))
+        .getOrElse(e.join(ids, e("id") === ids("id"), "left_anti"))
     }
   }
 
@@ -2378,7 +2495,8 @@ final class MutableGraph(spark: SparkSession) {
     val hit = labelsIn(frozen, "id")
     vertexLabels = vertexLabels.map { case (l, v) =>
       if (!hits(hit, l)) l -> v
-      else l -> v.join(ids, v("id") === ids("id"), "left_anti")
+      else l -> frozen._2.flatMap(idsOf(_, "id", l)).flatMap(deleteHeld("v", l, v, _))
+        .getOrElse(v.join(ids, v("id") === ids("id"), "left_anti"))
     }
   }
 
@@ -2386,9 +2504,11 @@ final class MutableGraph(spark: SparkSession) {
   // (GraphStore layout doc) — when attached, every successful mutating
   // statement publishes the next parquet version; reads use the in-memory
   // label tables, never re-reading the store. Invariant, kept at commit
-  // (commitIfChanged): a committed label is either a materialized leaf or a
-  // join-free append of at most 16 leaves, so a statement's plans and its
-  // publish join a small delta against a flat table, whatever the history.
+  // (commitIfChanged): a committed label is a materialized leaf, a
+  // join-free append of at most 16 leaves, or a held `base − dead ∪ rows`
+  // over one of those whose dead ids and driver-held rows stay within the
+  // merge-on-read bound, so a statement's plans and its publish join a
+  // small delta against a flat table, whatever the history.
 
   private[cypher] var storeRoot: Option[String] = None
   /** What this graph holds of its store, set at load and by each publish;
@@ -2410,6 +2530,7 @@ final class MutableGraph(spark: SparkSession) {
         uniqueConstraints.toList, wholePropsUnique.toList, streamBatches.toList,
         Nil, Nil, Nil),
       vertexLabels, edgeLabels, prevV, prevE, txTouched.toList, txFullRewrite.toSet,
+      heldLabels.map { case (key, h) => key -> ((h.df, h.rows)) },
       ivfIndexes.values.toList, pqIndexes.values.toList, ivfAssignCache, pqCodesCache))
     held = now
     entryChainMerges.addAndGet(chainMerges)
@@ -2439,8 +2560,9 @@ final class MutableGraph(spark: SparkSession) {
     * reference inequality is an exact dirty check.
     */
   private[cypher] def commitIfChanged(prev: MutableGraph.TxState): Unit = {
-    vertexLabels = flattened(vertexLabels, prev.vertexLabels)
-    edgeLabels = flattened(edgeLabels, prev.edgeLabels)
+    vertexLabels = flattened("v", vertexLabels, prev.vertexLabels)
+    edgeLabels = flattened("e", edgeLabels, prev.edgeLabels)
+    heldLabels = heldLabels.filter { case ((kind, l), h) => tableOf(kind, l).exists(_ eq h.df) }
     if (storeRoot.isDefined &&
       ((vertexLabels ne prev.vertexLabels) || (edgeLabels ne prev.edgeLabels) ||
         labelIds.toSeq != prev.labelIds || nextEntry.toMap != prev.nextEntry ||
@@ -2464,9 +2586,11 @@ final class MutableGraph(spark: SparkSession) {
     * Otherwise the checkpoint keeps the estimate of [[sizeAfterWrite]], not
     * Spark's, which would carry over a join's estimate, the product of its
     * sides: after a few SETs that sent every small-input site of the label
-    * down its distributed path.
+    * down its distributed path. A held label (`base − dead ∪ rows`) stays
+    * lazy until its dead ids and row-versions pass [[holdable]]'s bound,
+    * and is then re-based the same way.
     */
-  private def flattened(now: Map[String, DataFrame],
+  private def flattened(kind: String, now: Map[String, DataFrame],
       prev: Map[String, DataFrame]): Map[String, DataFrame] =
     if (now eq prev) now
     else now.map {
@@ -2475,7 +2599,8 @@ final class MutableGraph(spark: SparkSession) {
         val plan = df.queryExecution.analyzed
         val leaves = plan.collectLeaves()
         if (leaves.size <= MutableGraph.MaxLeaves &&
-            !plan.exists(_.isInstanceOf[Join]))
+            !plan.exists(_.isInstanceOf[Join]) &&
+            !heldLabels.get((kind, l)).exists(h => (h.df eq df) && !holdable(h.size)))
           l -> df
         else if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
           l -> Local.relation(spark, df.collect().toSeq, df.schema)
@@ -2550,5 +2675,32 @@ object MutableGraph {
   final case class TxState(
       labelIds: Seq[(String, Int)], nextEntry: Map[String, Long],
       vertexLabels: Map[String, DataFrame], edgeLabels: Map[String, DataFrame],
-      uniques: Set[(String, String)], wholeUniques: Set[String])
+      uniques: Set[(String, String)], wholeUniques: Set[String],
+      heldLabels: Map[(String, String), HeldLabel])
+
+  /** `id IN ids`. */
+  private[cypher] def idIn(ids: Array[Long]): Column = col("id").isin(ids.map(Long.box): _*)
+
+  /** A label held as `base − dead ∪ rows`: `base` its table when the first
+    * held write ran (the checkpoint made at open or at the last re-base),
+    * `dead` the sorted ids whose copy in base is suppressed, and `rows` the
+    * driver-held current row-versions of those ids and of new ids, in the
+    * label's column order (`schema`: base's columns, then those the writes
+    * added). Every id of `rows` is in `dead` or absent from base. `df`, the
+    * label's table, is one filter of base and one union with the rows: it
+    * adds no join and one leaf to base.
+    */
+  final case class HeldLabel(base: DataFrame, dead: Array[Long], rows: Array[Row],
+      schema: StructType) {
+    lazy val rowsDf: DataFrame = Local.relation(base.sparkSession, rows.toSeq, schema)
+    lazy val df: DataFrame =
+      (if (dead.isEmpty) base else base.filter(!idIn(dead)))
+        .unionByName(rowsDf, allowMissingColumns = true)
+    def size: Int = dead.length + rows.length
+    /** Ids of `rows`, sorted. */
+    lazy val rowIds: Array[Long] = {
+      val i = schema.fieldIndex("id")
+      rows.map(_.getLong(i)).sorted
+    }
+  }
 }

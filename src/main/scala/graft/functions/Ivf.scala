@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** IVF (inverted-file) vector index — the Spark-native re-expression of the
   * reference's IVFFlat access method (/root/reference/src/backend/access/
@@ -82,12 +83,23 @@ object Ivf {
     * corpus size the driver holds ≤ cap vectors.
     */
   def kmeansSampled(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int, cap: Int = 4096, nHint: Option[Long] = None): Array[Array[Double]] = {
-    kmeansBuilds.incrementAndGet()
+      iters: Int, cap: Int = SampleCap, nHint: Option[Long] = None): Array[Array[Double]] = {
     val n = nHint.getOrElse(emb.count()) // callers pass the session-cached count
-    require(n >= k, s"need at least $k vectors")
-    lloyd(strideSample(emb, idCol, vecCol, n, cap), k, iters)
+    kmeansOf(strideSample(emb, idCol, vecCol, n, cap), n, k, iters)
   }
+
+  /** [[kmeansSampled]] over a stride sample already on the driver, of a
+    * corpus of `n` vectors.
+    */
+  def kmeansOf(sample: Array[Array[Double]], n: Long, k: Int,
+      iters: Int): Array[Array[Double]] = {
+    kmeansBuilds.incrementAndGet()
+    require(n >= k, s"need at least $k vectors")
+    lloyd(sample, k, iters)
+  }
+
+  /** Most vectors a stride sample holds. */
+  val SampleCap = 4096
 
   /** Up to `cap` vectors of `emb` on the driver as doubles: the rows whose
     * id is a multiple of n / cap, lowest ids first (no RNG — reruns sample
@@ -100,6 +112,14 @@ object Ivf {
       .limit(cap)
       .select(transform(col(vecCol), _.cast("double")))
       .collect().map(_.getSeq[Double](0).toArray)
+
+  /** [[strideSample]] of vectors already on the driver, keyed by id. */
+  private[graft] def strideSample(vecs: java.util.Map[Long, Array[Double]], n: Long,
+      cap: Int): Array[Array[Double]] = {
+    val stride = math.max(n / cap, 1)
+    vecs.keySet().asScala.iterator.filter(_ % stride == 0).toArray.sorted
+      .take(cap).map(vecs.get)
+  }
 
   /** Deterministic driver-side Lloyd over an already-collected sample —
     * shared by kmeansSampled and the PQ codebook build (which samples ONCE

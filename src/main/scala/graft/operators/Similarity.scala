@@ -347,9 +347,8 @@ object Similarity {
     * the (dist, cluster) tie-break, same nprobe nearest-lists probe —
     * evaluated driver-side below the local-serve cap.
     */
-  private def ivfServeLocal(s: SparkSession, dir: String,
+  private def ivfServeLocal(s: SparkSession, vecs: Corpus,
       cents: Array[Array[Double]], nprobe: Int): DataFrame = {
-    val vecs = loadCorpus(s, dir)
     val listOf = new java.util.HashMap[Long, Int](vecs.size * 2)
     vecs.forEach((id, v) => listOf.put(id, Ivf.nearest(v, cents)))
     rerankLocal(s, vecs) { qid =>
@@ -540,7 +539,7 @@ object Similarity {
         // residual codebooks from ONE stride sample (the kmeansSampled
         // discipline), coarse-assigned + residualized driver-side, sliced
         // into PqM sub-samples — 8 codebooks for one collect
-        val resSample = Ivf.strideSample(emb, "vec_id", "embedding", nCorpus, 4096)
+        val resSample = Ivf.strideSample(emb, "vec_id", "embedding", nCorpus, Ivf.SampleCap)
           .map { v => val c = cs(Ivf.nearest(v, cs)); Array.tabulate(dim)(j => v(j) - c(j)) }
         val bks = Ivf.subspaceBooks(resSample, PqM, PqK, iters = 4)
         val cb = bks.toSeq.zipWithIndex.flatMap { case (cents, si) =>
@@ -678,11 +677,11 @@ object Similarity {
     // same assignment/probe/rerank semantics, driver-side — the
     // distributed pipeline's ~12 stages are pure scheduling overhead at
     // this size. Above the cap: the distributed path, unchanged.
+    // The k-means sample is taken from the corpus the serve holds.
     if (serveLocal(s, dir)) {
-      val centroids = Ivf.kmeansSampled(
-        T(s, dir, "embeddings"), "vec_id", "embedding", k, iters = 6,
-        nHint = Some(n))
-      ivfServeLocal(s, dir, centroids, nprobe)
+      val vecs = loadCorpus(s, dir)
+      val centroids = Ivf.kmeansOf(Ivf.strideSample(vecs, n, Ivf.SampleCap), n, k, iters = 6)
+      ivfServeLocal(s, vecs, centroids, nprobe)
     } else {
       val emb = T(s, dir, "embeddings").localCheckpoint()
       // sampled driver-side Lloyd build (the reference's ivfbuild.c shape);

@@ -1646,6 +1646,15 @@ class WriteSpec extends AnyFunSuite {
       step(s.ingestVertexUpsertBatch("C", "ck", Seq((2L, "c2b", 20.0), (3L, "c3", 3.0))
         .toDF("ck", "name", "bal"), "cdc", 1L))
       step(s.run("MATCH (p:P {k: 5}) SET p.t = 'a5b'"))
+      // one file holding NaN and -0.0 (Spark orders NaN above every double),
+      // one holding U+FFFF and a non-BMP string (code-point order, not
+      // UTF-16's), and one whose only double is -0.0
+      step(s.run("MATCH (p:P) WHERE p.k IN [7, 8] SET p.x = CASE WHEN p.k = 7 THEN $nan ELSE $z END",
+        Map("nan" -> graft.gvalue.GFloat(Double.NaN), "z" -> graft.gvalue.GFloat(-0.0))))
+      step(s.run("MATCH (p:P) WHERE p.k IN [9, 10] " +
+        "SET p.t = CASE WHEN p.k = 9 THEN '\uffff' ELSE '\ud835\udcb3' END"))
+      step(s.run("MATCH (a:P {k: 1}) CREATE (:P {k: 16, x: $z, t: '\ud835\udcb3'})",
+        Map("z" -> graft.gvalue.GFloat(-0.0))))
       step(s.run("MATCH (r:R) WHERE r.k IN [1, 290, 299, 1150, 1199] SET r.k = -r.k"))
       step(s.run("MATCH (r:R) WHERE r.k IN [-290, 600, 1190] DETACH DELETE r"))
       // R's dvs reach past the first row group of the file they hit
@@ -1696,5 +1705,186 @@ class WriteSpec extends AnyFunSuite {
     }
     assert(heldPos.last.exists(_.startsWith("v R ")), heldPos.last.mkString("; "))
     assert(heldStats.last.exists(_.contains(" s ")), heldStats.last.mkString("; "))
+    val pLines = heldStats.flatten.filter(_.startsWith("v P "))
+    assert(pLines.exists(_.endsWith(" x d -0.0 NaN")), pLines.mkString("\n"))
+    assert(pLines.exists(_.endsWith(" t s %EF%BF%BF %F0%9D%92%B3 x d 4.5 5.0")), pLines.mkString("\n"))
+    assert(pLines.exists(_.endsWith(" x d -0.0 -0.0")), pLines.mkString("\n"))
+  }
+
+  // A CREATE into a label whose property is already a dynamic (gtype)
+  // column re-encodes no old row: it commits id-locally, not by rewriting
+  // the label whole.
+  test("GraphStore: CREATE into a dynamic column commits id-locally") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_store_dyn").toString
+    val s = new GraphSession(spark)
+    s.createGraph("dyn", root)
+    s.run("UNWIND range(1, 10) AS i CREATE (:Doc {k: i})")
+    s.run("MATCH (d:Doc {k: 7}) SET d.k = 'seven'")
+    s.run("CREATE (:Doc {k: 999})")
+    val v = graft.cypher.GraphStore.latestVersion(root).get
+    val cat = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines().toSeq
+    assert(!cat.exists(_.startsWith("vlabel Doc ")), cat.mkString("\n"))
+    assert(cat.exists(l => l.startsWith("file v Doc ") && l.contains(s"v$v%2F")), cat.mkString("\n"))
+    val r = new GraphSession(spark)
+    r.openGraph("dyn", root)
+    def count(q: String): Long = r.run(q).collect().head.getLong(0)
+    assert(count("MATCH (d:Doc {k: 'seven'}) RETURN count(*) AS n") == 1L)
+    assert(count("MATCH (d:Doc {k: 999}) RETURN count(*) AS n") == 1L)
+    assert(count("MATCH (d:Doc) RETURN count(*) AS n") == 11L)
+    graft.cypher.GraphStore.deleteTree(java.nio.file.Paths.get(root))
+  }
+
+  // A point write holds its label's change on the driver (`base − dead ∪
+  // rows`); with `local.maxRows=0` every write takes the join-and-checkpoint
+  // path. Both must read the same graph after each statement and commit the
+  // same catalog.
+  test("GraphStore: held point writes == distributed writes (reads, rows and catalog lines)") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    import graft.cypher.GraphStore.dec
+    def tables(s: GraphSession): Map[String, Seq[String]] = {
+      val g = s.graph.snapshot
+      (g.vertexLabels ++ g.edgeLabels.map { case (l, df) => s"e:$l" -> df }).map {
+        case (l, df) => l -> df.collect().map(_.toString).toSeq.sorted
+      }
+    }
+    def script(): (Seq[Map[String, Seq[String]]], Map[String, Seq[String]], Seq[Seq[String]]) = {
+      val root = Files.createTempDirectory("graft_store_pointheld").toString
+      val s = new GraphSession(spark)
+      s.createGraph("ph", root)
+      val reads = scala.collection.mutable.ArrayBuffer.empty[Map[String, Seq[String]]]
+      val catalogs = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+      def step(f: => Unit): Unit = {
+        f
+        reads += tables(s)
+        val v = graft.cypher.GraphStore.latestVersion(root).get
+        // table lines, each file named by its version dir only
+        catalogs += scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines().toSeq
+          .filter(l => Seq("vlabel ", "elabel ", "file ", "dvp ").exists(l.startsWith))
+          .map { l =>
+            val p = l.split(" ")
+            if (p(0) == "file" || p(0) == "dvp")
+              (p.take(3) ++ Seq(dec(p(3)).takeWhile(_ != '/')) ++ p.drop(4)).mkString(" ")
+            else l
+          }.sorted
+      }
+      // ingested labels; their keys sit above the ids CREATE numbers
+      step(s.ingestVertexBatch("P", "pk", (1 to 12).map(i => (1000L + i, i.toLong, i * 10L, s"t$i"))
+        .toDF("pk", "k", "v", "t"), "load", 0L))
+      step(s.ingestEdgeBatch("E", "ek", "P", "src", "P", "dst",
+        (1 to 11).map(i => (1000L + i, 1000L + i, 1001L + i, i.toLong)).toDF("ek", "src", "dst", "w"),
+        "load", 1L))
+      step(s.ingestVertexBatch("Q", "qk", (1 to 6).map(i => (1000L + i, i.toLong)).toDF("qk", "v"),
+        "load", 2L))
+      // CREATE with an edge, twice (the second into held rows)
+      step(s.run("MATCH (a:P {k: 1}) CREATE (:P {k: 13, v: 0})-[:E {w: 100}]->(a)"))
+      step(s.run("MATCH (a:P {k: 1}) CREATE (:P {k: 14, v: 1})-[:E {w: 101}]->(a)"))
+      // a repeated SET of one id, the second adding a property
+      step(s.run("MATCH (p:P {k: 4}) SET p.v = 40"))
+      step(s.run("MATCH (p:P {k: 4}) SET p.u = 'x'"))
+      step(s.run("MATCH (p:P {k: 4}) SET p.v = 41"))
+      // SET of a created id, and of an edge
+      step(s.run("MATCH (p:P {k: 13}) SET p.v = 130"))
+      step(s.run("MATCH ()-[e:E {w: 100}]->() SET e.w = 110"))
+      // SET then DELETE of the same id in one statement
+      step(s.run("MATCH (p:P {k: 5}) SET p.v = 50 DETACH DELETE p"))
+      step(s.run("MATCH (p:P {k: 6}) REMOVE p.t"))
+      step(s.run("MERGE (p:P {k: 15})"))
+      step(s.run("MATCH (p:P {k: 15}) SET p.v = 150"))
+      // DETACH DELETE with an edge cascade
+      step(s.run("MATCH (p:P {k: 1}) DETACH DELETE p"))
+      // a statement that fails after its writes rolls them back
+      step(intercept[Exception](s.run(
+        "MATCH (n:P {k: 3}) SET n.v = 77 DETACH DELETE n CREATE (n)-[:E {w: 9}]->(:P {k: 98})")))
+      step(s.run("MATCH (p:P {k: 3}) SET p.v = 33"))
+      step(s.run("MATCH (p:P {k: 8}) DETACH DELETE p"))
+      // a type-changing SET takes the whole-label path, a CREATE and a SET
+      // after it the held one
+      step(s.run("MATCH (q:Q {qk: 1002}) SET q.v = 'two'"))
+      step(s.run("CREATE (:Q {v: 7, n: 'q7'})"))
+      step(s.run("MATCH (q:Q {n: 'q7'}) SET q.w = 70"))
+      // and on a held label, it rewrites the label whole from its held form
+      step(s.run("MATCH (p:P {k: 7}) SET p.v = 'seven'"))
+      val r = new GraphSession(spark)
+      r.openGraph("ph", root)
+      val reopened = tables(r)
+      graft.cypher.GraphStore.deleteTree(Paths.get(root))
+      (reads.toSeq, reopened, catalogs.toSeq)
+    }
+    val (heldReads, heldRows, heldCats) = script()
+    spark.conf.set("spark.graft.local.maxRows", "0")
+    val (distReads, distRows, distCats) =
+      try script() finally spark.conf.unset("spark.graft.local.maxRows")
+    assert(heldReads.length == distReads.length)
+    heldReads.zip(distReads).zipWithIndex.foreach { case ((h, d), i) =>
+      assert(h == d, s"statement ${i + 1}: in-memory reads differ")
+    }
+    assert(heldRows == distRows)
+    assert(heldRows("P").size == 12, heldRows("P").mkString("\n"))
+    assert(heldRows("Q").size == 7, heldRows("Q").mkString("\n"))
+    // but the last: a whole-label rewrite lays the rows out in files by the
+    // table's partitions, which differ between the held and the joined form
+    heldCats.zip(distCats).init.zipWithIndex.foreach { case ((h, d), i) =>
+      assert(h == d, s"statement ${i + 1}: catalog table lines differ")
+    }
+    // the point writes committed merge-on-read, the type-changing SETs whole
+    assert(heldCats(11).exists(_.startsWith("dvp v P ")), heldCats(11).mkString("\n"))
+    assert(heldCats(18).exists(_.startsWith("vlabel Q ")), heldCats(18).mkString("\n"))
+    assert(heldCats(20).exists(_.startsWith("dvp v Q ")) ||
+      heldCats(20).exists(_.startsWith("file v Q ")), heldCats(20).mkString("\n"))
+    assert(heldCats.last.exists(_.startsWith("vlabel P ")), heldCats.last.mkString("\n"))
+  }
+
+  // Each point write on a durable graph runs a fixed number of Spark jobs:
+  // CREATE numbers its rows (one collect of the MATCH), SET reads the
+  // target and collects its current version, MERGE's probe is pruned by the
+  // manifest stats, and DETACH DELETE reads the target and its edges.
+  test("GraphStore: point write job counts (CREATE <= 1, SET <= 2, MERGE 0, DETACH DELETE <= 3)") {
+    import java.nio.file.Files
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_store_jobs").toString
+    val b = new GraphSession(spark)
+    b.createGraph("jobs", root)
+    b.ingestVertexBatch("N", "nk", (1 to 5).map(i => (i.toLong, s"n$i")).toDF("nk", "name"), "load", 0L)
+    b.run("UNWIND range(1, 50) AS i CREATE (:Item {k: i, v: i})")
+    val s = new GraphSession(spark)
+    s.openGraph("jobs", root)
+    var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        synchronized { jobs += 1 }
+    }
+    def jobsOf(q: String, k: Int): Int = {
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      val before = listener.synchronized(jobs)
+      s.run(q, Map("k" -> graft.gvalue.GInt(k))).collect()
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      listener.synchronized(jobs) - before
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (0 until 4).foreach { round =>
+        val k = 100 + 2 * round
+        val counts = Seq(
+          "create" -> jobsOf("MATCH (x:N) WHERE x.name = 'n2' CREATE (:Item {k: $k, v: 1})-[:OF]->(x)", k),
+          "set" -> jobsOf("MATCH (i:Item) WHERE i.k = $k SET i.v = 7", 3 + round),
+          "merge" -> jobsOf(s"MERGE (i:Item {k: ${k + 1}})", 0),
+          "delete" -> jobsOf("MATCH (i:Item) WHERE i.k = $k DETACH DELETE i", k + 1)).toMap
+        // the first two rounds create the edge label and lay the labels out as files
+        if (round > 1) {
+          assert(counts("create") <= 1, counts)
+          assert(counts("set") <= 2, counts)
+          assert(counts("merge") == 0, counts)
+          assert(counts("delete") <= 3, counts)
+        }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val r = new GraphSession(spark)
+    r.openGraph("jobs", root)
+    assert(r.run("MATCH (i:Item) RETURN count(*) AS n").collect().head.getLong(0) == 54L)
+    assert(r.run("MATCH (i:Item)-[:OF]->(x:N) RETURN count(*) AS n").collect().head.getLong(0) == 4L)
+    assert(r.run("MATCH (i:Item {k: 6}) RETURN i.v AS v").collect().head.getLong(0) == 7L)
+    graft.cypher.GraphStore.deleteTree(java.nio.file.Paths.get(root))
   }
 }
