@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -17,16 +18,19 @@ import org.apache.spark.sql.types.StructType
   *    estimate that undercounts never puts more than `maxRows` rows on the
   *    driver; above the cap the site takes its distributed path.
   * Sites: write snapshots, write-id numbering and a publish's touched ids
-  * (GraphSession), a deletion-vector commit's tombstone positions (Commit:
-  * the tombstone count, as it holds one live position per tombstone,
-  * whatever the size of the files read), the recursive local frontier
-  * (Recursive), the single-task graph algorithms (Algorithms: estimate
-  * only, they never collect), near-dup clustering (Pipeline: actual pair
-  * count only, its estimate is join-inflated by orders of magnitude), the
-  * ANN serves (Similarity: corpus row count) and the optimizer fold of
-  * joins, unions and aggregates over driver-held rows ([[LocalFold]]:
-  * actual rows of every input and of the output), installed on a session
-  * by [[install]].
+  * (GraphSession), the base of a label table, at a durable graph's open
+  * (Commit) and at a re-base after writes (GraphSession): [[materialize]],
+  * estimate under [[HeldLabelBytes]] and actual rows under
+  * [[HeldLabelRows]], a deletion-vector commit's
+  * tombstone positions (Commit: the tombstone count, as it holds one live
+  * position per tombstone, whatever the size of the files read), the
+  * recursive local frontier (Recursive), the single-task graph
+  * algorithms (Algorithms: estimate only, they never collect), near-dup
+  * clustering (Pipeline: actual pair count only, its estimate is
+  * join-inflated by orders of magnitude), the ANN serves (Similarity:
+  * corpus row count) and the optimizer fold of joins, unions and
+  * aggregates over driver-held rows ([[LocalFold]]: actual rows of every
+  * input and of the output), installed on a session by [[install]].
   */
 private[graft] object Local {
 
@@ -49,6 +53,30 @@ private[graft] object Local {
     * edges, trivially held by one task; 100 TB inputs estimate in the TBs.
     */
   val GraphBytes: Long = 256L << 20
+
+  /** Rows of a label table held on the driver as its base ([[materialize]]).
+    * Measured on a 4-core box, a durable graph with one `Item` label of N
+    * rows, medians of 30 reads in two runs (CHANGES.md has the table): a
+    * point read (`MATCH (i:Item) WHERE i.k = $k RETURN i.v`) and a count of
+    * the held label run no job and take 34–39 ms at 8,192 rows, against
+    * 47–63 ms checkpointed (1 and 2 jobs). The two cross between 12k and
+    * 16k rows: at 16,384 the held count is the slower (58–63 ms against
+    * 49–63), and at 32,768 both held reads are 1.8–2.4× slower.
+    */
+  val HeldLabelRows: Int = 8192
+
+  /** Size estimate of a label table held on the driver ([[materialize]]):
+    * at open its parquet bytes, at a re-base [[graft.cypher.MutableGraph]]'s
+    * write estimate. Measured on the same box with a wide label, `Doc` of
+    * N rows with a W-byte hex string each (parquet ≈ N·W bytes), medians
+    * of 30 reads (CHANGES.md has the table): held reads beat checkpointed
+    * ones by 28–43% at 8 MiB of 4 KiB rows (2,048) and tie at 8 MiB of
+    * 1 KiB rows (8,192, the row bound); at 16 MiB of 4 KiB rows the gain
+    * narrows to 16–23% while the open's collect costs 111 ms more than the
+    * checkpoint (288 against 177 ms), so past 8 MiB a label stays off the
+    * driver.
+    */
+  val HeldLabelBytes: Long = 8L << 20
 
   private val MaxRowsKey = "spark.graft.local.maxRows"
   private val DefaultMaxRows = "65536"
@@ -99,6 +127,28 @@ private[graft] object Local {
       case Some(rows) => (relation(df.sparkSession, rows, df.schema), Some(rows))
       case None => (df.localCheckpoint(), None)
     }
+
+  /** A label table materialized as the base of later reads and writes:
+    * its rows as a LocalRelation when the size estimate (Spark's, or the
+    * caller's `estimate`) is within [[HeldLabelBytes]] and the ACTUAL rows
+    * are at most [[HeldLabelRows]], else an eager localCheckpoint,
+    * coalesced to `partitions` when given. A table within both bounds, or
+    * past the byte estimate, costs one job; one past the row bound alone
+    * two, the collect and the checkpoint. A plan the optimizer folds into
+    * driver rows ([[LocalFold]], itself bounded by `maxRows`) is held as
+    * those rows with no job.
+    */
+  def materialize(df: DataFrame, estimate: Option[BigInt] = None,
+      partitions: Option[Int] = None): DataFrame = {
+    val spark = df.sparkSession
+    val plan = df.queryExecution.optimizedPlan
+    val rows =
+      if (plan.isInstanceOf[LocalRelation]) Some(df.collect())
+      else if (estimate.getOrElse(plan.stats.sizeInBytes) <= HeldLabelBytes)
+        capped(df).filter(_.length <= HeldLabelRows)
+      else None
+    rows.fold(partitions.fold(df)(df.coalesce).localCheckpoint())(relation(spark, _, df.schema))
+  }
 
   /** Driver rows as a LocalRelation. */
   def relation(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {

@@ -718,8 +718,12 @@ private[cypher] object Commit {
     applyDvs(spark.read.option("mergeSchema", "true")
       .parquet(files.map(f => s"$root/${f.rel}"): _*), dvs)
 
-  /** Open version `asOf` (default the latest). Tables are localCheckpoint'd
-    * eagerly, so a later gc can never invalidate a lazily-held file.
+  /** Open version `asOf` (default the latest). Each label table is
+    * materialized ([[Local.materialize]]): held on the driver as a
+    * LocalRelation while its files are within [[Local.HeldLabelBytes]] and
+    * its rows within [[Local.HeldLabelRows]], so reads and point writes of
+    * a small label run no job, and localCheckpoint'd eagerly past them.
+    * Either way a later gc can never invalidate a lazily-held file.
     */
   def open(spark: SparkSession, root: String, asOf: Option[Long]): Opened = {
     val latest = latestVersion(root).getOrElse(
@@ -740,10 +744,10 @@ private[cypher] object Commit {
       (dirs ++ files).map {
         case t: DirTable =>
           val raw = spark.read.parquet(s"$root/v${t.ver}/$kind/${enc(t.label)}")
-          t.label -> t.nullCols.foldLeft(raw)((acc, c) => acc.withColumn(c, lit(null)))
-            .localCheckpoint()
+          t.label -> Local.materialize(
+            t.nullCols.foldLeft(raw)((acc, c) => acc.withColumn(c, lit(null))))
         case t: FileTable =>
-          t.label -> scanFiles(spark, root, t.files, dvs((kind, t.label))).localCheckpoint()
+          t.label -> Local.materialize(scanFiles(spark, root, t.files, dvs((kind, t.label))))
       }.toMap
     }
     val tables = Map("v" -> tablesOf("v"), "e" -> tablesOf("e"))
@@ -794,10 +798,20 @@ private[cypher] object Commit {
     if (kept.isEmpty) return Some((0, total, Some(tbl.limit(0))))
     // align to the in-memory schema: the subset may lack columns a CoW SET
     // added only to other files (absent = null), and types a wider merge
-    // settled differently. `.schema` forces analysis inside the Try, so a
-    // bad cast cannot surface later as a query error
+    // settled differently. Files whose columns all have the table's types
+    // are read with its schema (a file lacking a column reads it as null),
+    // which runs no footer-merge job; the footers are read on the driver.
+    // `.schema` forces analysis inside the Try, so a bad cast cannot
+    // surface later as a query error
     scala.util.Try {
-      val dved = scanFiles(spark, root, kept, m.dvs)
+      val relaxed = MutableGraph.relaxNullability(tbl.schema).asInstanceOf[StructType]
+      val types = relaxed.fields.map(f => f.name -> f.dataType).toMap
+      val paths = kept.map(f => s"$root/${f.rel}")
+      val dved =
+        if (paths.forall(p => Bridge.parquetSchema(spark, p).fields.forall(f =>
+            types.get(f.name).forall(_ == MutableGraph.relaxNullability(f.dataType)))))
+          applyDvs(spark.read.schema(relaxed).parquet(paths: _*), m.dvs)
+        else scanFiles(spark, root, kept, m.dvs)
       val aligned = tbl.schema.fields.foldLeft(dved)((acc, f) =>
         if (acc.columns.contains(f.name))
           acc.withColumn(f.name, col(f.name).cast(MutableGraph.relaxNullability(f.dataType)))

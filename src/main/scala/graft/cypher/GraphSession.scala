@@ -1689,12 +1689,15 @@ final class MutableGraph(spark: SparkSession) {
   /** Scan of `label` restricted to the manifest files whose stats may
     * hold a row with property `propEsc` inside [lo, hi]
     * ([[Commit.prunedScan]]). None when stats cannot prune (no manifest,
-    * diverged content, non-scalar literal, or nothing skippable): the
+    * diverged content, non-scalar literal, or nothing skippable) or need
+    * not (a table held on the driver, which reads with no job): the
     * caller uses the in-memory table.
     */
   private def statsPrunedScan(kind: String, label: String, propEsc: String,
       lo: Option[GValue], hi: Option[GValue], tbl: DataFrame): Option[DataFrame] = {
-    if (!statsPruneEnabled) return None
+    if (!statsPruneEnabled ||
+        tbl.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
+      return None
     val root = storeRoot.getOrElse(return None)
     val m = held.manifest.get((kind, label))
       .filter(_.src eq tbl) // scanned snapshot = manifest content
@@ -2475,8 +2478,16 @@ final class MutableGraph(spark: SparkSession) {
   def deleteVertices(ids0: DataFrame, detach: Boolean): Unit = {
     val frozen = Local.freezeHeld(ids0) // eager + lineage-cut (see updateProperty)
     val ids = frozen._1
-    def incident(e: DataFrame): DataFrame =
-      e.join(ids, e("start_id") === ids("id") || e("end_id") === ids("id"), "left_semi")
+    // ids held on the driver filter each edge label by its endpoints (a
+    // scan, or no job over a held label); others take a semi-join, a
+    // broadcast nested loop on the OR
+    val heldIds = frozen._2.map(_.iterator.map(r => r.get(r.fieldIndex("id")))
+      .collect { case n: java.lang.Number => Long.box(n.longValue) }.toSeq.distinct)
+    def incident(e: DataFrame): DataFrame = heldIds match {
+      case Some(held) => e.filter(col("start_id").isin(held: _*) || col("end_id").isin(held: _*))
+      case None =>
+        e.join(ids, e("start_id") === ids("id") || e("end_id") === ids("id"), "left_semi")
+    }
     if (!detach) {
       val n = edgeLabels.values.map(e => incident(e).limit(1).count()).sum
       if (n > 0)
@@ -2484,10 +2495,10 @@ final class MutableGraph(spark: SparkSession) {
           "cannot delete vertex with incident edges — use DETACH DELETE")
     } else if (edgeLabels.nonEmpty) {
       // the cascade is keyed on ENDPOINTS: enumerate the edge ids it removes
-      // (one semi-join per label, frozen in one job) and delete those by id,
-      // so the statement stays id-local — a point DETACH DELETE publishes
-      // tombstones through the dv path (r12), and an edge label with no
-      // incident edge keeps its reference
+      // (one filter or semi-join per label, frozen in one job) and delete
+      // those by id, so the statement stays id-local — a point DETACH
+      // DELETE publishes tombstones through the dv path (r12), and an edge
+      // label with no incident edge keeps its reference
       deleteEdges(edgeLabels.values.map(e => incident(e).select(col("id")))
         .reduce(_ unionByName _))
     }
@@ -2579,16 +2590,19 @@ final class MutableGraph(spark: SparkSession) {
     * with the statement count. Pregelix keeps its state materialized and
     * joins each step's delta against it; this is that rule. Append-only
     * changes stay lazy until the 17th leaf, so a point CREATE pays no job
-    * here. Coalesced first: an append history also inflates the partition
-    * count, which would schedule many near-empty tasks on every later scan.
-    * A label whose plan the optimizer folds into driver-held rows
-    * ([[graft.LocalFold]]) is re-materialized as those rows, with no job.
-    * Otherwise the checkpoint keeps the estimate of [[sizeAfterWrite]], not
-    * Spark's, which would carry over a join's estimate, the product of its
-    * sides: after a few SETs that sent every small-input site of the label
-    * down its distributed path. A held label (`base − dead ∪ rows`) stays
-    * lazy until its dead ids and row-versions pass [[holdable]]'s bound,
-    * and is then re-based the same way.
+    * here. The re-base is [[Local.materialize]]: a small label is held on
+    * the driver as a LocalRelation (one collect, or none when the
+    * optimizer folds its plan into driver rows, [[graft.LocalFold]]), so
+    * its later reads run no job. A larger one is checkpointed, coalesced
+    * first: an append history also inflates the partition count, which
+    * would schedule many near-empty tasks on every later scan. Both the
+    * hold's byte gate and the checkpoint take the estimate of
+    * [[sizeAfterWrite]], not Spark's, which would carry over a join's
+    * estimate, the product of its sides: after a few SETs that sent every
+    * small-input site of the label down its distributed path. A held
+    * label (`base − dead ∪ rows`) stays lazy until its dead ids and
+    * row-versions pass [[holdable]]'s bound, and is then re-based the
+    * same way.
     */
   private def flattened(kind: String, now: Map[String, DataFrame],
       prev: Map[String, DataFrame]): Map[String, DataFrame] =
@@ -2602,11 +2616,11 @@ final class MutableGraph(spark: SparkSession) {
             !plan.exists(_.isInstanceOf[Join]) &&
             !heldLabels.get((kind, l)).exists(h => (h.df eq df) && !holdable(h.size)))
           l -> df
-        else if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
-          l -> Local.relation(spark, df.collect().toSeq, df.schema)
-        else l -> org.apache.spark.sql.graft.Bridge.withSizeInBytes(
-          df.coalesce(spark.sparkContext.defaultParallelism).localCheckpoint(),
-          sizeAfterWrite(plan))
+        else {
+          val size = sizeAfterWrite(plan)
+          l -> org.apache.spark.sql.graft.Bridge.withSizeInBytes(
+            Local.materialize(df, Some(size), Some(spark.sparkContext.defaultParallelism)), size)
+        }
     }
 
   /** Size estimate of a label after a write: an append (union) adds its
@@ -2682,7 +2696,8 @@ object MutableGraph {
   private[cypher] def idIn(ids: Array[Long]): Column = col("id").isin(ids.map(Long.box): _*)
 
   /** A label held as `base − dead ∪ rows`: `base` its table when the first
-    * held write ran (the checkpoint made at open or at the last re-base),
+    * held write ran (made at open or at the last re-base by
+    * [[Local.materialize]]: driver rows when small, else a checkpoint),
     * `dead` the sorted ids whose copy in base is suppressed, and `rows` the
     * driver-held current row-versions of those ids and of new ids, in the
     * label's column order (`schema`: base's columns, then those the writes

@@ -433,8 +433,9 @@ object GraphStore {
   }
 
   /** Drop version directories other than `keep` (bounded storage: the
-    * current and previous versions survive; loaded tables are eagerly
-    * localCheckpoint'd so dropping the files they came from is safe).
+    * current and previous versions survive; loaded tables are held on the
+    * driver or eagerly localCheckpoint'd, so dropping the files they came
+    * from is safe).
     */
   def gc(root: String, keep: Set[Long]): Unit = {
     val dir = Paths.get(root)

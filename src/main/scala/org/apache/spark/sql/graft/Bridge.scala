@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -13,7 +15,8 @@ import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import java.util.UUID
 
@@ -42,6 +45,18 @@ object Bridge {
           r.copy()(session, Some(Statistics(sizeInBytes)), None))
       case _ => df
     }
+
+  /** The Spark schema of the parquet file at `path`, read from its footer
+    * on the driver as the session's own reads convert it.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val conf = hadoopConf(spark)
+    val p = new Path(path)
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+    try new ParquetToSparkSchemaConverter(spark.asInstanceOf[classic.SparkSession]
+      .sessionState.conf).convert(r.getFooter.getFileMetaData.getSchema)
+    finally r.close()
+  }
 
   /** The Hadoop conf the session's own file reads and writes see. */
   def hadoopConf(spark: SparkSession): Configuration =
