@@ -1529,1193 +1529,3 @@ final class GraphSession(val spark: SparkSession) {
         s"vertex assigned to variable $v was deleted")
     }
 }
-
-/** In-memory mutable label tables + id allocation (the reference's per-label
-  * sequence, graph_commands.c:222-270).
-  */
-final class MutableGraph(spark: SparkSession) {
-  private val labelIds = mutable.LinkedHashMap.empty[String, Int]
-  // user labels number from 3, as in the reference: ids 1/2 belong to the
-  // catalog's _ag_label_vertex/_ag_label_edge (label_commands.c) — packed
-  // entity ids then match the reference's byte-for-byte (844424930131969 =
-  // 3<<48 | 1), which the value-level replay diffs rely on
-  // the label-id SEQUENCE (reference: per-graph `_label_id_seq`, CYCLE at
-  // 65535 back to the low end, skipping ids still in use —
-  // graph_commands.c / catalog.out:239-290). `seqLast` is PG last_value.
-  private var seqLast = 2
-  private def seqNext(): Int = {
-    seqLast = if (seqLast >= 65535) 1 else seqLast + 1
-    seqLast
-  }
-  /** Raw sequence advance (SELECT nextval('g._label_id_seq')). */
-  private[cypher] def nextvalLabelId(): Int = seqNext()
-  /** SELECT setval('g._label_id_seq', n). */
-  private[cypher] def setvalLabelId(n: Int): Unit = { seqLast = n }
-  /** create_vlabel/create_elabel: pre-register; re-creating is an error
-    * (catalog.out:356 `label "r" already exists`).
-    */
-  private[cypher] def createLabel(l: String): Unit = {
-    require(!labelIds.contains(l), s"""label "$l" already exists""")
-    labelId(l)
-  }
-
-  /** drop_label('g','l'): remove the label and its rows from the graph. */
-  private[cypher] def dropLabel(l: String): Unit = {
-    require(labelIds.contains(l) || vertexLabels.contains(l) || edgeLabels.contains(l),
-      s"""label "$l" does not exist""")
-    labelIds.remove(l)
-    vertexLabels -= l
-    edgeLabels -= l
-    nextEntry.remove(l)
-  }
-  private val nextEntry = mutable.Map.empty[String, Long]
-  private[cypher] var vertexLabels = Map.empty[String, DataFrame]
-  private[cypher] var edgeLabels = Map.empty[String, DataFrame]
-
-  /** Statement-level transactionality: the reference runs each statement
-    * in a PG transaction, so an ERROR mid-statement (e.g. CREATE through a
-    * variable whose vertex the same statement deleted) leaves the graph
-    * untouched (cypher_delete.out:276-284). DataFrames are immutable —
-    * only the small catalog maps need copying, so a snapshot is O(labels).
-    */
-  // ---- statement-scoped change tracking for file-level CoW (r12,
-  // VERDICT r11 #6). Every mutation path either records the entity ids it
-  // touched (id-local changes: CREATE/SET/REMOVE/DELETE) or marks its
-  // label full-rewrite (changes that re-encode untouched rows: aligned()
-  // type-conflict unions, type-changing SET, DETACH's edge cascade).
-  // Publish may then rewrite only the parquet FILES containing touched
-  // ids and carry the rest by manifest pointer. A mutation path that did
-  // neither would silently lose rows under CoW — which is why the
-  // recording happens inside the primitives themselves, not at call sites.
-  private val txTouched = mutable.ListBuffer.empty[DataFrame]
-  private val txFullRewrite = mutable.Set.empty[String] // "v:Label"/"e:Label"
-  private def noteTouched(ids: DataFrame): Unit =
-    txTouched += ids.select(col("id"))
-  private def noteFullRewrite(kind: String, label: String): Unit =
-    txFullRewrite += s"$kind:$label"
-  private def txResetTracking(): Unit = { txTouched.clear(); txFullRewrite.clear() }
-
-  // ---- held point writes. A label that point writes changed is held as
-  // `base − dead ∪ rows` ([[MutableGraph.HeldLabel]]): a CREATE, SET, REMOVE or
-  // DELETE of driver-held ids changes only `dead` and `rows`, on the
-  // driver, and the label keeps one filter and one union over its last
-  // materialized table, so the commit neither copies the label nor scans
-  // it for the statement's row-versions (the store's files plus deletion
-  // vectors, in memory). A held form applies only while the label map
-  // holds the exact table it renders; any other rebinding (an old-path
-  // write, a re-base) starts over from the table bound then, and a
-  // rolled-back statement restores the forms of its start.
-  private var heldLabels = Map.empty[(String, String), MutableGraph.HeldLabel]
-
-  private def tableOf(kind: String, l: String): Option[DataFrame] =
-    (if (kind == "v") vertexLabels else edgeLabels).get(l)
-
-  /** The held form that renders `df`, label `l`'s table, or an empty one over it. */
-  private def heldOf(kind: String, l: String, df: DataFrame): MutableGraph.HeldLabel =
-    heldLabels.get((kind, l)).filter(_.df eq df)
-      .getOrElse(MutableGraph.HeldLabel(df, Array.empty, Array.empty, df.schema))
-
-  /** Record `h` as label `l`'s held form; returns its table. */
-  private def hold(kind: String, l: String, h: MutableGraph.HeldLabel): DataFrame = {
-    heldLabels += ((kind, l) -> h)
-    h.df
-  }
-
-  /** Whether a held form of `n` dead ids and row-versions stays held: the
-    * bound of a merge-on-read statement and of `Local`'s cap.
-    */
-  private def holdable(n: Int): Boolean =
-    n <= MutableGraph.DvMaxStatementIds && Local.holds(spark, n)
-
-  /** The rows of a plan the optimizer folds into driver-held rows ([[LocalFold]]). */
-  private def folded(df: DataFrame): Option[Array[Row]] =
-    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) Some(df.collect())
-    else None
-
-  private[cypher] def txSnapshot(): MutableGraph.TxState = {
-    txResetTracking() // statement boundary
-    MutableGraph.TxState(labelIds.toSeq, nextEntry.toMap,
-      vertexLabels, edgeLabels, uniqueConstraints.toSet, wholePropsUnique.toSet, heldLabels)
-  }
-
-
-  /** PG sequences are NON-transactional: a rolled-back statement's label
-    * allocations disappear from the catalog (labelIds is restored) but the
-    * `_label_id_seq` position stays advanced — cypher_delete.out:465 shows
-    * e2 landing on label id 8 after three rolled-back CREATE attempts
-    * burned ids 5-7. seqLast is therefore deliberately NOT restored.
-    */
-  private[cypher] def txRestore(s: MutableGraph.TxState): Unit = {
-    labelIds.clear(); labelIds ++= s.labelIds
-    // nextEntry (the per-label ENTRY id sequence) is deliberately NOT
-    // restored: PG serial sequences are non-transactional, so a failed
-    // statement burns the entry ids it allocated (index.out:
-    // post-unique-violation inserts land on id 13, not 12)
-    vertexLabels = s.vertexLabels
-    edgeLabels = s.edgeLabels
-    heldLabels = s.heldLabels
-    uniqueConstraints.clear(); uniqueConstraints ++= s.uniques
-    wholePropsUnique.clear(); wholePropsUnique ++= s.wholeUniques
-  }
-
-  def snapshot: PropertyGraph =
-    new PropertyGraph(spark,
-      if (vertexLabels.isEmpty)
-        Map("_default" -> spark.createDataFrame(
-          new java.util.ArrayList[Row](),
-          StructType(Seq(StructField("id", LongType)))))
-      else vertexLabels,
-      edgeLabels, labelIds.toMap, ivfProbeFn, statsPrunedScan)
-
-  // Manifest-stats data skipping (the GIN property-index analog,
-  // gtype_gin.c:62-554, as Delta-style per-file typed min/max): the
-  // manifest of each file-form label, rebuilt at load and after every
-  // publish; an in-session change invalidates it by table identity until
-  // the next publish.
-  /** (files kept, files total) of the last pruned-scan attempt — lets
-    * WriteSpec assert a property-filtered MATCH actually skipped files. */
-  @volatile var lastPruneInfo: Option[(Int, Int)] = None
-  /** r14 test counter: index-entry chain compactions that ran as a
-    * chain-file MERGE (base + deltas, last-wins) — IvfIndexSpec asserts a
-    * compaction happened without any label re-scan/re-encode (there is no
-    * full-recompute path anymore; assignBuilds/encodeBuilds stay ∝ touched
-    * rows per publish). */
-  val entryChainMerges = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Benchmark/test switch: disables manifest-stats pruning so tools can
-    * measure the pruned vs unpruned scan of the same store (StoreBench). */
-  @volatile var statsPruneEnabled: Boolean = true
-
-  /** Scan of `label` restricted to the manifest files whose stats may
-    * hold a row with property `propEsc` inside [lo, hi]
-    * ([[Commit.prunedScan]]). None when stats cannot prune (no manifest,
-    * diverged content, non-scalar literal, or nothing skippable) or need
-    * not (a table held on the driver, which reads with no job): the
-    * caller uses the in-memory table.
-    */
-  private def statsPrunedScan(kind: String, label: String, propEsc: String,
-      lo: Option[GValue], hi: Option[GValue], tbl: DataFrame): Option[DataFrame] = {
-    if (!statsPruneEnabled ||
-        tbl.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
-      return None
-    val root = storeRoot.getOrElse(return None)
-    val m = held.manifest.get((kind, label))
-      .filter(_.src eq tbl) // scanned snapshot = manifest content
-      .getOrElse(return None)
-    Commit.prunedScan(spark, root, m, tbl, propEsc, lo, hi).flatMap {
-      case (kept, total, scan) =>
-        lastPruneInfo = Some((kept, total))
-        scan
-    }
-  }
-
-  // ---------------------------------------------- IVFFlat analog indexes
-  // (reference: create_ivfflat_{l2,ip}_ops_index, postgraph.sql.in:151-158
-  // + the ivfflat access method, src/backend/access/ivfutils.c). Centroids
-  // are fixed at build time like IVFFlat's lists (kmeans over a bounded
-  // driver sample); row→list assignments derive lazily from the CURRENT
-  // label table, identity-cached, so the index never goes stale across
-  // writes and needs no per-write hook. Probe-side cost at any corpus
-  // size: |label| · probes/lists scan instead of a full scan.
-  private val ivfIndexes =
-    mutable.LinkedHashMap.empty[(String, String), IvfIdx]
-  private var ivfAssignCache = Map.empty[(String, String), (DataFrame, DataFrame)]
-  /** Clusters probed per ANN query (reference GUC ivfflat.probes; default 1). */
-  @volatile var ivfProbes: Int = 1
-
-  // PQ/ADC index (r12): codebooks are the persisted structure (like IVF's
-  // centroids); per-row codes derive lazily from the CURRENT label table
-  // and are identity-cached, so the index never goes stale across writes.
-  private val pqIndexes =
-    mutable.LinkedHashMap.empty[(String, String), PqIdx]
-  private var pqCodesCache = Map.empty[(String, String), (DataFrame, DataFrame)]
-  /** ADC shortlist size reranked exactly by the query's ORDER BY. */
-  @volatile var pqShortlist: Int = 192
-
-  def createIvfIndex(label: String, prop0: String, dims: Int, lists: Int,
-      metric: String): Unit =
-    buildIndex(label, prop0, dims, "ivfflat") { (prop, emb) =>
-      require(lists >= 1 && lists <= 32768, "lists must be in 1..32768") // ivfflat.h:53
-      val key = (label, prop)
-      ivfIndexes(key) = IvfIdx(label, prop, metric, dims, lists,
-        graft.functions.Ivf.kmeansSampled(emb, "id", prop, k = lists, iters = 5))
-      ivfAssignCache -= key
-      held = held.ivfRebuilt(key)
-      () => ivfAssignments(ivfIndexes(key))
-    }
-
-  def createPqIndex(label: String, prop0: String, dims: Int, m: Int,
-      k: Int, metric: String): Unit =
-    buildIndex(label, prop0, dims, "pq") { (prop, emb) =>
-      require(m >= 1 && m <= 64 && dims % m == 0,
-        s"m must divide dims ($dims % $m != 0) and be in 1..64")
-      require(k >= 2 && k <= 256, "k (centroids per subspace) must be in 2..256")
-      val key = (label, prop)
-      pqIndexes(key) = PqIdx(label, prop, metric, dims, m, k,
-        graft.functions.Ivf.pqCodebooksSampled(emb, "id", prop, dims, m, k))
-      pqCodesCache -= key
-      held = held.pqRebuilt(key)
-      () => pqCodes(pqIndexes(key))
-    }
-
-  /** Train an ANN index of `label`.`prop0` (`train` gets the escaped
-    * property and the label's embeddings, and returns its entry builder).
-    * Index DDL is durable like the reference's on-disk build: it publishes
-    * at once, and since CREATE INDEX writes the list pages, not just the
-    * trained structure (ivfbuild.c), the entries are built first so the
-    * publish persists them and a reopened store probes them.
-    */
-  private def buildIndex(label: String, prop0: String, dims: Int, am: String)(
-      train: (String, DataFrame) => (() => DataFrame)): Unit = {
-    val prop = Compiler.PropNames.esc(prop0)
-    val tbl = vertexLabels.getOrElse(label,
-      throw new IllegalArgumentException(s"unknown vertex label $label"))
-    require(tbl.columns.contains(prop), s"label $label has no property $prop0")
-    require(dims >= 1 && dims <= 2000, s"$am supports 1..2000 dimensions") // ivfflat.h:33
-    val entries = train(prop, Commit.embeddings(tbl, prop, dims))
-    if (storeRoot.isDefined) {
-      entries()
-      publish(vertexLabels, edgeLabels)
-    }
-  }
-
-  /** The stored entry files of an index, each with its version, while
-    * they reflect `tbl` and all still exist: a 2+-versions-stale reader
-    * may race a concurrent writer's gc, and then derives instead of
-    * failing mid-query.
-    */
-  private def storedEntries(stored: Option[(List[String], DataFrame)],
-      tbl: DataFrame): Option[List[(DataFrame, Long)]] =
-    for {
-      root <- storeRoot
-      (rels, src) <- stored
-      if (src eq tbl) && rels.forall(r => java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/$r")))
-    } yield rels.map(r => (spark.read.parquet(s"$root/$r"), GraphStore.versionOf(r)))
-
-  private def pqCodes(ix: PqIdx): DataFrame = {
-    val tbl = vertexLabels(ix.label)
-    val key = (ix.label, ix.prop)
-    pqCodesCache.get(key) match {
-      case Some((src, c)) if src eq tbl => c
-      case _ =>
-        // r13: prefer the STORED codes (pqc parquet chain) over re-encoding
-        // the corpus — one compact scan of (id, sub, code) instead of a
-        // full vector read + encode chain after reopen. Unlike the IVF
-        // candidate union, codes must dedup LAST-WINS per (id, sub): a
-        // stale code row from an older file would double-count in the ADC
-        // distance sum. Each file is tagged with its version at read (from
-        // the rel path the catalog carries — never parsed out of the
-        // absolute file path).
-        val stored = storedEntries(held.pqcAt.get(key), tbl).map { files =>
-          files.map { case (f, ver) => f.withColumn("__ver", lit(ver)) }
-            .reduce(_ unionByName _)
-            .groupBy(col("id"), col("sub"))
-            .agg(max_by(col("code"), struct(col("__ver"), col("code"))).as("code"))
-            // deltas only ADD touched-row entries, so codes of deleted
-            // vertices survive the last-wins dedup until compaction and
-            // would eat ADC shortlist slots; an id-only semi-join
-            // against the live label keeps the shortlist's k real
-            .join(tbl.select(col("id")), Seq("id"), "left_semi")
-        }
-        val c = stored.getOrElse(graft.functions.Ivf.pqEncode(
-          Commit.embeddings(tbl, ix.prop, ix.dims), "id", ix.prop, ix.codebooks))
-          .localCheckpoint()
-        pqCodesCache += (key -> (tbl, c))
-        c
-    }
-  }
-
-  private def ivfAssignments(ix: IvfIdx): DataFrame = {
-    val tbl = vertexLabels(ix.label)
-    ivfAssignCache.get((ix.label, ix.prop)) match {
-      case Some((src, a)) if src eq tbl => a
-      case _ =>
-        val a = graft.functions.Ivf.assignments(
-          Commit.embeddings(tbl, ix.prop, ix.dims), "id", ix.prop, ix.centroids)
-          .localCheckpoint()
-        ivfAssignCache += ((ix.label, ix.prop) -> (tbl, a))
-        a
-    }
-  }
-
-  /** Probe: the single index covering (prop, metric, dims) → candidate-id
-    * relation of the `ivfProbes` nearest lists. Ambiguous coverage (two
-    * labels indexing the same property name) disables the rewrite rather
-    * than guessing.
-    */
-  private def ivfProbeFn(propEsc: String, metric: String,
-      vec: Seq[Double]): Option[(Int, DataFrame)] = {
-    val hits = ivfIndexes.values.filter(ix =>
-      ix.prop == propEsc && ix.metric == metric && ix.dims == vec.length).toSeq
-    if (hits.size != 1) return pqProbeFn(propEsc, metric, vec)
-    val ix = hits.head
-    val q = vec.toArray
-    val probed = graft.functions.Ivf.lowest(
-      ix.centroids.map(graft.functions.Ivf.score(metric, _, q)), math.max(1, ivfProbes))
-    Some((labelIds(ix.label), ivfCandidateIds(ix, probed)))
-  }
-
-  /** Candidate ids of the probed clusters — in priority order: the
-    * in-memory assignment cache, the STORED index entries (r13: a
-    * cluster-pruned scan of the `ivfa/` parquet, sorted by cluster at
-    * write so row-group stats skip unprobed lists — the ivfscan.c analog
-    * of reading only the probed list pages), and only then a lazy
-    * full-label derive.
-    */
-  private def ivfCandidateIds(ix: IvfIdx, probed: Seq[Int]): DataFrame = {
-    val key = (ix.label, ix.prop)
-    val tbl = vertexLabels(ix.label)
-    val cached = ivfAssignCache.get(key).collect {
-      case (src, a) if src eq tbl => a }
-    cached.map(_.filter(col("cluster").isin(probed: _*)).select(col("id")))
-      .orElse(storedEntries(held.ivfaAt.get(key), tbl).map(files =>
-        // union of base + delta entry files, read RAW: stale rows are a
-        // recall-safe superset (a moved id's new entry is in a delta;
-        // stale/deleted entries only add candidates that the exact
-        // rerank's label join drops)
-        files.map(_._1).reduce(_ unionByName _)
-          .filter(col("cluster").isin(probed: _*)).select(col("id")).distinct()))
-      .getOrElse(ivfAssignments(ix)
-        .filter(col("cluster").isin(probed: _*)).select(col("id")))
-  }
-
-  /** PQ fallback probe — same contract: candidate shortlist by asymmetric
-    * distance over the stored codes; the caller's ORDER BY reranks with
-    * exact distances. Ambiguity disables the rewrite, like IVF.
-    */
-  private def pqProbeFn(propEsc: String, metric: String,
-      vec: Seq[Double]): Option[(Int, DataFrame)] = {
-    val hits = pqIndexes.values.filter(ix =>
-      ix.prop == propEsc && ix.metric == metric && ix.dims == vec.length).toSeq
-    if (hits.size != 1) return None
-    val ix = hits.head
-    val cand = graft.functions.Ivf.pqAdcCandidates(
-      pqCodes(ix), "id", ix.codebooks, vec, metric,
-      math.max(1, pqShortlist))
-    Some((labelIds(ix.label), cand))
-  }
-
-  private def labelId(l: String): Int =
-    // the unlabeled-vertex label IS the catalog's _ag_label_vertex, id 1
-    // (label_commands.c) — it never consumes a user label id, so packed
-    // ids of unlabeled entities match the reference byte-for-byte
-    // (281474976710657 = 1<<48 | 1) and later user labels don't shift
-    labelIds.getOrElseUpdate(l,
-      if (l == "_default") 1
-      else {
-        // advance the sequence, skipping reserved (1, 2) and in-use ids
-        // (the post-CYCLE reuse path, catalog.out:285-300)
-        var i = seqNext(); var guard = 0
-        while ((i <= 2 || labelIds.values.exists(_ == i)) && guard < 65536) {
-          i = seqNext(); guard += 1
-        }
-        require(guard < 65536, "label id space exhausted (65535 labels)")
-        i
-      })
-
-  /** Pre-register a label so ids assign in the reference's TEXTUAL order —
-    * its catalog numbers vertex and edge labels from one shared sequence
-    * in first-appearance order across the whole CREATE pattern
-    * (label_commands.c), so `(b:begin)-[:edge]->(u:middle)` is
-    * begin=3, edge=4, middle=5; creating the far node before its incoming
-    * edge would swap the last two.
-    */
-  private[cypher] def ensureLabel(l: String): Unit = labelId(l)
-
-  private def isScalarProp(v: GValue): Boolean = v match {
-    case _: GArray | _: GMap | _: GVector => false
-    case _ => true
-  }
-
-  /** Homogeneous scalar lists keep a typed array column; mixed/nested
-    * lists and objects store the DYNAMIC tagged struct (the reference
-    * keeps every property a full gtype — cypher_match.sql's
-    * {map_key: {…}, list_key: […]} shapes).
-    */
-  private def sparkType(v: GValue): DataType = v match {
-    case _: GBool    => BooleanType
-    case _: GInt     => LongType
-    case _: GFloat   => DoubleType
-    case _: GNumeric => DecimalType(38, 18)
-    case _: GString  => StringType
-    case GArray(xs) if xs.nonEmpty && xs.forall(isScalarProp) &&
-        xs.map(_.getClass).distinct.size == 1 =>
-      ArrayType(sparkType(xs.head))
-    case _: GArray | _: GMap => graft.gvalue.GValueCol.structType
-    case _: GTimestamp => TimestampType
-    case _: GDate    => DateType
-    case GNull       => NullType
-    case other => throw new UnsupportedOperationException(s"property type: ${other.render}")
-  }
-
-  private def dynScalarRow(v: GValue): Row = {
-    import graft.gvalue.GValueCol._
-    v match {
-      case GNull       => Row(TNull.toByte, false, 0L, 0.0, "")
-      case GBool(x)    => Row(TBool.toByte, x, 0L, 0.0, "")
-      case GInt(x)     => Row(TInt.toByte, false, x, 0.0, "")
-      case GFloat(x)   => Row(TFloat.toByte, false, 0L, x, "")
-      case GNumeric(x) => Row(TNumeric.toByte, false, 0L, x.toDouble,
-        x.bigDecimal.toPlainString)
-      case GString(x)  => Row(TString.toByte, false, 0L, 0.0, x)
-      case GTimestamp(us) => Row(TTimestamp.toByte, false, us, 0.0, "")
-      case GDate(d)    => Row(TDate.toByte, false, d.toLong, 0.0, "")
-      // second-level containers ride their canonical string, mirroring
-      // GValueCol.gLitScalar so MATCH filters compare equal
-      case GArray(xs) => Row(TArray.toByte, false, 0L, 0.0,
-        xs.map(litCanon).mkString("\u0001"))
-      case m: GMap    => Row(TObject.toByte, false, 0L, 0.0, m.render)
-    }
-  }
-
-  private def sparkValue(v: GValue): Any = v match {
-    case GBool(b)   => b
-    case GInt(i)    => i
-    case GFloat(f)  => f
-    case GNumeric(n) => n.bigDecimal
-    case GString(s) => s
-    case GArray(xs) if xs.nonEmpty && xs.forall(isScalarProp) &&
-        xs.map(_.getClass).distinct.size == 1 => xs.map(sparkValue)
-    case GArray(xs) =>
-      Row(graft.gvalue.GValueCol.TArray.toByte, false, 0L, 0.0, "",
-        xs.map(dynScalarRow))
-    case m: GMap =>
-      Row(graft.gvalue.GValueCol.TObject.toByte, false, 0L, 0.0, m.render, null)
-    case GTimestamp(us) => java.sql.Timestamp.from(
-      java.time.Instant.ofEpochSecond(us / 1000000L, (us % 1000000L) * 1000L))
-    case GDate(d)   => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d.toLong))
-    case GNull      => null
-    case other => throw new UnsupportedOperationException(s"property value: ${other.render}")
-  }
-
-  /** Align a new-rows DF with an existing label table (union of columns).
-    * A property column whose type CONFLICTS between the existing rows and
-    * the new ones (the reference stores every property as gtype, so
-    * `CREATE ({i: 1})` then `CREATE ({i: 'str'})` is legal — order_by.sql
-    * fixture) re-encodes through the dynamic codec on BOTH sides; the
-    * dynamic struct is paid only on conflict, never up front.
-    */
-  /** Last committed micro-batch id per streaming writer identity (r12) —
-    * persisted in the store catalog (`stream <app> <batchId>` lines) so a
-    * replayed foreachBatch after restart is recognized and skipped: the
-    * idempotent-sink half of Structured Streaming's exactly-once contract
-    * (the same txn-appId/txn-version pattern Delta's streaming sink uses).
-    */
-  private[cypher] val streamBatches = mutable.Map.empty[String, Long]
-
-  /** Run one micro-batch commit: skip if (appId, batchId) already
-    * committed, publish as one version, restore the marker on failure so
-    * the retry is not skipped.
-    */
-  private def ingestBatch(appId: String, batchId: Long)(make: => Unit): Unit = {
-    if (streamBatches.get(appId).exists(_ >= batchId)) return
-    val tx = txSnapshot()
-    val prevMark = streamBatches.get(appId)
-    try {
-      make
-      streamBatches(appId) = batchId // written into the catalog by publish
-      commitIfChanged(tx)
-    } catch {
-      case t: Throwable =>
-        txRestore(tx)
-        prevMark match {
-          case Some(v) => streamBatches(appId) = v
-          case None => streamBatches.remove(appId)
-        }
-        throw t
-    }
-  }
-
-  /** Commit one streaming micro-batch of vertices as ONE store version.
-    * Ids pack from `keyCol` like GraphBuilder labels (key-addressed — do
-    * not mix with sequence-id CREATE on the same label).
-    */
-  private[cypher] def ingestVertexBatch(label: String, keyCol: String,
-      batch: DataFrame, appId: String, batchId: Long): Unit =
-    ingestBatch(appId, batchId) {
-      appendRows("v", label, keyedBatch(label, keyCol, batch).localCheckpoint())
-    }
-
-  /** A vertex batch with ids packed from `keyCol`, as GraphBuilder packs. */
-  private def keyedBatch(label: String, keyCol: String, batch: DataFrame): DataFrame =
-    batch.select(packedId(label, keyCol).as("id") +:
-      batch.columns.filterNot(_ == "id").sorted.map(col): _*)
-
-  private def packedId(label: String, keyCol: String): Column =
-    shiftleft(lit(labelId(label).toLong), 48).bitwiseOR(col(keyCol).cast("long"))
-
-  /** Upsert twin of [[ingestVertexBatch]] (r12 streaming CDC): a batch
-    * row whose key already exists REPLACES the stored row — the publish
-    * path tombstones the old on-disk copy through the deletion-vector
-    * machinery, so a point update costs the new row + 8 B, never a file
-    * rewrite — and new keys append. Same exactly-once (appId, batchId)
-    * contract. Duplicate keys within one batch collapse to one arbitrary
-    * row (pre-aggregate upstream for a deterministic pick).
-    */
-  private[cypher] def ingestVertexUpsertBatch(label: String, keyCol: String,
-      batch: DataFrame, appId: String, batchId: Long): Unit =
-    ingestBatch(appId, batchId) {
-      val df = keyedBatch(label, keyCol, batch).dropDuplicates("id").localCheckpoint()
-      vertexLabels.get(label) match {
-        case None => appendRows("v", label, df)
-        case Some(o) =>
-          noteTouched(df)
-          val kept = o.join(df.select(col("id")), Seq("id"), "left_anti")
-          vertexLabels += (label -> aligned("v", label, Some(kept), df))
-      }
-    }
-
-  /** Commit one streaming micro-batch of edges as ONE store version —
-    * endpoint ids pack from the src/dst key columns against their vertex
-    * labels, exactly GraphBuilder.edgeLabel's scheme.
-    */
-  private[cypher] def ingestEdgeBatch(label: String, keyCol: String,
-      srcLabel: String, srcKeyCol: String, dstLabel: String, dstKeyCol: String,
-      batch: DataFrame, appId: String, batchId: Long): Unit =
-    ingestBatch(appId, batchId) {
-      val ids = Seq(packedId(label, keyCol).as("id"),
-        packedId(srcLabel, srcKeyCol).as("start_id"), packedId(dstLabel, dstKeyCol).as("end_id"))
-      val props = batch.columns
-        .filterNot(Set("id", "start_id", "end_id", keyCol, srcKeyCol, dstKeyCol))
-        .sorted.map(col)
-      appendRows("e", label, batch.select(ids ++ props: _*).localCheckpoint())
-    }
-
-  /** Append rows to a label table (all CREATE paths): records the new ids
-    * for file-level CoW and schema-aligns the union. A frame held on the
-    * driver joins the label's held row-versions when the union folds there
-    * and re-encodes no old row.
-    */
-  private def appendRows(kind: String, label: String, df: DataFrame): Unit = {
-    noteTouched(df)
-    val old = tableOf(kind, label)
-    val next = old.filterNot(reencodes(_, df)).flatMap { o =>
-      val h = heldOf(kind, label, o)
-      val merged = aligned(kind, label, Some(h.rowsDf), df)
-      folded(merged).filter(rows => holdable(h.dead.length + rows.length))
-        .map(rows => hold(kind, label, h.copy(rows = rows, schema = merged.schema)))
-    }.getOrElse(aligned(kind, label, old, df))
-    if (kind == "v") vertexLabels += (label -> next) else edgeLabels += (label -> next)
-  }
-
-  /** Columns of `o` that `add` holds with another type; nullability-only
-    * differences are NOT conflicts: a streaming batch round-trips through
-    * parquet, which relaxes containsNull/nullable — treating that as a type
-    * change forced a dynCoerce full rewrite on every wrapper-ingested batch
-    * (dropping index-entry chains, r14).
-    */
-  private def conflicts(o: DataFrame, add: DataFrame): Seq[String] =
-    o.schema.fields.flatMap { f =>
-      add.schema.fields.find(_.name == f.name)
-        .filter(g => MutableGraph.relaxNullability(g.dataType) !=
-          MutableGraph.relaxNullability(f.dataType) &&
-          f.dataType != NullType && g.dataType != NullType)
-        .map(_ => f.name)
-    }.toSeq
-
-  /** Whether appending `add` to `o` re-encodes o's rows: a conflicting
-    * column of o that is not already dynamic (dynCoerce of a GValue column
-    * is the identity).
-    */
-  private def reencodes(o: DataFrame, add: DataFrame): Boolean =
-    conflicts(o, add).exists(n => !graft.gvalue.GValueCol.isGValue(o.schema(n).dataType))
-
-  private def aligned(kind: String, label: String, old: Option[DataFrame],
-      add: DataFrame): DataFrame = old match {
-    case None => add
-    case Some(o) =>
-      import graft.gvalue.GValueCol
-      val conflicts = this.conflicts(o, add)
-      // a type-conflict union re-encodes the OLD rows too (dynCoerce) —
-      // not an id-local change, so file-level CoW must not carry old files
-      if (reencodes(o, add)) noteFullRewrite(kind, label)
-      def fix(df: DataFrame): DataFrame = conflicts.foldLeft(df) { (d, n) =>
-        GValueCol.dynCoerce(col(n), d.schema(n).dataType) match {
-          // keep SQL NULL (= property absent) rather than letting the
-          // codec's gtype-null wrap it: an absent property must stay
-          // absent in the entity render, while an explicitly stored null
-          // keeps its TNull payload (cypher_create.out:239 `{}` vs
-          // `{"var_name": null}`)
-          case Some(c) => d.withColumn(n,
-            when(col(n).isNull, lit(null).cast(GValueCol.structType)).otherwise(c))
-          case None => d // no dynamic form — surface the union error below
-        }
-      }
-      if (conflicts.isEmpty) o.unionByName(add, allowMissingColumns = true)
-      else fix(o).unionByName(fix(add), allowMissingColumns = true)
-  }
-
-  /** GValue → literal Column, matching [[sparkType]]'s storage decision:
-    * homogeneous scalar lists stay typed arrays; mixed/nested lists and
-    * objects take the dynamic struct.
-    */
-  private[cypher] def gLit(v: GValue): org.apache.spark.sql.Column = v match {
-    case GArray(xs) if xs.nonEmpty && xs.forall(isScalarProp) &&
-        xs.map(_.getClass).distinct.size == 1 =>
-      array(xs.map(gLit): _*)
-    case g @ (_: GArray | _: GMap) => graft.gvalue.GValueCol.gLit(g)
-    case other => lit(sparkValue(other))
-  }
-
-  /** Reserve `n` consecutive entry ids for a label; returns (labelId, base). */
-  private[cypher] def reserveEntries(label: String, n: Long): (Int, Long) = {
-    val lid = labelId(label)
-    val base = nextEntry.getOrElse(label, 0L)
-    nextEntry(label) = base + n
-    (lid, base)
-  }
-
-  /** Append fully-formed vertex rows (id + ROW-VALUED property columns) —
-    * the general path for CREATE/MERGE whose properties are expressions
-    * over the input row, not constants.
-    */
-  private[cypher] def createVerticesRows(label: String, rows0: DataFrame): Unit = {
-    val rows = rows0
-    val propNames = rows.columns.filterNot(_ == "id").toSeq
-    uniqueConstraints.filter(c => c._1 == label && propNames.contains(c._2))
-      .foreach { case (_, k) =>
-        if (!rows.groupBy(col(k)).count().filter(col("count") > 1).isEmpty)
-          throw new IllegalStateException(
-            s"unique constraint violation: bulk CREATE would duplicate $label.$k")
-        vertexLabels.get(label).filter(_.columns.contains(k)).foreach { existing =>
-          if (!existing.join(rows.select(col(k)), Seq(k), "left_semi").isEmpty)
-            throw new IllegalStateException(
-              s"unique constraint violation: $label.$k already has one of these values")
-        }
-      }
-    labelId(label)
-    val df = rows.select(col("id") +: propNames.sorted.map(col): _*)
-    appendRows("v", label, df)
-  }
-
-  private val uniqueConstraints = mutable.Set.empty[(String, String)]
-
-  /** Register a unique constraint; existing data must already satisfy it. */
-  def addUniqueConstraint(label: String, prop: String): Unit = {
-    vertexLabels.get(label).foreach { df =>
-      if (df.columns.contains(prop)) {
-        val dup = df.filter(col(prop).isNotNull).groupBy(col(prop))
-          .count().filter(col("count") > 1).limit(1).count()
-        // PG's failed CREATE UNIQUE INDEX message; expression indexes
-        // name as <table>_expr_idx… (old index.out:
-        // could not create unique index "City_expr_idx1")
-        require(dup == 0,
-          s"""could not create unique index "${label}_expr_idx1"""")
-      }
-    }
-    uniqueConstraints += ((label, Compiler.PropNames.esc(prop)))
-  }
-
-  private val wholePropsUnique = mutable.Set.empty[String]
-
-  /** Whole-properties uniqueness (create_unique_properties_constraint,
-    * postgraph.sql.in:161): no two vertices of the label may carry an
-    * identical property map.
-    */
-  def addUniquePropertiesConstraint(label: String): Unit =
-    wholePropsUnique += label
-
-  private def checkWholeUnique(label: String, props: Map[String, GValue]): Unit =
-    if (wholePropsUnique.contains(label))
-      vertexLabels.get(label).foreach { df =>
-        val propCols = df.columns.filterNot(Set("id"))
-        // identical map ⇔ every stored column matches the incoming value
-        // (null where the key is absent) — one filtered limit-1 probe
-        val pred = propCols.map { c =>
-          props.get(c) match {
-            case Some(v) if v != GNull => col(c) <=> gLit(v)
-            case _ => col(c).isNull
-          }
-        }.foldLeft(lit(true))(_ && _)
-        val extraKeys = props.keySet.diff(propCols.toSet).nonEmpty
-        if (!extraKeys && !df.filter(pred).isEmpty)
-          throw new IllegalStateException("duplicate key value violates " +
-            s"""unique constraint "${label}_properties_key"""")
-      }
-
-  private def checkUnique(label: String, props: Map[String, GValue]): Unit =
-    uniqueConstraints.filter(_._1 == label).foreach { case (_, prop) =>
-      props.get(prop).filter(_ != GNull).foreach { v =>
-        vertexLabels.get(label).filter(_.columns.contains(prop)).foreach { df =>
-          val clash = if (df.filter(col(prop) === gLit(v)).isEmpty) 0 else 1
-          if (clash > 0) throw new IllegalStateException(
-            s"unique constraint violation: $label.$prop = ${v.render}")
-        }
-      }
-    }
-
-  def createVertex(label: String, props0: Map[String, GValue]): Long = {
-    val props = props0.map { case (k, v) => Compiler.PropNames.esc(k) -> v }
-    // allocate BEFORE the constraint check: PG's heap insert consumes the
-    // serial value before the unique index rejects the tuple, so a failed
-    // CREATE burns its entry id (index.out — post-violation rows land on
-    // id 13, not 12; sequences are non-transactional)
-    val lid = labelId(label)
-    val entry = nextEntry.getOrElse(label, 0L) + 1
-    nextEntry(label) = entry
-    checkUnique(label, props)
-    checkWholeUnique(label, props)
-    val id = PropertyGraph.packId(lid, entry)
-    val fields = StructField("id", LongType) +:
-      props.toSeq.sortBy(_._1).map { case (k, v) => StructField(k, sparkType(v)) }
-    val row = Row.fromSeq(id +: props.toSeq.sortBy(_._1).map { case (_, v) => sparkValue(v) })
-    val df = spark.createDataFrame(java.util.Arrays.asList(row), StructType(fields))
-    appendRows("v", label, df)
-    id
-  }
-
-  def createEdge(label: String, startId: Long, endId: Long,
-      props0: Map[String, GValue]): Long = {
-    val props = props0.map { case (k, v) => Compiler.PropNames.esc(k) -> v }
-    val lid = labelId(label)
-    val entry = nextEntry.getOrElse(label, 0L) + 1
-    nextEntry(label) = entry
-    val id = PropertyGraph.packId(lid, entry)
-    val fields = Seq(StructField("id", LongType), StructField("start_id", LongType),
-      StructField("end_id", LongType)) ++
-      props.toSeq.sortBy(_._1).map { case (k, v) => StructField(k, sparkType(v)) }
-    val row = Row.fromSeq(Seq(id, startId, endId) ++
-      props.toSeq.sortBy(_._1).map { case (_, v) => sparkValue(v) })
-    val df = spark.createDataFrame(java.util.Arrays.asList(row), StructType(fields))
-    appendRows("e", label, df)
-    id
-  }
-
-  /** Append edges from (start_id, end_id, ROW-VALUED property columns) —
-    * the general path for per-row CREATE/MERGE edge properties that are
-    * expressions over the input row (reference cypher_create.sql:72).
-    * Ids come from [[RowNumber]]'s partition-local numbering over the
-    * FROZEN input, so an edge's id/property pairing is fixed at create
-    * time (a global-order window both single-partitioned the input and,
-    * with property-tied orderings, could re-pair ids across actions).
-    */
-  def createEdgesRows(label: String, rows: DataFrame): Unit = {
-    val lid = labelId(label)
-    val base = nextEntry.getOrElse(label, 0L)
-    val propNames = rows.columns.filterNot(Set("start_id", "end_id")).toSeq.sorted
-    val (numbered, n) = RowNumber.attach(rows, "__ern")
-    val df = numbered
-      .withColumn("id", shiftleft(lit(lid.toLong), 48)
-        .bitwiseOR(col("__ern") + base))
-      .select(Seq(col("id"), col("start_id"), col("end_id")) ++ propNames.map(col): _*)
-    nextEntry(label) = base + n
-    appendRows("e", label, df)
-  }
-
-  /** One-row DF for a just-created vertex, columns prefixed `alias__`. */
-  def vertexRowDf(alias: String, label: String, id: Long): DataFrame = {
-    val src = vertexLabels(label).filter(col("id") === id)
-      .withColumn("label", lit(label))
-    src.columns.foldLeft(src)((df, c) => df.withColumnRenamed(c, s"${alias}__$c"))
-  }
-
-  /** One-row DF for a just-created edge, columns prefixed `alias__`. */
-  def edgeRowDf(alias: String, label: String, id: Long): DataFrame = {
-    val src = edgeLabels(label).filter(col("id") === id)
-      .withColumn("label", lit(label))
-    src.columns.foldLeft(src)((df, c) => df.withColumnRenamed(c, s"${alias}__$c"))
-  }
-
-  /** Append edges whose ids the caller already assigned from a
-    * [[reserveEntries]] block — the per-row CREATE path that binds the
-    * edge variable needs the id visible to the same query's RETURN.
-    */
-  def createEdgesWithIds(label: String, rows: DataFrame): Unit = {
-    labelId(label)
-    val propNames = rows.columns.filterNot(Set("id", "start_id", "end_id")).toSeq.sorted
-    val df = rows.select(
-      Seq(col("id"), col("start_id"), col("end_id")) ++ propNames.map(col): _*)
-    appendRows("e", label, df)
-  }
-
-  /** SET/REMOVE property k for ids in `updates(__set_id, __set_val)` across
-    * every label table containing those ids (copy-on-write). When the
-    * updates are held on the driver and keep the column's type, a label
-    * takes the held path ([[setHeld]]).
-    */
-  def updateProperty(k: String, updates0: DataFrame): Unit = {
-    // eager localCheckpoint, not persist(): the updated label tables hold a
-    // lazy reference to `updates`, so there is no "after the consuming
-    // action" point to unpersist at — checkpointing materializes once, cuts
-    // the lineage (deterministic re-scans), and the blocks are released by
-    // the context cleaner when the session drops the table version
-    val frozen = Local.freezeHeld(updates0)
-    val updates = frozen._1
-    noteTouched(updates.select(col("__set_id").as("id")))
-    val hit = labelsIn(frozen, "__set_id")
-    def apply(kind: String, tables: Map[String, DataFrame]): Map[String, DataFrame] =
-      tables.map { case (l, df) =>
-        if (!hits(hit, l)) l -> df
-        else l -> frozen._2.filter(_ => keepsType(df, k, updates))
-          .flatMap(idsOf(_, "__set_id", l)).flatMap(setHeld(kind, l, df, k, updates, _))
-          .getOrElse(setColumn(kind, l, df, k, updates))
-      }
-    vertexLabels = apply("v", vertexLabels)
-    edgeLabels = apply("e", edgeLabels)
-  }
-
-  /** Whether SET of `updates` keeps column k's type in `df`. */
-  private def keepsType(df: DataFrame, k: String, updates: DataFrame): Boolean =
-    !df.columns.contains(k) || {
-      val (oldDt, newDt) = (df.schema(k).dataType, updates.schema("__set_val").dataType)
-      oldDt == newDt || oldDt == NullType || newDt == NullType
-    }
-
-  /** `df` with column k set from `updates` where its id has one. */
-  private def setColumn(kind: String, l: String, df: DataFrame, k: String,
-      updates: DataFrame): DataFrame = {
-    val joined = df.join(updates, df("id") === updates("__set_id"), "left_outer")
-    val updated =
-      if (df.columns.contains(k)) {
-        val (oldC, newC) =
-          if (keepsType(df, k, updates)) (col(k), col("__set_val"))
-          else {
-            // whole-column re-encode touches UNCHANGED rows too —
-            // disqualify this label from file-level CoW
-            noteFullRewrite(kind, l)
-            // type-changing SET (long → list/map/string …): both the
-            // kept and the new values re-encode through the dynamic
-            // codec — reference stores every property as gtype
-            import graft.gvalue.GValueCol
-            (GValueCol.dynCoerce(col(k), df.schema(k).dataType),
-              GValueCol.dynCoerce(col("__set_val"), updates.schema("__set_val").dataType)) match {
-              case (Some(o2), Some(n2)) => (o2, n2)
-              case _ => (col(k), col("__set_val")) // no dynamic form
-            }
-          }
-        joined.withColumn(k, when(col("__set_id").isNotNull, newC).otherwise(oldC))
-      } else joined.withColumn(k, col("__set_val"))
-    updated.drop("__set_id", "__set_val")
-  }
-
-  /** Held SET of label `l` at its sorted `ids`: their current versions are
-    * read from the held rows and, for those in base, by one collect of base
-    * filtered by them; the new versions replace them in the held rows and
-    * the ids join dead. None when the change would pass its bound or the
-    * update does not fold on the driver.
-    */
-  private def setHeld(kind: String, l: String, df: DataFrame, k: String,
-      updates: DataFrame, ids: Array[Long]): Option[DataFrame] = {
-    val h = heldOf(kind, l, df)
-    if (!holdable(h.size + 2 * ids.length)) return None
-    val inBase = ids.filter(i => !has(h.rowIds, i) && !has(h.dead, i))
-    val baseRows =
-      if (inBase.isEmpty) Array.empty[Row]
-      else h.base.filter(MutableGraph.idIn(inBase)).collect()
-    val current = Local.relation(spark, baseRows.toSeq, h.base.schema)
-      .unionByName(h.rowsDf.filter(MutableGraph.idIn(ids)),
-        allowMissingColumns = true)
-    val merged = h.rowsDf.filter(!MutableGraph.idIn(ids))
-      .unionByName(setColumn(kind, l, current, k, updates), allowMissingColumns = true)
-    folded(merged).map(rows =>
-      hold(kind, l, h.copy(dead = union(h.dead, ids), rows = rows, schema = merged.schema)))
-  }
-
-  /** Held DELETE of label `l` at its sorted `ids`: they join dead and leave
-    * the held rows, with no job. None past the bound.
-    */
-  private def deleteHeld(kind: String, l: String, df: DataFrame,
-      ids: Array[Long]): Option[DataFrame] = {
-    val h = heldOf(kind, l, df)
-    if (!holdable(h.size + ids.length)) return None
-    val kept = h.rowsDf.filter(!MutableGraph.idIn(ids))
-    folded(kept).map(rows => hold(kind, l, h.copy(dead = union(h.dead, ids), rows = rows)))
-  }
-
-  private def has(sorted: Array[Long], id: Long): Boolean =
-    java.util.Arrays.binarySearch(sorted, id) >= 0
-
-  private def union(a: Array[Long], b: Array[Long]): Array[Long] = (a ++ b).distinct.sorted
-
-  /** The sorted ids of label `l` in `idCol` of a frozen write snapshot's
-    * rows; None for a label without an id.
-    */
-  private def idsOf(rows: Array[Row], idCol: String, l: String): Option[Array[Long]] =
-    labelIds.get(l).map { lid =>
-      rows.iterator.map(r => r.get(r.fieldIndex(idCol)))
-        .collect { case n: java.lang.Number if (n.longValue >>> 48) == lid => n.longValue }
-        .toArray.distinct.sorted
-    }
-
-  /** Label ids of the entity ids in `idCol` of a frozen write snapshot:
-    * read off the driver rows when it is held there, else one job.
-    */
-  private def labelsIn(frozen: (DataFrame, Option[Array[Row]]), idCol: String): Set[Long] =
-    frozen match {
-      case (_, Some(rows)) =>
-        rows.iterator.map(r => r.get(r.fieldIndex(idCol)))
-          .collect { case n: java.lang.Number => n.longValue >>> 48 }.toSet
-      case (df, None) =>
-        df.select(PropertyGraph.labelOfCol(col(idCol).cast(LongType)).as("l"))
-          .where(col("l").isNotNull)
-          .distinct().collect().map(_.getLong(0)).toSet
-    }
-  /** Whether a write whose ids carry label ids `hit` can change label `l`:
-    * a label it cannot change keeps its DataFrame reference, and publish
-    * carries it by pointer.
-    */
-  private def hits(hit: Set[Long], l: String): Boolean =
-    labelIds.get(l).forall(i => hit(i.toLong))
-
-  /** DELETE edges by id across every edge label table. */
-  def deleteEdges(ids0: DataFrame): Unit = {
-    val frozen = Local.freezeHeld(ids0)
-    val ids = frozen._1
-    noteTouched(ids)
-    val hit = labelsIn(frozen, "id")
-    edgeLabels = edgeLabels.map { case (l, e) =>
-      if (!hits(hit, l)) l -> e
-      else l -> frozen._2.flatMap(idsOf(_, "id", l)).flatMap(deleteHeld("e", l, e, _))
-        .getOrElse(e.join(ids, e("id") === ids("id"), "left_anti"))
-    }
-  }
-
-  /** DELETE vertices by id; DETACH cascades to incident edges on every edge
-    * label (get_all_edge_labels_per_graph semantics); plain DELETE errors if
-    * any incident edge remains.
-    */
-  def deleteVertices(ids0: DataFrame, detach: Boolean): Unit = {
-    val frozen = Local.freezeHeld(ids0) // eager + lineage-cut (see updateProperty)
-    val ids = frozen._1
-    // ids held on the driver filter each edge label by its endpoints (a
-    // scan, or no job over a held label); others take a semi-join, a
-    // broadcast nested loop on the OR
-    val heldIds = frozen._2.map(_.iterator.map(r => r.get(r.fieldIndex("id")))
-      .collect { case n: java.lang.Number => Long.box(n.longValue) }.toSeq.distinct)
-    def incident(e: DataFrame): DataFrame = heldIds match {
-      case Some(held) => e.filter(col("start_id").isin(held: _*) || col("end_id").isin(held: _*))
-      case None =>
-        e.join(ids, e("start_id") === ids("id") || e("end_id") === ids("id"), "left_semi")
-    }
-    if (!detach) {
-      val n = edgeLabels.values.map(e => incident(e).limit(1).count()).sum
-      if (n > 0)
-        throw new IllegalStateException(
-          "cannot delete vertex with incident edges — use DETACH DELETE")
-    } else if (edgeLabels.nonEmpty) {
-      // the cascade is keyed on ENDPOINTS: enumerate the edge ids it removes
-      // (one filter or semi-join per label, frozen in one job) and delete
-      // those by id, so the statement stays id-local — a point DETACH
-      // DELETE publishes tombstones through the dv path (r12), and an edge
-      // label with no incident edge keeps its reference
-      deleteEdges(edgeLabels.values.map(e => incident(e).select(col("id")))
-        .reduce(_ unionByName _))
-    }
-    noteTouched(ids)
-    val hit = labelsIn(frozen, "id")
-    vertexLabels = vertexLabels.map { case (l, v) =>
-      if (!hits(hit, l)) l -> v
-      else l -> frozen._2.flatMap(idsOf(_, "id", l)).flatMap(deleteHeld("v", l, v, _))
-        .getOrElse(v.join(ids, v("id") === ids("id"), "left_anti"))
-    }
-  }
-
-  // ------------------------------------------------------ durable store
-  // (GraphStore layout doc) — when attached, every successful mutating
-  // statement publishes the next parquet version; reads use the in-memory
-  // label tables, never re-reading the store. Invariant, kept at commit
-  // (commitIfChanged): a committed label is a materialized leaf, a
-  // join-free append of at most 16 leaves, or a held `base − dead ∪ rows`
-  // over one of those whose dead ids and driver-held rows stay within the
-  // merge-on-read bound, so a statement's plans and its publish join a
-  // small delta against a flat table, whatever the history.
-
-  private[cypher] var storeRoot: Option[String] = None
-  /** What this graph holds of its store, set at load and by each publish;
-    * its version is the optimistic commit's validation base.
-    */
-  private var held = Commit.NotHeld
-
-  /** Publish the current catalog and label tables as the next version
-    * ([[Commit.publish]]; the layout and the per-label choice are in the
-    * [[GraphStore]] doc). A label whose DataFrame reference is unchanged
-    * since the statement's snapshot (`prevV`/`prevE`) is carried by its
-    * catalog lines instead of being rewritten.
-    */
-  private[cypher] def publish(
-      prevV: Map[String, DataFrame] = Map.empty,
-      prevE: Map[String, DataFrame] = Map.empty): Unit = storeRoot.foreach { root =>
-    val (now, chainMerges) = Commit.publish(spark, Commit.Snapshot(root, held,
-      GraphStore.Catalog(seqLast, labelIds.toList, nextEntry.toList,
-        uniqueConstraints.toList, wholePropsUnique.toList, streamBatches.toList,
-        Nil, Nil, Nil),
-      vertexLabels, edgeLabels, prevV, prevE, txTouched.toList, txFullRewrite.toSet,
-      heldLabels.map { case (key, h) => key -> ((h.df, h.rows)) },
-      ivfIndexes.values.toList, pqIndexes.values.toList, ivfAssignCache, pqCodesCache))
-    held = now
-    entryChainMerges.addAndGet(chainMerges)
-    txResetTracking() // touched-id frames are consumed by this publish
-  }
-
-  /** Explicit compaction (the Delta/Iceberg OPTIMIZE analog): rewrite every
-    * label in file-manifest form whole at a new version, dropping its
-    * deletion vectors and manifest chain, and carry the rest. Returns false
-    * (and publishes nothing) when no label is in manifest form, so it is
-    * safe on a schedule. Incremental writes self-compact at the 64-line
-    * bound; this reclaims read debt earlier (after a dv-heavy burst).
-    */
-  private[cypher] def compactStore(): Boolean = storeRoot.exists { root =>
-    val manifested = Commit.manifestedLabels(root)
-    manifested.foreach { case (kind, l) => noteFullRewrite(kind, l) }
-    if (manifested.nonEmpty)
-      publish(vertexLabels.filter { case (l, _) => !manifested(("v", l)) },
-        edgeLabels.filter { case (l, _) => !manifested(("e", l)) })
-    manifested.nonEmpty
-  }
-
-  /** Commit to the store iff this statement changed catalog or tables
-    * relative to its pre-statement snapshot (reference: every write runs
-    * in a PG transaction whose commit persists the heap — here the
-    * version publish IS the commit). Label tables are immutable maps, so
-    * reference inequality is an exact dirty check.
-    */
-  private[cypher] def commitIfChanged(prev: MutableGraph.TxState): Unit = {
-    vertexLabels = flattened("v", vertexLabels, prev.vertexLabels)
-    edgeLabels = flattened("e", edgeLabels, prev.edgeLabels)
-    heldLabels = heldLabels.filter { case ((kind, l), h) => tableOf(kind, l).exists(_ eq h.df) }
-    if (storeRoot.isDefined &&
-      ((vertexLabels ne prev.vertexLabels) || (edgeLabels ne prev.edgeLabels) ||
-        labelIds.toSeq != prev.labelIds || nextEntry.toMap != prev.nextEntry ||
-        uniqueConstraints.toSet != prev.uniques ||
-        wholePropsUnique.toSet != prev.wholeUniques))
-      publish(prev.vertexLabels, prev.edgeLabels)
-  }
-
-  /** Re-materialize each label the statement changed whose plan holds a
-    * join or more than [[MutableGraph.MaxLeaves]] leaves: every write
-    * wraps its label in one more join (SET, DELETE, upsert) or union
-    * (CREATE, ingest), and an unflattened table makes each later plan and
-    * publish re-walk the whole write history — jobs per statement grew
-    * with the statement count. Pregelix keeps its state materialized and
-    * joins each step's delta against it; this is that rule. Append-only
-    * changes stay lazy until the 17th leaf, so a point CREATE pays no job
-    * here. The re-base is [[Local.materialize]]: a small label is held on
-    * the driver as a LocalRelation (one collect, or none when the
-    * optimizer folds its plan into driver rows, [[graft.LocalFold]]), so
-    * its later reads run no job. A larger one is checkpointed, coalesced
-    * first: an append history also inflates the partition count, which
-    * would schedule many near-empty tasks on every later scan. Both the
-    * hold's byte gate and the checkpoint take the estimate of
-    * [[sizeAfterWrite]], not Spark's, which would carry over a join's
-    * estimate, the product of its sides: after a few SETs that sent every
-    * small-input site of the label down its distributed path. A held
-    * label (`base − dead ∪ rows`) stays lazy until its dead ids and
-    * row-versions pass [[holdable]]'s bound, and is then re-based the
-    * same way.
-    */
-  private def flattened(kind: String, now: Map[String, DataFrame],
-      prev: Map[String, DataFrame]): Map[String, DataFrame] =
-    if (now eq prev) now
-    else now.map {
-      case (l, df) if prev.get(l).exists(_ eq df) => l -> df
-      case (l, df) =>
-        val plan = df.queryExecution.analyzed
-        val leaves = plan.collectLeaves()
-        if (leaves.size <= MutableGraph.MaxLeaves &&
-            !plan.exists(_.isInstanceOf[Join]) &&
-            !heldLabels.get((kind, l)).exists(h => (h.df eq df) && !holdable(h.size)))
-          l -> df
-        else {
-          val size = sizeAfterWrite(plan)
-          l -> org.apache.spark.sql.graft.Bridge.withSizeInBytes(
-            Local.materialize(df, Some(size), Some(spark.sparkContext.defaultParallelism)), size)
-        }
-    }
-
-  /** Size estimate of a label after a write: an append (union) adds its
-    * sides, and a SET, DELETE or upsert (a left outer, anti or semi join
-    * against the statement's delta) keeps at most its left side's rows, so
-    * the delta adds nothing. A point write's estimate thus stays that of
-    * the table it rewrote, however many statements came before it.
-    */
-  private def sizeAfterWrite(plan: LogicalPlan): BigInt = plan match {
-    case j: Join if j.joinType == LeftOuter || j.joinType == LeftAnti ||
-        j.joinType == LeftSemi => sizeAfterWrite(j.left)
-    case p if p.children.isEmpty => p.stats.sizeInBytes
-    case p => p.children.map(sizeAfterWrite).sum
-  }
-}
-
-object MutableGraph {
-
-  /** Most leaves a committed label's plan may hold (see `flattened`). */
-  private[cypher] val MaxLeaves = 16
-
-  /** Test hook: the most recent dv-filtered scan, pre-checkpoint — lets
-    * WriteSpec assert the dv-read plan carries no `id IN (…)` chain. */
-  @volatile private[graft] var lastDvRead: Option[DataFrame] = None
-
-  /** Merge-on-read bounds: a statement touching more ids of a label, or a
-    * label whose tombstones would exceed the budget, commits by CoW
-    * ([[Commit.idLocalPlan]]). Vars only so specs can exercise the
-    * fallbacks at small scale; production code never writes them.
-    */
-  @volatile private[graft] var DvMaxStatementIds: Int = 8192
-  @volatile private[graft] var DvMaxTombstones: Int = 65536
-
-  /** The type with every nullability mark relaxed — two types equal under
-    * this differ only in NOT NULL claims and union/compare losslessly. */
-  private[cypher] def relaxNullability(dt: DataType): DataType = dt match {
-    case StructType(fs) => StructType(fs.map(f =>
-      f.copy(dataType = relaxNullability(f.dataType), nullable = true)))
-    case ArrayType(et, _) => ArrayType(relaxNullability(et), containsNull = true)
-    case MapType(k, v, _) =>
-      MapType(relaxNullability(k), relaxNullability(v), valueContainsNull = true)
-    case other => other
-  }
-
-  /** Reopen a durable graph from its store root ([[Commit.open]]). */
-  private[cypher] def load(spark: SparkSession, root: String,
-      asOf: Option[Long] = None): MutableGraph = {
-    val o = Commit.open(spark, root, asOf)
-    val g = new MutableGraph(spark)
-    val c = o.catalog
-    g.setvalLabelId(c.seq)
-    g.labelIds ++= c.labels
-    g.nextEntry ++= c.next
-    g.uniqueConstraints ++= c.uniques
-    g.wholePropsUnique ++= c.wholeUniques
-    g.streamBatches ++= c.streams
-    g.vertexLabels = o.vertexLabels
-    g.edgeLabels = o.edgeLabels
-    o.ivf.foreach(ix => g.ivfIndexes((ix.label, ix.prop)) = ix)
-    o.pq.foreach(ix => g.pqIndexes((ix.label, ix.prop)) = ix)
-    g.held = o.held
-    g.storeRoot = Some(root)
-    g
-  }
-  /** Frozen catalog state for statement-level rollback. */
-  final case class TxState(
-      labelIds: Seq[(String, Int)], nextEntry: Map[String, Long],
-      vertexLabels: Map[String, DataFrame], edgeLabels: Map[String, DataFrame],
-      uniques: Set[(String, String)], wholeUniques: Set[String],
-      heldLabels: Map[(String, String), HeldLabel])
-
-  /** `id IN ids`. */
-  private[cypher] def idIn(ids: Array[Long]): Column = col("id").isin(ids.map(Long.box): _*)
-
-  /** A label held as `base − dead ∪ rows`: `base` its table when the first
-    * held write ran (made at open or at the last re-base by
-    * [[Local.materialize]]: driver rows when small, else a checkpoint),
-    * `dead` the sorted ids whose copy in base is suppressed, and `rows` the
-    * driver-held current row-versions of those ids and of new ids, in the
-    * label's column order (`schema`: base's columns, then those the writes
-    * added). Every id of `rows` is in `dead` or absent from base. `df`, the
-    * label's table, is one filter of base and one union with the rows: it
-    * adds no join and one leaf to base.
-    */
-  final case class HeldLabel(base: DataFrame, dead: Array[Long], rows: Array[Row],
-      schema: StructType) {
-    lazy val rowsDf: DataFrame = Local.relation(base.sparkSession, rows.toSeq, schema)
-    lazy val df: DataFrame =
-      (if (dead.isEmpty) base else base.filter(!idIn(dead)))
-        .unionByName(rowsDf, allowMissingColumns = true)
-    def size: Int = dead.length + rows.length
-    /** Ids of `rows`, sorted. */
-    lazy val rowIds: Array[Long] = {
-      val i = schema.fieldIndex("id")
-      rows.map(_.getLong(i)).sorted
-    }
-  }
-}
