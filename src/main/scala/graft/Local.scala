@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -17,11 +19,12 @@ import org.apache.spark.sql.types.StructType
   *  - [[capped]] and [[holds]], which check the ACTUAL row count, so an
   *    estimate that undercounts never puts more than `maxRows` rows on the
   *    driver; above the cap the site takes its distributed path.
-  * Sites: write snapshots, write-id numbering and a publish's touched ids
-  * (GraphSession), the base of a label table, at a durable graph's open
-  * (Commit) and at a re-base after writes (GraphSession): [[materialize]],
-  * estimate under [[HeldLabelBytes]] and actual rows under
-  * [[HeldLabelRows]], a deletion-vector commit's
+  * Sites: write snapshots, a micro-batch appended to a label, write-id
+  * numbering and a publish's touched ids (MutableGraph, Commit), the base
+  * of a label table, at a durable graph's open (Commit: its parquet bytes)
+  * and at a re-base after writes (MutableGraph: the label state's own
+  * estimate): [[materialize]], estimate under [[HeldLabelBytes]] and
+  * actual rows under [[HeldLabelRows]], a deletion-vector commit's
   * tombstone positions (Commit: the tombstone count, as it holds one live
   * position per tombstone, whatever the size of the files read), the
   * recursive local frontier (Recursive), the single-task graph
@@ -66,9 +69,11 @@ private[graft] object Local {
   val HeldLabelRows: Int = 8192
 
   /** Size estimate of a label table held on the driver ([[materialize]]):
-    * at open its parquet bytes, at a re-base [[graft.cypher.MutableGraph]]'s
-    * write estimate. Measured on the same box with a wide label, `Doc` of
-    * N rows with a W-byte hex string each (parquet ≈ N·W bytes), medians
+    * at open its parquet bytes, at a re-base the label state's estimate,
+    * its base's bytes plus its driver-held rows' own
+    * ([[graft.cypher.MutableGraph.LabelState]]). Measured on the same box
+    * with a wide label, `Doc` of N rows with a W-byte hex string each
+    * (parquet ≈ N·W bytes), medians
     * of 30 reads (CHANGES.md has the table): held reads beat checkpointed
     * ones by 28–43% at 8 MiB of 4 KiB rows (2,048) and tie at 8 MiB of
     * 1 KiB rows (8,192, the row bound); at 16 MiB of 4 KiB rows the gain
@@ -94,8 +99,23 @@ private[graft] object Local {
   }
 
   def fits(bytes: Long, dfs: DataFrame*): Boolean =
-    maxRows(dfs.head.sparkSession) > 0 &&
-      dfs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum <= bytes
+    maxRows(dfs.head.sparkSession) > 0 && dfs.map(sizeOf).sum <= bytes
+
+  /** The optimizer's size estimate of `df`, which runs no job. */
+  def sizeOf(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** The bytes of driver rows of `schema` as Spark holds them, each an
+    * UnsafeRow: a string costs its UTF-8 bytes, where a LocalRelation's
+    * estimate counts 20 a string whatever its length.
+    */
+  def bytesOf(rows: Array[Row], schema: StructType): BigInt =
+    if (rows.isEmpty) 0
+    else {
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+      val unsafe = UnsafeProjection.create(schema)
+      rows.iterator.map(r =>
+        unsafe(toCatalyst(r).asInstanceOf[InternalRow]).getSizeInBytes.toLong).sum
+    }
 
   def holds(spark: SparkSession, n: Long): Boolean = {
     val cap = maxRows(spark)
@@ -129,25 +149,21 @@ private[graft] object Local {
     }
 
   /** A label table materialized as the base of later reads and writes:
-    * its rows as a LocalRelation when the size estimate (Spark's, or the
-    * caller's `estimate`) is within [[HeldLabelBytes]] and the ACTUAL rows
-    * are at most [[HeldLabelRows]], else an eager localCheckpoint,
-    * coalesced to `partitions` when given. A table within both bounds, or
-    * past the byte estimate, costs one job; one past the row bound alone
-    * two, the collect and the checkpoint. A plan the optimizer folds into
-    * driver rows ([[LocalFold]], itself bounded by `maxRows`) is held as
-    * those rows with no job.
+    * its rows as a LocalRelation when the caller's size estimate `bytes`
+    * is within [[HeldLabelBytes]] and the ACTUAL rows are at most
+    * [[HeldLabelRows]], else an eager localCheckpoint, coalesced to
+    * `partitions` when given. A table within both bounds, or past the byte
+    * estimate, costs one job; one past the row bound alone two, the collect
+    * and the checkpoint. Within the byte estimate, a plan the optimizer
+    * folds into driver rows ([[LocalFold]], itself bounded by `maxRows`) is
+    * held as those rows with no job.
     */
-  def materialize(df: DataFrame, estimate: Option[BigInt] = None,
-      partitions: Option[Int] = None): DataFrame = {
-    val spark = df.sparkSession
-    val plan = df.queryExecution.optimizedPlan
+  def materialize(df: DataFrame, bytes: BigInt, partitions: Option[Int] = None): DataFrame = {
     val rows =
-      if (plan.isInstanceOf[LocalRelation]) Some(df.collect())
-      else if (estimate.getOrElse(plan.stats.sizeInBytes) <= HeldLabelBytes)
-        capped(df).filter(_.length <= HeldLabelRows)
-      else None
-    rows.fold(partitions.fold(df)(df.coalesce).localCheckpoint())(relation(spark, _, df.schema))
+      if (bytes > HeldLabelBytes) None
+      else if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) Some(df.collect())
+      else capped(df).filter(_.length <= HeldLabelRows)
+    rows.fold(partitions.fold(df)(df.coalesce).localCheckpoint())(relation(df.sparkSession, _, df.schema))
   }
 
   /** Driver rows as a LocalRelation. */

@@ -2,6 +2,7 @@ package graft.cypher
 
 import graft.Local
 import graft.cypher.GraphStore._
+import graft.cypher.MutableGraph.{LabelState, Touched}
 import graft.graph.PropertyGraph
 import graft.gvalue._
 import org.apache.hadoop.conf.Configuration
@@ -65,25 +66,23 @@ private[cypher] object Commit {
   }
   val NotHeld: Held = Held(0L, Map.empty, Map.empty, Map.empty, Map.empty, Map.empty)
 
-  /** What a commit reads: the graph at the end of a statement and at its
-    * start (`prevV`/`prevE`), the ids the statement touched, the labels it
-    * must rewrite whole ("v:Label"), the driver-held row-versions of held
-    * labels with the table they belong to (`pointRows`, in that table's
-    * column order), its ANN indexes with their in-memory entries, and what
-    * it holds of the store. `head` is the catalog's non-table part.
+  /** What a commit reads: the graph's label states at the end of a
+    * statement and at its start (`prevV`/`prevE`; a changed state records
+    * what the statement touched and holds its row-versions), the labels to
+    * rewrite whole however they changed (`compact`), its ANN indexes with
+    * their in-memory entries, and what it holds of the store. `head` is the
+    * catalog's non-table part.
     */
   final case class Snapshot(root: String, held: Held, head: Catalog,
-      vertexLabels: Map[String, DataFrame], edgeLabels: Map[String, DataFrame],
-      prevV: Map[String, DataFrame], prevE: Map[String, DataFrame],
-      touched: List[DataFrame], fullRewrite: Set[String],
-      pointRows: Map[Key, (DataFrame, Array[Row])],
+      vertexLabels: Map[String, LabelState], edgeLabels: Map[String, LabelState],
+      prevV: Map[String, LabelState], prevE: Map[String, LabelState], compact: Set[Key],
       ivf: List[IvfIdx], pq: List[PqIdx],
       ivfCache: Map[Key, (DataFrame, DataFrame)],
       pqCache: Map[Key, (DataFrame, DataFrame)])
 
   /** A graph as a version holds it (see [[open]]). */
   final case class Opened(catalog: Catalog,
-      vertexLabels: Map[String, DataFrame], edgeLabels: Map[String, DataFrame],
+      vertexLabels: Map[String, LabelState], edgeLabels: Map[String, LabelState],
       ivf: List[IvfIdx], pq: List[PqIdx], held: Held)
 
   /** How a changed label commits. */
@@ -170,12 +169,6 @@ private[cypher] object Commit {
     Held(version, at("ivf"), at("pq"), stored("ivfa"), stored("pqc"), manifest)
   }
 
-  /** The labels of the latest version that are in file-manifest form. */
-  def manifestedLabels(root: String): Set[Key] =
-    latestVersion(root).filter(_ > 0).toList
-      .flatMap(v => Catalog.read(root, v).tables)
-      .collect { case t: FileTable => (t.kind, t.label) }.toSet
-
   /** An index's stored entries (`ivfa` / `pqc`) as a commit maintains them. */
   private final case class EntryIndex(tag: String, label: String, prop: String,
       stored: Option[(List[String], DataFrame)], cached: DataFrame => Option[DataFrame],
@@ -184,7 +177,7 @@ private[cypher] object Commit {
 
   private def entryIndexes(s: Snapshot): List[EntryIndex] = {
     def rows(label: String, prop: String, dims: Int, touched: DataFrame) =
-      embeddings(s.vertexLabels(label), prop, dims).join(touched, Seq("id"), "left_semi")
+      embeddings(s.vertexLabels(label).df, prop, dims).join(touched, Seq("id"), "left_semi")
     def cached(c: Option[(DataFrame, DataFrame)], cols: String*)(tbl: DataFrame) =
       c.collect { case (src, a) if src eq tbl => a.select(cols.map(col): _*) }
     s.ivf.map { ix =>
@@ -209,10 +202,10 @@ private[cypher] object Commit {
   private val fileBase = element_at(split(col("_metadata.file_path"), "/"), -1)
 
 
-  /** One commit's work: the statement's touched ids, held once on the
-    * driver while they fit `Local`'s cap (a driver-held frame costs no
-    * job) and checkpointed past it, and the tables and entries it writes
-    * into version dir `next`.
+  /** One commit's work: each changed label's touched ids, held on the
+    * driver while they fit `Local`'s cap (a driver-held frame costs no job)
+    * and checkpointed past it, and the tables and entries it writes into
+    * version dir `next`.
     */
   private final class Writer(spark: SparkSession, s: Snapshot, prev: Catalog, next: Long) {
     private val root = s.root
@@ -221,37 +214,36 @@ private[cypher] object Commit {
     private val prevTables = prev.tables.map(t => (t.kind, t.label) -> t).toMap
     var chainMerges = 0
 
-    private lazy val heldTouched: Option[Array[Long]] =
-      s.touched.foldLeft(Option(Set.empty[Long])) { (acc, f) =>
+    /** What the statement touched of label `key`: nothing for a label whose
+      * state it did not change.
+      */
+    private def touchedOf(key: Key): Touched =
+      if (s.compact(key)) Touched.Whole
+      else {
+        val (now, prevM) = if (key._1 == "v") (s.vertexLabels, s.prevV) else (s.edgeLabels, s.prevE)
+        now.get(key._2).filterNot(st => prevM.get(key._2).exists(_ eq st))
+          .fold(Touched.empty)(_.touched)
+      }
+    /** Label `key`'s touched ids: sorted on the driver while they fit
+      * `Local`'s cap (its held writes' ids and each id frame's collect),
+      * else one checkpointed frame.
+      */
+    private val touched = mutable.Map.empty[Key, Either[DataFrame, Array[Long]]]
+    private def touchedIds(key: Key): Either[DataFrame, Array[Long]] = touched.getOrElseUpdate(key, {
+      val (t, lid) = (touchedOf(key), labelIds(key._2))
+      t.frames.foldLeft(Option(t.ids)) { (acc, f) =>
         for (ids <- acc; rows <- Local.collect(f, Local.WriteBytes)
-             if Local.holds(spark, ids.size + rows.length))
-        yield ids ++ rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0))
-      }.map(_.toArray.sorted)
-    private lazy val touchedAll: DataFrame =
-      s.touched.reduce(_ unionByName _).localCheckpoint()
+             if Local.holds(spark, ids.length + rows.length))
+        yield MutableGraph.union(ids, rows.iterator.filterNot(_.isNullAt(0))
+          .map(_.getLong(0)).filter(i => (i >>> 48) == lid).toArray)
+      }.toRight((idFrame(t.ids) :: t.frames).reduce(_ unionByName _).localCheckpoint()
+        .filter(PropertyGraph.labelOfCol(col("id")) === lit(lid)).select(col("id")).distinct())
+    })
     private def idFrame(ids: Array[Long]): DataFrame =
       Local.relation(spark, ids.toSeq.map(Row(_)), idSchema)
-    /** Rel paths of the part files of label `l` in version dir `ver`, sorted. */
-    private def relsIn(ver: Long, kind: String, l: String): List[String] = {
-      val d = s"v$ver/$kind/${enc(l)}"
-      val dp = Paths.get(root, d)
-      if (!Files.isDirectory(dp)) Nil
-      else Files.list(dp).iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("part-")).toList.sorted.map(n => s"$d/$n")
-    }
-    private def heldOf(ids: Array[Long], l: String): Array[Long] =
-      ids.filter(i => (i >>> 48) == labelIds(l).toLong)
-    private def touchedOf(l: String): DataFrame = heldTouched match {
-      case Some(ids) => idFrame(heldOf(ids, l))
-      case None => touchedAll
-        .filter(PropertyGraph.labelOfCol(col("id")) === lit(labelIds(l)))
-        .select(col("id")).distinct()
-    }
     /** The label's touched ids, sorted; past `max` only the excess counts. */
-    private def touchedIdsOf(l: String, max: Int): Array[Long] = heldTouched match {
-      case Some(ids) => heldOf(ids, l)
-      case None => touchedOf(l).limit(max + 1).collect().map(_.getLong(0)).sorted
-    }
+    private def touchedIdsOf(kind: String, l: String, max: Int): Array[Long] =
+      touchedIds((kind, l)).fold(_.limit(max + 1).collect().map(_.getLong(0)).sorted, identity)
 
     private val dvCache = mutable.Map.empty[Key, (List[DvpFile], Positions)]
     /** The positions of a label's `dvps`: carried from the graph's
@@ -276,22 +268,22 @@ private[cypher] object Commit {
       if (dvps.isEmpty) raw else applyDvs(raw, dvsOf(key, dvps))
     }
 
-    def tables(kind: String, m: Map[String, DataFrame],
-        prevM: Map[String, DataFrame]): List[Table] =
-      m.toList.map { case (l, df) =>
+    def tables(kind: String, m: Map[String, LabelState],
+        prevM: Map[String, LabelState]): List[Table] =
+      m.toList.map { case (l, st) =>
         prevTables.get((kind, l)) match {
-          case Some(t) if prevM.get(l).exists(_ eq df) => t // unchanged: carry its lines
+          case Some(t) if prevM.get(l).exists(_.df eq st.df) => t // unchanged: carry its lines
           case prevT =>
-            lazy val ids = touchedIdsOf(l, MutableGraph.DvMaxStatementIds)
-            idLocalPrev(kind, l, df, prevT).flatMap { p =>
+            lazy val ids = touchedIdsOf(kind, l, MutableGraph.DvMaxStatementIds)
+            idLocalPrev(kind, l, st.df, prevT).flatMap { p =>
               idLocalPlan(p, ids) match {
                 case Full => None
                 case Carry => Some(p)
                 case Dv(tombstones) =>
-                  writeDv(kind, l, df, p, ids, tombstones).orElse(writeCow(kind, l, df, p, ids))
-                case Cow => writeCow(kind, l, df, p, ids)
+                  writeDv(kind, l, st, p, ids, tombstones).orElse(writeCow(kind, l, st.df, p, ids))
+                case Cow => writeCow(kind, l, st.df, p, ids)
               }
-            }.getOrElse(writeFull(kind, l, df))
+            }.getOrElse(writeFull(kind, l, st.df))
         }
       }
 
@@ -302,13 +294,13 @@ private[cypher] object Commit {
       */
     private def idLocalPrev(kind: String, l: String, df: DataFrame,
         prevT: Option[Table]): Option[FileTable] = {
-      if (s.fullRewrite(s"$kind:$l") || s.touched.isEmpty ||
-          df.schema.fields.exists(_.dataType == NullType)) return None
+      if (touchedOf((kind, l)).whole || df.schema.fields.exists(_.dataType == NullType))
+        return None
       val p = prevT match {
         case Some(t: FileTable) => t
         case Some(DirTable(_, _, ver, Nil)) =>
           FileTable(kind, l, statsOf(s"$root/v$ver/$kind/${enc(l)}", kind, l,
-            relsIn(ver, kind, l)), Nil)
+            partFiles(root, s"v$ver/$kind/${enc(l)}")), Nil)
         case _ => return None // a new label, or NullType columns on disk
       }
       if (p.files.isEmpty) None else Some(p)
@@ -321,16 +313,21 @@ private[cypher] object Commit {
       * Bytes per point SET/DELETE are the row plus a position line,
       * whatever the file size. The row-versions are written on the driver,
       * and so are the positions while the tombstones fit `Local`'s cap. A
-      * held label's row-versions are its held rows of the touched ids, with
-      * no scan of the label. None when there is nothing to write.
+      * held state's row-versions are its held rows of the touched ids, with
+      * no scan of the label, and only its dead ids lose their older copies.
+      * None when there is nothing to write.
       */
-    private def writeDv(kind: String, l: String, df: DataFrame, p: FileTable,
-        ids: Array[Long], tombstones: Array[Long]): Option[FileTable] = {
-      val encl = enc(l)
-      val idIx = df.schema.fieldIndex("id")
-      val rows = s.pointRows.get((kind, l)).collect { case (src, versions) if src eq df =>
-        versions.filter(r => java.util.Arrays.binarySearch(ids, r.getLong(idIx)) >= 0)
-      }.getOrElse(df.filter(col("id").isin(ids.map(Long.box): _*)).collect())
+    private def writeDv(kind: String, l: String, st: LabelState, p: FileTable,
+        ids: Array[Long], touchedInFiles: Array[Long]): Option[FileTable] = {
+      val (encl, df) = (enc(l), st.df)
+      val held = st.size > 0
+      val rows =
+        if (held) {
+          val idIx = st.schema.fieldIndex("id")
+          st.rows.filter(r => MutableGraph.has(ids, r.getLong(idIx)))
+        } else df.filter(MutableGraph.idIn(ids)).collect()
+      val tombstones =
+        if (held) touchedInFiles.filter(MutableGraph.has(st.dead, _)) else touchedInFiles
       val newFiles =
         if (rows.isEmpty) Nil
         else {
@@ -393,7 +390,7 @@ private[cypher] object Commit {
     private def writeCow(kind: String, l: String, df: DataFrame, p: FileTable,
         ids: Array[Long]): Option[FileTable] = {
       val encl = enc(l)
-      val touched = touchedOf(l)
+      val touched = touchedIds((kind, l)).fold(identity, idFrame)
       val oversized = ids.length > MutableGraph.DvMaxStatementIds
       val (cand, skipped) = p.files.partition(f => oversized || mayHold(f, ids))
       // dv-aware: a touched id whose only copy in a candidate file is
@@ -415,7 +412,7 @@ private[cypher] object Commit {
       if (carried.isEmpty && rows.isEmpty) return None
       val outDir = s"$dir/$kind/$encl"
       rows.coalesce(math.max(1, rewritten.size)).write.parquet(outDir)
-      val written = statsOf(outDir, kind, l, relsIn(next, kind, l))
+      val written = statsOf(outDir, kind, l, partFiles(root, s"v$next/$kind/$encl"))
       Some(FileTable(kind, l, carried ++ written, p.dvps))
     }
 
@@ -562,9 +559,8 @@ private[cypher] object Commit {
       * than 4096 ids).
       */
     private def boundedTouched(label: String): Option[DataFrame] = {
-      if (s.fullRewrite(s"v:$label")) return None
-      if (s.touched.isEmpty || !labelIds.contains(label)) return None
-      val ids = touchedIdsOf(label, 4096)
+      if (touchedOf(("v", label)).whole || !labelIds.contains(label)) return None
+      val ids = touchedIdsOf("v", label, 4096)
       if (ids.length > 4096) None else Some(idFrame(ids))
     }
 
@@ -583,7 +579,7 @@ private[cypher] object Commit {
       * entries. Returns the lines and the table they reflect.
       */
     def persistEntries(e: EntryIndex): Option[(Entries, DataFrame)] = {
-      val tbl = s.vertexLabels.getOrElse(e.label, return None)
+      val tbl = s.vertexLabels.getOrElse(e.label, return None).df
       def kept(rels: List[String]) = Some((Entries(e.tag, e.label, e.prop, rels), tbl))
       def write(a: DataFrame, carried: List[String]) = {
         val rel = s"v$next/${e.tag}/${enc(e.label)}__${enc(e.prop)}"
@@ -616,7 +612,7 @@ private[cypher] object Commit {
                 } else write(e.derive(touched), rels) // delta: the touched rows
               case (None, Some(touched)) =>
                 // entries a probe cached against the statement's start
-                s.prevV.get(e.label).flatMap(e.cached).map { a =>
+                s.prevV.get(e.label).map(_.df).flatMap(e.cached).map { a =>
                   if (touched.isEmpty) a
                   else a.join(touched, Seq("id"), "left_anti").unionByName(e.derive(touched))
                 }.flatMap(write(_, Nil))
@@ -631,8 +627,8 @@ private[cypher] object Commit {
       cat.tables.flatMap {
         case t: FileTable =>
           val tbl = if (t.kind == "v") s.vertexLabels.get(t.label) else s.edgeLabels.get(t.label)
-          tbl.map(df => (t.kind, t.label) ->
-            Manifest(df, t.files, t.dvps, dvsOf((t.kind, t.label), t.dvps)))
+          tbl.map(st => (t.kind, t.label) ->
+            Manifest(st.df, t.files, t.dvps, dvsOf((t.kind, t.label), t.dvps)))
         case _ => None
       }.toMap
   }
@@ -708,22 +704,41 @@ private[cypher] object Commit {
     out
   }
 
-  /** A label's live rows from manifest files: the union of the files
-    * (mergeSchema: a CoW SET that added a property wrote it only into the
-    * rewritten files, and carried files read it as null, which is the
-    * absent-property semantics) with the label's dvs applied.
+  /** A label's live rows from its parquet files `paths`, dvs applied, read
+    * with their footers' schemas merged on the driver as Spark's inference
+    * merges them (files in path order, later columns appended), so no
+    * inference job runs; the read infers where the footers disagree on a
+    * type or a name's case. Files lacking a column a CoW SET added read it
+    * as null, the absent-property semantics.
     */
-  def scanFiles(spark: SparkSession, root: String, files: List[FileStats],
-      dvs: Positions): DataFrame =
-    applyDvs(spark.read.option("mergeSchema", "true")
-      .parquet(files.map(f => s"$root/${f.rel}"): _*), dvs)
+  def scanFiles(spark: SparkSession, paths: Seq[String], dvs: Positions): DataFrame = {
+    val fields = paths.sorted.flatMap(Bridge.parquetSchema(spark, _).fields)
+    val agree = fields.groupBy(_.name.toLowerCase).values
+      .forall(_.map(f => (f.name, f.dataType)).distinct.size == 1)
+    val read =
+      if (agree && paths.nonEmpty) spark.read.schema(StructType(fields.distinctBy(_.name)))
+      else spark.read.option("mergeSchema", "true")
+    applyDvs(read.parquet(paths: _*), dvs)
+  }
 
-  /** Open version `asOf` (default the latest). Each label table is
-    * materialized ([[Local.materialize]]): held on the driver as a
-    * LocalRelation while its files are within [[Local.HeldLabelBytes]] and
-    * its rows within [[Local.HeldLabelRows]], so reads and point writes of
-    * a small label run no job, and localCheckpoint'd eagerly past them.
-    * Either way a later gc can never invalidate a lazily-held file.
+  /** Rel paths of the part files in store dir `rel`, sorted. */
+  private def partFiles(root: String, rel: String): List[String] = {
+    val dp = Paths.get(root, rel)
+    if (!Files.isDirectory(dp)) Nil
+    else Files.list(dp).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).toList.sorted.map(n => s"$rel/$n")
+  }
+
+  /** Open version `asOf` (default the latest). Each label is read with
+    * the schema of its files' footers ([[scanFiles]]), and its table
+    * materialized in one job ([[Local.materialize]]): held on the driver
+    * as a LocalRelation while its files are within [[Local.HeldLabelBytes]]
+    * and its rows within [[Local.HeldLabelRows]], so reads and point
+    * writes of a small label run no job, and localCheckpoint'd eagerly past
+    * them (a label past the row bound alone takes two jobs, the collect and
+    * the checkpoint). Either way a later gc can never invalidate a
+    * lazily-held file. The label's state ([[MutableGraph.LabelState]])
+    * records its files' size as its base's estimate.
     */
   def open(spark: SparkSession, root: String, asOf: Option[Long]): Opened = {
     val latest = latestVersion(root).getOrElse(
@@ -739,15 +754,19 @@ private[cypher] object Commit {
     val cat = Catalog.read(root, v)
     val dvs = cat.tables.collect {
       case t: FileTable => (t.kind, t.label) -> readDvps(root, t.dvps) }.toMap
-    def tablesOf(kind: String): Map[String, DataFrame] = {
+    def state(df: DataFrame): LabelState = {
+      val bytes = Local.sizeOf(df)
+      LabelState.of(Local.materialize(df, bytes), bytes)
+    }
+    def tablesOf(kind: String): Map[String, LabelState] = {
       val (dirs, files) = cat.tables.filter(_.kind == kind).partition(_.isInstanceOf[DirTable])
       (dirs ++ files).map {
         case t: DirTable =>
-          val raw = spark.read.parquet(s"$root/v${t.ver}/$kind/${enc(t.label)}")
-          t.label -> Local.materialize(
-            t.nullCols.foldLeft(raw)((acc, c) => acc.withColumn(c, lit(null))))
+          val raw = scanFiles(spark,
+            partFiles(root, s"v${t.ver}/$kind/${enc(t.label)}").map(f => s"$root/$f"), Map.empty)
+          t.label -> state(t.nullCols.foldLeft(raw)((acc, c) => acc.withColumn(c, lit(null))))
         case t: FileTable =>
-          t.label -> Local.materialize(scanFiles(spark, root, t.files, dvs((kind, t.label))))
+          t.label -> state(scanFiles(spark, t.files.map(f => s"$root/${f.rel}"), dvs((kind, t.label))))
       }.toMap
     }
     val tables = Map("v" -> tablesOf("v"), "e" -> tablesOf("e"))
@@ -764,10 +783,10 @@ private[cypher] object Commit {
         Array.tabulate(m)(s => Array.tabulate(k)(c => rows(s * k + c))))
     }
     // stored entries are valid exactly for the label tables this open made
-    val entries = cat.entries.flatMap(e => tables("v").get(e.label).map(e -> _))
+    val entries = cat.entries.flatMap(e => tables("v").get(e.label).map(e -> _.df))
     Opened(cat, tables("v"), tables("e"), ivf, pq, heldAt(v, cat, entries,
       cat.tables.collect { case t: FileTable => (t.kind, t.label) ->
-        Manifest(tables(t.kind)(t.label), t.files, t.dvps, dvs((t.kind, t.label))) }.toMap))
+        Manifest(tables(t.kind)(t.label).df, t.files, t.dvps, dvs((t.kind, t.label))) }.toMap))
   }
 
   /** A scan of manifest `m`'s files whose stats may hold a row with
@@ -798,20 +817,10 @@ private[cypher] object Commit {
     if (kept.isEmpty) return Some((0, total, Some(tbl.limit(0))))
     // align to the in-memory schema: the subset may lack columns a CoW SET
     // added only to other files (absent = null), and types a wider merge
-    // settled differently. Files whose columns all have the table's types
-    // are read with its schema (a file lacking a column reads it as null),
-    // which runs no footer-merge job; the footers are read on the driver.
-    // `.schema` forces analysis inside the Try, so a bad cast cannot
-    // surface later as a query error
+    // settled differently. `.schema` forces analysis inside the Try, so a
+    // bad cast cannot surface later as a query error
     scala.util.Try {
-      val relaxed = MutableGraph.relaxNullability(tbl.schema).asInstanceOf[StructType]
-      val types = relaxed.fields.map(f => f.name -> f.dataType).toMap
-      val paths = kept.map(f => s"$root/${f.rel}")
-      val dved =
-        if (paths.forall(p => Bridge.parquetSchema(spark, p).fields.forall(f =>
-            types.get(f.name).forall(_ == MutableGraph.relaxNullability(f.dataType)))))
-          applyDvs(spark.read.schema(relaxed).parquet(paths: _*), m.dvs)
-        else scanFiles(spark, root, kept, m.dvs)
+      val dved = scanFiles(spark, kept.map(f => s"$root/${f.rel}"), m.dvs)
       val aligned = tbl.schema.fields.foldLeft(dved)((acc, f) =>
         if (acc.columns.contains(f.name))
           acc.withColumn(f.name, col(f.name).cast(MutableGraph.relaxNullability(f.dataType)))

@@ -1,14 +1,10 @@
 package graft.cypher
 
 import graft.Local
-import graft.graph.PropertyGraph
 import graft.gvalue._
 import Ast._
-import Commit.{IvfIdx, PqIdx}
 import Compiler.{Ctx, VarInfo}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable

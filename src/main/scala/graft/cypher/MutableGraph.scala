@@ -3,12 +3,10 @@ package graft.cypher
 import graft.Local
 import graft.graph.PropertyGraph
 import graft.gvalue._
-import Ast._
 import Commit.{IvfIdx, PqIdx}
-import Compiler.{Ctx, VarInfo}
+import MutableGraph.{LabelState, Touched, folded, has, union}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
@@ -52,75 +50,59 @@ final class MutableGraph(spark: SparkSession) {
     nextEntry.remove(l)
   }
   private val nextEntry = mutable.Map.empty[String, Long]
-  private[cypher] var vertexLabels = Map.empty[String, DataFrame]
-  private[cypher] var edgeLabels = Map.empty[String, DataFrame]
+  private[cypher] var vertexLabels = Map.empty[String, LabelState]
+  private[cypher] var edgeLabels = Map.empty[String, LabelState]
+
+  // ---- A CREATE, SET, REMOVE or DELETE of driver-held ids changes only
+  // its label state's `dead` and `rows`. Any other write makes its join or
+  // union the new base (the `local.maxRows=0` reference path), marked for a
+  // re-base at the statement's end ([[flattened]]). Each write records in
+  // the state what it touched, so publish rewrites only the parquet FILES
+  // holding touched ids (a write that recorded nothing would lose rows
+  // under CoW, so the primitives record it themselves); the first write of
+  // a statement starts from nothing recorded.
 
   /** Statement-level transactionality: the reference runs each statement
     * in a PG transaction, so an ERROR mid-statement (e.g. CREATE through a
     * variable whose vertex the same statement deleted) leaves the graph
-    * untouched (cypher_delete.out:276-284). DataFrames are immutable —
-    * only the small catalog maps need copying, so a snapshot is O(labels).
+    * untouched (cypher_delete.out:276-284). States are immutable — only the
+    * small catalog maps need copying, so a snapshot is O(labels).
     */
-  // ---- statement-scoped change tracking for file-level CoW (r12,
-  // VERDICT r11 #6). Every mutation path either records the entity ids it
-  // touched (id-local changes: CREATE/SET/REMOVE/DELETE) or marks its
-  // label full-rewrite (changes that re-encode untouched rows: aligned()
-  // type-conflict unions, type-changing SET, DETACH's edge cascade).
-  // Publish may then rewrite only the parquet FILES containing touched
-  // ids and carry the rest by manifest pointer. A mutation path that did
-  // neither would silently lose rows under CoW — which is why the
-  // recording happens inside the primitives themselves, not at call sites.
-  private val txTouched = mutable.ListBuffer.empty[DataFrame]
-  private val txFullRewrite = mutable.Set.empty[String] // "v:Label"/"e:Label"
-  private def noteTouched(ids: DataFrame): Unit =
-    txTouched += ids.select(col("id"))
-  private def noteFullRewrite(kind: String, label: String): Unit =
-    txFullRewrite += s"$kind:$label"
-  private def txResetTracking(): Unit = { txTouched.clear(); txFullRewrite.clear() }
+  private var start = MutableGraph.TxState(Nil, Map.empty, Map.empty, Map.empty, Set.empty, Set.empty)
 
-  // ---- held point writes. A label that point writes changed is held as
-  // `base − dead ∪ rows` ([[MutableGraph.HeldLabel]]): a CREATE, SET, REMOVE or
-  // DELETE of driver-held ids changes only `dead` and `rows`, on the
-  // driver, and the label keeps one filter and one union over its last
-  // materialized table, so the commit neither copies the label nor scans
-  // it for the statement's row-versions (the store's files plus deletion
-  // vectors, in memory). A held form applies only while the label map
-  // holds the exact table it renders; any other rebinding (an old-path
-  // write, a re-base) starts over from the table bound then, and a
-  // rolled-back statement restores the forms of its start.
-  private var heldLabels = Map.empty[(String, String), MutableGraph.HeldLabel]
+  private def labels(kind: String): Map[String, LabelState] =
+    if (kind == "v") vertexLabels else edgeLabels
 
-  private def tableOf(kind: String, l: String): Option[DataFrame] =
-    (if (kind == "v") vertexLabels else edgeLabels).get(l)
+  private def put(kind: String, l: String, st: LabelState): Unit =
+    if (kind == "v") vertexLabels += (l -> st) else edgeLabels += (l -> st)
 
-  /** The held form that renders `df`, label `l`'s table, or an empty one over it. */
-  private def heldOf(kind: String, l: String, df: DataFrame): MutableGraph.HeldLabel =
-    heldLabels.get((kind, l)).filter(_.df eq df)
-      .getOrElse(MutableGraph.HeldLabel(df, Array.empty, Array.empty, df.schema))
+  /** Label `l`'s state as this statement's next write continues it: nothing
+    * recorded while it is the state the statement started from.
+    */
+  private def continued(kind: String, l: String, st: LabelState): LabelState =
+    if ((if (kind == "v") start.vertexLabels else start.edgeLabels).get(l).exists(_ eq st))
+      st.copy(touched = Touched.empty, rebase = false)
+    else st
 
-  /** Record `h` as label `l`'s held form; returns its table. */
-  private def hold(kind: String, l: String, h: MutableGraph.HeldLabel): DataFrame = {
-    heldLabels += ((kind, l) -> h)
-    h.df
-  }
+  /** The state after a write that cannot stay held: its table `next` is
+    * the new base, marked for a re-base, `added` bytes larger.
+    */
+  private def written(st: LabelState, next: DataFrame, ids: DataFrame, added: BigInt = 0,
+      whole: Boolean = false): LabelState =
+    LabelState(next, Array.empty, Array.empty, next.schema, st.bytes + added,
+      st.touched ++ Touched(Array.empty, List(ids.select(col("id"))), whole), rebase = true)
 
-  /** Whether a held form of `n` dead ids and row-versions stays held: the
+  /** Whether a held state of `n` dead ids and row-versions stays held: the
     * bound of a merge-on-read statement and of `Local`'s cap.
     */
   private def holdable(n: Int): Boolean =
     n <= MutableGraph.DvMaxStatementIds && Local.holds(spark, n)
 
-  /** The rows of a plan the optimizer folds into driver-held rows ([[LocalFold]]). */
-  private def folded(df: DataFrame): Option[Array[Row]] =
-    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) Some(df.collect())
-    else None
-
   private[cypher] def txSnapshot(): MutableGraph.TxState = {
-    txResetTracking() // statement boundary
-    MutableGraph.TxState(labelIds.toSeq, nextEntry.toMap,
-      vertexLabels, edgeLabels, uniqueConstraints.toSet, wholePropsUnique.toSet, heldLabels)
+    start = MutableGraph.TxState(labelIds.toSeq, nextEntry.toMap,
+      vertexLabels, edgeLabels, uniqueConstraints.toSet, wholePropsUnique.toSet)
+    start
   }
-
 
   /** PG sequences are NON-transactional: a rolled-back statement's label
     * allocations disappear from the catalog (labelIds is restored) but the
@@ -136,7 +118,6 @@ final class MutableGraph(spark: SparkSession) {
     // post-unique-violation inserts land on id 13, not 12)
     vertexLabels = s.vertexLabels
     edgeLabels = s.edgeLabels
-    heldLabels = s.heldLabels
     uniqueConstraints.clear(); uniqueConstraints ++= s.uniques
     wholePropsUnique.clear(); wholePropsUnique ++= s.wholeUniques
   }
@@ -147,8 +128,8 @@ final class MutableGraph(spark: SparkSession) {
         Map("_default" -> spark.createDataFrame(
           new java.util.ArrayList[Row](),
           StructType(Seq(StructField("id", LongType)))))
-      else vertexLabels,
-      edgeLabels, labelIds.toMap, ivfProbeFn, statsPrunedScan)
+      else vertexLabels.map { case (l, st) => l -> st.df },
+      edgeLabels.map { case (l, st) => l -> st.df }, labelIds.toMap, ivfProbeFn, statsPrunedScan)
 
   // Manifest-stats data skipping (the GIN property-index analog,
   // gtype_gin.c:62-554, as Delta-style per-file typed min/max): the
@@ -252,7 +233,7 @@ final class MutableGraph(spark: SparkSession) {
       train: (String, DataFrame) => (() => DataFrame)): Unit = {
     val prop = Compiler.PropNames.esc(prop0)
     val tbl = vertexLabels.getOrElse(label,
-      throw new IllegalArgumentException(s"unknown vertex label $label"))
+      throw new IllegalArgumentException(s"unknown vertex label $label")).df
     require(tbl.columns.contains(prop), s"label $label has no property $prop0")
     require(dims >= 1 && dims <= 2000, s"$am supports 1..2000 dimensions") // ivfflat.h:33
     val entries = train(prop, Commit.embeddings(tbl, prop, dims))
@@ -277,7 +258,7 @@ final class MutableGraph(spark: SparkSession) {
     } yield rels.map(r => (spark.read.parquet(s"$root/$r"), GraphStore.versionOf(r)))
 
   private def pqCodes(ix: PqIdx): DataFrame = {
-    val tbl = vertexLabels(ix.label)
+    val tbl = vertexLabels(ix.label).df
     val key = (ix.label, ix.prop)
     pqCodesCache.get(key) match {
       case Some((src, c)) if src eq tbl => c
@@ -310,7 +291,7 @@ final class MutableGraph(spark: SparkSession) {
   }
 
   private def ivfAssignments(ix: IvfIdx): DataFrame = {
-    val tbl = vertexLabels(ix.label)
+    val tbl = vertexLabels(ix.label).df
     ivfAssignCache.get((ix.label, ix.prop)) match {
       case Some((src, a)) if src eq tbl => a
       case _ =>
@@ -348,7 +329,7 @@ final class MutableGraph(spark: SparkSession) {
     */
   private def ivfCandidateIds(ix: IvfIdx, probed: Seq[Int]): DataFrame = {
     val key = (ix.label, ix.prop)
-    val tbl = vertexLabels(ix.label)
+    val tbl = vertexLabels(ix.label).df
     val cached = ivfAssignCache.get(key).collect {
       case (src, a) if src eq tbl => a }
     cached.map(_.filter(col("cluster").isin(probed: _*)).select(col("id")))
@@ -472,13 +453,6 @@ final class MutableGraph(spark: SparkSession) {
     case other => throw new UnsupportedOperationException(s"property value: ${other.render}")
   }
 
-  /** Align a new-rows DF with an existing label table (union of columns).
-    * A property column whose type CONFLICTS between the existing rows and
-    * the new ones (the reference stores every property as gtype, so
-    * `CREATE ({i: 1})` then `CREATE ({i: 'str'})` is legal — order_by.sql
-    * fixture) re-encodes through the dynamic codec on BOTH sides; the
-    * dynamic struct is paid only on conflict, never up front.
-    */
   /** Last committed micro-batch id per streaming writer identity (r12) —
     * persisted in the store catalog (`stream <app> <batchId>` lines) so a
     * replayed foreachBatch after restart is recognized and skipped: the
@@ -517,8 +491,15 @@ final class MutableGraph(spark: SparkSession) {
   private[cypher] def ingestVertexBatch(label: String, keyCol: String,
       batch: DataFrame, appId: String, batchId: Long): Unit =
     ingestBatch(appId, batchId) {
-      appendRows("v", label, keyedBatch(label, keyCol, batch).localCheckpoint())
+      appendRows("v", label, frozenBatch("v", label, keyedBatch(label, keyCol, batch)))
     }
+
+  /** A micro-batch frozen for an append: held on the driver while it fits
+    * `Local`'s write bound, so into an existing label its rows join the
+    * held rows (no re-base per batch); a new label's base is its checkpoint.
+    */
+  private def frozenBatch(kind: String, label: String, df: DataFrame): DataFrame =
+    if (labels(kind).contains(label)) Local.freeze(df) else df.localCheckpoint()
 
   /** A vertex batch with ids packed from `keyCol`, as GraphBuilder packs. */
   private def keyedBatch(label: String, keyCol: String, batch: DataFrame): DataFrame =
@@ -540,12 +521,11 @@ final class MutableGraph(spark: SparkSession) {
       batch: DataFrame, appId: String, batchId: Long): Unit =
     ingestBatch(appId, batchId) {
       val df = keyedBatch(label, keyCol, batch).dropDuplicates("id").localCheckpoint()
-      vertexLabels.get(label) match {
+      vertexLabels.get(label).map(continued("v", label, _)) match {
         case None => appendRows("v", label, df)
-        case Some(o) =>
-          noteTouched(df)
-          val kept = o.join(df.select(col("id")), Seq("id"), "left_anti")
-          vertexLabels += (label -> aligned("v", label, Some(kept), df))
+        case Some(st) =>
+          val kept = st.df.join(df.select(col("id")), Seq("id"), "left_anti")
+          put("v", label, written(st, aligned(kept, df), df, Local.sizeOf(df), reencodes(kept, df)))
       }
     }
 
@@ -562,25 +542,26 @@ final class MutableGraph(spark: SparkSession) {
       val props = batch.columns
         .filterNot(Set("id", "start_id", "end_id", keyCol, srcKeyCol, dstKeyCol))
         .sorted.map(col)
-      appendRows("e", label, batch.select(ids ++ props: _*).localCheckpoint())
+      appendRows("e", label, frozenBatch("e", label, batch.select(ids ++ props: _*)))
     }
 
-  /** Append rows to a label table (all CREATE paths): records the new ids
-    * for file-level CoW and schema-aligns the union. A frame held on the
-    * driver joins the label's held row-versions when the union folds there
-    * and re-encodes no old row.
+  /** Append rows to a label table (all CREATE paths), schema-aligned. A
+    * frame held on the driver joins the label's held row-versions when the
+    * union folds there and re-encodes no old row; the new ids are recorded
+    * as touched. A new label's base is the frame itself, written whole.
     */
-  private def appendRows(kind: String, label: String, df: DataFrame): Unit = {
-    noteTouched(df)
-    val old = tableOf(kind, label)
-    val next = old.filterNot(reencodes(_, df)).flatMap { o =>
-      val h = heldOf(kind, label, o)
-      val merged = aligned(kind, label, Some(h.rowsDf), df)
-      folded(merged).filter(rows => holdable(h.dead.length + rows.length))
-        .map(rows => hold(kind, label, h.copy(rows = rows, schema = merged.schema)))
-    }.getOrElse(aligned(kind, label, old, df))
-    if (kind == "v") vertexLabels += (label -> next) else edgeLabels += (label -> next)
-  }
+  private def appendRows(kind: String, label: String, df: DataFrame): Unit =
+    put(kind, label, labels(kind).get(label).map(continued(kind, label, _)) match {
+      case None => LabelState.of(df, Local.sizeOf(df), Touched.Whole)
+      case Some(st) =>
+        val whole = reencodes(st.df, df)
+        Some(aligned(st.rowsDf, df)).filterNot(_ => whole).flatMap { merged =>
+          folded(merged).filter(rows => holdable(st.dead.length + rows.length)).map { rows =>
+            val next = st.copy(rows = rows, schema = merged.schema)
+            next.copy(touched = st.touched ++ Touched.of(next.rowIds.filterNot(has(st.rowIds, _))))
+          }
+        }.getOrElse(written(st, aligned(st.df, df), df, Local.sizeOf(df), whole))
+    })
 
   /** Columns of `o` that `add` holds with another type; nullability-only
     * differences are NOT conflicts: a streaming batch round-trips through
@@ -604,29 +585,31 @@ final class MutableGraph(spark: SparkSession) {
   private def reencodes(o: DataFrame, add: DataFrame): Boolean =
     conflicts(o, add).exists(n => !graft.gvalue.GValueCol.isGValue(o.schema(n).dataType))
 
-  private def aligned(kind: String, label: String, old: Option[DataFrame],
-      add: DataFrame): DataFrame = old match {
-    case None => add
-    case Some(o) =>
-      import graft.gvalue.GValueCol
-      val conflicts = this.conflicts(o, add)
-      // a type-conflict union re-encodes the OLD rows too (dynCoerce) —
-      // not an id-local change, so file-level CoW must not carry old files
-      if (reencodes(o, add)) noteFullRewrite(kind, label)
-      def fix(df: DataFrame): DataFrame = conflicts.foldLeft(df) { (d, n) =>
-        GValueCol.dynCoerce(col(n), d.schema(n).dataType) match {
-          // keep SQL NULL (= property absent) rather than letting the
-          // codec's gtype-null wrap it: an absent property must stay
-          // absent in the entity render, while an explicitly stored null
-          // keeps its TNull payload (cypher_create.out:239 `{}` vs
-          // `{"var_name": null}`)
-          case Some(c) => d.withColumn(n,
-            when(col(n).isNull, lit(null).cast(GValueCol.structType)).otherwise(c))
-          case None => d // no dynamic form — surface the union error below
-        }
+  /** New rows `add` aligned with an existing label table `o` (union of
+    * columns). A property column whose type CONFLICTS between the two (the
+    * reference stores every property as gtype, so `CREATE ({i: 1})` then
+    * `CREATE ({i: 'str'})` is legal — order_by.sql fixture) re-encodes
+    * through the dynamic codec on BOTH sides, paid only on conflict: not an
+    * id-local change, so its caller records the label written whole
+    * ([[reencodes]]).
+    */
+  private def aligned(o: DataFrame, add: DataFrame): DataFrame = {
+    import graft.gvalue.GValueCol
+    val conflicts = this.conflicts(o, add)
+    def fix(df: DataFrame): DataFrame = conflicts.foldLeft(df) { (d, n) =>
+      GValueCol.dynCoerce(col(n), d.schema(n).dataType) match {
+        // keep SQL NULL (= property absent) rather than letting the
+        // codec's gtype-null wrap it: an absent property must stay
+        // absent in the entity render, while an explicitly stored null
+        // keeps its TNull payload (cypher_create.out:239 `{}` vs
+        // `{"var_name": null}`)
+        case Some(c) => d.withColumn(n,
+          when(col(n).isNull, lit(null).cast(GValueCol.structType)).otherwise(c))
+        case None => d // no dynamic form — surface the union error below
       }
-      if (conflicts.isEmpty) o.unionByName(add, allowMissingColumns = true)
-      else fix(o).unionByName(fix(add), allowMissingColumns = true)
+    }
+    if (conflicts.isEmpty) o.unionByName(add, allowMissingColumns = true)
+    else fix(o).unionByName(fix(add), allowMissingColumns = true)
   }
 
   /** GValue → literal Column, matching [[sparkType]]'s storage decision:
@@ -661,7 +644,7 @@ final class MutableGraph(spark: SparkSession) {
         if (!rows.groupBy(col(k)).count().filter(col("count") > 1).isEmpty)
           throw new IllegalStateException(
             s"unique constraint violation: bulk CREATE would duplicate $label.$k")
-        vertexLabels.get(label).filter(_.columns.contains(k)).foreach { existing =>
+        vertexLabels.get(label).map(_.df).filter(_.columns.contains(k)).foreach { existing =>
           if (!existing.join(rows.select(col(k)), Seq(k), "left_semi").isEmpty)
             throw new IllegalStateException(
               s"unique constraint violation: $label.$k already has one of these values")
@@ -676,7 +659,7 @@ final class MutableGraph(spark: SparkSession) {
 
   /** Register a unique constraint; existing data must already satisfy it. */
   def addUniqueConstraint(label: String, prop: String): Unit = {
-    vertexLabels.get(label).foreach { df =>
+    vertexLabels.get(label).map(_.df).foreach { df =>
       if (df.columns.contains(prop)) {
         val dup = df.filter(col(prop).isNotNull).groupBy(col(prop))
           .count().filter(col("count") > 1).limit(1).count()
@@ -701,7 +684,7 @@ final class MutableGraph(spark: SparkSession) {
 
   private def checkWholeUnique(label: String, props: Map[String, GValue]): Unit =
     if (wholePropsUnique.contains(label))
-      vertexLabels.get(label).foreach { df =>
+      vertexLabels.get(label).map(_.df).foreach { df =>
         val propCols = df.columns.filterNot(Set("id"))
         // identical map ⇔ every stored column matches the incoming value
         // (null where the key is absent) — one filtered limit-1 probe
@@ -720,7 +703,7 @@ final class MutableGraph(spark: SparkSession) {
   private def checkUnique(label: String, props: Map[String, GValue]): Unit =
     uniqueConstraints.filter(_._1 == label).foreach { case (_, prop) =>
       props.get(prop).filter(_ != GNull).foreach { v =>
-        vertexLabels.get(label).filter(_.columns.contains(prop)).foreach { df =>
+        vertexLabels.get(label).map(_.df).filter(_.columns.contains(prop)).foreach { df =>
           val clash = if (df.filter(col(prop) === gLit(v)).isEmpty) 0 else 1
           if (clash > 0) throw new IllegalStateException(
             s"unique constraint violation: $label.$prop = ${v.render}")
@@ -788,14 +771,14 @@ final class MutableGraph(spark: SparkSession) {
 
   /** One-row DF for a just-created vertex, columns prefixed `alias__`. */
   def vertexRowDf(alias: String, label: String, id: Long): DataFrame = {
-    val src = vertexLabels(label).filter(col("id") === id)
+    val src = vertexLabels(label).df.filter(col("id") === id)
       .withColumn("label", lit(label))
     src.columns.foldLeft(src)((df, c) => df.withColumnRenamed(c, s"${alias}__$c"))
   }
 
   /** One-row DF for a just-created edge, columns prefixed `alias__`. */
   def edgeRowDf(alias: String, label: String, id: Long): DataFrame = {
-    val src = edgeLabels(label).filter(col("id") === id)
+    val src = edgeLabels(label).df.filter(col("id") === id)
       .withColumn("label", lit(label))
     src.columns.foldLeft(src)((df, c) => df.withColumnRenamed(c, s"${alias}__$c"))
   }
@@ -825,17 +808,21 @@ final class MutableGraph(spark: SparkSession) {
     // the context cleaner when the session drops the table version
     val frozen = Local.freezeHeld(updates0)
     val updates = frozen._1
-    noteTouched(updates.select(col("__set_id").as("id")))
     val hit = labelsIn(frozen, "__set_id")
-    def apply(kind: String, tables: Map[String, DataFrame]): Map[String, DataFrame] =
-      tables.map { case (l, df) =>
-        if (!hits(hit, l)) l -> df
-        else l -> frozen._2.filter(_ => keepsType(df, k, updates))
-          .flatMap(idsOf(_, "__set_id", l)).flatMap(setHeld(kind, l, df, k, updates, _))
-          .getOrElse(setColumn(kind, l, df, k, updates))
+    def apply(kind: String): Map[String, LabelState] =
+      labels(kind).map { case (l, st0) =>
+        if (!hits(hit, l)) l -> st0
+        else {
+          val st = continued(kind, l, st0)
+          val kept = keepsType(st.df, k, updates)
+          l -> frozen._2.filter(_ => kept).flatMap(idsOf(_, "__set_id", l))
+            .flatMap(setHeld(st, k, updates, _))
+            .getOrElse(written(st, setColumn(st.df, k, updates),
+              updates.select(col("__set_id").as("id")), whole = !kept))
+        }
       }
-    vertexLabels = apply("v", vertexLabels)
-    edgeLabels = apply("e", edgeLabels)
+    vertexLabels = apply("v")
+    edgeLabels = apply("e")
   }
 
   /** Whether SET of `updates` keeps column k's type in `df`. */
@@ -845,18 +832,16 @@ final class MutableGraph(spark: SparkSession) {
       oldDt == newDt || oldDt == NullType || newDt == NullType
     }
 
-  /** `df` with column k set from `updates` where its id has one. */
-  private def setColumn(kind: String, l: String, df: DataFrame, k: String,
-      updates: DataFrame): DataFrame = {
+  /** `df` with column k set from `updates` where its id has one. A
+    * type-changing SET re-encodes the whole column, untouched rows too.
+    */
+  private def setColumn(df: DataFrame, k: String, updates: DataFrame): DataFrame = {
     val joined = df.join(updates, df("id") === updates("__set_id"), "left_outer")
     val updated =
       if (df.columns.contains(k)) {
         val (oldC, newC) =
           if (keepsType(df, k, updates)) (col(k), col("__set_val"))
           else {
-            // whole-column re-encode touches UNCHANGED rows too —
-            // disqualify this label from file-level CoW
-            noteFullRewrite(kind, l)
             // type-changing SET (long → list/map/string …): both the
             // kept and the new values re-encode through the dynamic
             // codec — reference stores every property as gtype
@@ -872,44 +857,26 @@ final class MutableGraph(spark: SparkSession) {
     updated.drop("__set_id", "__set_val")
   }
 
-  /** Held SET of label `l` at its sorted `ids`: their current versions are
-    * read from the held rows and, for those in base, by one collect of base
-    * filtered by them; the new versions replace them in the held rows and
-    * the ids join dead. None when the change would pass its bound or the
-    * update does not fold on the driver.
+  /** Held SET of state `st` at its sorted `ids`: their current versions
+    * are read from the held rows and, for those in base, by one collect of
+    * base filtered by them; the new versions replace them in the held rows
+    * and the ids join dead. None when the change would pass its bound or
+    * the update does not fold on the driver.
     */
-  private def setHeld(kind: String, l: String, df: DataFrame, k: String,
-      updates: DataFrame, ids: Array[Long]): Option[DataFrame] = {
-    val h = heldOf(kind, l, df)
-    if (!holdable(h.size + 2 * ids.length)) return None
-    val inBase = ids.filter(i => !has(h.rowIds, i) && !has(h.dead, i))
+  private def setHeld(st: LabelState, k: String, updates: DataFrame,
+      ids: Array[Long]): Option[LabelState] = {
+    if (!holdable(st.size + 2 * ids.length)) return None
+    val inBase = ids.filter(i => !has(st.rowIds, i) && !has(st.dead, i))
     val baseRows =
       if (inBase.isEmpty) Array.empty[Row]
-      else h.base.filter(MutableGraph.idIn(inBase)).collect()
-    val current = Local.relation(spark, baseRows.toSeq, h.base.schema)
-      .unionByName(h.rowsDf.filter(MutableGraph.idIn(ids)),
-        allowMissingColumns = true)
-    val merged = h.rowsDf.filter(!MutableGraph.idIn(ids))
-      .unionByName(setColumn(kind, l, current, k, updates), allowMissingColumns = true)
-    folded(merged).map(rows =>
-      hold(kind, l, h.copy(dead = union(h.dead, ids), rows = rows, schema = merged.schema)))
+      else st.base.filter(MutableGraph.idIn(inBase)).collect()
+    val current = Local.relation(spark, baseRows.toSeq, st.base.schema)
+      .unionByName(st.rowsDf.filter(MutableGraph.idIn(ids)), allowMissingColumns = true)
+    val merged = st.rowsDf.filter(!MutableGraph.idIn(ids))
+      .unionByName(setColumn(current, k, updates), allowMissingColumns = true)
+    folded(merged).map(rows => st.copy(dead = union(st.dead, ids), rows = rows,
+      schema = merged.schema, touched = st.touched ++ Touched.of(ids)))
   }
-
-  /** Held DELETE of label `l` at its sorted `ids`: they join dead and leave
-    * the held rows, with no job. None past the bound.
-    */
-  private def deleteHeld(kind: String, l: String, df: DataFrame,
-      ids: Array[Long]): Option[DataFrame] = {
-    val h = heldOf(kind, l, df)
-    if (!holdable(h.size + ids.length)) return None
-    val kept = h.rowsDf.filter(!MutableGraph.idIn(ids))
-    folded(kept).map(rows => hold(kind, l, h.copy(dead = union(h.dead, ids), rows = rows)))
-  }
-
-  private def has(sorted: Array[Long], id: Long): Boolean =
-    java.util.Arrays.binarySearch(sorted, id) >= 0
-
-  private def union(a: Array[Long], b: Array[Long]): Array[Long] = (a ++ b).distinct.sorted
 
   /** The sorted ids of label `l` in `idCol` of a frozen write snapshot's
     * rows; None for a label without an id.
@@ -944,13 +911,10 @@ final class MutableGraph(spark: SparkSession) {
   /** DELETE edges by id across every edge label table. */
   def deleteEdges(ids0: DataFrame): Unit = {
     val frozen = Local.freezeHeld(ids0)
-    val ids = frozen._1
-    noteTouched(ids)
     val hit = labelsIn(frozen, "id")
-    edgeLabels = edgeLabels.map { case (l, e) =>
-      if (!hits(hit, l)) l -> e
-      else l -> frozen._2.flatMap(idsOf(_, "id", l)).flatMap(deleteHeld("e", l, e, _))
-        .getOrElse(e.join(ids, e("id") === ids("id"), "left_anti"))
+    edgeLabels = edgeLabels.map { case (l, st) =>
+      if (!hits(hit, l)) l -> st
+      else l -> deleted("e", l, st, frozen)
     }
   }
 
@@ -972,7 +936,7 @@ final class MutableGraph(spark: SparkSession) {
         e.join(ids, e("start_id") === ids("id") || e("end_id") === ids("id"), "left_semi")
     }
     if (!detach) {
-      val n = edgeLabels.values.map(e => incident(e).limit(1).count()).sum
+      val n = edgeLabels.values.map(e => incident(e.df).limit(1).count()).sum
       if (n > 0)
         throw new IllegalStateException(
           "cannot delete vertex with incident edges — use DETACH DELETE")
@@ -982,27 +946,38 @@ final class MutableGraph(spark: SparkSession) {
       // those by id, so the statement stays id-local — a point DETACH
       // DELETE publishes tombstones through the dv path (r12), and an edge
       // label with no incident edge keeps its reference
-      deleteEdges(edgeLabels.values.map(e => incident(e).select(col("id")))
+      deleteEdges(edgeLabels.values.map(e => incident(e.df).select(col("id")))
         .reduce(_ unionByName _))
     }
-    noteTouched(ids)
     val hit = labelsIn(frozen, "id")
-    vertexLabels = vertexLabels.map { case (l, v) =>
-      if (!hits(hit, l)) l -> v
-      else l -> frozen._2.flatMap(idsOf(_, "id", l)).flatMap(deleteHeld("v", l, v, _))
-        .getOrElse(v.join(ids, v("id") === ids("id"), "left_anti"))
+    vertexLabels = vertexLabels.map { case (l, st) =>
+      if (!hits(hit, l)) l -> st
+      else l -> deleted("v", l, st, frozen)
     }
+  }
+
+  /** Label `l`'s state without the frozen ids: held, the label's sorted
+    * ids join dead and leave the held rows with no job, or by an anti-join
+    * past the bound.
+    */
+  private def deleted(kind: String, l: String, st0: LabelState,
+      frozen: (DataFrame, Option[Array[Row]])): LabelState = {
+    val (st, ids) = (continued(kind, l, st0), frozen._1)
+    val (df, idIx) = (st.df, st.schema.fieldIndex("id"))
+    frozen._2.flatMap(idsOf(_, "id", l)).filter(d => holdable(st.size + d.length))
+      .map(d => st.copy(dead = union(st.dead, d), rows = st.rows.filterNot(r => has(d, r.getLong(idIx))),
+        touched = st.touched ++ Touched.of(d)))
+      .getOrElse(written(st, df.join(ids, df("id") === ids("id"), "left_anti"), ids))
   }
 
   // ------------------------------------------------------ durable store
   // (GraphStore layout doc) — when attached, every successful mutating
   // statement publishes the next parquet version; reads use the in-memory
   // label tables, never re-reading the store. Invariant, kept at commit
-  // (commitIfChanged): a committed label is a materialized leaf, a
-  // join-free append of at most 16 leaves, or a held `base − dead ∪ rows`
-  // over one of those whose dead ids and driver-held rows stay within the
-  // merge-on-read bound, so a statement's plans and its publish join a
-  // small delta against a flat table, whatever the history.
+  // (commitIfChanged): a committed label is a materialized base with a
+  // held delta (`base − dead ∪ rows`) whose dead ids and driver-held rows
+  // stay within the merge-on-read bound, so a statement's plans and its
+  // publish meet a small delta over a flat table, whatever the history.
 
   private[cypher] var storeRoot: Option[String] = None
   /** What this graph holds of its store, set at load and by each publish;
@@ -1012,23 +987,22 @@ final class MutableGraph(spark: SparkSession) {
 
   /** Publish the current catalog and label tables as the next version
     * ([[Commit.publish]]; the layout and the per-label choice are in the
-    * [[GraphStore]] doc). A label whose DataFrame reference is unchanged
-    * since the statement's snapshot (`prevV`/`prevE`) is carried by its
-    * catalog lines instead of being rewritten.
+    * [[GraphStore]] doc). A label whose state is the one of the
+    * statement's snapshot (`prevV`/`prevE`) is carried by its catalog
+    * lines instead of being rewritten; a label in `compact` is rewritten
+    * whole.
     */
-  private[cypher] def publish(
-      prevV: Map[String, DataFrame] = Map.empty,
-      prevE: Map[String, DataFrame] = Map.empty): Unit = storeRoot.foreach { root =>
+  private[cypher] def publish(prevV: Map[String, LabelState] = Map.empty,
+      prevE: Map[String, LabelState] = Map.empty,
+      compact: Set[(String, String)] = Set.empty): Unit = storeRoot.foreach { root =>
     val (now, chainMerges) = Commit.publish(spark, Commit.Snapshot(root, held,
       GraphStore.Catalog(seqLast, labelIds.toList, nextEntry.toList,
         uniqueConstraints.toList, wholePropsUnique.toList, streamBatches.toList,
         Nil, Nil, Nil),
-      vertexLabels, edgeLabels, prevV, prevE, txTouched.toList, txFullRewrite.toSet,
-      heldLabels.map { case (key, h) => key -> ((h.df, h.rows)) },
+      vertexLabels, edgeLabels, prevV, prevE, compact,
       ivfIndexes.values.toList, pqIndexes.values.toList, ivfAssignCache, pqCodesCache))
     held = now
     entryChainMerges.addAndGet(chainMerges)
-    txResetTracking() // touched-id frames are consumed by this publish
   }
 
   /** Explicit compaction (the Delta/Iceberg OPTIMIZE analog): rewrite every
@@ -1039,24 +1013,22 @@ final class MutableGraph(spark: SparkSession) {
     * bound; this reclaims read debt earlier (after a dv-heavy burst).
     */
   private[cypher] def compactStore(): Boolean = storeRoot.exists { root =>
-    val manifested = Commit.manifestedLabels(root)
-    manifested.foreach { case (kind, l) => noteFullRewrite(kind, l) }
+    val manifested = held.manifest.keySet
     if (manifested.nonEmpty)
       publish(vertexLabels.filter { case (l, _) => !manifested(("v", l)) },
-        edgeLabels.filter { case (l, _) => !manifested(("e", l)) })
+        edgeLabels.filter { case (l, _) => !manifested(("e", l)) }, manifested)
     manifested.nonEmpty
   }
 
   /** Commit to the store iff this statement changed catalog or tables
     * relative to its pre-statement snapshot (reference: every write runs
     * in a PG transaction whose commit persists the heap — here the
-    * version publish IS the commit). Label tables are immutable maps, so
+    * version publish IS the commit). Label states are immutable, so
     * reference inequality is an exact dirty check.
     */
   private[cypher] def commitIfChanged(prev: MutableGraph.TxState): Unit = {
-    vertexLabels = flattened("v", vertexLabels, prev.vertexLabels)
-    edgeLabels = flattened("e", edgeLabels, prev.edgeLabels)
-    heldLabels = heldLabels.filter { case ((kind, l), h) => tableOf(kind, l).exists(_ eq h.df) }
+    vertexLabels = flattened(vertexLabels, prev.vertexLabels)
+    edgeLabels = flattened(edgeLabels, prev.edgeLabels)
     if (storeRoot.isDefined &&
       ((vertexLabels ne prev.vertexLabels) || (edgeLabels ne prev.edgeLabels) ||
         labelIds.toSeq != prev.labelIds || nextEntry.toMap != prev.nextEntry ||
@@ -1065,65 +1037,38 @@ final class MutableGraph(spark: SparkSession) {
       publish(prev.vertexLabels, prev.edgeLabels)
   }
 
-  /** Re-materialize each label the statement changed whose plan holds a
-    * join or more than [[MutableGraph.MaxLeaves]] leaves: every write
-    * wraps its label in one more join (SET, DELETE, upsert) or union
-    * (CREATE, ingest), and an unflattened table makes each later plan and
-    * publish re-walk the whole write history — jobs per statement grew
-    * with the statement count. Pregelix keeps its state materialized and
-    * joins each step's delta against it; this is that rule. Append-only
-    * changes stay lazy until the 17th leaf, so a point CREATE pays no job
-    * here. The re-base is [[Local.materialize]]: a small label is held on
-    * the driver as a LocalRelation (one collect, or none when the
-    * optimizer folds its plan into driver rows, [[graft.LocalFold]]), so
-    * its later reads run no job. A larger one is checkpointed, coalesced
-    * first: an append history also inflates the partition count, which
-    * would schedule many near-empty tasks on every later scan. Both the
-    * hold's byte gate and the checkpoint take the estimate of
-    * [[sizeAfterWrite]], not Spark's, which would carry over a join's
-    * estimate, the product of its sides: after a few SETs that sent every
-    * small-input site of the label down its distributed path. A held
-    * label (`base − dead ∪ rows`) stays lazy until its dead ids and
-    * row-versions pass [[holdable]]'s bound, and is then re-based the
-    * same way.
+  /** Re-base each label the statement changed that is marked for it (a
+    * write that could not stay held left a join or a union over the label
+    * as its base) or whose held delta passed [[holdable]]: an unflattened
+    * table makes each later plan and publish re-walk the whole write
+    * history. Pregelix keeps its state materialized and joins each step's
+    * delta against it; this is that rule. The re-base is
+    * [[Local.materialize]], gated by the state's own size estimate (its
+    * base's recorded bytes plus its held rows' real ones, not Spark's
+    * schema-based guess for driver rows or its product of a join's sides):
+    * a small label is held on the driver as a LocalRelation (one collect,
+    * or none when the optimizer folds its plan into driver rows,
+    * [[graft.LocalFold]]), so its later reads run no job. A larger one is
+    * checkpointed, coalesced first: an append history also inflates the
+    * partition count, which would schedule many near-empty tasks on every
+    * later scan. The re-based state keeps what the statement touched, for
+    * its commit.
     */
-  private def flattened(kind: String, now: Map[String, DataFrame],
-      prev: Map[String, DataFrame]): Map[String, DataFrame] =
+  private def flattened(now: Map[String, LabelState],
+      prev: Map[String, LabelState]): Map[String, LabelState] =
     if (now eq prev) now
     else now.map {
-      case (l, df) if prev.get(l).exists(_ eq df) => l -> df
-      case (l, df) =>
-        val plan = df.queryExecution.analyzed
-        val leaves = plan.collectLeaves()
-        if (leaves.size <= MutableGraph.MaxLeaves &&
-            !plan.exists(_.isInstanceOf[Join]) &&
-            !heldLabels.get((kind, l)).exists(h => (h.df eq df) && !holdable(h.size)))
-          l -> df
-        else {
-          val size = sizeAfterWrite(plan)
-          l -> org.apache.spark.sql.graft.Bridge.withSizeInBytes(
-            Local.materialize(df, Some(size), Some(spark.sparkContext.defaultParallelism)), size)
-        }
+      case (l, st) if prev.get(l).exists(_ eq st) ||
+          !(st.rebase || (st.size > 0 && !holdable(st.size))) => l -> st
+      case (l, st) =>
+        val size = st.bytes
+        l -> LabelState.of(org.apache.spark.sql.graft.Bridge.withSizeInBytes(
+          Local.materialize(st.df, size, Some(spark.sparkContext.defaultParallelism)), size),
+          size, st.touched)
     }
-
-  /** Size estimate of a label after a write: an append (union) adds its
-    * sides, and a SET, DELETE or upsert (a left outer, anti or semi join
-    * against the statement's delta) keeps at most its left side's rows, so
-    * the delta adds nothing. A point write's estimate thus stays that of
-    * the table it rewrote, however many statements came before it.
-    */
-  private def sizeAfterWrite(plan: LogicalPlan): BigInt = plan match {
-    case j: Join if j.joinType == LeftOuter || j.joinType == LeftAnti ||
-        j.joinType == LeftSemi => sizeAfterWrite(j.left)
-    case p if p.children.isEmpty => p.stats.sizeInBytes
-    case p => p.children.map(sizeAfterWrite).sum
-  }
 }
 
 object MutableGraph {
-
-  /** Most leaves a committed label's plan may hold (see `flattened`). */
-  private[cypher] val MaxLeaves = 16
 
   /** Test hook: the most recent dv-filtered scan, pre-checkpoint — lets
     * WriteSpec assert the dv-read plan carries no `id IN (…)` chain. */
@@ -1171,34 +1116,83 @@ object MutableGraph {
   /** Frozen catalog state for statement-level rollback. */
   final case class TxState(
       labelIds: Seq[(String, Int)], nextEntry: Map[String, Long],
-      vertexLabels: Map[String, DataFrame], edgeLabels: Map[String, DataFrame],
-      uniques: Set[(String, String)], wholeUniques: Set[String],
-      heldLabels: Map[(String, String), HeldLabel])
+      vertexLabels: Map[String, LabelState], edgeLabels: Map[String, LabelState],
+      uniques: Set[(String, String)], wholeUniques: Set[String])
 
   /** `id IN ids`. */
   private[cypher] def idIn(ids: Array[Long]): Column = col("id").isin(ids.map(Long.box): _*)
 
-  /** A label held as `base − dead ∪ rows`: `base` its table when the first
-    * held write ran (made at open or at the last re-base by
-    * [[Local.materialize]]: driver rows when small, else a checkpoint),
+  /** The rows of a plan the optimizer folds into driver-held rows ([[LocalFold]]). */
+  private def folded(df: DataFrame): Option[Array[Row]] =
+    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) Some(df.collect())
+    else None
+
+  private[cypher] def has(sorted: Array[Long], id: Long): Boolean =
+    java.util.Arrays.binarySearch(sorted, id) >= 0
+
+  private[cypher] def union(a: Array[Long], b: Array[Long]): Array[Long] =
+    if (b.isEmpty) a else (a ++ b).distinct.sorted
+
+  /** What one statement's writes touched of a label, as its commit reads
+    * it: the sorted ids of held writes, the id frames of distributed ones
+    * (their ids may span labels), and whether a write re-encoded untouched
+    * rows, so the label is written whole.
+    */
+  final case class Touched(ids: Array[Long], frames: List[DataFrame], whole: Boolean) {
+    def ++(o: Touched): Touched = Touched(union(ids, o.ids), frames ++ o.frames, whole || o.whole)
+  }
+  object Touched {
+    val empty: Touched = Touched(Array.empty, Nil, whole = false)
+    val Whole: Touched = Touched(Array.empty, Nil, whole = true)
+    def of(ids: Array[Long]): Touched = Touched(ids, Nil, whole = false)
+  }
+
+  /** A label's state, `base − dead ∪ rows`, the store's files plus
+    * deletion vectors in memory: `base` its table as of its open or last
+    * re-base ([[Local.materialize]]: driver rows when small, else a
+    * checkpoint) or a write that could not stay held (then `rebase`),
     * `dead` the sorted ids whose copy in base is suppressed, and `rows` the
     * driver-held current row-versions of those ids and of new ids, in the
-    * label's column order (`schema`: base's columns, then those the writes
-    * added). Every id of `rows` is in `dead` or absent from base. `df`, the
-    * label's table, is one filter of base and one union with the rows: it
-    * adds no join and one leaf to base.
+    * label's column order (`schema`: base's, then the columns writes
+    * added). An id of `rows` with a copy in base is in `dead`, but for a
+    * key an append stream sends again: both copies stay, as in the store.
+    * `baseBytes` is base's size estimate, the gate of its open or re-base.
     */
-  final case class HeldLabel(base: DataFrame, dead: Array[Long], rows: Array[Row],
-      schema: StructType) {
+  final case class LabelState(base: DataFrame, dead: Array[Long], rows: Array[Row],
+      schema: StructType, baseBytes: BigInt, touched: Touched, rebase: Boolean) {
     lazy val rowsDf: DataFrame = Local.relation(base.sparkSession, rows.toSeq, schema)
+
+    /** The label's table, one object per state (manifests, ANN caches and
+      * the commit's carry check compare it by reference): one filter of base
+      * and one union with the rows, which adds no join and one leaf to base.
+      * Over base rows held on the driver it is one LocalRelation of those
+      * rows, folded once ([[LocalFold]]), so a read folds nothing.
+      */
     lazy val df: DataFrame =
-      (if (dead.isEmpty) base else base.filter(!idIn(dead)))
-        .unionByName(rowsDf, allowMissingColumns = true)
+      if (dead.isEmpty && rows.isEmpty) base
+      else {
+        val union = (if (dead.isEmpty) base else base.filter(!idIn(dead)))
+          .unionByName(rowsDf, allowMissingColumns = true)
+        folded(base).flatMap(_ => folded(union))
+          .fold(union)(Local.relation(base.sparkSession, _, union.schema))
+      }
+
     def size: Int = dead.length + rows.length
+
     /** Ids of `rows`, sorted. */
     lazy val rowIds: Array[Long] = {
       val i = schema.fieldIndex("id")
       rows.map(_.getLong(i)).sorted
     }
+
+    /** The size estimate a re-base gates on: base's recorded bytes plus
+      * the held rows' own ([[Local.bytesOf]]).
+      */
+    def bytes: BigInt = baseBytes + Local.bytesOf(rows, schema)
+  }
+  object LabelState {
+    /** A state of base `df` alone, of size estimate `bytes`. */
+    def of(df: DataFrame, bytes: BigInt, touched: Touched = Touched.empty): LabelState =
+      LabelState(df, Array.empty, Array.empty, df.schema, bytes, touched, rebase = false)
   }
 }

@@ -1930,7 +1930,9 @@ class WriteSpec extends AnyFunSuite {
   // driver from open, so its reads run no job and a literal MATCH does not
   // swap the held rows for a parquet scan; one row more keeps the
   // checkpoint, whose literal MATCH reads only the files its stats keep,
-  // in one job; under local.maxRows=0 every label is checkpointed.
+  // in one job; under local.maxRows=0 every label is checkpointed. The
+  // open reads each label in one job, with the columns, in their order and
+  // types, that inferring its files' schemas gives.
   test("GraphStore: a label of Local.HeldLabelRows rows is held from open, one more is checkpointed") {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -1944,6 +1946,9 @@ class WriteSpec extends AnyFunSuite {
     b.run(s"CREATE (:H {k: $n, v: $n})")
     b.run(s"UNWIND range(1, $n) AS i CREATE (:C {k: i, v: i})")
     b.run(s"CREATE (:C {k: ${n + 1}, v: ${n + 1}})")
+    // a column the second statement adds, after one sorting after it
+    b.run("CREATE (:O {z: 1})")
+    b.run("CREATE (:O {a: 2})")
     def held(s: GraphSession, l: String): Boolean =
       s.graph.snapshot.vertexLabels(l).queryExecution.analyzed.isInstanceOf[LocalRelation]
     def one(s: GraphSession, q: String, k: Long): Long =
@@ -1975,7 +1980,18 @@ class WriteSpec extends AnyFunSuite {
     assert(!held(d, "H") && !held(d, "C"))
     // one job per label either way, but for C, within the byte estimate
     // and one row past the row bound: its collect, then its checkpoint
+    assert(distOpenJobs == 3, s"$distOpenJobs jobs to open 3 labels checkpointed")
     assert(openJobs == distOpenJobs + 1, s"$openJobs jobs held, $distOpenJobs checkpointed")
+    val v = graft.cypher.GraphStore.latestVersion(root).get
+    val files = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines().toSeq
+      .filter(_.startsWith("file v ")).map(_.split(" ")).groupBy(_(2))
+      .map { case (l, ps) => l -> ps.map(p => s"$root/${graft.cypher.GraphStore.dec(p(3))}") }
+    assert(files.keySet == Set("H", "C", "O"), files.keySet)
+    files.foreach { case (l, paths) =>
+      val inferred = spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
+      Seq(s, d).foreach(g => assert(g.graph.snapshot.vertexLabels(l).schema == inferred, l))
+    }
+    assert(s.graph.snapshot.vertexLabels("O").columns.toSeq == Seq("id", "z", "a"))
     assert(one(d, point("H"), 17L) == 17L && one(d, count("H"), 0L) == n.toLong)
     graft.cypher.GraphStore.deleteTree(Paths.get(root))
   }
@@ -2001,6 +2017,66 @@ class WriteSpec extends AnyFunSuite {
     assert(!w.queryExecution.analyzed.isInstanceOf[LocalRelation])
     assert(openJobs == distributed(jobsOf(new GraphSession(spark).openGraph("hbytes", root))))
     assert(s.run("MATCH (x:W) RETURN count(*) AS n").collect().head.getLong(0) == rows.toLong)
+    graft.cypher.GraphStore.deleteTree(Paths.get(root))
+  }
+
+  // A label held at open is re-based by its state's own size estimate,
+  // the bytes its open recorded plus its held rows' real bytes: once held
+  // writes of wide rows take it past Local.HeldLabelBytes, its next re-base
+  // checkpoints it. (A LocalRelation's schema estimate counts 20 bytes a
+  // string, which kept such a label on the driver.)
+  test("GraphStore: a held label whose held writes pass Local.HeldLabelBytes is checkpointed at its re-base") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val root = Files.createTempDirectory("graft_store_heldgrow").toString
+    // 4 KiB a row on the driver; parquet stores the repeated value once
+    val t = Map("t" -> graft.gvalue.GString("x" * 4096))
+    val b = new GraphSession(spark)
+    b.createGraph("hgrow", root)
+    b.run("UNWIND range(1, 64) AS i CREATE (:W {k: i, c: i, t: $t})", t)
+    val s = new GraphSession(spark)
+    s.openGraph("hgrow", root)
+    def held: Boolean =
+      s.graph.snapshot.vertexLabels("W").queryExecution.analyzed.isInstanceOf[LocalRelation]
+    assert(held)
+    // a type-changing SET re-bases the label, within the bound
+    s.run("MATCH (w:W {k: 1}) SET w.c = 'one'")
+    assert(held)
+    // held CREATEs of more wide rows than the bound holds
+    val n = (graft.Local.HeldLabelBytes / 4096 + 64).toInt
+    s.run(s"UNWIND range(65, ${64 + n}) AS i CREATE (:W {k: i, t: $$t})", t)
+    s.run("MATCH (w:W {k: 2}) SET w.c = 'two'")
+    assert(!held, "a label past Local.HeldLabelBytes stayed on the driver at its re-base")
+    assert(s.run("MATCH (w:W) RETURN count(*) AS n").collect().head.getLong(0) == 64L + n)
+    assert(s.run("MATCH (w:W) WHERE w.c = 'two' RETURN count(*) AS n").collect().head.getLong(0) == 1L)
+    graft.cypher.GraphStore.deleteTree(Paths.get(root))
+  }
+
+  // Ingest-append batches into an existing durable label join its held
+  // rows: the label is neither re-based batch by batch nor grows a part per
+  // batch, so the 20th batch costs the jobs of the 2nd, and so does a read.
+  test("GraphStore: ingest-append batches cost the same jobs at batch 2 and batch 20") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_store_appends").toString
+    val s = new GraphSession(spark)
+    s.createGraph("appends", root)
+    s.ingestVertexBatch("A", "ak", (1 to 100).map(i => (i.toLong, i.toLong)).toDF("ak", "k"), "load", 0L)
+    def batch(i: Int): Int = jobsOf(s.ingestVertexBatch("A", "ak",
+      (1 to 5).map(j => (1000L + 10 * i + j, i.toLong)).toDF("ak", "k"), "load", i.toLong))
+    def reads(): Seq[Int] = Seq("MATCH (a:A) RETURN count(*) AS n",
+      "MATCH (a:A) WHERE a.k = 3 RETURN a.ak AS ak").map(q => jobsOf(s.run(q).collect()))
+    val jobs = (1 to 20).map { i =>
+      val j = batch(i)
+      j -> (if (i == 2 || i == 20) reads() else Nil)
+    }
+    assert(jobs(19)._1 == jobs(1)._1, s"jobs per batch: ${jobs.map(_._1)}")
+    assert(jobs(19)._2.zip(jobs(1)._2).forall { case (b20, b2) => b20 <= b2 },
+      s"read jobs after batch 2: ${jobs(1)._2}, after batch 20: ${jobs(19)._2}")
+    assert(s.run("MATCH (a:A) RETURN count(*) AS n").collect().head.getLong(0) == 200L)
+    val r = new GraphSession(spark)
+    r.openGraph("appends", root)
+    assert(r.run("MATCH (a:A) RETURN count(*) AS n").collect().head.getLong(0) == 200L)
     graft.cypher.GraphStore.deleteTree(Paths.get(root))
   }
 
