@@ -104,17 +104,33 @@ private[graft] object Local {
   /** The optimizer's size estimate of `df`, which runs no job. */
   def sizeOf(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
 
+  /** Whether the optimizer holds `df`'s rows on the driver, as one
+    * LocalRelation (its own, or [[LocalFold]]'s of its plan).
+    */
+  def onDriver(df: DataFrame): Boolean = df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
   /** The bytes of driver rows of `schema` as Spark holds them, each an
     * UnsafeRow: a string costs its UTF-8 bytes, where a LocalRelation's
     * estimate counts 20 a string whatever its length.
     */
-  def bytesOf(rows: Array[Row], schema: StructType): BigInt =
-    if (rows.isEmpty) 0
+  def bytesOf(rows: Array[Row], schema: StructType): BigInt = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    unsafeBytes(rows.iterator.map(toCatalyst(_).asInstanceOf[InternalRow]), schema)
+  }
+
+  /** The size estimate of `df` a re-base gates on: its rows' bytes when
+    * the optimizer holds them on the driver, else [[sizeOf]].
+    */
+  def bytesOf(df: DataFrame): BigInt = df.queryExecution.optimizedPlan match {
+    case r: LocalRelation => unsafeBytes(r.data.iterator, r.schema)
+    case p => p.stats.sizeInBytes
+  }
+
+  private def unsafeBytes(rows: Iterator[InternalRow], schema: StructType): BigInt =
+    if (!rows.hasNext) 0
     else {
-      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
       val unsafe = UnsafeProjection.create(schema)
-      rows.iterator.map(r =>
-        unsafe(toCatalyst(r).asInstanceOf[InternalRow]).getSizeInBytes.toLong).sum
+      rows.map(unsafe(_).getSizeInBytes.toLong).sum
     }
 
   def holds(spark: SparkSession, n: Long): Boolean = {
@@ -161,7 +177,7 @@ private[graft] object Local {
   def materialize(df: DataFrame, bytes: BigInt, partitions: Option[Int] = None): DataFrame = {
     val rows =
       if (bytes > HeldLabelBytes) None
-      else if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) Some(df.collect())
+      else if (onDriver(df)) Some(df.collect())
       else capped(df).filter(_.length <= HeldLabelRows)
     rows.fold(partitions.fold(df)(df.coalesce).localCheckpoint())(relation(df.sparkSession, _, df.schema))
   }

@@ -313,14 +313,16 @@ private[cypher] object Commit {
       * Bytes per point SET/DELETE are the row plus a position line,
       * whatever the file size. The row-versions are written on the driver,
       * and so are the positions while the tombstones fit `Local`'s cap. A
-      * held state's row-versions are its held rows of the touched ids, with
-      * no scan of the label, and only its dead ids lose their older copies.
-      * None when there is nothing to write.
+      * held state whose statement wrote only held ids takes its
+      * row-versions from its held rows of the touched ids, with no scan of
+      * the label, and only its dead ids lose their older copies; one that
+      * also unioned a frame onto its base reads every copy of the touched
+      * ids from its table. None when there is nothing to write.
       */
     private def writeDv(kind: String, l: String, st: LabelState, p: FileTable,
         ids: Array[Long], touchedInFiles: Array[Long]): Option[FileTable] = {
       val (encl, df) = (enc(l), st.df)
-      val held = st.size > 0
+      val held = st.size > 0 && touchedOf((kind, l)).frames.isEmpty
       val rows =
         if (held) {
           val idIx = st.schema.fieldIndex("id")

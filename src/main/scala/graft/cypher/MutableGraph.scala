@@ -55,8 +55,9 @@ final class MutableGraph(spark: SparkSession) {
 
   // ---- A CREATE, SET, REMOVE or DELETE of driver-held ids changes only
   // its label state's `dead` and `rows`. Any other write makes its join or
-  // union the new base (the `local.maxRows=0` reference path), marked for a
-  // re-base at the statement's end ([[flattened]]). Each write records in
+  // union the new base (the `local.maxRows=0` reference path): an append
+  // stays a lazy union of at most MaxParts parts, any other is marked for
+  // a re-base at the statement's end ([[flattened]]). Each write records in
   // the state what it touched, so publish rewrites only the parquet FILES
   // holding touched ids (a write that recorded nothing would lose rows
   // under CoW, so the primitives record it themselves); the first write of
@@ -85,12 +86,15 @@ final class MutableGraph(spark: SparkSession) {
     else st
 
   /** The state after a write that cannot stay held: its table `next` is
-    * the new base, marked for a re-base, `added` bytes larger.
+    * the new base, `added` bytes larger. An append that unions `parts`
+    * leaves onto the table and re-encodes no row adds them to the base's
+    * parts; any other write marks the label for a re-base.
     */
   private def written(st: LabelState, next: DataFrame, ids: DataFrame, added: BigInt = 0,
-      whole: Boolean = false): LabelState =
+      whole: Boolean = false, parts: Int = 0): LabelState =
     LabelState(next, Array.empty, Array.empty, next.schema, st.bytes + added,
-      st.touched ++ Touched(Array.empty, List(ids.select(col("id"))), whole), rebase = true)
+      st.touched ++ Touched(Array.empty, List(ids.select(col("id"))), whole),
+      rebase = parts == 0 || whole, st.parts + parts)
 
   /** Whether a held state of `n` dead ids and row-versions stays held: the
     * bound of a merge-on-read statement and of `Local`'s cap.
@@ -525,7 +529,7 @@ final class MutableGraph(spark: SparkSession) {
         case None => appendRows("v", label, df)
         case Some(st) =>
           val kept = st.df.join(df.select(col("id")), Seq("id"), "left_anti")
-          put("v", label, written(st, aligned(kept, df), df, Local.sizeOf(df), reencodes(kept, df)))
+          put("v", label, written(st, aligned(kept, df), df, Local.bytesOf(df), reencodes(st.schema, df)))
       }
     }
 
@@ -547,20 +551,28 @@ final class MutableGraph(spark: SparkSession) {
 
   /** Append rows to a label table (all CREATE paths), schema-aligned. A
     * frame held on the driver joins the label's held row-versions when the
-    * union folds there and re-encodes no old row; the new ids are recorded
-    * as touched. A new label's base is the frame itself, written whole.
+    * union folds there, re-encodes no old row and repeats no held id; the
+    * appended ids are recorded as touched. Otherwise the union is the new
+    * base, adding the held rows' relation and the frame to its parts. A
+    * new label's base is the frame itself, written whole.
     */
   private def appendRows(kind: String, label: String, df: DataFrame): Unit =
     put(kind, label, labels(kind).get(label).map(continued(kind, label, _)) match {
-      case None => LabelState.of(df, Local.sizeOf(df), Touched.Whole)
+      case None => LabelState.of(df, Local.bytesOf(df), Touched.Whole)
       case Some(st) =>
-        val whole = reencodes(st.df, df)
+        val whole = reencodes(st.schema, df)
         Some(aligned(st.rowsDf, df)).filterNot(_ => whole).flatMap { merged =>
-          folded(merged).filter(rows => holdable(st.dead.length + rows.length)).map { rows =>
-            val next = st.copy(rows = rows, schema = merged.schema)
-            next.copy(touched = st.touched ++ Touched.of(next.rowIds.filterNot(has(st.rowIds, _))))
+          folded(merged).filter(rows => holdable(st.dead.length + rows.length)).flatMap { rows =>
+            val idIx = merged.schema.fieldIndex("id")
+            val ids = rows.drop(st.rows.length).map(_.getLong(idIx)).distinct.sorted
+            // the commit writes a held state's rows of its touched ids: a
+            // repeated id's earlier copy, already stored, would be written
+            // again, so the union path rewrites every copy of it instead
+            Option.when(!ids.exists(has(st.rowIds, _)))(st.copy(rows = rows,
+              schema = merged.schema, touched = st.touched ++ Touched.of(ids)))
           }
-        }.getOrElse(written(st, aligned(st.df, df), df, Local.sizeOf(df), whole))
+        }.getOrElse(written(st, aligned(st.df, df), df, Local.bytesOf(df), whole,
+          parts = if (st.size > 0) 2 else 1))
     })
 
   /** Columns of `o` that `add` holds with another type; nullability-only
@@ -569,8 +581,8 @@ final class MutableGraph(spark: SparkSession) {
     * change forced a dynCoerce full rewrite on every wrapper-ingested batch
     * (dropping index-entry chains, r14).
     */
-  private def conflicts(o: DataFrame, add: DataFrame): Seq[String] =
-    o.schema.fields.flatMap { f =>
+  private def conflicts(o: StructType, add: DataFrame): Seq[String] =
+    o.fields.flatMap { f =>
       add.schema.fields.find(_.name == f.name)
         .filter(g => MutableGraph.relaxNullability(g.dataType) !=
           MutableGraph.relaxNullability(f.dataType) &&
@@ -578,12 +590,13 @@ final class MutableGraph(spark: SparkSession) {
         .map(_ => f.name)
     }.toSeq
 
-  /** Whether appending `add` to `o` re-encodes o's rows: a conflicting
-    * column of o that is not already dynamic (dynCoerce of a GValue column
-    * is the identity).
+  /** Whether appending `add` to a table of schema `o` re-encodes its rows:
+    * a conflicting column of o that is not already dynamic (dynCoerce of a
+    * GValue column is the identity). A label state's schema serves, so the
+    * test renders no table.
     */
-  private def reencodes(o: DataFrame, add: DataFrame): Boolean =
-    conflicts(o, add).exists(n => !graft.gvalue.GValueCol.isGValue(o.schema(n).dataType))
+  private def reencodes(o: StructType, add: DataFrame): Boolean =
+    conflicts(o, add).exists(n => !graft.gvalue.GValueCol.isGValue(o(n).dataType))
 
   /** New rows `add` aligned with an existing label table `o` (union of
     * columns). A property column whose type CONFLICTS between the two (the
@@ -595,7 +608,7 @@ final class MutableGraph(spark: SparkSession) {
     */
   private def aligned(o: DataFrame, add: DataFrame): DataFrame = {
     import graft.gvalue.GValueCol
-    val conflicts = this.conflicts(o, add)
+    val conflicts = this.conflicts(o.schema, add)
     def fix(df: DataFrame): DataFrame = conflicts.foldLeft(df) { (d, n) =>
       GValueCol.dynCoerce(col(n), d.schema(n).dataType) match {
         // keep SQL NULL (= property absent) rather than letting the
@@ -814,7 +827,7 @@ final class MutableGraph(spark: SparkSession) {
         if (!hits(hit, l)) l -> st0
         else {
           val st = continued(kind, l, st0)
-          val kept = keepsType(st.df, k, updates)
+          val kept = keepsType(st.schema, k, updates)
           l -> frozen._2.filter(_ => kept).flatMap(idsOf(_, "__set_id", l))
             .flatMap(setHeld(st, k, updates, _))
             .getOrElse(written(st, setColumn(st.df, k, updates),
@@ -825,10 +838,10 @@ final class MutableGraph(spark: SparkSession) {
     edgeLabels = apply("e")
   }
 
-  /** Whether SET of `updates` keeps column k's type in `df`. */
-  private def keepsType(df: DataFrame, k: String, updates: DataFrame): Boolean =
-    !df.columns.contains(k) || {
-      val (oldDt, newDt) = (df.schema(k).dataType, updates.schema("__set_val").dataType)
+  /** Whether SET of `updates` keeps column k's type in a table of `schema`. */
+  private def keepsType(schema: StructType, k: String, updates: DataFrame): Boolean =
+    !schema.fieldNames.contains(k) || {
+      val (oldDt, newDt) = (schema(k).dataType, updates.schema("__set_val").dataType)
       oldDt == newDt || oldDt == NullType || newDt == NullType
     }
 
@@ -840,7 +853,7 @@ final class MutableGraph(spark: SparkSession) {
     val updated =
       if (df.columns.contains(k)) {
         val (oldC, newC) =
-          if (keepsType(df, k, updates)) (col(k), col("__set_val"))
+          if (keepsType(df.schema, k, updates)) (col(k), col("__set_val"))
           else {
             // type-changing SET (long → list/map/string …): both the
             // kept and the new values re-encode through the dynamic
@@ -963,21 +976,22 @@ final class MutableGraph(spark: SparkSession) {
   private def deleted(kind: String, l: String, st0: LabelState,
       frozen: (DataFrame, Option[Array[Row]])): LabelState = {
     val (st, ids) = (continued(kind, l, st0), frozen._1)
-    val (df, idIx) = (st.df, st.schema.fieldIndex("id"))
+    val idIx = st.schema.fieldIndex("id")
     frozen._2.flatMap(idsOf(_, "id", l)).filter(d => holdable(st.size + d.length))
       .map(d => st.copy(dead = union(st.dead, d), rows = st.rows.filterNot(r => has(d, r.getLong(idIx))),
         touched = st.touched ++ Touched.of(d)))
-      .getOrElse(written(st, df.join(ids, df("id") === ids("id"), "left_anti"), ids))
+      .getOrElse(written(st, st.df.join(ids, st.df("id") === ids("id"), "left_anti"), ids))
   }
 
   // ------------------------------------------------------ durable store
   // (GraphStore layout doc) — when attached, every successful mutating
   // statement publishes the next parquet version; reads use the in-memory
   // label tables, never re-reading the store. Invariant, kept at commit
-  // (commitIfChanged): a committed label is a materialized base with a
-  // held delta (`base − dead ∪ rows`) whose dead ids and driver-held rows
-  // stay within the merge-on-read bound, so a statement's plans and its
-  // publish meet a small delta over a flat table, whatever the history.
+  // (commitIfChanged): a committed label is a materialized base, or a
+  // lazy union of at most MaxParts appended parts over one, with a held
+  // delta (`base − dead ∪ rows`) whose dead ids and driver-held rows stay
+  // within the merge-on-read bound, so a statement's plans and its publish
+  // meet a small delta over a near-flat table, whatever the history.
 
   private[cypher] var storeRoot: Option[String] = None
   /** What this graph holds of its store, set at load and by each publish;
@@ -1038,10 +1052,11 @@ final class MutableGraph(spark: SparkSession) {
   }
 
   /** Re-base each label the statement changed that is marked for it (a
-    * write that could not stay held left a join or a union over the label
-    * as its base) or whose held delta passed [[holdable]]: an unflattened
-    * table makes each later plan and publish re-walk the whole write
-    * history. Pregelix keeps its state materialized and joins each step's
+    * write that could not stay held left a join or a re-encoding over the
+    * label as its base), whose base holds more than [[MutableGraph.MaxParts]]
+    * appended parts, or whose held delta passed [[holdable]]: an
+    * unflattened table makes each later plan and publish re-walk the whole
+    * write history. Pregelix keeps its state materialized and joins each step's
     * delta against it; this is that rule. The re-base is
     * [[Local.materialize]], gated by the state's own size estimate (its
     * base's recorded bytes plus its held rows' real ones, not Spark's
@@ -1059,7 +1074,8 @@ final class MutableGraph(spark: SparkSession) {
     if (now eq prev) now
     else now.map {
       case (l, st) if prev.get(l).exists(_ eq st) ||
-          !(st.rebase || (st.size > 0 && !holdable(st.size))) => l -> st
+          !(st.rebase || st.parts > MutableGraph.MaxParts || (st.size > 0 && !holdable(st.size))) =>
+        l -> st
       case (l, st) =>
         val size = st.bytes
         l -> LabelState.of(org.apache.spark.sql.graft.Bridge.withSizeInBytes(
@@ -1081,6 +1097,14 @@ object MutableGraph {
     */
   @volatile private[graft] var DvMaxStatementIds: Int = 8192
   @volatile private[graft] var DvMaxTombstones: Int = 65536
+
+  /** Parts an append may union onto a label's base before its statement
+    * re-bases it: each append past `Local`'s bounds (an ingest batch
+    * checkpointed past [[Local.WriteBytes]], a bulk CREATE that does not
+    * fold) costs no re-base of the whole label, and a read scans at most
+    * this many parts over the last re-base.
+    */
+  val MaxParts: Int = 16
 
   /** The type with every nullability mark relaxed — two types equal under
     * this differ only in NOT NULL claims and union/compare losslessly. */
@@ -1124,8 +1148,7 @@ object MutableGraph {
 
   /** The rows of a plan the optimizer folds into driver-held rows ([[LocalFold]]). */
   private def folded(df: DataFrame): Option[Array[Row]] =
-    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) Some(df.collect())
-    else None
+    if (Local.onDriver(df)) Some(df.collect()) else None
 
   private[cypher] def has(sorted: Array[Long], id: Long): Boolean =
     java.util.Arrays.binarySearch(sorted, id) >= 0
@@ -1156,10 +1179,13 @@ object MutableGraph {
     * label's column order (`schema`: base's, then the columns writes
     * added). An id of `rows` with a copy in base is in `dead`, but for a
     * key an append stream sends again: both copies stay, as in the store.
-    * `baseBytes` is base's size estimate, the gate of its open or re-base.
+    * `baseBytes` is base's size estimate: the gate of its open or re-base
+    * plus what later appends added. `parts` counts the leaves appends
+    * unioned onto base since then ([[MutableGraph.MaxParts]]).
     */
   final case class LabelState(base: DataFrame, dead: Array[Long], rows: Array[Row],
-      schema: StructType, baseBytes: BigInt, touched: Touched, rebase: Boolean) {
+      schema: StructType, baseBytes: BigInt, touched: Touched, rebase: Boolean,
+      parts: Int = 0) {
     lazy val rowsDf: DataFrame = Local.relation(base.sparkSession, rows.toSeq, schema)
 
     /** The label's table, one object per state (manifests, ANN caches and
@@ -1173,8 +1199,8 @@ object MutableGraph {
       else {
         val union = (if (dead.isEmpty) base else base.filter(!idIn(dead)))
           .unionByName(rowsDf, allowMissingColumns = true)
-        folded(base).flatMap(_ => folded(union))
-          .fold(union)(Local.relation(base.sparkSession, _, union.schema))
+        if (!Local.onDriver(base)) union
+        else folded(union).fold(union)(Local.relation(base.sparkSession, _, union.schema))
       }
 
     def size: Int = dead.length + rows.length

@@ -2050,6 +2050,21 @@ class WriteSpec extends AnyFunSuite {
     assert(s.run("MATCH (w:W) RETURN count(*) AS n").collect().head.getLong(0) == 64L + n)
     assert(s.run("MATCH (w:W) WHERE w.c = 'two' RETURN count(*) AS n").collect().head.getLong(0) == 1L)
     graft.cypher.GraphStore.deleteTree(Paths.get(root))
+    // an append whose `c` conflicts with the label's type re-encodes the
+    // label and re-bases it, gated by the appended rows' real bytes
+    val root2 = Files.createTempDirectory("graft_store_heldgrow").toString
+    val b2 = new GraphSession(spark)
+    b2.createGraph("hgrow2", root2)
+    b2.run("UNWIND range(1, 64) AS i CREATE (:W {k: i, c: i, t: $t})", t)
+    val s2 = new GraphSession(spark)
+    s2.openGraph("hgrow2", root2)
+    def held2: Boolean =
+      s2.graph.snapshot.vertexLabels("W").queryExecution.analyzed.isInstanceOf[LocalRelation]
+    assert(held2)
+    s2.run(s"UNWIND range(65, ${64 + n}) AS i CREATE (:W {k: i, c: 'wide', t: $$t})", t)
+    assert(!held2, "a label past Local.HeldLabelBytes by a re-encoding append stayed on the driver")
+    assert(s2.run("MATCH (w:W) WHERE w.c = 'wide' RETURN count(*) AS n").collect().head.getLong(0) == n)
+    graft.cypher.GraphStore.deleteTree(Paths.get(root2))
   }
 
   // Ingest-append batches into an existing durable label join its held
@@ -2078,6 +2093,70 @@ class WriteSpec extends AnyFunSuite {
     r.openGraph("appends", root)
     assert(r.run("MATCH (a:A) RETURN count(*) AS n").collect().head.getLong(0) == 200L)
     graft.cypher.GraphStore.deleteTree(Paths.get(root))
+  }
+
+  // A batch whose size estimate passes Local.WriteBytes is checkpointed and
+  // unioned onto the label as one part, with no re-base of the label: the
+  // 16th batch costs the jobs of the 2nd. The 17th part re-bases it.
+  test("GraphStore: ingest-append batches past Local.WriteBytes union onto the label until MaxParts") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.{col, lit}
+    val root = Files.createTempDirectory("graft_store_bigappends").toString
+    val s = new GraphSession(spark)
+    s.createGraph("bigappends", root)
+    // short strings, which Spark's estimate counts 20 bytes each
+    val n = 12000L
+    def frame(i: Int) = spark.range(i * n, (i + 1) * n)
+      .select(col("id").as("bk") +: (0 until 10).map(j => lit(s"s$j").as(s"p$j")): _*)
+    assert(graft.Local.sizeOf(frame(1)) > graft.Local.WriteBytes)
+    s.ingestVertexBatch("B", "bk", frame(0), "load", 0L)
+    def parts(): Int = s.graph.snapshot.vertexLabels("B").queryExecution.analyzed.collectLeaves().size
+    val max = graft.cypher.MutableGraph.MaxParts
+    val jobs = (1 to max).map { i =>
+      val j = jobsOf(s.ingestVertexBatch("B", "bk", frame(i), "load", i.toLong))
+      assert(parts() == i + 1, s"after batch $i")
+      j
+    }
+    assert(jobs.drop(1).forall(_ == jobs(1)), s"jobs per batch: $jobs")
+    s.ingestVertexBatch("B", "bk", frame(max + 1), "load", max + 1L)
+    assert(parts() == 1, "a label of more than MaxParts parts was not re-based")
+    val count = "MATCH (b:B) RETURN count(*) AS n"
+    assert(s.run(count).collect().head.getLong(0) == (max + 2) * n)
+    val r = new GraphSession(spark)
+    r.openGraph("bigappends", root)
+    assert(r.run(count).collect().head.getLong(0) == (max + 2) * n)
+    graft.cypher.GraphStore.deleteTree(Paths.get(root))
+  }
+
+  // A key appended again keeps every copy, in memory and in the store: a
+  // repeat of a base key joins the held rows, and a repeat of a held key
+  // rewrites every copy of it. Both modes give the same rows.
+  test("GraphStore: a key appended again keeps every copy in the store as in memory") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    def script(): (Seq[String], Seq[String]) = {
+      val root = Files.createTempDirectory("graft_store_reappend").toString
+      val s = new GraphSession(spark)
+      s.createGraph("reappend", root)
+      def batch(i: Long, keys: Long*): Unit =
+        s.ingestVertexBatch("R", "rk", keys.map(k => (k, i)).toDF("rk", "b"), "load", i)
+      batch(0, 1, 2, 3)
+      batch(1, 4, 1)
+      batch(2, 4, 1)
+      batch(3, 5, 5)
+      def rows(g: GraphSession): Seq[String] =
+        g.run("MATCH (r:R) RETURN r.rk AS k, r.b AS b").collect().map(_.toString).toSeq.sorted
+      val r = new GraphSession(spark)
+      r.openGraph("reappend", root)
+      val out = (rows(s), rows(r))
+      graft.cypher.GraphStore.deleteTree(Paths.get(root))
+      out
+    }
+    val want = Seq((1, 0), (1, 1), (1, 2), (2, 0), (3, 0), (4, 1), (4, 2), (5, 3), (5, 3))
+      .map { case (k, b) => s"[$k,$b]" }
+    val held = script()
+    assert(held == ((want, want)), s"in memory, then after a reopen: $held")
+    assert(distributed(script()) == held)
   }
 
   test("GraphStore: held and checkpointed label bases give the same reads and writes after a reopen") {
