@@ -38,13 +38,6 @@ private[cypher] object Commit {
   /** Deleted row positions per part-file basename, each array sorted. */
   type Positions = Map[String, Array[Long]]
 
-  /** IVFFlat-analog index: centroids trained at build, like IVFFlat's lists. */
-  final case class IvfIdx(label: String, prop: String, metric: String,
-      dims: Int, lists: Int, centroids: Array[Array[Double]])
-  /** PQ/ADC index: m subspace codebooks of k centroids each. */
-  final case class PqIdx(label: String, prop: String, metric: String,
-      dims: Int, m: Int, k: Int, codebooks: Array[Array[Array[Double]]])
-
   /** A file-form label as a version records it, with its dv positions,
     * for the in-memory table `src` whose content it is.
     */
@@ -54,17 +47,16 @@ private[cypher] object Commit {
   /** What a graph holds of its store: the version its state derives from,
     * the version holding each ANN index's matrix, each index's stored
     * entry files with the label table they reflect (a probe may read them
-    * only while the label is that table), and the manifests of its
-    * file-form labels.
+    * only while the label is that table), both keyed by their catalog
+    * line's (tag, label, prop), and the manifests of its file-form labels.
     */
-  final case class Held(version: Long, ivfAt: Map[Key, Long], pqAt: Map[Key, Long],
-      ivfaAt: Map[Key, (List[String], DataFrame)],
-      pqcAt: Map[Key, (List[String], DataFrame)], manifest: Map[Key, Manifest]) {
+  final case class Held(version: Long, matrixAt: Map[AnnIndex.Key, Long],
+      stored: Map[AnnIndex.Key, (List[String], DataFrame)], manifest: Map[Key, Manifest]) {
     /** Forget what is persisted of a rebuilt index. */
-    def ivfRebuilt(key: Key): Held = copy(ivfAt = ivfAt - key, ivfaAt = ivfaAt - key)
-    def pqRebuilt(key: Key): Held = copy(pqAt = pqAt - key, pqcAt = pqcAt - key)
+    def rebuilt(ix: AnnIndex): Held =
+      copy(matrixAt = matrixAt - ix.key, stored = stored - ix.entriesKey)
   }
-  val NotHeld: Held = Held(0L, Map.empty, Map.empty, Map.empty, Map.empty, Map.empty)
+  val NotHeld: Held = Held(0L, Map.empty, Map.empty, Map.empty)
 
   /** What a commit reads: the graph's label states at the end of a
     * statement and at its start (`prevV`/`prevE`; a changed state records
@@ -76,14 +68,12 @@ private[cypher] object Commit {
   final case class Snapshot(root: String, held: Held, head: Catalog,
       vertexLabels: Map[String, LabelState], edgeLabels: Map[String, LabelState],
       prevV: Map[String, LabelState], prevE: Map[String, LabelState], compact: Set[Key],
-      ivf: List[IvfIdx], pq: List[PqIdx],
-      ivfCache: Map[Key, (DataFrame, DataFrame)],
-      pqCache: Map[Key, (DataFrame, DataFrame)])
+      indexes: List[AnnIndex], entries: Map[AnnIndex.Key, (DataFrame, DataFrame)])
 
   /** A graph as a version holds it (see [[open]]). */
   final case class Opened(catalog: Catalog,
       vertexLabels: Map[String, LabelState], edgeLabels: Map[String, LabelState],
-      ivf: List[IvfIdx], pq: List[PqIdx], held: Held)
+      indexes: List[AnnIndex], held: Held)
 
   /** How a changed label commits. */
   sealed trait Plan
@@ -126,10 +116,6 @@ private[cypher] object Commit {
     from < ids.length && ids(from) <= mx
   }
 
-  def embeddings(tbl: DataFrame, prop: String, dims: Int): DataFrame =
-    tbl.select(col("id"), col(prop).cast(ArrayType(DoubleType)).as(prop))
-      .filter(col(prop).isNotNull && size(col(prop)) === dims)
-
   /** Publish `s` as the next version, under the store's commit lock with
     * base-version validation: a concurrent writer having published since
     * the graph's snapshot raises PG's serialization failure, and an
@@ -146,13 +132,9 @@ private[cypher] object Commit {
       val w = new Writer(spark, s, prev, next)
       val tables = w.tables("v", s.vertexLabels, s.prevV) ++
         w.tables("e", s.edgeLabels, s.prevE)
-      val indexes =
-        s.ivf.map(ix => w.matrix("ivf", ix.label, ix.prop, ix.metric,
-          List(ix.dims, ix.lists), ix.centroids, s.held.ivfAt.get((ix.label, ix.prop)))) ++
-        s.pq.map(ix => w.matrix("pq", ix.label, ix.prop, ix.metric,
-          List(ix.dims, ix.m, ix.k), ix.codebooks.flatten, s.held.pqAt.get((ix.label, ix.prop))))
-      val entries = entryIndexes(s).flatMap(w.persistEntries)
-      val cat = s.head.copy(tables = tables, indexes = indexes, entries = entries.map(_._1))
+      val ixs = s.indexes.sortBy(ix => AnnIndex.Tags.indexOf(ix.tag))
+      val entries = ixs.flatMap(w.persistEntries)
+      val cat = s.head.copy(tables = tables, indexes = ixs.map(w.matrix), entries = entries.map(_._1))
       Files.write(catalogPath(s.root, next), cat.render.getBytes(UTF_8))
       swapLatest(s.root, next)
       val held = heldAt(next, cat, entries, w.manifest(cat))
@@ -161,41 +143,9 @@ private[cypher] object Commit {
     }
 
   private def heldAt(version: Long, cat: Catalog, entries: List[(Entries, DataFrame)],
-      manifest: Map[Key, Manifest]): Held = {
-    def at(tag: String) = cat.indexes.filter(_.tag == tag)
-      .map(d => (d.label, d.prop) -> d.ver).toMap
-    def stored(tag: String) = entries.collect {
-      case (e, tbl) if e.tag == tag => (e.label, e.prop) -> ((e.rels, tbl)) }.toMap
-    Held(version, at("ivf"), at("pq"), stored("ivfa"), stored("pqc"), manifest)
-  }
-
-  /** An index's stored entries (`ivfa` / `pqc`) as a commit maintains them. */
-  private final case class EntryIndex(tag: String, label: String, prop: String,
-      stored: Option[(List[String], DataFrame)], cached: DataFrame => Option[DataFrame],
-      derive: DataFrame => DataFrame, dedupKeys: Seq[String], valCol: String,
-      sortCols: Seq[String])
-
-  private def entryIndexes(s: Snapshot): List[EntryIndex] = {
-    def rows(label: String, prop: String, dims: Int, touched: DataFrame) =
-      embeddings(s.vertexLabels(label).df, prop, dims).join(touched, Seq("id"), "left_semi")
-    def cached(c: Option[(DataFrame, DataFrame)], cols: String*)(tbl: DataFrame) =
-      c.collect { case (src, a) if src eq tbl => a.select(cols.map(col): _*) }
-    s.ivf.map { ix =>
-      val key = (ix.label, ix.prop)
-      EntryIndex("ivfa", ix.label, ix.prop, s.held.ivfaAt.get(key),
-        cached(s.ivfCache.get(key), "id", "cluster"),
-        t => graft.functions.Ivf.assignments(rows(ix.label, ix.prop, ix.dims, t),
-          "id", ix.prop, ix.centroids),
-        Seq("id"), "cluster", Seq("cluster", "id"))
-    } ++ s.pq.map { ix =>
-      val key = (ix.label, ix.prop)
-      EntryIndex("pqc", ix.label, ix.prop, s.held.pqcAt.get(key),
-        cached(s.pqCache.get(key), "id", "sub", "code"),
-        t => graft.functions.Ivf.pqEncode(rows(ix.label, ix.prop, ix.dims, t),
-          "id", ix.prop, ix.codebooks),
-        Seq("id", "sub"), "code", Seq("id", "sub"))
-    }
-  }
+      manifest: Map[Key, Manifest]): Held =
+    Held(version, cat.indexes.map(d => (d.tag, d.label, d.prop) -> d.ver).toMap,
+      entries.map { case (e, tbl) => (e.tag, e.label, e.prop) -> ((e.rels, tbl)) }.toMap, manifest)
 
   private val idSchema = StructType(Seq(StructField("id", LongType)))
   /** The part-file basename of a scanned row. */
@@ -543,15 +493,14 @@ private[cypher] object Commit {
       * version (Double.toString round-trips exactly), then carried by its
       * catalog line.
       */
-    def matrix(tag: String, label: String, prop: String, metric: String,
-        shape: List[Int], rows: => Array[Array[Double]], at: Option[Long]): IndexDef =
-      at match {
-        case Some(ver) => IndexDef(tag, label, prop, metric, shape, ver)
+    def matrix(ix: AnnIndex): IndexDef =
+      s.held.matrixAt.get(ix.key) match {
+        case Some(ver) => IndexDef(ix.tag, ix.label, ix.prop, ix.metric, ix.shape, ver)
         case None =>
-          val d = IndexDef(tag, label, prop, metric, shape, next)
-          Files.createDirectories(Paths.get(dir, tag))
+          val d = IndexDef(ix.tag, ix.label, ix.prop, ix.metric, ix.shape, next)
+          Files.createDirectories(Paths.get(dir, ix.tag))
           Files.write(Paths.get(root, d.matrixRel),
-            rows.map(_.map(java.lang.Double.toString).mkString(" ")).mkString("\n")
+            ix.matrix.map(_.map(java.lang.Double.toString).mkString(" ")).mkString("\n")
               .getBytes(UTF_8))
           d
       }
@@ -571,52 +520,49 @@ private[cypher] object Commit {
       * catalog line per file. An id-local write appends a delta file of the
       * touched rows' new entries, carried files keep their lines, and at
       * 16 lines the chain merges its files last-wins per entry key (cost
-      * proportional to the chain, never a label re-scan). IVF probes read
-      * the union raw (stale rows only add candidates the exact rerank
-      * drops); PQ codes dedup last-wins. A whole rewrite or an unbounded
+      * proportional to the chain, never a label re-scan); the entry format
+      * and how a probe reads it are the index's ([[AnnIndex]]). A whole rewrite or an unbounded
       * change drops the lines. They return with the in-memory entries a
       * probe derives: a commit of the table they reflect writes them as
       * one file, and so does an id-local commit right after it, as the
       * cached entries without the touched ids plus the touched rows' new
       * entries. Returns the lines and the table they reflect.
       */
-    def persistEntries(e: EntryIndex): Option[(Entries, DataFrame)] = {
-      val tbl = s.vertexLabels.getOrElse(e.label, return None).df
-      def kept(rels: List[String]) = Some((Entries(e.tag, e.label, e.prop, rels), tbl))
+    def persistEntries(ix: AnnIndex): Option[(Entries, DataFrame)] = {
+      val tbl = s.vertexLabels.getOrElse(ix.label, return None).df
+      def cached(t: DataFrame) = s.entries.get(ix.key).collect { case (src, a) if src eq t => a }
+      def derive(touched: DataFrame) = ix.derive(
+        AnnIndex.embeddings(tbl, ix.prop, ix.dims).join(touched, Seq("id"), "left_semi"))
+      def kept(rels: List[String]) = Some((Entries(ix.entryTag, ix.label, ix.prop, rels), tbl))
       def write(a: DataFrame, carried: List[String]) = {
-        val rel = s"v$next/${e.tag}/${enc(e.label)}__${enc(e.prop)}"
+        val rel = s"v$next/${ix.entryTag}/${enc(ix.label)}__${enc(ix.prop)}"
         // range-partitioned and sorted on the probe key, so row-group
         // stats act as the list index: a cluster-pruned scan reads only
         // the probed lists
-        a.repartitionByRange(e.sortCols.map(col): _*)
-          .sortWithinPartitions(e.sortCols.map(col): _*)
+        a.repartitionByRange(ix.sortCols.map(col): _*)
+          .sortWithinPartitions(ix.sortCols.map(col): _*)
           .write.parquet(s"$root/$rel")
         kept(carried :+ rel)
       }
-      e.stored match {
+      s.held.stored.get(ix.entriesKey) match {
         case Some((rels, src)) if src eq tbl => kept(rels) // unchanged: pointers
-        case _ => e.cached(tbl) match {
+        case _ => cached(tbl) match {
           case Some(a) => write(a, Nil) // fresh in-memory entries, one file
           case None =>
-            val prevRels = prev.entries.find(p =>
-              (p.tag, p.label, p.prop) == ((e.tag, e.label, e.prop))).map(_.rels)
-            (prevRels, boundedTouched(e.label)) match {
+            val prevRels = prev.entries.find(p => (p.tag, p.label, p.prop) == ix.entriesKey).map(_.rels)
+            (prevRels, boundedTouched(ix.label)) match {
               case (Some(rels), Some(touched)) =>
                 if (touched.isEmpty) kept(rels) // identity churn only
                 else if (rels.size >= 16) {
                   chainMerges += 1
-                  val chain = rels.zipWithIndex.map { case (r, i) =>
-                    spark.read.parquet(s"$root/$r").withColumn("__seq", lit(i)) }
-                  val fresh = e.derive(touched).withColumn("__seq", lit(rels.size))
-                  write((chain :+ fresh).reduce(_ unionByName _)
-                    .groupBy(e.dedupKeys.map(col): _*)
-                    .agg(max_by(col(e.valCol), col("__seq")).as(e.valCol)), Nil)
-                } else write(e.derive(touched), rels) // delta: the touched rows
+                  write(ix.lastWins(rels.zipWithIndex.map { case (r, i) =>
+                    (spark.read.parquet(s"$root/$r"), i.toLong) } :+ ((derive(touched), rels.size.toLong))), Nil)
+                } else write(derive(touched), rels) // delta: the touched rows
               case (None, Some(touched)) =>
                 // entries a probe cached against the statement's start
-                s.prevV.get(e.label).map(_.df).flatMap(e.cached).map { a =>
+                s.prevV.get(ix.label).map(_.df).flatMap(cached).map { a =>
                   if (touched.isEmpty) a
-                  else a.join(touched, Seq("id"), "left_anti").unionByName(e.derive(touched))
+                  else a.join(touched, Seq("id"), "left_anti").unionByName(derive(touched))
                 }.flatMap(write(_, Nil))
               case _ => None
             }
@@ -775,18 +721,9 @@ private[cypher] object Commit {
     def matrixOf(d: IndexDef): Array[Array[Double]] =
       Files.readAllLines(Paths.get(root, d.matrixRel)).asScala
         .map(_.split(" ").map(java.lang.Double.parseDouble)).toArray
-    val ivf = cat.indexes.filter(_.tag == "ivf").map { d =>
-      IvfIdx(d.label, d.prop, d.metric, d.shape(0), d.shape(1), matrixOf(d)) }
-    val pq = cat.indexes.filter(_.tag == "pq").map { d =>
-      val List(dims, m, k) = d.shape
-      val rows = matrixOf(d)
-      require(rows.length == m * k, s"pq codebook file: ${rows.length} != $m*$k")
-      PqIdx(d.label, d.prop, d.metric, dims, m, k,
-        Array.tabulate(m)(s => Array.tabulate(k)(c => rows(s * k + c))))
-    }
     // stored entries are valid exactly for the label tables this open made
     val entries = cat.entries.flatMap(e => tables("v").get(e.label).map(e -> _.df))
-    Opened(cat, tables("v"), tables("e"), ivf, pq, heldAt(v, cat, entries,
+    Opened(cat, tables("v"), tables("e"), cat.indexes.map(d => AnnIndex.of(d, matrixOf(d))), heldAt(v, cat, entries,
       cat.tables.collect { case t: FileTable => (t.kind, t.label) ->
         Manifest(tables(t.kind)(t.label).df, t.files, t.dvps, dvs((t.kind, t.label))) }.toMap))
   }

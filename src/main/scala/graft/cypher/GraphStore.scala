@@ -41,6 +41,10 @@ import scala.jdk.CollectionConverters._
   *   pq <label> <prop> <metric> <dims> <m> <k> <ver>
   *   ivfa|pqc <label> <prop> <rel>        one entry file; base + delta chain
   *
+  * An ANN index's matrix rows, entry columns, sort and dedup keys and the
+  * rule a probe reads its entry files by are `AnnIndex`'s, one case per
+  * tag pair.
+  *
   * `file` stats are per-file min/max for data skipping (the analog of the
   * reference's GIN property index, gtype_gin.c:62-554): `ty` is l
   * (integral), d (double), s (string, code-point order), t (timestamp,

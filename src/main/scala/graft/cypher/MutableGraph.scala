@@ -3,7 +3,6 @@ package graft.cypher
 import graft.Local
 import graft.graph.PropertyGraph
 import graft.gvalue._
-import Commit.{IvfIdx, PqIdx}
 import MutableGraph.{LabelState, Touched, folded, has, union}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -88,13 +87,14 @@ final class MutableGraph(spark: SparkSession) {
   /** The state after a write that cannot stay held: its table `next` is
     * the new base, `added` bytes larger. An append that unions `parts`
     * leaves onto the table and re-encodes no row adds them to the base's
-    * parts; any other write marks the label for a re-base.
+    * parts; any other write marks the label for a re-base, and a mark an
+    * earlier write of the statement set stays.
     */
   private def written(st: LabelState, next: DataFrame, ids: DataFrame, added: BigInt = 0,
       whole: Boolean = false, parts: Int = 0): LabelState =
     LabelState(next, Array.empty, Array.empty, next.schema, st.bytes + added,
       st.touched ++ Touched(Array.empty, List(ids.select(col("id"))), whole),
-      rebase = parts == 0 || whole, st.parts + parts)
+      rebase = st.rebase || parts == 0 || whole, st.parts + parts)
 
   /** Whether a held state of `n` dead ids and row-versions stays held: the
     * bound of a merge-on-read statement and of `Local`'s cap.
@@ -133,7 +133,7 @@ final class MutableGraph(spark: SparkSession) {
           new java.util.ArrayList[Row](),
           StructType(Seq(StructField("id", LongType)))))
       else vertexLabels.map { case (l, st) => l -> st.df },
-      edgeLabels.map { case (l, st) => l -> st.df }, labelIds.toMap, ivfProbeFn, statsPrunedScan)
+      edgeLabels.map { case (l, st) => l -> st.df }, labelIds.toMap, annProbe, statsPrunedScan)
 
   // Manifest-stats data skipping (the GIN property-index analog,
   // gtype_gin.c:62-554, as Delta-style per-file typed min/max): the
@@ -177,191 +177,87 @@ final class MutableGraph(spark: SparkSession) {
     }
   }
 
-  // ---------------------------------------------- IVFFlat analog indexes
-  // (reference: create_ivfflat_{l2,ip}_ops_index, postgraph.sql.in:151-158
-  // + the ivfflat access method, src/backend/access/ivfutils.c). Centroids
-  // are fixed at build time like IVFFlat's lists (kmeans over a bounded
-  // driver sample); row→list assignments derive lazily from the CURRENT
-  // label table, identity-cached, so the index never goes stale across
-  // writes and needs no per-write hook. Probe-side cost at any corpus
-  // size: |label| · probes/lists scan instead of a full scan.
-  private val ivfIndexes =
-    mutable.LinkedHashMap.empty[(String, String), IvfIdx]
-  private var ivfAssignCache = Map.empty[(String, String), (DataFrame, DataFrame)]
-  /** Clusters probed per ANN query (reference GUC ivfflat.probes; default 1). */
+  // ---------------------------------------------------- ANN indexes
+  // ([[AnnIndex]]). A trained matrix is fixed at build, like IVFFlat's
+  // lists; entries derive lazily from the CURRENT label table and are
+  // cached by its identity, so an index never goes stale across writes and
+  // needs no per-write hook.
+  private val annIndexes = mutable.LinkedHashMap.empty[AnnIndex.Key, AnnIndex]
+  /** Each index's entries with the label table they reflect. */
+  private var annEntries = Map.empty[AnnIndex.Key, (DataFrame, DataFrame)]
+  /** Clusters probed per IVF query (reference GUC ivfflat.probes; default 1). */
   @volatile var ivfProbes: Int = 1
-
-  // PQ/ADC index (r12): codebooks are the persisted structure (like IVF's
-  // centroids); per-row codes derive lazily from the CURRENT label table
-  // and are identity-cached, so the index never goes stale across writes.
-  private val pqIndexes =
-    mutable.LinkedHashMap.empty[(String, String), PqIdx]
-  private var pqCodesCache = Map.empty[(String, String), (DataFrame, DataFrame)]
-  /** ADC shortlist size reranked exactly by the query's ORDER BY. */
+  /** PQ's ADC shortlist size, reranked exactly by the query's ORDER BY. */
   @volatile var pqShortlist: Int = 192
 
-  def createIvfIndex(label: String, prop0: String, dims: Int, lists: Int,
-      metric: String): Unit =
-    buildIndex(label, prop0, dims, "ivfflat") { (prop, emb) =>
-      require(lists >= 1 && lists <= 32768, "lists must be in 1..32768") // ivfflat.h:53
-      val key = (label, prop)
-      ivfIndexes(key) = IvfIdx(label, prop, metric, dims, lists,
-        graft.functions.Ivf.kmeansSampled(emb, "id", prop, k = lists, iters = 5))
-      ivfAssignCache -= key
-      held = held.ivfRebuilt(key)
-      () => ivfAssignments(ivfIndexes(key))
-    }
+  def createIvfIndex(label: String, prop: String, dims: Int, lists: Int, metric: String): Unit =
+    createIndex(label, prop, dims, "ivfflat")(AnnIndex.IvfFlat.train(label, _, metric, dims, lists, _))
 
-  def createPqIndex(label: String, prop0: String, dims: Int, m: Int,
-      k: Int, metric: String): Unit =
-    buildIndex(label, prop0, dims, "pq") { (prop, emb) =>
-      require(m >= 1 && m <= 64 && dims % m == 0,
-        s"m must divide dims ($dims % $m != 0) and be in 1..64")
-      require(k >= 2 && k <= 256, "k (centroids per subspace) must be in 2..256")
-      val key = (label, prop)
-      pqIndexes(key) = PqIdx(label, prop, metric, dims, m, k,
-        graft.functions.Ivf.pqCodebooksSampled(emb, "id", prop, dims, m, k))
-      pqCodesCache -= key
-      held = held.pqRebuilt(key)
-      () => pqCodes(pqIndexes(key))
-    }
+  def createPqIndex(label: String, prop: String, dims: Int, m: Int, k: Int, metric: String): Unit =
+    createIndex(label, prop, dims, "pq")(AnnIndex.Pq.train(label, _, metric, dims, m, k, _))
 
   /** Train an ANN index of `label`.`prop0` (`train` gets the escaped
-    * property and the label's embeddings, and returns its entry builder).
-    * Index DDL is durable like the reference's on-disk build: it publishes
-    * at once, and since CREATE INDEX writes the list pages, not just the
-    * trained structure (ivfbuild.c), the entries are built first so the
-    * publish persists them and a reopened store probes them.
+    * property and the label's embeddings). Index DDL is durable like the
+    * reference's on-disk build: it publishes at once, and since CREATE
+    * INDEX writes the list pages, not just the trained structure
+    * (ivfbuild.c), the entries are built first so the publish persists
+    * them and a reopened store probes them.
     */
-  private def buildIndex(label: String, prop0: String, dims: Int, am: String)(
-      train: (String, DataFrame) => (() => DataFrame)): Unit = {
+  private def createIndex(label: String, prop0: String, dims: Int, am: String)(
+      train: (String, DataFrame) => AnnIndex): Unit = {
     val prop = Compiler.PropNames.esc(prop0)
     val tbl = vertexLabels.getOrElse(label,
       throw new IllegalArgumentException(s"unknown vertex label $label")).df
     require(tbl.columns.contains(prop), s"label $label has no property $prop0")
     require(dims >= 1 && dims <= 2000, s"$am supports 1..2000 dimensions") // ivfflat.h:33
-    val entries = train(prop, Commit.embeddings(tbl, prop, dims))
+    val ix = train(prop, AnnIndex.embeddings(tbl, prop, dims))
+    annIndexes(ix.key) = ix
+    annEntries -= ix.key
+    held = held.rebuilt(ix)
     if (storeRoot.isDefined) {
-      entries()
+      entries(ix)
       publish(vertexLabels, edgeLabels)
     }
   }
 
-  /** The stored entry files of an index, each with its version, while
-    * they reflect `tbl` and all still exist: a 2+-versions-stale reader
-    * may race a concurrent writer's gc, and then derives instead of
-    * failing mid-query.
+  /** The entries of `ix` for its label's current table: cached, else
+    * read from its stored files while they reflect the table and all
+    * still exist (a 2+-versions-stale reader may race a concurrent
+    * writer's gc, and then derives instead of failing mid-query), else
+    * derived. Derived entries, and stored ones the index caches, are
+    * checkpointed and cached for the table.
     */
-  private def storedEntries(stored: Option[(List[String], DataFrame)],
-      tbl: DataFrame): Option[List[(DataFrame, Long)]] =
-    for {
-      root <- storeRoot
-      (rels, src) <- stored
-      if (src eq tbl) && rels.forall(r => java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/$r")))
-    } yield rels.map(r => (spark.read.parquet(s"$root/$r"), GraphStore.versionOf(r)))
-
-  private def pqCodes(ix: PqIdx): DataFrame = {
+  private def entries(ix: AnnIndex): DataFrame = {
     val tbl = vertexLabels(ix.label).df
-    val key = (ix.label, ix.prop)
-    pqCodesCache.get(key) match {
-      case Some((src, c)) if src eq tbl => c
-      case _ =>
-        // r13: prefer the STORED codes (pqc parquet chain) over re-encoding
-        // the corpus — one compact scan of (id, sub, code) instead of a
-        // full vector read + encode chain after reopen. Unlike the IVF
-        // candidate union, codes must dedup LAST-WINS per (id, sub): a
-        // stale code row from an older file would double-count in the ADC
-        // distance sum. Each file is tagged with its version at read (from
-        // the rel path the catalog carries — never parsed out of the
-        // absolute file path).
-        val stored = storedEntries(held.pqcAt.get(key), tbl).map { files =>
-          files.map { case (f, ver) => f.withColumn("__ver", lit(ver)) }
-            .reduce(_ unionByName _)
-            .groupBy(col("id"), col("sub"))
-            .agg(max_by(col("code"), struct(col("__ver"), col("code"))).as("code"))
-            // deltas only ADD touched-row entries, so codes of deleted
-            // vertices survive the last-wins dedup until compaction and
-            // would eat ADC shortlist slots; an id-only semi-join
-            // against the live label keeps the shortlist's k real
-            .join(tbl.select(col("id")), Seq("id"), "left_semi")
-        }
-        val c = stored.getOrElse(graft.functions.Ivf.pqEncode(
-          Commit.embeddings(tbl, ix.prop, ix.dims), "id", ix.prop, ix.codebooks))
-          .localCheckpoint()
-        pqCodesCache += (key -> (tbl, c))
-        c
+    annEntries.get(ix.key).collect { case (src, e) if src eq tbl => e }.getOrElse {
+      val stored = for {
+        root <- storeRoot
+        (rels, src) <- held.stored.get(ix.entriesKey)
+        if (src eq tbl) && rels.forall(r => java.nio.file.Files.exists(
+          java.nio.file.Paths.get(s"$root/$r")))
+      } yield ix.readStored(rels.map(r => (spark.read.parquet(s"$root/$r"), GraphStore.versionOf(r))), tbl)
+      stored match {
+        case Some(e) if !ix.cachesStored => e
+        case _ =>
+          val e = stored.getOrElse(ix.derive(AnnIndex.embeddings(tbl, ix.prop, ix.dims))).localCheckpoint()
+          annEntries += (ix.key -> (tbl, e))
+          e
+      }
     }
   }
 
-  private def ivfAssignments(ix: IvfIdx): DataFrame = {
-    val tbl = vertexLabels(ix.label).df
-    ivfAssignCache.get((ix.label, ix.prop)) match {
-      case Some((src, a)) if src eq tbl => a
-      case _ =>
-        val a = graft.functions.Ivf.assignments(
-          Commit.embeddings(tbl, ix.prop, ix.dims), "id", ix.prop, ix.centroids)
-          .localCheckpoint()
-        ivfAssignCache += ((ix.label, ix.prop) -> (tbl, a))
-        a
+  /** Probe: the single IVF index covering (prop, metric, dims), else the
+    * single PQ one → (its label id, candidate ids). Ambiguous coverage
+    * (two labels indexing the same property name) passes to the next kind,
+    * and then disables the rewrite rather than guessing.
+    */
+  private def annProbe(propEsc: String, metric: String,
+      vec: Seq[Double]): Option[(Int, DataFrame)] = {
+    val covering = annIndexes.values.filter(ix =>
+      ix.prop == propEsc && ix.metric == metric && ix.dims == vec.length).toSeq
+    AnnIndex.Tags.map(t => covering.filter(_.tag == t)).collectFirst { case Seq(ix) =>
+      (labelIds(ix.label), ix.candidates(entries(ix), vec, ivfProbes, pqShortlist))
     }
-  }
-
-  /** Probe: the single index covering (prop, metric, dims) → candidate-id
-    * relation of the `ivfProbes` nearest lists. Ambiguous coverage (two
-    * labels indexing the same property name) disables the rewrite rather
-    * than guessing.
-    */
-  private def ivfProbeFn(propEsc: String, metric: String,
-      vec: Seq[Double]): Option[(Int, DataFrame)] = {
-    val hits = ivfIndexes.values.filter(ix =>
-      ix.prop == propEsc && ix.metric == metric && ix.dims == vec.length).toSeq
-    if (hits.size != 1) return pqProbeFn(propEsc, metric, vec)
-    val ix = hits.head
-    val q = vec.toArray
-    val probed = graft.functions.Ivf.lowest(
-      ix.centroids.map(graft.functions.Ivf.score(metric, _, q)), math.max(1, ivfProbes))
-    Some((labelIds(ix.label), ivfCandidateIds(ix, probed)))
-  }
-
-  /** Candidate ids of the probed clusters — in priority order: the
-    * in-memory assignment cache, the STORED index entries (r13: a
-    * cluster-pruned scan of the `ivfa/` parquet, sorted by cluster at
-    * write so row-group stats skip unprobed lists — the ivfscan.c analog
-    * of reading only the probed list pages), and only then a lazy
-    * full-label derive.
-    */
-  private def ivfCandidateIds(ix: IvfIdx, probed: Seq[Int]): DataFrame = {
-    val key = (ix.label, ix.prop)
-    val tbl = vertexLabels(ix.label).df
-    val cached = ivfAssignCache.get(key).collect {
-      case (src, a) if src eq tbl => a }
-    cached.map(_.filter(col("cluster").isin(probed: _*)).select(col("id")))
-      .orElse(storedEntries(held.ivfaAt.get(key), tbl).map(files =>
-        // union of base + delta entry files, read RAW: stale rows are a
-        // recall-safe superset (a moved id's new entry is in a delta;
-        // stale/deleted entries only add candidates that the exact
-        // rerank's label join drops)
-        files.map(_._1).reduce(_ unionByName _)
-          .filter(col("cluster").isin(probed: _*)).select(col("id")).distinct()))
-      .getOrElse(ivfAssignments(ix)
-        .filter(col("cluster").isin(probed: _*)).select(col("id")))
-  }
-
-  /** PQ fallback probe — same contract: candidate shortlist by asymmetric
-    * distance over the stored codes; the caller's ORDER BY reranks with
-    * exact distances. Ambiguity disables the rewrite, like IVF.
-    */
-  private def pqProbeFn(propEsc: String, metric: String,
-      vec: Seq[Double]): Option[(Int, DataFrame)] = {
-    val hits = pqIndexes.values.filter(ix =>
-      ix.prop == propEsc && ix.metric == metric && ix.dims == vec.length).toSeq
-    if (hits.size != 1) return None
-    val ix = hits.head
-    val cand = graft.functions.Ivf.pqAdcCandidates(
-      pqCodes(ix), "id", ix.codebooks, vec, metric,
-      math.max(1, pqShortlist))
-    Some((labelIds(ix.label), cand))
   }
 
   private def labelId(l: String): Int =
@@ -761,27 +657,6 @@ final class MutableGraph(spark: SparkSession) {
     id
   }
 
-  /** Append edges from (start_id, end_id, ROW-VALUED property columns) —
-    * the general path for per-row CREATE/MERGE edge properties that are
-    * expressions over the input row (reference cypher_create.sql:72).
-    * Ids come from [[RowNumber]]'s partition-local numbering over the
-    * FROZEN input, so an edge's id/property pairing is fixed at create
-    * time (a global-order window both single-partitioned the input and,
-    * with property-tied orderings, could re-pair ids across actions).
-    */
-  def createEdgesRows(label: String, rows: DataFrame): Unit = {
-    val lid = labelId(label)
-    val base = nextEntry.getOrElse(label, 0L)
-    val propNames = rows.columns.filterNot(Set("start_id", "end_id")).toSeq.sorted
-    val (numbered, n) = RowNumber.attach(rows, "__ern")
-    val df = numbered
-      .withColumn("id", shiftleft(lit(lid.toLong), 48)
-        .bitwiseOR(col("__ern") + base))
-      .select(Seq(col("id"), col("start_id"), col("end_id")) ++ propNames.map(col): _*)
-    nextEntry(label) = base + n
-    appendRows("e", label, df)
-  }
-
   /** One-row DF for a just-created vertex, columns prefixed `alias__`. */
   def vertexRowDf(alias: String, label: String, id: Long): DataFrame = {
     val src = vertexLabels(label).df.filter(col("id") === id)
@@ -838,11 +713,15 @@ final class MutableGraph(spark: SparkSession) {
     edgeLabels = apply("e")
   }
 
-  /** Whether SET of `updates` keeps column k's type in a table of `schema`. */
+  /** Whether SET of `updates` keeps column k's type in a table of `schema`;
+    * nullability marks alone (a list literal's `containsNull`) do not
+    * change it, as in [[conflicts]].
+    */
   private def keepsType(schema: StructType, k: String, updates: DataFrame): Boolean =
     !schema.fieldNames.contains(k) || {
       val (oldDt, newDt) = (schema(k).dataType, updates.schema("__set_val").dataType)
-      oldDt == newDt || oldDt == NullType || newDt == NullType
+      MutableGraph.relaxNullability(oldDt) == MutableGraph.relaxNullability(newDt) ||
+        oldDt == NullType || newDt == NullType
     }
 
   /** `df` with column k set from `updates` where its id has one. A
@@ -1014,7 +893,7 @@ final class MutableGraph(spark: SparkSession) {
         uniqueConstraints.toList, wholePropsUnique.toList, streamBatches.toList,
         Nil, Nil, Nil),
       vertexLabels, edgeLabels, prevV, prevE, compact,
-      ivfIndexes.values.toList, pqIndexes.values.toList, ivfAssignCache, pqCodesCache))
+      annIndexes.values.toList, annEntries))
     held = now
     entryChainMerges.addAndGet(chainMerges)
   }
@@ -1131,8 +1010,7 @@ object MutableGraph {
     g.streamBatches ++= c.streams
     g.vertexLabels = o.vertexLabels
     g.edgeLabels = o.edgeLabels
-    o.ivf.foreach(ix => g.ivfIndexes((ix.label, ix.prop)) = ix)
-    o.pq.foreach(ix => g.pqIndexes((ix.label, ix.prop)) = ix)
+    o.indexes.foreach(ix => g.annIndexes(ix.key) = ix)
     g.held = o.held
     g.storeRoot = Some(root)
     g

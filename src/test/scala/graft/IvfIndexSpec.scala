@@ -408,6 +408,77 @@ class IvfIndexSpec extends AnyFunSuite {
     graft.cypher.GraphStore.deleteTree(Paths.get(root))
   }
 
+  test("a SET of a list literal keeps the typed embedding column: id-local commit, probe answers") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_ivf_setlist").toString
+    val s = new graft.cypher.GraphSession(spark)
+    s.createGraph("ivfl", root)
+    (0 until 40).foreach { i =>
+      val (bx, by) = if (i % 2 == 0) (0.0, 0.0) else (100.0, 100.0)
+      s.run(s"CREATE (:Doc {k: $i, embedding: [${bx + (i / 2) * 0.5}, ${by + (i % 5) * 0.5}]})")
+    }
+    s.run("SELECT create_ivfflat_l2_ops_index('ivfl', 'Doc', 'embedding', 2, 2)")
+    // the literal's array<double> says its elements are never null, the
+    // column's may be: the same type, so no whole rewrite through the
+    // dynamic codec, whose struct the probe could not read as a vector
+    s.run("MATCH (d:Doc {k: 3}) SET d.embedding = [50.0, 50.0]")
+    val v = graft.cypher.GraphStore.latestVersion(root).get
+    val cat = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines().toList
+    assert(!cat.exists(_.startsWith("vlabel Doc ")), cat.mkString("; "))
+    val top = s.run("MATCH (d:Doc) RETURN d.k AS k ORDER BY d.embedding <-> [0.0, 0.0] LIMIT 1")
+      .collect().map(_.getLong(0)).toSeq
+    assert(top == Seq(0L), top.toString)
+    graft.cypher.GraphStore.deleteTree(Paths.get(root))
+  }
+
+  // every version's ANN catalog lines of one fixed script, as the store
+  // writes them: a build's matrix line is carried by its version, each
+  // id-local write appends one entry file to each chain, the 16th merges
+  // each chain into one file, and COMPACT GRAPH carries the entries
+  test("ANN catalog lines: builds, 16 point writes, a chain merge, a CREATE, COMPACT, reopen") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_ann_lines").toString
+    val s = new graft.cypher.GraphSession(spark)
+    s.createGraph("annl", root)
+    def expect(step: String, v: Long, lines: Seq[String]): Unit = {
+      assert(graft.cypher.GraphStore.latestVersion(root).contains(v), step)
+      val got = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines().toList
+        .filter(l => Seq("ivf ", "pq ", "ivfa ", "pqc ").exists(l.startsWith))
+      assert(got == lines, step)
+    }
+    def chain(tag: String, vers: Seq[Int]): Seq[String] =
+      vers.map(v => s"$tag Doc embedding v$v%2F$tag%2FDoc__embedding")
+    (0 until 40).foreach { i =>
+      val (bx, by) = if (i % 2 == 0) (0.0, 0.0) else (100.0, 100.0)
+      s.run(s"CREATE (:Doc {k: $i, embedding: [${bx + (i / 2) * 0.5}, ${by + (i % 5) * 0.5}]})")
+      expect(s"create $i", i + 2, Nil)
+    }
+    val (ivf, pq) = ("ivf Doc embedding l2 2 2 42", "pq Doc embedding l2 2 2 4 43")
+    s.run("SELECT create_ivfflat_l2_ops_index('annl', 'Doc', 'embedding', 2, 2)")
+    expect("ivf", 42, ivf +: chain("ivfa", Seq(42)))
+    s.run("SELECT create_pq_l2_ops_index('annl', 'Doc', 'embedding', 2, 2, 4)")
+    expect("pq", 43, Seq(ivf, pq) ++ chain("ivfa", Seq(42)) ++ chain("pqc", Seq(43)))
+    (0 to 14).foreach { i =>
+      s.run(s"MATCH (d:Doc {k: $i}) SET d.t = 'x$i'")
+      expect(s"set $i", 44 + i, Seq(ivf, pq) ++ chain("ivfa", 42 +: (44 to 44 + i)) ++
+        chain("pqc", 43 +: (44 to 44 + i)))
+    }
+    s.run("MATCH (d:Doc {k: 15}) SET d.t = 'x15'")
+    expect("set 15", 59, Seq(ivf, pq) ++ chain("ivfa", Seq(59)) ++ chain("pqc", Seq(59)))
+    val last = Seq(ivf, pq) ++ chain("ivfa", Seq(59, 60)) ++ chain("pqc", Seq(59, 60))
+    s.run("CREATE (:Doc {k: 999, embedding: [0.1, 0.1]})")
+    expect("create 999", 60, last)
+    s.run("COMPACT GRAPH annl")
+    expect("compact", 61, last)
+    val r = new graft.cypher.GraphSession(spark)
+    r.openGraph("annl", root)
+    val top = r.run("MATCH (d:Doc) RETURN d.k AS k ORDER BY d.embedding <-> [0.1, 0.1] LIMIT 3")
+      .collect().map(_.getLong(0)).toSeq
+    assert(top == Seq(999L, 0L, 2L), top.toString)
+    expect("reopen and probe", 61, last)
+    graft.cypher.GraphStore.deleteTree(Paths.get(root))
+  }
+
   test("non-matching shapes never rewrite (other props, DESC, no limit)") {
     val s = mkSession()
     s.run("SELECT create_ivfflat_l2_ops_index('ivfg', 'Doc', 'embedding', 2, 2)")
