@@ -94,6 +94,10 @@ private[cypher] object Commit {
     * triggered by write). A tombstone is needed only for an id an older
     * file may hold, proven by the per-file id stats alone, never by the
     * sequence position: streaming-ingested labels pack ids from user keys.
+    * So a touched id no file holds, a new key of an append or a held
+    * upsert (whose dead ids are never checked against base), counts toward
+    * `DvMaxTombstones` only while some file's id range covers it, and its
+    * position read then finds no live copy.
     */
   def idLocalPlan(prev: FileTable, touched: => Array[Long]): Plan = {
     if (prev.files.size + prev.dvps.size >= 64) return Full

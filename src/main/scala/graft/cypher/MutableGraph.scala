@@ -52,15 +52,16 @@ final class MutableGraph(spark: SparkSession) {
   private[cypher] var vertexLabels = Map.empty[String, LabelState]
   private[cypher] var edgeLabels = Map.empty[String, LabelState]
 
-  // ---- A CREATE, SET, REMOVE or DELETE of driver-held ids changes only
-  // its label state's `dead` and `rows`. Any other write makes its join or
-  // union the new base (the `local.maxRows=0` reference path): an append
-  // stays a lazy union of at most MaxParts parts, any other is marked for
-  // a re-base at the statement's end ([[flattened]]). Each write records in
-  // the state what it touched, so publish rewrites only the parquet FILES
-  // holding touched ids (a write that recorded nothing would lose rows
-  // under CoW, so the primitives record it themselves); the first write of
-  // a statement starts from nothing recorded.
+  // ---- A CREATE, SET, REMOVE, DELETE or ingest upsert of driver-held
+  // ids changes only its label state's `dead` and `rows`. Any other write
+  // makes its join or union the new base (the `local.maxRows=0` reference
+  // path): an append stays a lazy union of at most MaxParts parts, any
+  // other is marked for a re-base at the statement's end ([[flattened]]).
+  // Each write records in the state what it touched, so publish rewrites
+  // only the parquet FILES holding touched ids (a write that recorded
+  // nothing would lose rows under CoW, so the primitives record it
+  // themselves); the first write of a statement starts from nothing
+  // recorded.
 
   /** Statement-level transactionality: the reference runs each statement
     * in a PG transaction, so an ERROR mid-statement (e.g. CREATE through a
@@ -94,7 +95,7 @@ final class MutableGraph(spark: SparkSession) {
       whole: Boolean = false, parts: Int = 0): LabelState =
     LabelState(next, Array.empty, Array.empty, next.schema, st.bytes + added,
       st.touched ++ Touched(Array.empty, List(ids.select(col("id"))), whole),
-      rebase = st.rebase || parts == 0 || whole, st.parts + parts)
+      rebase = st.rebase || parts == 0 || whole, st.parts + parts, materialized = false)
 
   /** Whether a held state of `n` dead ids and row-versions stays held: the
     * bound of a merge-on-read statement and of `Local`'s cap.
@@ -385,8 +386,8 @@ final class MutableGraph(spark: SparkSession) {
   }
 
   /** Commit one streaming micro-batch of vertices as ONE store version.
-    * Ids pack from `keyCol` like GraphBuilder labels (key-addressed — do
-    * not mix with sequence-id CREATE on the same label).
+    * Ids pack from `keyCol` like GraphBuilder labels (key-addressed); a
+    * later CREATE into the label numbers past the largest ingested key.
     */
   private[cypher] def ingestVertexBatch(label: String, keyCol: String,
       batch: DataFrame, appId: String, batchId: Long): Unit =
@@ -397,17 +398,42 @@ final class MutableGraph(spark: SparkSession) {
   /** A micro-batch frozen for an append: held on the driver while it fits
     * `Local`'s write bound, so into an existing label its rows join the
     * held rows (no re-base per batch); a new label's base is its checkpoint.
+    * The label's entry sequence passes the batch's keys ([[advanceEntries]]).
     */
-  private def frozenBatch(kind: String, label: String, df: DataFrame): DataFrame =
-    if (labels(kind).contains(label)) Local.freeze(df) else df.localCheckpoint()
+  private def frozenBatch(kind: String, label: String, df: DataFrame): DataFrame = {
+    val (frozen, rows) =
+      if (labels(kind).contains(label)) Local.freezeHeld(df) else (df.localCheckpoint(), None)
+    advanceEntries(label, frozen, rows)
+    frozen
+  }
 
   /** A vertex batch with ids packed from `keyCol`, as GraphBuilder packs. */
   private def keyedBatch(label: String, keyCol: String, batch: DataFrame): DataFrame =
     batch.select(packedId(label, keyCol).as("id") +:
       batch.columns.filterNot(_ == "id").sorted.map(col): _*)
 
+  /** The id packed from `keyCol` into `label`; a null key fails the batch,
+    * naming both, where the projection runs.
+    */
   private def packedId(label: String, keyCol: String): Column =
-    shiftleft(lit(labelId(label).toLong), 48).bitwiseOR(col(keyCol).cast("long"))
+    when(col(keyCol).isNull, raise_error(lit(s"ingest key $keyCol of label $label is null")))
+      .otherwise(shiftleft(lit(labelId(label).toLong), 48).bitwiseOR(col(keyCol).cast("long")))
+
+  /** Raise `label`'s entry sequence to at least the largest entry of its
+    * packed ids in ingested frame `df`, read from its driver `rows` when
+    * held, else by one fold over the checkpointed frame (one job, no
+    * shuffle): a later CREATE into the label then numbers past every
+    * ingested key.
+    */
+  private def advanceEntries(label: String, df: DataFrame, rows: Option[Array[Row]]): Unit = {
+    val (lid, i) = (labelId(label).toLong, df.schema.fieldIndex("id"))
+    val entry = (id: Long) => if (id >>> 48 == lid) id & ((1L << 48) - 1) else 0L
+    val top = rows match {
+      case Some(rs) => rs.iterator.map(r => entry(r.getLong(i))).maxOption.getOrElse(0L)
+      case None => df.queryExecution.toRdd.map(r => entry(r.getLong(i))).fold(0L)(math.max)
+    }
+    if (top > nextEntry.getOrElse(label, 0L)) nextEntry(label) = top
+  }
 
   /** Upsert twin of [[ingestVertexBatch]] (r12 streaming CDC): a batch
     * row whose key already exists REPLACES the stored row — the publish
@@ -415,19 +441,49 @@ final class MutableGraph(spark: SparkSession) {
     * machinery, so a point update costs the new row + 8 B, never a file
     * rewrite — and new keys append. Same exactly-once (appId, batchId)
     * contract. Duplicate keys within one batch collapse to one arbitrary
-    * row (pre-aggregate upstream for a deterministic pick).
+    * row (pre-aggregate upstream for a deterministic pick). A batch held
+    * on the driver upserts into an existing label's held state
+    * ([[upsertHeld]]); otherwise the label without the batch's ids, plus
+    * the batch, is the new base.
     */
   private[cypher] def ingestVertexUpsertBatch(label: String, keyCol: String,
       batch: DataFrame, appId: String, batchId: Long): Unit =
     ingestBatch(appId, batchId) {
-      val df = keyedBatch(label, keyCol, batch).dropDuplicates("id").localCheckpoint()
-      vertexLabels.get(label).map(continued("v", label, _)) match {
+      val keyed = keyedBatch(label, keyCol, batch)
+      val idIx = keyed.schema.fieldIndex("id")
+      val existing = vertexLabels.get(label).map(continued("v", label, _))
+      val rows = existing.flatMap(_ => Local.collect(keyed, Local.WriteBytes))
+        .map(_.distinctBy(_.getLong(idIx)))
+      val df = rows.fold(keyed.dropDuplicates("id").localCheckpoint())(
+        Local.relation(spark, _, keyed.schema))
+      advanceEntries(label, df, rows)
+      existing match {
         case None => appendRows("v", label, df)
         case Some(st) =>
-          val kept = st.df.join(df.select(col("id")), Seq("id"), "left_anti")
-          put("v", label, written(st, aligned(kept, df), df, Local.bytesOf(df), reencodes(st.schema, df)))
+          val held = rows.flatMap(r => upsertHeld(st, df, r.map(_.getLong(idIx)).sorted))
+          put("v", label, held.getOrElse {
+            val kept = st.df.join(df.select(col("id")), Seq("id"), "left_anti")
+            written(st, aligned(kept, df), df, Local.bytesOf(df), reencodes(st.schema, df))
+          })
       }
     }
+
+  /** Held upsert of state `st` by the driver-held `batch` of sorted
+    * distinct `ids`: they join dead, and the batch rows replace theirs in
+    * the held rows. No existence check is needed: a dead id with no copy
+    * in base suppresses nothing, and the commit finds no live position for
+    * it. A base that no open or re-base materialized (a new label's first
+    * batch, an appended union) is marked for a re-base, once, so a small
+    * label's later reads run on the driver. None when the batch re-encodes
+    * the label, would pass the held bound, or does not fold on the driver.
+    */
+  private def upsertHeld(st: LabelState, batch: DataFrame, ids: Array[Long]): Option[LabelState] = {
+    if (reencodes(st.schema, batch) || !holdable(st.size + 2 * ids.length)) return None
+    val merged = aligned(st.rowsDf.filter(!MutableGraph.idIn(ids)), batch)
+    folded(merged).map(rows => st.copy(dead = union(st.dead, ids), rows = rows,
+      schema = merged.schema, touched = st.touched ++ Touched.of(ids),
+      rebase = st.rebase || !st.materialized))
+  }
 
   /** Commit one streaming micro-batch of edges as ONE store version —
     * endpoint ids pack from the src/dst key columns against their vertex
@@ -454,7 +510,7 @@ final class MutableGraph(spark: SparkSession) {
     */
   private def appendRows(kind: String, label: String, df: DataFrame): Unit =
     put(kind, label, labels(kind).get(label).map(continued(kind, label, _)) match {
-      case None => LabelState.of(df, Local.bytesOf(df), Touched.Whole)
+      case None => LabelState.of(df, Local.bytesOf(df), Touched.Whole, materialized = false)
       case Some(st) =>
         val whole = reencodes(st.schema, df)
         Some(aligned(st.rowsDf, df)).filterNot(_ => whole).flatMap { merged =>
@@ -1052,18 +1108,24 @@ object MutableGraph {
     * deletion vectors in memory: `base` its table as of its open or last
     * re-base ([[Local.materialize]]: driver rows when small, else a
     * checkpoint) or a write that could not stay held (then `rebase`),
-    * `dead` the sorted ids whose copy in base is suppressed, and `rows` the
-    * driver-held current row-versions of those ids and of new ids, in the
-    * label's column order (`schema`: base's, then the columns writes
-    * added). An id of `rows` with a copy in base is in `dead`, but for a
-    * key an append stream sends again: both copies stay, as in the store.
+    * `dead` the sorted ids whose copy in base, if any, is suppressed, and
+    * `rows` the driver-held current row-versions of those ids and of new
+    * ids, in the label's column order (`schema`: base's, then the columns
+    * writes added). A held upsert adds every id of its batch to `dead`
+    * without looking in base, so `dead` may hold ids base never had; they
+    * suppress nothing. An id of `rows` with a copy in base is in `dead`,
+    * but for a key an append stream sends again: both copies stay, as in
+    * the store.
     * `baseBytes` is base's size estimate: the gate of its open or re-base
     * plus what later appends added. `parts` counts the leaves appends
     * unioned onto base since then ([[MutableGraph.MaxParts]]).
+    * `materialized` tells whether base is a table of its open or a re-base,
+    * held on the driver within the held bounds and checkpointed past them;
+    * a new label's first frame or an appended union is not.
     */
   final case class LabelState(base: DataFrame, dead: Array[Long], rows: Array[Row],
       schema: StructType, baseBytes: BigInt, touched: Touched, rebase: Boolean,
-      parts: Int = 0) {
+      parts: Int = 0, materialized: Boolean = true) {
     lazy val rowsDf: DataFrame = Local.relation(base.sparkSession, rows.toSeq, schema)
 
     /** The label's table, one object per state (manifests, ANN caches and
@@ -1096,7 +1158,9 @@ object MutableGraph {
   }
   object LabelState {
     /** A state of base `df` alone, of size estimate `bytes`. */
-    def of(df: DataFrame, bytes: BigInt, touched: Touched = Touched.empty): LabelState =
-      LabelState(df, Array.empty, Array.empty, df.schema, bytes, touched, rebase = false)
+    def of(df: DataFrame, bytes: BigInt, touched: Touched = Touched.empty,
+        materialized: Boolean = true): LabelState =
+      LabelState(df, Array.empty, Array.empty, df.schema, bytes, touched, rebase = false,
+        materialized = materialized)
   }
 }

@@ -45,8 +45,8 @@ object Streams {
     * idempotent sink: the store catalog records (appId, batchId) and a
     * replayed batch after restart is skipped (the Delta streaming-sink
     * txn pattern). Ids pack from `keyCol` (key-addressed, like
-    * GraphBuilder labels — don't mix with sequence-id CREATE on the same
-    * label).
+    * GraphBuilder labels); a later CREATE into the label numbers past the
+    * largest ingested key, and a null key fails the batch.
     */
   def graphStoreIngest(
       docs: DataFrame, // streaming DF

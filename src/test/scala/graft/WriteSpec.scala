@@ -2265,4 +2265,184 @@ class WriteSpec extends AnyFunSuite {
     assert(held.last.count(_.startsWith("e:R ")) == 3, held.last.mkString("\n"))
     assert(held.last.count(_.startsWith("e:S ")) == 2, held.last.mkString("\n"))
   }
+
+  /** Every label's rows of `s`'s graph, one line each, sorted per label. */
+  private def labelRows(s: GraphSession): Seq[String] = {
+    val g = s.graph.snapshot
+    (g.vertexLabels ++ g.edgeLabels.map { case (l, df) => s"e:$l" -> df }).toSeq.sortBy(_._1)
+      .flatMap { case (l, df) => df.collect().map(r => s"$l $r").sorted }
+  }
+
+  // A CDC upsert batch held on the driver replaces its keys' rows in the
+  // label's held state (the keys join dead, the batch rows the held rows);
+  // under local.maxRows=0 the label without the batch's keys, plus the
+  // batch, becomes the new base. Both give the same tables after every
+  // batch and after a reopen, for a key in base, a key an earlier upsert
+  // holds, a key appended twice, a key twice in one batch, new keys, and a
+  // batch whose type conflicts with the label's (re-based in both runs).
+  test("GraphStore: held upserts == distributed upserts, batch by batch and after a reopen") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    def script(): (Seq[Seq[String]], Seq[String], Seq[Seq[String]]) = {
+      val root = Files.createTempDirectory("graft_store_upserts").toString
+      val s = new GraphSession(spark)
+      s.createGraph("upserts", root)
+      val out = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+      val cats = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+      def step(f: => Unit): Unit = {
+        f
+        out += labelRows(s)
+        val v = graft.cypher.GraphStore.latestVersion(root).get
+        cats += scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines()
+          .filter(l => l.startsWith("vlabel C ") || l.startsWith("dvp v C ")).map(_.split(" ").take(3).mkString(" ")).toSeq
+      }
+      var cdc = 0L
+      // one partition: the distributed dedup then keeps a key's first row,
+      // as the held one does
+      def upsert(df: org.apache.spark.sql.DataFrame): Unit = step {
+        s.ingestVertexUpsertBatch("C", "ck", df.coalesce(1), "cdc", cdc)
+        cdc += 1
+      }
+      def rows(rs: (Long, String, Long)*) = rs.toDF("ck", "name", "bal")
+      step(s.ingestVertexBatch("C", "ck", (1L to 8L).map(k => (k, s"c$k", k * 10)).toDF("ck", "name", "bal"),
+        "load", 0L))
+      upsert(rows((3L, "c3b", 31L), (20L, "c20", 200L)))
+      upsert(rows((20L, "c20b", 201L), (3L, "c3c", 32L), (21L, "c21", 210L)))
+      step(s.ingestVertexBatch("C", "ck", Seq((5L, "c5x", 51L), (5L, "c5y", 52L)).toDF("ck", "name", "bal"),
+        "load", 1L))
+      upsert(rows((5L, "c5b", 53L), (6L, "c6b", 61L), (6L, "c6c", 62L), (22L, "c22", 220L)))
+      upsert(Seq((7L, "c7b", "seventy"), (24L, "c24", "n/a")).toDF("ck", "name", "bal"))
+      upsert(rows((3L, "c3d", 33L), (23L, "c23", 230L)))
+      val r = new GraphSession(spark)
+      r.openGraph("upserts", root)
+      val reopened = labelRows(r)
+      graft.cypher.GraphStore.deleteTree(Paths.get(root))
+      (out.toSeq, reopened, cats.toSeq)
+    }
+    val (held, heldReopened, heldCats) = script()
+    val (dist, distReopened, distCats) = distributed(script())
+    held.zip(dist).zipWithIndex.foreach { case ((h, d), i) => assert(h == d, s"batch ${i + 1} differs") }
+    assert(held.length == dist.length && heldReopened == distReopened)
+    assert(heldReopened == held.last)
+    // 1..8 plus 20..24, key 5 once (the upsert replaced every copy) and key
+    // 6 once
+    assert(held.last.size == 13, held.last.mkString("\n"))
+    assert(held.last.count(_.startsWith("C [844424930131973,")) == 1, held.last.mkString("\n"))
+    assert(held.last.count(_.startsWith("C [844424930131974,")) == 1, held.last.mkString("\n"))
+    // in both runs each point upsert committed merge-on-read, one more dv
+    // file, and the type-conflicting one rewrote the label whole
+    Seq(heldCats, distCats).foreach { cats =>
+      def dvps(i: Int) = cats(i).count(_ == "dvp v C")
+      Seq(1, 2, 4, 6).foreach(i => assert(dvps(i) == dvps(i - 1) + 1, s"batch ${i + 1}: ${cats(i)}"))
+      assert(cats(5).exists(_.startsWith("vlabel C")), cats(5))
+    }
+  }
+
+  // An upsert of a batch held on the driver into a label held on the
+  // driver runs no Spark job: the batch joins the held state, the commit
+  // writes its rows from the driver and reads tombstone positions there.
+  // The first upsert after the open first lays the label's directory out
+  // as files, which reads their stats in Spark.
+  test("GraphStore: an upsert of a driver-held batch into a held label runs no Spark job") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_store_upsertjobs").toString
+    val b = new GraphSession(spark)
+    b.createGraph("upsertjobs", root)
+    b.ingestVertexBatch("C", "ck", (1L to 200L).map(k => (k, s"c$k", k)).toDF("ck", "name", "bal"), "load", 0L)
+    val s = new GraphSession(spark)
+    s.openGraph("upsertjobs", root)
+    def upsert(i: Long): Int = jobsOf(s.ingestVertexUpsertBatch("C", "ck",
+      Seq((i, s"u$i", -i), (1000L + i, s"n$i", i)).toDF("ck", "name", "bal"), "cdc", i))
+    upsert(1L)
+    val jobs = (2L to 6L).map(upsert)
+    assert(jobs.forall(_ == 0), s"jobs per upsert: $jobs")
+    assert(jobsOf(s.run("MATCH (c:C) RETURN count(*) AS n").collect()) == 0)
+    // a label a batch created keeps that batch's checkpoint as its base:
+    // its first upsert re-bases it onto the driver, after which upserts and
+    // reads run no job either
+    def upsertD(i: Long): Int = jobsOf(s.ingestVertexUpsertBatch("D", "dk",
+      Seq((i, s"d$i"), (i + 1, s"e$i")).toDF("dk", "name"), "cdcd", i))
+    upsertD(0L)
+    upsertD(1L)
+    assert(Seq(upsertD(2L), upsertD(3L)) == Seq(0, 0))
+    assert(jobsOf(s.run("MATCH (d:D) RETURN count(*) AS n").collect()) == 0)
+    assert(s.run("MATCH (d:D) RETURN count(*) AS n").collect().head.getLong(0) == 5L)
+    val r = new GraphSession(spark)
+    r.openGraph("upsertjobs", root)
+    assert(labelRows(r) == labelRows(s))
+    assert(r.run("MATCH (c:C) WHERE c.ck = 4 RETURN c.name AS n").collect().map(_.getString(0)).toSeq == Seq("u4"))
+    assert(r.run("MATCH (c:C) RETURN count(*) AS n").collect().head.getLong(0) == 206L)
+    graft.cypher.GraphStore.deleteTree(Paths.get(root))
+  }
+
+  // A null ingest key fails its batch on every path, naming the label and
+  // the key column, and the graph and its store keep the state before it.
+  test("GraphStore: a null ingest key fails its batch, naming the label and the key") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    def script(): Unit = {
+      val root = Files.createTempDirectory("graft_store_nullkey").toString
+      val s = new GraphSession(spark)
+      s.createGraph("nullkey", root)
+      s.ingestVertexBatch("N", "nk", Seq((Option(1L), "a"), (Option(2L), "b")).toDF("nk", "name"), "load", 0L)
+      s.ingestEdgeBatch("E", "ek", "N", "src", "N", "dst", Seq((1L, 1L, 2L)).toDF("ek", "src", "dst"), "load", 1L)
+      val (before, v) = (labelRows(s), graft.cypher.GraphStore.latestVersion(root))
+      def fails(msg: String)(body: => Unit): Unit = {
+        val e = intercept[Exception](body)
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => Option(t.getMessage).exists(_.contains(msg))), e.toString)
+        assert(labelRows(s) == before && graft.cypher.GraphStore.latestVersion(root) == v)
+      }
+      val nk = "ingest key nk of label N is null"
+      fails(nk)(s.ingestVertexBatch("N", "nk", Seq((Option(3L), "c"), (None, "d")).toDF("nk", "name"), "load", 2L))
+      fails(nk)(s.ingestVertexUpsertBatch("N", "nk", Seq((Option(1L), "a2"), (None, "d")).toDF("nk", "name"),
+        "cdc", 0L))
+      fails("ingest key nk of label M is null")(s.ingestVertexUpsertBatch("M", "nk",
+        Seq((Option.empty[Long], "m")).toDF("nk", "name"), "cdc", 0L))
+      fails("ingest key dst of label N is null")(s.ingestEdgeBatch("E", "ek", "N", "src", "N", "dst",
+        Seq((2L, Option(2L), Option.empty[Long])).toDF("ek", "src", "dst"), "load", 2L))
+      fails("ingest key ek of label E is null")(s.ingestEdgeBatch("E", "ek", "N", "src", "N", "dst",
+        Seq((Option.empty[Long], 2L, 1L)).toDF("ek", "src", "dst"), "load", 2L))
+      // the failed batches left their ids to a retry
+      s.ingestVertexUpsertBatch("N", "nk", Seq((Option(1L), "a2")).toDF("nk", "name"), "cdc", 0L)
+      assert(graft.cypher.GraphStore.latestVersion(root) == v.map(_ + 1))
+      assert(s.run("MATCH (n:N) RETURN n.name AS n").collect().map(_.getString(0)).sorted.toSeq == Seq("a2", "b"))
+      graft.cypher.GraphStore.deleteTree(Paths.get(root))
+    }
+    script()
+    distributed(script())
+  }
+
+  // Every ingest batch, append or upsert, held or checkpointed, raises its
+  // label's entry sequence to its largest key, so a CREATE into the label
+  // takes an id no ingested key packs to, before and after a reopen.
+  test("GraphStore: a CREATE into a key-ingested label takes an id past every ingested key") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    def script(): Seq[Long] = {
+      val root = Files.createTempDirectory("graft_store_ingestnext").toString
+      val s = new GraphSession(spark)
+      s.createGraph("ingestnext", root)
+      def keys(from: Long, to: Long) = (from to to).map(k => (k, k)).toDF("lk", "k")
+      s.ingestVertexBatch("L", "lk", keys(1L, 1000L), "load", 0L)
+      s.ingestVertexBatch("L", "lk", keys(1001L, 2000L), "load", 1L)
+      s.ingestVertexUpsertBatch("L", "lk", keys(1990L, 3000L), "cdc", 0L)
+      s.run("CREATE (:L {k: 5000})")
+      def ids(g: GraphSession): Seq[Long] =
+        g.run("MATCH (l:L) RETURN id(l) AS i").collect().map(_.getLong(0)).toSeq.sorted
+      assert(ids(s).distinct.size == 3001, ids(s).takeRight(3))
+      val r = new GraphSession(spark)
+      r.openGraph("ingestnext", root)
+      assert(ids(r) == ids(s))
+      r.run("CREATE (:L {k: 5001})")
+      val out = ids(r)
+      assert(out.distinct.size == 3002, out.takeRight(3))
+      graft.cypher.GraphStore.deleteTree(Paths.get(root))
+      out
+    }
+    val held = script()
+    assert(held.takeRight(2).map(_ & ((1L << 48) - 1)) == Seq(3001L, 3002L), held.takeRight(2))
+    assert(distributed(script()) == held)
+  }
 }
