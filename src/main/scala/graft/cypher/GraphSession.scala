@@ -46,9 +46,11 @@ private[graft] object RowNumber {
         // stats can be join-inflated while the ACTUAL row count is tiny (a
         // MERGE's anti-join input) — the count above knows
         if (Local.holds(spark, n)) numbered(frozen.collect())
-        else (spark.createDataFrame(frozen.rdd.zipWithIndex().map { case (row, i) =>
-          Row.fromSeq(row.toSeq :+ (i + 1L))
-        }, schema), n)
+        // an RDD has no statistics: the checkpoint's estimate, not Spark's
+        // default, which makes a label it is appended to look past any bound
+        else (org.apache.spark.sql.graft.Bridge.withSizeInBytes(spark.createDataFrame(
+          frozen.rdd.zipWithIndex().map { case (row, i) => Row.fromSeq(row.toSeq :+ (i + 1L)) },
+          schema), Local.sizeOf(frozen)), n)
     }
   }
 }
@@ -1050,7 +1052,7 @@ final class GraphSession(val spark: SparkSession) {
           val alias = n.variable.getOrElse(s"_c$id") // full packed id: collision-free across labels
           if (reused.isEmpty) {
             // bind created node: one-row DF with its columns
-            val nodeDf = graph.vertexRowDf(alias, label, id)
+            val nodeDf = graph.createdRowDf("v", alias, label, id)
             df = if (df == null) nodeDf else df.crossJoin(nodeDf)
           }
           if (n.variable.isDefined) {
@@ -1082,7 +1084,7 @@ final class GraphSession(val spark: SparkSession) {
         (r, ealias, label, eid)
       }.reverse
       edgeBinds.foreach { case (r, ealias, label, eid) =>
-        val edgeDf = graph.edgeRowDf(ealias, label, eid)
+        val edgeDf = graph.createdRowDf("e", ealias, label, eid)
         df = if (df == null) edgeDf else df.crossJoin(edgeDf)
         if (r.variable.isDefined) createdVars += (ealias -> VarInfo.edge)
         edgeAliases += ealias

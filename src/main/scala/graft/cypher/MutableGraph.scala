@@ -52,16 +52,18 @@ final class MutableGraph(spark: SparkSession) {
   private[cypher] var vertexLabels = Map.empty[String, LabelState]
   private[cypher] var edgeLabels = Map.empty[String, LabelState]
 
-  // ---- A CREATE, SET, REMOVE, DELETE or ingest upsert of driver-held
-  // ids changes only its label state's `dead` and `rows`. Any other write
-  // makes its join or union the new base (the `local.maxRows=0` reference
-  // path): an append stays a lazy union of at most MaxParts parts, any
-  // other is marked for a re-base at the statement's end ([[flattened]]).
-  // Each write records in the state what it touched, so publish rewrites
-  // only the parquet FILES holding touched ids (a write that recorded
-  // nothing would lose rows under CoW, so the primitives record it
-  // themselves); the first write of a statement starts from nothing
-  // recorded.
+  // ---- One write path. Every stored value is encoded by [[gLit]], every
+  // CREATE (literal, per-row, MERGE's) passes [[checkUnique]], and a
+  // CREATE, SET, REMOVE, DELETE or ingest upsert of driver-held ids is one
+  // [[replaced]]: its ids join the label state's `dead` and its new rows
+  // take their place in `rows`. Any other write makes its join or union
+  // the new base (the `local.maxRows=0` reference path): an append stays
+  // a lazy union of at most MaxParts parts, any other is marked for a
+  // re-base at the statement's end ([[flattened]]). Each write records in
+  // the state what it touched, so publish rewrites only the parquet FILES
+  // holding touched ids (a write that recorded nothing would lose rows
+  // under CoW, so the primitives record it themselves); the first write
+  // of a statement starts from nothing recorded.
 
   /** Statement-level transactionality: the reference runs each statement
     * in a PG transaction, so an ERROR mid-statement (e.g. CREATE through a
@@ -293,67 +295,6 @@ final class MutableGraph(spark: SparkSession) {
     case _ => true
   }
 
-  /** Homogeneous scalar lists keep a typed array column; mixed/nested
-    * lists and objects store the DYNAMIC tagged struct (the reference
-    * keeps every property a full gtype — cypher_match.sql's
-    * {map_key: {…}, list_key: […]} shapes).
-    */
-  private def sparkType(v: GValue): DataType = v match {
-    case _: GBool    => BooleanType
-    case _: GInt     => LongType
-    case _: GFloat   => DoubleType
-    case _: GNumeric => DecimalType(38, 18)
-    case _: GString  => StringType
-    case GArray(xs) if xs.nonEmpty && xs.forall(isScalarProp) &&
-        xs.map(_.getClass).distinct.size == 1 =>
-      ArrayType(sparkType(xs.head))
-    case _: GArray | _: GMap => graft.gvalue.GValueCol.structType
-    case _: GTimestamp => TimestampType
-    case _: GDate    => DateType
-    case GNull       => NullType
-    case other => throw new UnsupportedOperationException(s"property type: ${other.render}")
-  }
-
-  private def dynScalarRow(v: GValue): Row = {
-    import graft.gvalue.GValueCol._
-    v match {
-      case GNull       => Row(TNull.toByte, false, 0L, 0.0, "")
-      case GBool(x)    => Row(TBool.toByte, x, 0L, 0.0, "")
-      case GInt(x)     => Row(TInt.toByte, false, x, 0.0, "")
-      case GFloat(x)   => Row(TFloat.toByte, false, 0L, x, "")
-      case GNumeric(x) => Row(TNumeric.toByte, false, 0L, x.toDouble,
-        x.bigDecimal.toPlainString)
-      case GString(x)  => Row(TString.toByte, false, 0L, 0.0, x)
-      case GTimestamp(us) => Row(TTimestamp.toByte, false, us, 0.0, "")
-      case GDate(d)    => Row(TDate.toByte, false, d.toLong, 0.0, "")
-      // second-level containers ride their canonical string, mirroring
-      // GValueCol.gLitScalar so MATCH filters compare equal
-      case GArray(xs) => Row(TArray.toByte, false, 0L, 0.0,
-        xs.map(litCanon).mkString("\u0001"))
-      case m: GMap    => Row(TObject.toByte, false, 0L, 0.0, m.render)
-    }
-  }
-
-  private def sparkValue(v: GValue): Any = v match {
-    case GBool(b)   => b
-    case GInt(i)    => i
-    case GFloat(f)  => f
-    case GNumeric(n) => n.bigDecimal
-    case GString(s) => s
-    case GArray(xs) if xs.nonEmpty && xs.forall(isScalarProp) &&
-        xs.map(_.getClass).distinct.size == 1 => xs.map(sparkValue)
-    case GArray(xs) =>
-      Row(graft.gvalue.GValueCol.TArray.toByte, false, 0L, 0.0, "",
-        xs.map(dynScalarRow))
-    case m: GMap =>
-      Row(graft.gvalue.GValueCol.TObject.toByte, false, 0L, 0.0, m.render, null)
-    case GTimestamp(us) => java.sql.Timestamp.from(
-      java.time.Instant.ofEpochSecond(us / 1000000L, (us % 1000000L) * 1000L))
-    case GDate(d)   => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d.toLong))
-    case GNull      => null
-    case other => throw new UnsupportedOperationException(s"property value: ${other.render}")
-  }
-
   /** Last committed micro-batch id per streaming writer identity (r12) —
     * persisted in the store catalog (`stream <app> <batchId>` lines) so a
     * replayed foreachBatch after restart is recognized and skipped: the
@@ -442,9 +383,11 @@ final class MutableGraph(spark: SparkSession) {
     * rewrite — and new keys append. Same exactly-once (appId, batchId)
     * contract. Duplicate keys within one batch collapse to one arbitrary
     * row (pre-aggregate upstream for a deterministic pick). A batch held
-    * on the driver upserts into an existing label's held state
-    * ([[upsertHeld]]); otherwise the label without the batch's ids, plus
-    * the batch, is the new base.
+    * on the driver replaces its ids in an existing label's held state
+    * ([[replaced]]), and a base no open or re-base materialized (a new
+    * label's first batch, an appended union) is marked for a re-base,
+    * once, so a small label's later reads run on the driver. Otherwise the
+    * label without the batch's ids, plus the batch, is the new base.
     */
   private[cypher] def ingestVertexUpsertBatch(label: String, keyCol: String,
       batch: DataFrame, appId: String, batchId: Long): Unit =
@@ -460,30 +403,15 @@ final class MutableGraph(spark: SparkSession) {
       existing match {
         case None => appendRows("v", label, df)
         case Some(st) =>
-          val held = rows.flatMap(r => upsertHeld(st, df, r.map(_.getLong(idIx)).sorted))
+          val held = rows.map(_.map(_.getLong(idIx)).sorted)
+            .flatMap(ids => replaced(st, ids, ids.length)(Some(df)))
+            .map(h => h.copy(rebase = h.rebase || !st.materialized))
           put("v", label, held.getOrElse {
             val kept = st.df.join(df.select(col("id")), Seq("id"), "left_anti")
             written(st, aligned(kept, df), df, Local.bytesOf(df), reencodes(st.schema, df))
           })
       }
     }
-
-  /** Held upsert of state `st` by the driver-held `batch` of sorted
-    * distinct `ids`: they join dead, and the batch rows replace theirs in
-    * the held rows. No existence check is needed: a dead id with no copy
-    * in base suppresses nothing, and the commit finds no live position for
-    * it. A base that no open or re-base materialized (a new label's first
-    * batch, an appended union) is marked for a re-base, once, so a small
-    * label's later reads run on the driver. None when the batch re-encodes
-    * the label, would pass the held bound, or does not fold on the driver.
-    */
-  private def upsertHeld(st: LabelState, batch: DataFrame, ids: Array[Long]): Option[LabelState] = {
-    if (reencodes(st.schema, batch) || !holdable(st.size + 2 * ids.length)) return None
-    val merged = aligned(st.rowsDf.filter(!MutableGraph.idIn(ids)), batch)
-    folded(merged).map(rows => st.copy(dead = union(st.dead, ids), rows = rows,
-      schema = merged.schema, touched = st.touched ++ Touched.of(ids),
-      rebase = st.rebase || !st.materialized))
-  }
 
   /** Commit one streaming micro-batch of edges as ONE store version —
     * endpoint ids pack from the src/dst key columns against their vertex
@@ -502,30 +430,51 @@ final class MutableGraph(spark: SparkSession) {
     }
 
   /** Append rows to a label table (all CREATE paths), schema-aligned. A
-    * frame held on the driver joins the label's held row-versions when the
-    * union folds there, re-encodes no old row and repeats no held id; the
-    * appended ids are recorded as touched. Otherwise the union is the new
-    * base, adding the held rows' relation and the frame to its parts. A
-    * new label's base is the frame itself, written whole.
+    * frame held on the driver joins the label's held row-versions
+    * ([[replaced]], no ids). Otherwise the union is the new base, adding
+    * the held rows' relation and the frame to its parts. A new label's
+    * base is the frame itself, written whole.
     */
   private def appendRows(kind: String, label: String, df: DataFrame): Unit =
     put(kind, label, labels(kind).get(label).map(continued(kind, label, _)) match {
       case None => LabelState.of(df, Local.bytesOf(df), Touched.Whole, materialized = false)
       case Some(st) =>
-        val whole = reencodes(st.schema, df)
-        Some(aligned(st.rowsDf, df)).filterNot(_ => whole).flatMap { merged =>
-          folded(merged).filter(rows => holdable(st.dead.length + rows.length)).flatMap { rows =>
-            val idIx = merged.schema.fieldIndex("id")
-            val ids = rows.drop(st.rows.length).map(_.getLong(idIx)).distinct.sorted
-            // the commit writes a held state's rows of its touched ids: a
-            // repeated id's earlier copy, already stored, would be written
-            // again, so the union path rewrites every copy of it instead
-            Option.when(!ids.exists(has(st.rowIds, _)))(st.copy(rows = rows,
-              schema = merged.schema, touched = st.touched ++ Touched.of(ids)))
-          }
-        }.getOrElse(written(st, aligned(st.df, df), df, Local.bytesOf(df), whole,
-          parts = if (st.size > 0) 2 else 1))
+        Some(df.queryExecution.optimizedPlan).collect { case r: LocalRelation => r.data.length }
+          .flatMap(n => replaced(st, Array.empty, n)(Some(df)))
+          .getOrElse(written(st, aligned(st.df, df), df, Local.bytesOf(df), reencodes(st.schema, df),
+            parts = if (st.size > 0) 2 else 1))
     })
+
+  /** The one held write: state `st` with the row-versions of its sorted
+    * `ids` replaced by the `n` driver-held rows of `add`; the ids join
+    * dead, the rows take their place in rows, and both are recorded as
+    * touched. A DELETE passes no `add`, an append no ids. None past
+    * [[holdable]] (checked before `add` is built), when `add` re-encodes
+    * the label or does not fold on the driver, or when it repeats a held
+    * id it does not replace: the commit writes a held state's rows of its
+    * touched ids, so that id's stored copy would be written again.
+    */
+  private def replaced(st: LabelState, ids: Array[Long], n: Int)(
+      add: => Option[DataFrame]): Option[LabelState] =
+    if (!holdable(st.size + ids.length + n)) None
+    else {
+      val idIx = st.schema.fieldIndex("id")
+      val kept = st.rows.filterNot(r => has(ids, r.getLong(idIx)))
+      add match {
+        case None => Some(st.copy(dead = union(st.dead, ids), rows = kept,
+          touched = st.touched ++ Touched.of(ids)))
+        case Some(df) if !reencodes(st.schema, df) =>
+          val merged = aligned(Local.relation(spark, kept.toSeq, st.schema), df)
+          folded(merged).flatMap { rows =>
+            val i = merged.schema.fieldIndex("id")
+            val added = rows.drop(kept.length).map(_.getLong(i)).distinct.sorted
+            Option.when(added.forall(a => has(ids, a) || !has(st.rowIds, a)))(st.copy(
+              dead = union(st.dead, ids), rows = rows, schema = merged.schema,
+              touched = st.touched ++ Touched.of(union(ids, added))))
+          }
+        case _ => None
+      }
+    }
 
   /** Columns of `o` that `add` holds with another type; nullability-only
     * differences are NOT conflicts: a streaming batch round-trips through
@@ -577,16 +526,30 @@ final class MutableGraph(spark: SparkSession) {
     else fix(o).unionByName(fix(add), allowMissingColumns = true)
   }
 
-  /** GValue → literal Column, matching [[sparkType]]'s storage decision:
-    * homogeneous scalar lists stay typed arrays; mixed/nested lists and
-    * objects take the dynamic struct.
+  /** The one encoder of a stored value, GValue → literal Column, for a
+    * literal CREATE, a per-row CREATE's constant and a SET's container: a
+    * homogeneous scalar list stays a typed array; a mixed or nested list
+    * and a map take the dynamic struct (the reference keeps every property
+    * a full gtype — cypher_match.sql's {map_key: {…}, list_key: […]}
+    * shapes), whose nested list carries its canonical and its render half
+    * ([[GValueCol.gLit]]); a numeric is `decimal(38,18)` whatever its
+    * scale, so numerics of two scales share one column type.
     */
-  private[cypher] def gLit(v: GValue): org.apache.spark.sql.Column = v match {
+  private[cypher] def gLit(v: GValue): Column = v match {
     case GArray(xs) if xs.nonEmpty && xs.forall(isScalarProp) &&
         xs.map(_.getClass).distinct.size == 1 =>
       array(xs.map(gLit): _*)
     case g @ (_: GArray | _: GMap) => graft.gvalue.GValueCol.gLit(g)
-    case other => lit(sparkValue(other))
+    case GNumeric(n) => lit(n.bigDecimal).cast(DecimalType(38, 18))
+    case GTimestamp(us) => lit(java.sql.Timestamp.from(
+      java.time.Instant.ofEpochSecond(us / 1000000L, (us % 1000000L) * 1000L)))
+    case GDate(d) => lit(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d.toLong)))
+    case GBool(b) => lit(b)
+    case GInt(i) => lit(i)
+    case GFloat(f) => lit(f)
+    case GString(s) => lit(s)
+    case GNull => lit(null)
+    case other => throw new UnsupportedOperationException(s"property value: ${other.render}")
   }
 
   /** Reserve `n` consecutive entry ids for a label; returns (labelId, base). */
@@ -601,24 +564,15 @@ final class MutableGraph(spark: SparkSession) {
     * the general path for CREATE/MERGE whose properties are expressions
     * over the input row, not constants.
     */
-  private[cypher] def createVerticesRows(label: String, rows0: DataFrame): Unit = {
-    val rows = rows0
-    val propNames = rows.columns.filterNot(_ == "id").toSeq
-    uniqueConstraints.filter(c => c._1 == label && propNames.contains(c._2))
-      .foreach { case (_, k) =>
-        if (!rows.groupBy(col(k)).count().filter(col("count") > 1).isEmpty)
-          throw new IllegalStateException(
-            s"unique constraint violation: bulk CREATE would duplicate $label.$k")
-        vertexLabels.get(label).map(_.df).filter(_.columns.contains(k)).foreach { existing =>
-          if (!existing.join(rows.select(col(k)), Seq(k), "left_semi").isEmpty)
-            throw new IllegalStateException(
-              s"unique constraint violation: $label.$k already has one of these values")
-        }
-      }
+  private[cypher] def createVerticesRows(label: String, rows: DataFrame): Unit = {
+    checkUnique(label, rows)
     labelId(label)
-    val df = rows.select(col("id") +: propNames.sorted.map(col): _*)
-    appendRows("v", label, df)
+    appendRows("v", label, idsFirst(rows, Seq("id")))
   }
+
+  /** `rows` with its `ids` columns first, then its properties by name. */
+  private def idsFirst(rows: DataFrame, ids: Seq[String]): DataFrame =
+    rows.select((ids ++ rows.columns.filterNot(ids.contains).sorted).map(col): _*)
 
   private val uniqueConstraints = mutable.Set.empty[(String, String)]
 
@@ -647,84 +601,80 @@ final class MutableGraph(spark: SparkSession) {
   def addUniquePropertiesConstraint(label: String): Unit =
     wholePropsUnique += label
 
-  private def checkWholeUnique(label: String, props: Map[String, GValue]): Unit =
-    if (wholePropsUnique.contains(label))
-      vertexLabels.get(label).map(_.df).foreach { df =>
-        val propCols = df.columns.filterNot(Set("id"))
-        // identical map ⇔ every stored column matches the incoming value
-        // (null where the key is absent) — one filtered limit-1 probe
-        val pred = propCols.map { c =>
-          props.get(c) match {
-            case Some(v) if v != GNull => col(c) <=> gLit(v)
-            case _ => col(c).isNull
-          }
-        }.foldLeft(lit(true))(_ && _)
-        val extraKeys = props.keySet.diff(propCols.toSet).nonEmpty
-        if (!extraKeys && !df.filter(pred).isEmpty)
-          throw new IllegalStateException("duplicate key value violates " +
-            s"""unique constraint "${label}_properties_key"""")
-      }
-
-  private def checkUnique(label: String, props: Map[String, GValue]): Unit =
-    uniqueConstraints.filter(_._1 == label).foreach { case (_, prop) =>
-      props.get(prop).filter(_ != GNull).foreach { v =>
-        vertexLabels.get(label).map(_.df).filter(_.columns.contains(prop)).foreach { df =>
-          val clash = if (df.filter(col(prop) === gLit(v)).isEmpty) 0 else 1
-          if (clash > 0) throw new IllegalStateException(
-            s"unique constraint violation: $label.$prop = ${v.render}")
-        }
-      }
+  /** Fail a CREATE of vertex `rows` into `label` that breaks one of its
+    * unique constraints: a property's, where rows without the property
+    * are no key, or the whole property map's, where an absent property
+    * equals an absent one. For each constraint's key columns, one
+    * aggregate finds a key repeated among the new rows and one null-safe
+    * semi-join a key the label already holds, both sides in one column
+    * encoding ([[aligned]]); over driver-held rows neither runs a job.
+    */
+  private def checkUnique(label: String, rows: DataFrame): Unit = {
+    val table = vertexLabels.get(label).map(_.df)
+    val props = rows.columns.filterNot(_ == "id").toSeq
+    val keys = uniqueConstraints.toSeq.sorted.collect { case (`label`, k) if props.contains(k) =>
+      (Seq(k), false, s"unique constraint violation: $label.$k")
+    } ++ Option.when(wholePropsUnique(label))(
+      ((props ++ table.toSeq.flatMap(_.columns)).distinct.filterNot(_ == "id"), true,
+        s"""duplicate key value violates unique constraint "${label}_properties_key""""))
+    keys.foreach { case (ks, nullKeys, message) =>
+      def keyed(df: DataFrame, old: Boolean): DataFrame =
+        df.select(ks.filter(df.columns.contains).map(col) :+ lit(old).as("__old"): _*)
+      val both = table.fold(keyed(rows, old = false))(t =>
+        aligned(keyed(t, old = true), keyed(rows, old = false)))
+        .filter(if (nullKeys) lit(true) else col(ks.head).isNotNull)
+      val fresh = both.filter(!col("__old")).drop("__old")
+      val repeated = !fresh.groupBy(ks.map(col): _*).count().filter(col("count") > 1).isEmpty
+      def stored: Boolean = table.isDefined && !both.filter(col("__old")).join(
+        fresh.select(ks.map(k => col(k).as(s"__new_$k")): _*),
+        ks.map(k => col(k) <=> col(s"__new_$k")).foldLeft(lit(true))(_ && _), "left_semi").isEmpty
+      if (repeated || stored) throw new IllegalStateException(message)
     }
+  }
 
-  def createVertex(label: String, props0: Map[String, GValue]): Long = {
-    val props = props0.map { case (k, v) => Compiler.PropNames.esc(k) -> v }
+  def createVertex(label: String, props: Map[String, GValue]): Long = {
     // allocate BEFORE the constraint check: PG's heap insert consumes the
     // serial value before the unique index rejects the tuple, so a failed
     // CREATE burns its entry id (index.out — post-violation rows land on
     // id 13, not 12; sequences are non-transactional)
-    val lid = labelId(label)
-    val entry = nextEntry.getOrElse(label, 0L) + 1
-    nextEntry(label) = entry
-    checkUnique(label, props)
-    checkWholeUnique(label, props)
-    val id = PropertyGraph.packId(lid, entry)
-    val fields = StructField("id", LongType) +:
-      props.toSeq.sortBy(_._1).map { case (k, v) => StructField(k, sparkType(v)) }
-    val row = Row.fromSeq(id +: props.toSeq.sortBy(_._1).map { case (_, v) => sparkValue(v) })
-    val df = spark.createDataFrame(java.util.Arrays.asList(row), StructType(fields))
-    appendRows("v", label, df)
+    val id = nextId(label)
+    val row = entityRow(Seq("id" -> id), props)
+    checkUnique(label, row)
+    appendRows("v", label, row)
     id
   }
 
   def createEdge(label: String, startId: Long, endId: Long,
-      props0: Map[String, GValue]): Long = {
-    val props = props0.map { case (k, v) => Compiler.PropNames.esc(k) -> v }
-    val lid = labelId(label)
-    val entry = nextEntry.getOrElse(label, 0L) + 1
-    nextEntry(label) = entry
-    val id = PropertyGraph.packId(lid, entry)
-    val fields = Seq(StructField("id", LongType), StructField("start_id", LongType),
-      StructField("end_id", LongType)) ++
-      props.toSeq.sortBy(_._1).map { case (k, v) => StructField(k, sparkType(v)) }
-    val row = Row.fromSeq(Seq(id, startId, endId) ++
-      props.toSeq.sortBy(_._1).map { case (_, v) => sparkValue(v) })
-    val df = spark.createDataFrame(java.util.Arrays.asList(row), StructType(fields))
-    appendRows("e", label, df)
+      props: Map[String, GValue]): Long = {
+    val id = nextId(label)
+    appendRows("e", label,
+      entityRow(Seq("id" -> id, "start_id" -> startId, "end_id" -> endId), props))
     id
   }
 
-  /** One-row DF for a just-created vertex, columns prefixed `alias__`. */
-  def vertexRowDf(alias: String, label: String, id: Long): DataFrame = {
-    val src = vertexLabels(label).df.filter(col("id") === id)
-      .withColumn("label", lit(label))
-    src.columns.foldLeft(src)((df, c) => df.withColumnRenamed(c, s"${alias}__$c"))
+  /** The next entry id of `label`, packed with its label id. */
+  private def nextId(label: String): Long = {
+    val (lid, base) = reserveEntries(label, 1)
+    PropertyGraph.packId(lid, base + 1)
   }
 
-  /** One-row DF for a just-created edge, columns prefixed `alias__`. */
-  def edgeRowDf(alias: String, label: String, id: Long): DataFrame = {
-    val src = edgeLabels(label).df.filter(col("id") === id)
-      .withColumn("label", lit(label))
-    src.columns.foldLeft(src)((df, c) => df.withColumnRenamed(c, s"${alias}__$c"))
+  /** One new entity's row held on the driver: its `ids` columns, then its
+    * properties by escaped name, each encoded by [[gLit]] (a select over a
+    * one-row relation, which the optimizer folds into driver rows), with
+    * every column nullable as a label's columns are.
+    */
+  private def entityRow(ids: Seq[(String, Long)], props: Map[String, GValue]): DataFrame = {
+    val one = Local.relation(spark, Seq(Row()), new StructType())
+    val df = one.select(ids.map { case (n, v) => lit(v).as(n) } ++
+      props.toSeq.map { case (k, v) => Compiler.PropNames.esc(k) -> v }.sortBy(_._1)
+        .map { case (k, v) => gLit(v).as(k) }: _*)
+    Local.relation(spark, df.collect().toSeq, StructType(df.schema.map(_.copy(nullable = true))))
+  }
+
+  /** One-row DF for a just-created entity of `kind`, columns prefixed `alias__`. */
+  def createdRowDf(kind: String, alias: String, label: String, id: Long): DataFrame = {
+    val src = labels(kind)(label).df.filter(col("id") === id).withColumn("label", lit(label))
+    src.toDF(src.columns.map(c => s"${alias}__$c"): _*)
   }
 
   /** Append edges whose ids the caller already assigned from a
@@ -733,16 +683,14 @@ final class MutableGraph(spark: SparkSession) {
     */
   def createEdgesWithIds(label: String, rows: DataFrame): Unit = {
     labelId(label)
-    val propNames = rows.columns.filterNot(Set("id", "start_id", "end_id")).toSeq.sorted
-    val df = rows.select(
-      Seq(col("id"), col("start_id"), col("end_id")) ++ propNames.map(col): _*)
-    appendRows("e", label, df)
+    appendRows("e", label, idsFirst(rows, Seq("id", "start_id", "end_id")))
   }
 
   /** SET/REMOVE property k for ids in `updates(__set_id, __set_val)` across
     * every label table containing those ids (copy-on-write). When the
     * updates are held on the driver and keep the column's type, a label
-    * takes the held path ([[setHeld]]).
+    * replaces its touched ids' current versions ([[versionsOf]]) with the
+    * updated ones ([[replaced]]).
     */
   def updateProperty(k: String, updates0: DataFrame): Unit = {
     // eager localCheckpoint, not persist(): the updated label tables hold a
@@ -759,8 +707,8 @@ final class MutableGraph(spark: SparkSession) {
         else {
           val st = continued(kind, l, st0)
           val kept = keepsType(st.schema, k, updates)
-          l -> frozen._2.filter(_ => kept).flatMap(idsOf(_, "__set_id", l))
-            .flatMap(setHeld(st, k, updates, _))
+          l -> frozen._2.filter(_ => kept).flatMap(idsOf(_, "__set_id", l)).flatMap(ids =>
+            replaced(st, ids, ids.length)(Some(setColumn(versionsOf(st, ids), k, updates))))
             .getOrElse(written(st, setColumn(st.df, k, updates),
               updates.select(col("__set_id").as("id")), whole = !kept))
         }
@@ -805,25 +753,16 @@ final class MutableGraph(spark: SparkSession) {
     updated.drop("__set_id", "__set_val")
   }
 
-  /** Held SET of state `st` at its sorted `ids`: their current versions
-    * are read from the held rows and, for those in base, by one collect of
-    * base filtered by them; the new versions replace them in the held rows
-    * and the ids join dead. None when the change would pass its bound or
-    * the update does not fold on the driver.
+  /** The current row-versions of state `st`'s sorted `ids`: from its held
+    * rows, and for those in base by one collect of base filtered by them.
     */
-  private def setHeld(st: LabelState, k: String, updates: DataFrame,
-      ids: Array[Long]): Option[LabelState] = {
-    if (!holdable(st.size + 2 * ids.length)) return None
+  private def versionsOf(st: LabelState, ids: Array[Long]): DataFrame = {
     val inBase = ids.filter(i => !has(st.rowIds, i) && !has(st.dead, i))
     val baseRows =
       if (inBase.isEmpty) Array.empty[Row]
       else st.base.filter(MutableGraph.idIn(inBase)).collect()
-    val current = Local.relation(spark, baseRows.toSeq, st.base.schema)
+    Local.relation(spark, baseRows.toSeq, st.base.schema)
       .unionByName(st.rowsDf.filter(MutableGraph.idIn(ids)), allowMissingColumns = true)
-    val merged = st.rowsDf.filter(!MutableGraph.idIn(ids))
-      .unionByName(setColumn(current, k, updates), allowMissingColumns = true)
-    folded(merged).map(rows => st.copy(dead = union(st.dead, ids), rows = rows,
-      schema = merged.schema, touched = st.touched ++ Touched.of(ids)))
   }
 
   /** The sorted ids of label `l` in `idCol` of a frozen write snapshot's
@@ -905,16 +844,13 @@ final class MutableGraph(spark: SparkSession) {
   }
 
   /** Label `l`'s state without the frozen ids: held, the label's sorted
-    * ids join dead and leave the held rows with no job, or by an anti-join
-    * past the bound.
+    * ids join dead and leave the held rows with no job ([[replaced]]), or
+    * by an anti-join past the bound.
     */
   private def deleted(kind: String, l: String, st0: LabelState,
       frozen: (DataFrame, Option[Array[Row]])): LabelState = {
     val (st, ids) = (continued(kind, l, st0), frozen._1)
-    val idIx = st.schema.fieldIndex("id")
-    frozen._2.flatMap(idsOf(_, "id", l)).filter(d => holdable(st.size + d.length))
-      .map(d => st.copy(dead = union(st.dead, d), rows = st.rows.filterNot(r => has(d, r.getLong(idIx))),
-        touched = st.touched ++ Touched.of(d)))
+    frozen._2.flatMap(idsOf(_, "id", l)).flatMap(d => replaced(st, d, 0)(None))
       .getOrElse(written(st, st.df.join(ids, st.df("id") === ids("id"), "left_anti"), ids))
   }
 
@@ -1111,11 +1047,13 @@ object MutableGraph {
     * `dead` the sorted ids whose copy in base, if any, is suppressed, and
     * `rows` the driver-held current row-versions of those ids and of new
     * ids, in the label's column order (`schema`: base's, then the columns
-    * writes added). A held upsert adds every id of its batch to `dead`
-    * without looking in base, so `dead` may hold ids base never had; they
-    * suppress nothing. An id of `rows` with a copy in base is in `dead`,
-    * but for a key an append stream sends again: both copies stay, as in
-    * the store.
+    * writes added). Every held write changes `dead` and `rows` in one way
+    * (the graph's `replaced`): the ids it replaces join `dead` and its
+    * new row-versions take their place in `rows`. An upsert replaces every
+    * id of its batch without looking in base, so `dead` may hold ids base
+    * never had; they suppress nothing. An id of `rows` with a copy in base
+    * is in `dead`, but for a key an append stream sends again: both copies
+    * stay, as in the store.
     * `baseBytes` is base's size estimate: the gate of its open or re-base
     * plus what later appends added. `parts` counts the leaves appends
     * unioned onto base since then ([[MutableGraph.MaxParts]]).

@@ -2445,4 +2445,81 @@ class WriteSpec extends AnyFunSuite {
     assert(held.takeRight(2).map(_ & ((1L << 48) - 1)) == Seq(3001L, 3002L), held.takeRight(2))
     assert(distributed(script()) == held)
   }
+
+  // RowNumber numbers a frame past the write bound over an RDD, which has
+  // no statistics: Spark's default estimate of such a frame made the label
+  // it was appended to look larger than any bound at its re-base
+  test("a per-row CREATE numbered off the driver keeps a real size estimate") {
+    val s = freshSession("rowestimate")
+    s.run("CREATE (:L {k: 1})")
+    def estimate(): BigInt = s.graph.snapshot.vertexLabels("L").queryExecution.optimizedPlan.stats.sizeInBytes
+    distributed {
+      s.run("MATCH (a:L {k: 1}) DELETE a CREATE (:L {k: 9})")
+      assert(estimate() < (1 << 20), s"after a DELETE and a per-row CREATE: ${estimate()} bytes")
+      s.run("MATCH (a:L {k: 9}) CREATE (:L {k: 10})")
+      assert(estimate() < (1 << 20), s"after a second per-row CREATE: ${estimate()} bytes")
+    }
+    assert(s.run("MATCH (a:L) RETURN a.k AS k ORDER BY k").collect().map(_.getLong(0)).toSeq == Seq(9L, 10L))
+  }
+
+  test("a nested list reads back alike from a literal CREATE, a MATCH … CREATE and a SET") {
+    val s = freshSession("nestedlist")
+    s.run("CREATE (:Z {i: 1})")
+    s.run("CREATE (:A {a: [1, [2, 3]]})")
+    s.run("MATCH (z:Z) CREATE (:B {a: [1, [2, 3]]})")
+    s.run("CREATE (:C {i: 1})")
+    s.run("MATCH (c:C) SET c.a = [1, [2, 3]]")
+    val got = Seq("A", "B", "C").map { l =>
+      val df = s.run(s"MATCH (n:$l) RETURN n.a AS a")
+      ValueRender.renderRows(df.collect().toSeq, df.schema).get.map(_.head)
+    }
+    assert(got == Seq.fill(3)(Seq("[1, [2, 3]]")), got)
+  }
+
+  test("GraphStore: two per-row numeric CREATEs keep decimal(38,18) and commit id-locally") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.types.DecimalType
+    val root = Files.createTempDirectory("graft_store_numeric").toString
+    val s = new GraphSession(spark)
+    s.createGraph("numeric", root)
+    s.run("CREATE (:Z {i: 1})")
+    s.run("MATCH (z:Z) CREATE (:N {v: 1.5::numeric})")
+    s.run("MATCH (z:Z) CREATE (:N {v: 1.25::numeric})")
+    assert(s.graph.snapshot.vertexLabels("N").schema("v").dataType == DecimalType(38, 18))
+    val v = graft.cypher.GraphStore.latestVersion(root).get
+    val cat = scala.io.Source.fromFile(s"$root/v$v/catalog.txt").getLines().toSeq
+    assert(!cat.exists(_.startsWith("vlabel N ")), cat.mkString("\n"))
+    assert(cat.exists(l => l.startsWith("file v N ") && l.contains(s"v$v%2F")), cat.mkString("\n"))
+    val r = new GraphSession(spark)
+    r.openGraph("numeric", root)
+    val df = r.run("MATCH (n:N) RETURN n.v AS v ORDER BY v")
+    assert(ValueRender.renderRows(df.collect().toSeq, df.schema).get.map(_.head) ==
+      Seq("1.25::numeric", "1.5::numeric"))
+    graft.cypher.GraphStore.deleteTree(java.nio.file.Paths.get(root))
+  }
+
+  test("a whole-properties constraint holds for MATCH … CREATE and UNWIND … CREATE") {
+    val s = freshSession("wholeunique")
+    s.run("CREATE (:S {i: 1})")
+    s.run("CREATE (:S {i: 2})")
+    s.run("SELECT create_unique_properties_constraint('wholeunique', 'U')")
+    s.run("CREATE (:U {a: 1})")
+    def values(): Seq[Long] = s.run("MATCH (u:U) RETURN u.a AS a ORDER BY a").collect().map(_.getLong(0)).toSeq
+    Seq(
+      "MATCH (z:S {i: 1}) CREATE (:U {a: 1})", // the label holds {a: 1}
+      "MATCH (z:S) CREATE (:U {a: 2})", // two new {a: 2}
+      "UNWIND [1] AS x CREATE (:U {a: 1})",
+      "UNWIND [1, 2] AS x CREATE (:U {a: 3})"
+    ).foreach { q =>
+      val e = intercept[IllegalStateException](s.run(q))
+      assert(e.getMessage == "duplicate key value violates unique constraint \"U_properties_key\"", q)
+      assert(values() == Seq(1L), q)
+    }
+    s.run("UNWIND [4, 5] AS x CREATE (:U {a: x})")
+    s.run("MATCH (z:S {i: 1}) CREATE (:U {a: 1, b: 1})")
+    // over driver-held rows the check runs no job
+    assert(jobsOf(s.run("MATCH (z:S {i: 2}) CREATE (:U {a: 6})")) == 0)
+    assert(jobsOf(s.run("CREATE (:U {a: 7})")) == 0)
+    assert(values() == Seq(1L, 1L, 4L, 5L, 6L, 7L))
+  }
 }
